@@ -2590,10 +2590,13 @@ def keep_cluster_representatives(
     once for the output join) instead of three times (the old
     unclustered-filter + semi-join + union shape) — at corpus scale
     that is one full scan saved per call.
+
+    A ``clusters`` map that lists an id more than once (under several
+    components, or as a repeated row) counts the id in its smallest
+    component, so every ``df`` row is emitted at most once.
     """
-    cl = clusters.select(
-        F.col(cluster_id_col).alias("__cl_id"),
-        F.col(comp_col).alias("__cl_comp"),
+    cl = clusters.groupBy(F.col(cluster_id_col).alias("__cl_id")).agg(
+        F.min(comp_col).alias("__cl_comp")
     )
     joined = df.join(cl, df[id_col] == cl["__cl_id"], "left")
     clustered = joined.filter(F.col("__cl_comp").isNotNull())

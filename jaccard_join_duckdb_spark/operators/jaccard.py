@@ -32,8 +32,18 @@ Scale design (100 TB target):
 - All stages are shuffles on high-cardinality keys (token, id) —
   no driver-side materialization of row data; only the inner join's
   side-selection reads four scalar counts (as the reference does).
-- ``tkdf`` is persisted (MEMORY_AND_DISK) because candidates and
-  verification each scan it twice.
+- Token frames, the doc-frequency table and ``tkdf`` are persisted
+  (MEMORY_AND_DISK): candidates and verification each scan ``tkdf``
+  twice, and every plan decision (bitset vocabulary, hot-token split,
+  broadcast attach, verify strategy) reads its scalars from one small
+  aggregate over a persisted frame instead of re-running the tokenize
+  chain.
+- Verification is one stage, :func:`_verify`, shared by the self and
+  inner joins. It picks one of three strategies from those scalars:
+  bitset popcount when the vocabulary fits ``_MAX_BITSET_VOCAB``
+  words, compiled array intersect when the ``(id, token)`` rows are
+  distinct, and the reference's pairs × tokens three-way join
+  otherwise.
 - Single-side conjuncts of the candidate join (prefix filters) are
   applied as pre-join filters, shrinking shuffle input; the hot-token
   skew inherent to token equi-joins is handled by AQE skew-join
@@ -201,7 +211,7 @@ def _positional_cond(
     >= B`` from the match attaining ``rmaxpos``; with ``pfxoverlap >=
     1`` the pre-filter's LHS is ``>= B`` for EVERY candidate.
     Measured confirmation: at db100 ws t=0.5 the pre-filter kept all
-    2,976,581 of 2,976,581 candidates (tools/cell_profile.py probe).
+    2,976,581 of 2,976,581 candidates.
     Rounds 1-10 carried that pre-filter (and, on the generic path,
     two per-side doc-length attach JOINS built solely to evaluate it);
     round 11 removed both — plan-only change, zero effect on results.
@@ -378,8 +388,6 @@ def tokens_with_doc_freq(
 # arrays (measured: 5-gram sf0.1 verify 8.7s → 6.3s when the 2333-token
 # vocab moved from the array path to 37-word bitsets).
 _MAX_BITSET_VOCAB = 4096
-# rows probed by the cheap pre-gate before the exact vocabulary count
-_VOCAB_PROBE_ROWS = 50_000
 
 # Verification-side broadcast gate (round 8). The verification attach
 # tables are ONE ROW PER DOCUMENT (pos-ordered token arrays, bitsets,
@@ -405,9 +413,7 @@ _MAX_BROADCAST_VERIFY_DOCS = 250_000
 # from shuffling is orders of magnitude larger). Measured at the
 # refscale inner stress cell (db100 t=0.3, 82M candidates, 692K-row
 # token tables): 508 s → 119 s, identical rows. Token counts come out
-# of the fused gate-stats aggregate over the PERSISTED tkdf — when
-# the caller opts out of persist, the scalars would recompute the
-# tokenize chain, so the gate is skipped and the shuffle join kept.
+# of the fused gate-stats aggregate over the persisted tkdf.
 _MAX_BROADCAST_VERIFY_TOKENS = 2_000_000
 # Serialized-size budget for ONE broadcast attach table. The row-count
 # caps above assume token-level widths (~30 B/row → ~60 MB at 2M rows);
@@ -479,9 +485,7 @@ _BROADCAST_VERIFY_MIN_RATIO = 4
 # vs 7.6 s floor-off — the fused stats job on a persisted <=250K-doc
 # tkdf costs well under a second and the ratio gate earns it back).
 # The bound-ratio gate (_BROADCAST_VERIFY_MIN_RATIO) is itself the
-# density test, so it decides alone whenever docs <= the size cap and
-# tkdf is persisted (unpersisted frames still skip the stats job: the
-# scalars would recompute the tokenize chain).
+# density test, so it decides alone whenever docs <= the size cap.
 
 
 def _self_gate_stats(
@@ -494,8 +498,8 @@ def _self_gate_stats(
     bounds the candidate equi-join's output; ``pos == 1`` rows count
     documents exactly (every tokenized doc has one); ``dup_rows``
     (rows minus distinct ids, summed over tokens) is the exact count
-    of duplicate ``(id, token)`` rows, gating the runtime-distinct
-    array verification (_RUNTIME_DISTINCT_ARRAY) on the same job.
+    of duplicate ``(id, token)`` rows, which picks the verify strategy
+    (see :func:`_verify`) from the same job.
     ``skip_dup`` (round 12): a ``rows_distinct`` tokenizer takes the
     array verification unconditionally, so its caller skips the
     per-token ``count_distinct`` — the only hash-set aggregate in the
@@ -697,17 +701,16 @@ def _jaccard_score(
     ).alias("jaccard")
 
 
-def _score_cols(with_score: bool, ll: str = "llen", rl: str = "rlen"):
-    """Optional ``jaccard`` output column for the filtered-join final
-    selects, which all expose ``sfx``/``pfxoverlap`` plus the two len
-    columns (named per path)."""
-    if not with_score:
-        return []
-    return [
-        _jaccard_score(
-            F.col("sfx") + F.col("pfxoverlap") - 1, F.col(ll), F.col(rl)
+def _check_score_semantics(tokenizer: Tokenizer, with_score: bool) -> None:
+    """``with_score`` needs set semantics: the bag-mode overlap counts
+    duplicate token matches, so it is no Jaccard numerator (it can even
+    exceed ``llen + rlen``)."""
+    if with_score and not tokenizer.return_set:
+        raise ValueError(
+            "with_score requires set semantics (return_set=True): the "
+            "bag-mode overlap counts duplicate token matches and is not "
+            "a Jaccard numerator"
         )
-    ]
 
 
 def _pos_token_arrays(tkdf: DataFrame) -> DataFrame:
@@ -739,31 +742,140 @@ def _suffix_overlap(
     )
 
 
-# Runtime-distinct array verification (round 11). A tokenizer that
-# cannot PROMISE duplicate-free ``(id, token)`` rows (DelimiterTokzr's
-# dedup-before-lowercase quirk, bag mode) historically always took the
-# generic pairs×tokens three-way join — but whether duplicates exist
-# is a property of the DATA, and on real corpora they usually don't
-# (the quirk needs case-variant twins inside one value). The gate
-# stats job now measures the exact duplicate-row count for free
-# (rows minus distinct ids per token, same aggregate), and when it is
-# ZERO the set-intersect array verification is exact — suffix
-# row-PAIR count equals set overlap with no duplicates to multiply.
-# Measured at the refscale profile cells (zero duplicate rows at
-# runtime, tools/cell_profile.py + interleaved A/B, both arms under
-# identical load): db100 ws t=0.4 7.8 s vs 57.1 s three-way, db50 ws
-# t=0.3 7.3 s vs 40.7 s, db10 ws t=0.2 4.4 s vs 8.0 s — the three-way
-# shuffles the 10.2M-candidate × suffix-row stream twice plus a final
-# groupBy, the array path replaces all of it with two attach joins
-# and a codegen intersect. An interpreted higher-order pair-count
-# variant (exact under duplicates) was measured and REJECTED: HOF
-# expressions don't whole-stage-codegen, and at 3M candidates its
-# verify stage cost 13.3 s vs the three-way's 6.1 s — so
-# duplicate-carrying corpora keep the reference's shuffle join, which
-# is also the only shape available at corpus scale (the dup count
-# comes from the gate-stats job, already skipped past the 250K-doc
-# probe cap). Module flag so tests can pin the fallback.
-_RUNTIME_DISTINCT_ARRAY = True
+def _candidates(pairs: DataFrame, left: str, right: str, by: str) -> DataFrame:
+    """Candidate pairs from the prefix-token equi-join ``pairs``, whose
+    sides are aliased ``left`` and ``right`` (jaccard_join.py:166-169):
+    ``(lid, rid, lmax, rmax, pfxoverlap)``. ``lmax``/``rmax`` are each
+    side's largest matched ``by`` value (``tid`` on the bitset path,
+    ``pos`` otherwise) and ``pfxoverlap`` counts the matched prefix
+    tokens."""
+    return pairs.groupBy(
+        F.col(f"{left}.id").alias("lid"), F.col(f"{right}.id").alias("rid")
+    ).agg(
+        F.max(f"{left}.{by}").alias("lmax"),
+        F.max(f"{right}.{by}").alias("rmax"),
+        F.count(F.lit(1)).alias("pfxoverlap"),
+    )
+
+
+def _verify_table(tk: DataFrame, side: str, n_words: int) -> DataFrame:
+    """One side's doc-level verify attach table, every column prefixed
+    with ``side``: ``id``, ``len`` and either the bitset words
+    ``b0..`` (``n_words > 0``) or the pos-ordered token array ``arr``."""
+    if n_words:
+        per_doc = _doc_bitsets(tk, n_words)
+        payload = [f"b{i}" for i in range(n_words)]
+    else:
+        per_doc, payload = _pos_token_arrays(tk), ["arr"]
+    return per_doc.select(
+        *[F.col(c).alias(side + c) for c in ("id", "len", *payload)]
+    )
+
+
+def _verify(
+    cand: DataFrame,
+    l_tk: DataFrame,
+    r_tk: DataFrame,
+    t: float,
+    n_words: int,
+    dup_rows: int,
+    l_stats: tuple[int, int],
+    r_stats: tuple[int, int],
+    bound: int,
+    out_cols: tuple[str, str],
+    with_score: bool,
+) -> DataFrame:
+    """Verification (jaccard_join.py:169-188) for both the self and the
+    inner join: count the tokens a candidate pair shares with
+    ``pos >= maxPos`` on BOTH sides (``>=``, not ``>``, to catch pairs
+    whose prefixes match entirely but suffixes share nothing), then
+    accept iff ``sfx + pfxOverlap - 1 >= (llen + rlen)·t/(1+t)``. A
+    pair with zero suffix matches is dropped, exactly as the
+    reference's three-way join behaves. There is no remaining-suffix
+    pre-filter: it is provably vacuous (see _positional_cond).
+
+    ``cand`` comes from :func:`_candidates`; ``l_tk``/``r_tk`` are the
+    two sides' token tables (one frame for a self join). Each side's
+    ``(n_docs, n_tok)`` stats and the candidate ``bound`` feed the
+    broadcast gates of :func:`_verify_attach`. The strategy follows
+    from the data:
+
+    - bitset (``n_words > 0``: the vocabulary fits
+      ``_MAX_BITSET_VOCAB`` and ``lmax``/``rmax`` are tids): masked
+      AND + popcount. Within a doc ``pos`` is increasing in ``tid``, so
+      ``pos >= maxPos`` on both sides is ``tid >= max(lmax, rmax)``.
+    - array (``dup_rows == 0``: no duplicate ``(id, token)`` rows,
+      promised by the tokenizer or measured by the gate statistics):
+      compiled slice + array_intersect. Exact because the suffix
+      row-pair count equals the set overlap when no row repeats.
+      Measured 1.8-7.3× faster than the three-way join at refscale
+      profile cells whose rows were distinct at runtime.
+    - three-way (duplicates present, or never measured: ``-1``): the
+      reference's pairs × tokens join, which counts every duplicate
+      row pair. An interpreted higher-order pair count that is exact
+      under duplicates was measured 2× slower than it (higher-order
+      expressions do not whole-stage-codegen).
+    """
+    accept = _overlap_cond(F.col("sfx") + F.col("pfxoverlap") - 1,
+                           F.col("llen"), F.col("rlen"), t)
+    if n_words or dup_rows == 0:
+        cap = _bitset_verify_cap(n_words) if n_words else None
+        out = cand
+        for side, tk, (n_docs, n_tok) in (
+            ("l", l_tk, l_stats), ("r", r_tk, r_stats)
+        ):
+            out = out.join(
+                _verify_attach(
+                    _verify_table(tk, side, n_words), n_docs, cap,
+                    bound=bound, decide_rows=n_tok,
+                ),
+                f"{side}id",
+            )
+        if n_words:
+            out = out.withColumn("tidstart", F.greatest("lmax", "rmax"))
+            sfx = _bitset_suffix_overlap(n_words)
+        else:
+            sfx = _suffix_overlap(
+                F.col("larr"), F.col("llen"), F.col("lmax"),
+                F.col("rarr"), F.col("rlen"), F.col("rmax"),
+            )
+        out = out.withColumn("sfx", sfx)
+        accept = (F.col("sfx") >= 1) & accept
+    else:
+        out = (
+            cand.join(
+                _verify_attach(
+                    l_tk.alias("VL"), l_stats[1], token_level=True,
+                    bound=bound,
+                ),
+                F.col("lid") == F.col("VL.id"),
+            )
+            .join(
+                _verify_attach(
+                    r_tk.alias("VR"), r_stats[1], token_level=True,
+                    bound=bound,
+                ),
+                (F.col("rid") == F.col("VR.id"))
+                & (F.col("VL.token") == F.col("VR.token"))
+                & (F.col("VL.pos") >= F.col("lmax"))
+                & (F.col("VR.pos") >= F.col("rmax")),
+            )
+            .groupBy(
+                "lid", "rid", F.col("VL.len").alias("llen"),
+                F.col("VR.len").alias("rlen"), "pfxoverlap",
+            )
+            .agg(F.count(F.lit(1)).alias("sfx"))
+        )
+    score = [
+        _jaccard_score(
+            F.col("sfx") + F.col("pfxoverlap") - 1, F.col("llen"), F.col("rlen")
+        )
+    ] if with_score else []
+    return out.filter(accept).select(
+        F.col("lid").alias(out_cols[0]), F.col("rid").alias(out_cols[1]),
+        *score,
+    )
+
 
 # SHUFFLE_HASH on the jaccard candidate joins: tried, measured,
 # REJECTED (round 12). Bench-context interleaved A/B (tools/
@@ -792,7 +904,6 @@ def jaccard_self_join(
     threshold: float,
     l_out_prefix: str = "l_",
     r_out_prefix: str = "r_",
-    persist: bool = True,
     with_score: bool = False,
     hot_df_threshold: int | str | None = "auto",
 ) -> DataFrame:
@@ -806,87 +917,46 @@ def jaccard_self_join(
     the hot-token straggler on every join, so the mitigation must not
     hide behind a kwarg); an int overrides the threshold, ``None``
     disables. It affects only the tkdf build plan, never the
-    result."""
-    if with_score and not tokenizer.return_set:
-        raise ValueError(
-            "with_score requires set semantics (return_set=True): the "
-            "bag-mode overlap counts duplicate token matches and is not "
-            "a Jaccard numerator"
-        )
+    result.
+
+    The token frame, its doc-frequency table and ``tkdf`` are
+    persisted; verification is the shared :func:`_verify` stage, with
+    ``tkdf`` on both sides."""
+    _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
-    tokens = tokenizer.tokenize(df, key_attr, join_attr)
-    if persist:
-        # tokens feed both the doc-frequency aggregation and the tkdf
-        # join — uncached, the tokenize chain executes twice.
-        tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    # tokens feed both the doc-frequency aggregation and the tkdf
+    # join — uncached, the tokenize chain executes twice.
+    tokens = tokenizer.tokenize(df, key_attr, join_attr).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
-    # Verification strategy: when the vocabulary is small enough that a
-    # document's token set fits in a few 64-bit words, suffix overlap
-    # is a masked AND + popcount (pure codegen) — measured ~8x faster
-    # than per-pair array_intersect on the dense q-gram corpus.
+    # ONE eager aggregate over the persisted doc-frequency table
+    # drives EVERY plan decision (round 10 — previously three separate
+    # probe jobs): vocabulary size (bitset verify when a document's
+    # token set fits in a few 64-bit words — measured ~8x faster than
+    # per-pair array_intersect on the dense q-gram corpus), hot-split
+    # engagement (N, max df), and the sparse fast-decline (sum df²).
+    # dfreq is the algorithm's own required shuffle — persisting it
+    # means the tkdf build reuses it instead of recomputing, so the
+    # only added cost is reading back the vocab-sized table once.
+    dfreq = tokens.groupBy("token").agg(
+        F.count(F.lit(1)).alias("df")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    row = dfreq.agg(
+        F.count(F.lit(1)).alias("v"),
+        F.sum("df").alias("n"),
+        F.max("df").alias("m"),
+        F.sum((F.col("df") * F.col("df")).cast("double")).alias("sq"),
+    ).first()
+    vocab_n, n_tok_all = int(row["v"] or 0), int(row["n"] or 0)
     n_words = 0
-    dfreq = None
-    dfreq_stats: dict = {}
-    if persist:
-        # ONE eager aggregate over the persisted doc-frequency table
-        # drives EVERY plan decision (round 10 — previously three
-        # separate probe jobs): vocabulary size (bitset gate),
-        # hot-split engagement (N, max df), and the sparse
-        # fast-decline (sum df²). dfreq is the algorithm's own
-        # required shuffle — persisting it means the tkdf build
-        # reuses it instead of recomputing, so the only added cost is
-        # reading back the vocab-sized table once.
-        dfreq = tokens.groupBy("token").agg(
-            F.count(F.lit(1)).alias("df")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        row = dfreq.agg(
-            F.count(F.lit(1)).alias("v"),
-            F.sum("df").alias("n"),
-            F.max("df").alias("m"),
-            F.sum((F.col("df") * F.col("df")).cast("double")).alias("sq"),
-        ).first()
-        vocab_n = int(row["v"] or 0)
-        dfreq_stats = {
-            "n_tok": int(row["n"] or 0),
-            "max_df": int(row["m"] or 0),
-            "sumsq": float(row["sq"] or 0.0),
-        }
-        if tokenizer.rows_distinct and 0 < vocab_n <= _MAX_BITSET_VOCAB:
-            n_words = (vocab_n + 63) // 64
-        if hot_df_threshold == "auto":
-            hot_df_threshold = _auto_hot_threshold(
-                dfreq_stats["n_tok"],
-                dfreq_stats["max_df"],
-                _shuffle_partitions(tokens),
-            )
-    else:
-        if hot_df_threshold == "auto":
-            # the auto stats job would re-run the tokenize chain
-            hot_df_threshold = None
-        if tokenizer.rows_distinct:
-            # Unpersisted input: bounded two-phase vocab gate. Probe:
-            # distinct tokens within a BOUNDED row sample (one narrow
-            # limit + a 50K-row shuffle) — if the sample alone exceeds
-            # the cap, the global vocabulary certainly does, and the
-            # global distinct (a full shuffle of every token on a
-            # 100 TB corpus just to learn "too big") is skipped
-            # entirely. Only sample-small vocabularies pay the exact
-            # count: limit(MAX+1).count() == min(actual, MAX+1), exact
-            # whenever the gate passes (bitset width must cover every
-            # tid), with the reduce side stopping after MAX+1 distinct
-            # tokens.
-            vocab_n = (
-                tokens.select("token").limit(_VOCAB_PROBE_ROWS)
-                .distinct().count()
-            )
-            if vocab_n <= _MAX_BITSET_VOCAB:
-                vocab_n = (
-                    tokens.select("token").distinct()
-                    .limit(_MAX_BITSET_VOCAB + 1).count()
-                )
-            if 0 < vocab_n <= _MAX_BITSET_VOCAB:
-                n_words = (vocab_n + 63) // 64
+    if tokenizer.rows_distinct and 0 < vocab_n <= _MAX_BITSET_VOCAB:
+        n_words = (vocab_n + 63) // 64
+    if hot_df_threshold == "auto":
+        hot_df_threshold = _auto_hot_threshold(
+            n_tok_all, int(row["m"] or 0), _shuffle_partitions(tokens)
+        )
 
     if n_words:
         # bitset path: the token dim is broadcast wholesale for the
@@ -899,8 +969,7 @@ def jaccard_self_join(
             hot_df_threshold=hot_df_threshold,
             dfreq=dfreq,
         )
-    if persist:
-        tkdf = tkdf.persist(StorageLevel.MEMORY_AND_DISK)
+    tkdf = tkdf.persist(StorageLevel.MEMORY_AND_DISK)
 
     # Candidate generation (jaccard_join.py:148-166). Single-side
     # prefix conditions are applied pre-join: L carries the indexing
@@ -921,38 +990,29 @@ def jaccard_self_join(
             F.col("L.len"), F.col("L.pos"), F.col("R.len"), F.col("R.pos"), t
         )
     )
-    out_cols = (
-        f"{l_out_prefix}{key_attr}",
-        f"{r_out_prefix}{key_attr}",
-    )
     # Broadcast-gate scalars: a bounded probe first — corpus-scale
     # inputs stop scanning at cap+1 rows (their attach tables cannot
     # broadcast anyway) — then ONE fused aggregate on the persisted
-    # tkdf for (n_docs, n_tok, candidate bound); the bound-ratio gate
-    # in _verify_attach decides from there (no doc-count floor — see
-    # the round-10 note above _BROADCAST_VERIFY_MIN_RATIO's companion
-    # comment: density, not document count, is what the gate must
-    # test, and the bound IS the density measurement). An unpersisted
-    # tkdf would recompute the tokenize chain per scalar, so the gate
-    # is skipped (shuffle joins kept, correct at every scale) when
-    # persist=False.
+    # tkdf for (n_docs, n_tok, candidate bound, dup_rows); the
+    # bound-ratio gate in _verify_attach decides from there (no
+    # doc-count floor: density, not document count, is what the gate
+    # must test, and the bound IS the density measurement).
     n_docs = n_tok = bound = 0
-    dup_rows = -1  # unknown until the gate-stats job measures it
-    # Sparse-corpus fast decline (round 10): the auto-split aggregate
+    # duplicate (id, token) rows: none when the tokenizer promises
+    # distinct rows, unknown (-1) until the gate-stats job measures it
+    dup_rows = 0 if tokenizer.rows_distinct else -1
+    # Sparse-corpus fast decline (round 10): the dfreq aggregate
     # already computed sum(df²), a sound upper bound on the candidate
     # bound — when even IT cannot clear the ratio for the token-row
     # denominator every attach decides against, no broadcast can pay
     # and the exact gate-stats job (a full tkdf materialization
     # barrier) is skipped outright. Dense corpora (the broadcast
     # winners) blow past this test and pay the exact job as before.
-    cheap_decline = (
-        "sumsq" in dfreq_stats
-        and dfreq_stats["sumsq"]
-        < _BROADCAST_VERIFY_MIN_RATIO * max(dfreq_stats["n_tok"], 1)
+    cheap_decline = float(row["sq"] or 0.0) < (
+        _BROADCAST_VERIFY_MIN_RATIO * max(n_tok_all, 1)
     )
     if (
-        persist
-        and not cheap_decline
+        not cheap_decline
         and _doc_count_probe(df) <= _MAX_BROADCAST_VERIFY_DOCS
     ):
         n_docs, n_tok, bound, dup_rows = _self_gate_stats(
@@ -966,171 +1026,17 @@ def jaccard_self_join(
         # lazy — unpersisting there would force one extra dfreq
         # shuffle when tkdf first materializes, so those keep the
         # cache entry until session clearCache.
-        if dfreq is not None:
-            dfreq.unpersist()
+        dfreq.unpersist()
 
-    if n_words:
-        # Bitset verification: within a doc pos is increasing in tid,
-        # so max(pos of matched prefix tokens) corresponds to max(tid)
-        # and ``pos >= maxPos (both sides)`` == ``tid >= max(ltid, rtid)``.
-        cand = (
-            Lp.join(Rp, cond)
-            .groupBy(
-                F.col("L.id").alias("lid"),
-                F.col("R.id").alias("rid"),
-            )
-            .agg(
-                F.max("L.tid").alias("ltid"),
-                F.max("R.tid").alias("rtid"),
-                F.count(F.lit(1)).alias("pfxoverlap"),
-            )
-        )
-        docbits = _doc_bitsets(tkdf, n_words)
-        bit_cap = _bitset_verify_cap(n_words)
-        return (
-            cand.join(
-                _verify_attach(docbits.select(
-                    F.col("id").alias("lid"),
-                    F.col("len").alias("llen"),
-                    *[F.col(f"b{i}").alias(f"lb{i}") for i in range(n_words)],
-                ), n_docs, bit_cap, bound=bound, decide_rows=n_tok),
-                "lid",
-            )
-            .join(
-                _verify_attach(docbits.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("rlen"),
-                    *[F.col(f"b{i}").alias(f"rb{i}") for i in range(n_words)],
-                ), n_docs, bit_cap, bound=bound, decide_rows=n_tok),
-                "rid",
-            )
-            .withColumn("tidstart", F.greatest("ltid", "rtid"))
-            .withColumn("sfx", _bitset_suffix_overlap(n_words))
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("llen"), F.col("rlen"), t,
-                )
-            )
-            .select(
-                F.col("lid").alias(out_cols[0]),
-                F.col("rid").alias(out_cols[1]),
-                *_score_cols(with_score),
-            )
-        )
-
-    cand = (
-        Lp.join(Rp, cond)
-        .groupBy(
-            F.col("L.id").alias("lid"),
-            F.col("R.id").alias("rid"),
-        )
-        .agg(
-            F.max("L.pos").alias("lmaxpos"),
-            F.max("R.pos").alias("rmaxpos"),
-            F.count(F.lit(1)).alias("pfxoverlap"),
-        )
+    cand = _candidates(
+        Lp.join(Rp, cond), "L", "R", "tid" if n_words else "pos"
     )
-
-    # Verification (jaccard_join.py:169-188): count token matches
-    # with pos >= maxPos on BOTH sides (>=, not >, to catch pairs
-    # whose prefixes match entirely but suffixes share nothing), then
-    # accept iff ``sfx + pfxOverlap - 1 >= bound``. A pair with zero
-    # suffix matches is dropped (inner-join semantics) — exactly as
-    # the reference's three-way join behaves.
-    if tokenizer.rows_distinct or (_RUNTIME_DISTINCT_ARRAY and dup_rows == 0):
-        # Fast path: compiled slice + array_intersect against
-        # pos-ordered per-doc arrays — no pairs×tokens intermediate.
-        # Taken when the tokenizer PROMISES distinct (id, token) rows,
-        # or when the gate-stats job MEASURED zero duplicate rows in
-        # this corpus (exact — the suffix row-pair count then equals
-        # the set overlap; see _RUNTIME_DISTINCT_ARRAY). When
-        # duplicates exist, or the stats were skipped (unpersisted
-        # input, sparse fast-decline, corpus over the doc probe cap),
-        # the shuffle three-way join below remains the plan. (No
-        # remaining-suffix pre-filter here: it is provably vacuous —
-        # _positional_cond.)
-        arrs = _pos_token_arrays(tkdf)
-        return (
-            cand.join(
-                _verify_attach(arrs.select(
-                    F.col("id").alias("lid"),
-                    F.col("len").alias("llen"),
-                    F.col("arr").alias("la"),
-                ), n_docs, bound=bound, decide_rows=n_tok),
-                "lid",
-            )
-            .join(
-                _verify_attach(arrs.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("rlen"),
-                    F.col("arr").alias("ra"),
-                ), n_docs, bound=bound, decide_rows=n_tok),
-                "rid",
-            )
-            .withColumn(
-                "sfx",
-                _suffix_overlap(
-                    F.col("la"), F.col("llen"), F.col("lmaxpos"),
-                    F.col("ra"), F.col("rlen"), F.col("rmaxpos"),
-                ),
-            )
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("llen"), F.col("rlen"), t,
-                )
-            )
-            .select(
-                F.col("lid").alias(out_cols[0]),
-                F.col("rid").alias(out_cols[1]),
-                *_score_cols(with_score),
-            )
-        )
-
-    # Generic path (duplicate-carrying token rows, measured or
-    # unmeasured): the reference's pairs×tokens three-way join.
-    # Through round 10 this path first
-    # attached per-side doc lengths (two extra joins over a distinct
-    # lens dim) to evaluate a remaining-suffix pre-filter; the filter
-    # is provably vacuous (see _positional_cond), so the joins were
-    # pure plan overhead and are gone.
-    # token-level attach gate: n_tok came out of the same fused
-    # scalar job as n_docs/bound (zero when not persisted — declines)
-    Lv = tkdf.alias("VL")
-    Rv = tkdf.alias("VR")
-    matches = (
-        cand.join(
-            _verify_attach(Lv, n_tok, token_level=True, bound=bound),
-            F.col("lid") == F.col("VL.id"),
-        )
-        .join(
-            _verify_attach(Rv, n_tok, token_level=True, bound=bound),
-            (F.col("rid") == F.col("VR.id"))
-            & (F.col("VL.token") == F.col("VR.token"))
-            & (F.col("VL.pos") >= F.col("lmaxpos"))
-            & (F.col("VR.pos") >= F.col("rmaxpos")),
-        )
-        .groupBy(
-            "lid", "rid", F.col("VL.len").alias("llen"),
-            F.col("VR.len").alias("rlen"), "pfxoverlap",
-        )
-        .agg(F.count(F.lit(1)).alias("sfx"))
-        .filter(
-            _overlap_cond(
-                F.col("sfx") + F.col("pfxoverlap") - 1,
-                F.col("llen"), F.col("rlen"), t,
-            )
-        )
-        .select(
-            F.col("lid").alias(out_cols[0]),
-            F.col("rid").alias(out_cols[1]),
-            *_score_cols(with_score),
-        )
+    return _verify(
+        cand, tkdf, tkdf, t, n_words, dup_rows,
+        (n_docs, n_tok), (n_docs, n_tok), bound,
+        (f"{l_out_prefix}{key_attr}", f"{r_out_prefix}{key_attr}"),
+        with_score,
     )
-    return matches
 
 
 def jaccard_self_join_brute_force(
@@ -1141,23 +1047,17 @@ def jaccard_self_join_brute_force(
     threshold: float,
     l_out_prefix: str = "l_",
     r_out_prefix: str = "r_",
-    persist: bool = True,
     with_score: bool = False,
 ) -> DataFrame:
     """O(pairs-sharing-a-token) oracle (jaccard_join.py:190-201):
     tokens ⋈ tokens on token with ``L.id < R.id``, group by pair,
     ``HAVING count(*) >= (L.len+R.len)*t/(1+t)``."""
-    if with_score and not tokenizer.return_set:
-        raise ValueError(
-            "with_score requires set semantics (return_set=True): the "
-            "bag-mode overlap counts duplicate token matches and is not "
-            "a Jaccard numerator"
-        )
+    _check_score_semantics(tokenizer, with_score)
     t = float(threshold)
-    tokens = tokenizer.tokenize(df, key_attr, join_attr)
-    if persist:
-        # Both sides of the self-join read tokens.
-        tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    # Both sides of the self-join read tokens.
+    tokens = tokenizer.tokenize(df, key_attr, join_attr).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     L = tokens.alias("L")
     R = tokens.alias("R")
     return (
@@ -1206,7 +1106,6 @@ def jaccard_inner_join(
     threshold: float,
     l_out_prefix: str = "l_",
     r_out_prefix: str = "r_",
-    persist: bool = True,
     with_score: bool = False,
     hot_df_threshold: int | str | None = "auto",
 ) -> DataFrame:
@@ -1232,20 +1131,21 @@ def jaccard_inner_join(
     _BROADCAST_VERIFY_MIN_RATIO). The reference's two additional
     full-table counts (widow placeholder) are replaced by an
     order-equivalent constant — see below.
+
+    Both token frames, the cross-table dfreq and both tkdfs are
+    persisted; verification is the shared :func:`_verify` stage, with
+    the indexing side R on the left and the probing side S on the
+    right.
     """
-    if with_score and not tokenizer.return_set:
-        raise ValueError(
-            "with_score requires set semantics (return_set=True): the "
-            "bag-mode overlap counts duplicate token matches and is not "
-            "a Jaccard numerator"
-        )
+    _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
-    l_tokens = tokenizer.tokenize(l_df, l_key_attr, l_join_attr)
-    r_tokens = tokenizer.tokenize(r_df, r_key_attr, r_join_attr)
-    if persist:
-        l_tokens = l_tokens.persist(StorageLevel.MEMORY_AND_DISK)
-        r_tokens = r_tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    l_tokens = tokenizer.tokenize(l_df, l_key_attr, l_join_attr).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    r_tokens = tokenizer.tokenize(r_df, r_key_attr, r_join_attr).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     # Widow placeholder (jaccard_join.py:266-268). The reference uses
     # count(l)*count(r)+1 — two full-table scans whose only role is a
@@ -1277,8 +1177,8 @@ def jaccard_inner_join(
                 F.col("l_df") * F.col("r_df"), F.lit(widow_placeholder)
             ).alias("df"),
         )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    dfreq = dfreq_raw.select("token", "df")
 
     # Bitset verification gate (see self join): both sides rank tokens
     # by the SAME combined (df, token) order, so one tid ranking over
@@ -1291,49 +1191,37 @@ def jaccard_inner_join(
     # cross-side candidate bound: per token, indexing-prefix(R) ×
     # probing-prefix(S) <= l_df × r_df). dfreq_raw is the algorithm's
     # own required full-outer join — persisting it means both tkdf
-    # builds reuse it. Unpersisted inputs keep the bounded
-    # early-stopping vocab count and skip the rest (the aggregate
-    # would re-run both tokenize chains).
+    # builds reuse it.
     n_words = 0
     hot_thr: int | None = None
-    cross_sumsq: float | None = None
-    vocab_n = 0
-    if persist:
-        dfreq_raw = dfreq_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        row = dfreq_raw.agg(
-            F.count(F.lit(1)).alias("v"),
-            F.sum(
-                F.coalesce("l_df", F.lit(0))
-                + F.coalesce("r_df", F.lit(0))
-            ).alias("n"),
-            F.max(
-                F.greatest(
-                    F.coalesce("l_df", F.lit(0)),
-                    F.coalesce("r_df", F.lit(0)),
-                )
-            ).alias("m"),
-            F.sum(
-                F.coalesce(
-                    (F.col("l_df") * F.col("r_df")).cast("double"),
-                    F.lit(0.0),
-                )
-            ).alias("sq"),
-        ).first()
-        vocab_n = int(row["v"] or 0)
-        cross_sumsq = float(row["sq"] or 0.0)
-        if hot_df_threshold == "auto":
-            hot_df_threshold = _auto_hot_threshold(
-                int(row["n"] or 0),
-                int(row["m"] or 0),
-                _shuffle_partitions(l_tokens),
+    row = dfreq_raw.agg(
+        F.count(F.lit(1)).alias("v"),
+        F.sum(
+            F.coalesce("l_df", F.lit(0))
+            + F.coalesce("r_df", F.lit(0))
+        ).alias("n"),
+        F.max(
+            F.greatest(
+                F.coalesce("l_df", F.lit(0)),
+                F.coalesce("r_df", F.lit(0)),
             )
-    else:
-        if hot_df_threshold == "auto":
-            hot_df_threshold = None
-        if tokenizer.rows_distinct:
-            # Early-stopping gate count: exact iff it passes, capped
-            # at MAX+1 otherwise.
-            vocab_n = dfreq.limit(_MAX_BITSET_VOCAB + 1).count()
+        ).alias("m"),
+        F.sum(
+            F.coalesce(
+                (F.col("l_df") * F.col("r_df")).cast("double"),
+                F.lit(0.0),
+            )
+        ).alias("sq"),
+    ).first()
+    vocab_n = int(row["v"] or 0)
+    cross_sumsq = float(row["sq"] or 0.0)
+    if hot_df_threshold == "auto":
+        hot_df_threshold = _auto_hot_threshold(
+            int(row["n"] or 0),
+            int(row["m"] or 0),
+            _shuffle_partitions(l_tokens),
+        )
+    dfreq = dfreq_raw.select("token", "df")
     if tokenizer.rows_distinct and 0 < vocab_n <= _MAX_BITSET_VOCAB:
         n_words = (vocab_n + 63) // 64
         dfreq = dfreq.withColumn(
@@ -1371,11 +1259,8 @@ def jaccard_inner_join(
             F.row_number().over(w).alias("pos"),
         )
 
-    l_tkdf = _tkdf(l_tokens, "l_df")
-    r_tkdf = _tkdf(r_tokens, "r_df")
-    if persist:
-        l_tkdf = l_tkdf.persist(StorageLevel.MEMORY_AND_DISK)
-        r_tkdf = r_tkdf.persist(StorageLevel.MEMORY_AND_DISK)
+    l_tkdf = _tkdf(l_tokens, "l_df").persist(StorageLevel.MEMORY_AND_DISK)
+    r_tkdf = _tkdf(r_tokens, "r_df").persist(StorageLevel.MEMORY_AND_DISK)
 
     # Indexing prefixes per side + widow counts (jaccard_join.py:324-351).
     def _indexing_prefix(tkdf: DataFrame) -> DataFrame:
@@ -1413,12 +1298,11 @@ def jaccard_inner_join(
             ).alias("w"),
             F.sum((F.col("pos") == 1).cast("long")).alias("d"),
             F.count(F.lit(1)).alias("c"),
-            # exact duplicate (id, token) row count per side, gating
-            # the runtime-distinct array verification (see
-            # _RUNTIME_DISTINCT_ARRAY). A rows_distinct tokenizer
-            # takes the array verification unconditionally, so its
-            # callers skip the count_distinct — the only hash-set
-            # aggregate in the job (round 12).
+            # exact duplicate (id, token) row count per side, which
+            # picks the verify strategy (see _verify). A rows_distinct
+            # tokenizer promises zero, so its callers skip the
+            # count_distinct — the only hash-set aggregate in the job
+            # (round 12).
             *(
                 []
                 if tokenizer.rows_distinct
@@ -1435,8 +1319,7 @@ def jaccard_inner_join(
     # That aggregate materialized both persisted tkdfs, so the
     # cross-table dfreq cache is now dead weight — free it (ADVICE
     # r10; mirrors the self-join's post-gate-stats unpersist).
-    if persist:
-        dfreq_raw.unpersist()
+    dfreq_raw.unpersist()
 
     def _side_stats(side: int) -> tuple[int, int, int, int]:
         row = side_rows.get(side)
@@ -1472,19 +1355,16 @@ def jaccard_inner_join(
     # sum over tokens of indexing-prefix df(R) × probing-prefix df(S)
     # bounds the candidate equi-join output. One small job on the
     # persisted token frames — skipped when no attach table could
-    # clear its size cap anyway (corpus scale) or when the frames are
-    # not persisted (the scalar would recompute the tokenize chain).
+    # clear its size cap anyway (corpus scale).
     bound = 0
     # Sparse-corpus fast decline (round 10, see the self join): when
     # even the sum(l_df × r_df) upper bound cannot clear the ratio at
     # the SMALLER side's token-row denominator, every attach's
     # decision is already decline and the exact bound join is skipped.
-    cheap_decline = (
-        cross_sumsq is not None
-        and cross_sumsq
-        < _BROADCAST_VERIFY_MIN_RATIO * max(min(n_R_tok, n_S_tok), 1)
+    cheap_decline = cross_sumsq < (
+        _BROADCAST_VERIFY_MIN_RATIO * max(min(n_R_tok, n_S_tok), 1)
     )
-    if persist and not cheap_decline and (
+    if not cheap_decline and (
         min(n_R_docs, n_S_docs) <= _MAX_BROADCAST_VERIFY_DOCS
         or min(n_R_tok, n_S_tok) <= _MAX_BROADCAST_VERIFY_TOKENS
     ):
@@ -1496,8 +1376,6 @@ def jaccard_inner_join(
             .first()["s"]
             or 0
         )
-    if not persist:
-        n_R_docs = n_S_docs = n_R_tok = n_S_tok = 0
 
     # Candidates (jaccard_join.py:364-384): two-sided length filter +
     # positional filter on the prefix-token equi-join.
@@ -1514,145 +1392,14 @@ def jaccard_inner_join(
     # Verification (jaccard_join.py:386-405). Output column names
     # reproduce the reference quirk: R's out_prefix pairs with the
     # *left* key attr name and S's with the right, regardless of swap.
-    out_r = f"{r_prefix_out[0]}{l_key_attr}"
-    out_s = f"{r_prefix_out[1]}{r_key_attr}"
-
-    if n_words:
-        cand = (
-            Rp.join(Sp, cond)
-            .groupBy(F.col("R.id").alias("rid"), F.col("S.id").alias("sid"))
-            .agg(
-                F.max("R.tid").alias("ltid"),
-                F.max("S.tid").alias("rtid"),
-                F.count(F.lit(1)).alias("pfxoverlap"),
-            )
-        )
-        r_bits = _doc_bitsets(R_tkdf, n_words)
-        s_bits = _doc_bitsets(S_tkdf, n_words)
-        bit_cap = _bitset_verify_cap(n_words)
-        return (
-            cand.join(
-                _verify_attach(r_bits.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("llen"),
-                    *[F.col(f"b{i}").alias(f"lb{i}") for i in range(n_words)],
-                ), n_R_docs, bit_cap, bound=bound, decide_rows=n_R_tok),
-                "rid",
-            )
-            .join(
-                _verify_attach(s_bits.select(
-                    F.col("id").alias("sid"),
-                    F.col("len").alias("rlen"),
-                    *[F.col(f"b{i}").alias(f"rb{i}") for i in range(n_words)],
-                ), n_S_docs, bit_cap, bound=bound, decide_rows=n_S_tok),
-                "sid",
-            )
-            .withColumn("tidstart", F.greatest("ltid", "rtid"))
-            .withColumn("sfx", _bitset_suffix_overlap(n_words))
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("llen"), F.col("rlen"), t,
-                )
-            )
-            .select(
-                F.col("rid").alias(out_r),
-                F.col("sid").alias(out_s),
-                *_score_cols(with_score),
-            )
-        )
-
-    cand = (
-        Rp.join(Sp, cond)
-        .groupBy(F.col("R.id").alias("rid"), F.col("S.id").alias("sid"))
-        .agg(
-            F.max("R.pos").alias("rmaxpos"),
-            F.max("S.pos").alias("smaxpos"),
-            F.count(F.lit(1)).alias("pfxoverlap"),
-        )
+    cand = _candidates(
+        Rp.join(Sp, cond), "R", "S", "tid" if n_words else "pos"
     )
-
-    if tokenizer.rows_distinct or (_RUNTIME_DISTINCT_ARRAY and dup_rows == 0):
-        # Compiled slice+array_intersect verification (see self join):
-        # declared-distinct rows, or zero duplicate rows MEASURED
-        # across both sides by the fused per-side scalars.
-        r_arrs = _pos_token_arrays(R_tkdf)
-        s_arrs = _pos_token_arrays(S_tkdf)
-        return (
-            cand.join(
-                _verify_attach(r_arrs.select(
-                    F.col("id").alias("rid"),
-                    F.col("len").alias("rlen"),
-                    F.col("arr").alias("rarr"),
-                ), n_R_docs, bound=bound, decide_rows=n_R_tok),
-                "rid",
-            )
-            .join(
-                _verify_attach(s_arrs.select(
-                    F.col("id").alias("sid"),
-                    F.col("len").alias("slen"),
-                    F.col("arr").alias("sarr"),
-                ), n_S_docs, bound=bound, decide_rows=n_S_tok),
-                "sid",
-            )
-            .withColumn(
-                "sfx",
-                _suffix_overlap(
-                    F.col("rarr"), F.col("rlen"), F.col("rmaxpos"),
-                    F.col("sarr"), F.col("slen"), F.col("smaxpos"),
-                ),
-            )
-            .filter(
-                (F.col("sfx") >= 1)
-                & _overlap_cond(
-                    F.col("sfx") + F.col("pfxoverlap") - 1,
-                    F.col("rlen"), F.col("slen"), t,
-                )
-            )
-            .select(
-                F.col("rid").alias(out_r),
-                F.col("sid").alias(out_s),
-                *_score_cols(with_score, "rlen", "slen"),
-            )
-        )
-
-    # Generic path (duplicate rows AND long documents). The per-side
-    # doc-length attach joins that fed the remaining-suffix
-    # pre-filter are gone — the filter is provably vacuous after the
-    # positional condition (see _positional_cond).
-    # token-level attach gate: n_R_tok/n_S_tok came out of the fused
-    # per-side scalars (zero when not persisted — declines)
-    Rv = R_tkdf.alias("VR")
-    Sv = S_tkdf.alias("VS")
-    return (
-        cand.join(
-            _verify_attach(Rv, n_R_tok, token_level=True, bound=bound),
-            F.col("rid") == F.col("VR.id"),
-        )
-        .join(
-            _verify_attach(Sv, n_S_tok, token_level=True, bound=bound),
-            (F.col("sid") == F.col("VS.id"))
-            & (F.col("VR.token") == F.col("VS.token"))
-            & (F.col("VR.pos") >= F.col("rmaxpos"))
-            & (F.col("VS.pos") >= F.col("smaxpos")),
-        )
-        .groupBy(
-            "rid", "sid", F.col("VR.len").alias("rlen"),
-            F.col("VS.len").alias("slen"), "pfxoverlap",
-        )
-        .agg(F.count(F.lit(1)).alias("sfx"))
-        .filter(
-            _overlap_cond(
-                F.col("sfx") + F.col("pfxoverlap") - 1,
-                F.col("rlen"), F.col("slen"), t,
-            )
-        )
-        .select(
-            F.col("rid").alias(out_r),
-            F.col("sid").alias(out_s),
-            *_score_cols(with_score, "rlen", "slen"),
-        )
+    return _verify(
+        cand, R_tkdf, S_tkdf, t, n_words, dup_rows,
+        (n_R_docs, n_R_tok), (n_S_docs, n_S_tok), bound,
+        (f"{r_prefix_out[0]}{l_key_attr}", f"{r_prefix_out[1]}{r_key_attr}"),
+        with_score,
     )
 
 
@@ -1670,12 +1417,7 @@ def jaccard_inner_join_brute_force(
     with_score: bool = False,
 ) -> DataFrame:
     """Two-table oracle (jaccard_join.py:407-420)."""
-    if with_score and not tokenizer.return_set:
-        raise ValueError(
-            "with_score requires set semantics (return_set=True): the "
-            "bag-mode overlap counts duplicate token matches and is not "
-            "a Jaccard numerator"
-        )
+    _check_score_semantics(tokenizer, with_score)
     t = float(threshold)
     L = tokenizer.tokenize(l_df, l_key_attr, l_join_attr).alias("L")
     R = tokenizer.tokenize(r_df, r_key_attr, r_join_attr).alias("R")

@@ -28,6 +28,46 @@ _DEFAULTS = {
 }
 
 
+# Share of the host's memory the default driver heap takes. The rest
+# is left to the JVM's off-heap use, the Python driver and the
+# in-process DuckDB oracles.
+_HEAP_FRACTION = 0.6
+
+
+def host_memory_bytes() -> int:
+    """Memory this process can use: the smallest of physical memory,
+    ``MemAvailable`` and the cgroup limit (v2 ``memory.max`` or v1
+    ``memory.limit_in_bytes``), whichever of them can be read."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # "max" means no limit
+            limits.append(int(raw))
+    return min(limits)
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    ``_HEAP_FRACTION`` of :func:`host_memory_bytes`, in MiB. A fixed
+    default either starves a large host or, pinned with ``-Xms`` below,
+    stops the JVM from starting on a small one."""
+    return f"{int(host_memory_bytes() * _HEAP_FRACTION) >> 20}m"
+
+
 def get_spark(
     app_name: str = "jaccard-join-duckdb-spark",
     master: str | None = None,
@@ -51,7 +91,9 @@ def get_spark(
     # 1g default heap OOMs on the dense-corpus joins. Only applies
     # when this call actually launches the JVM (getOrCreate reuses an
     # existing session unchanged).
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_mem = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
+    )
     # Pin the initial heap to the max (round 11). Spark passes only
     # -Xmx, so G1 starts at a tiny initial heap and repeatedly
     # commits/uncommits tens of GB as query memory ebbs — and on

@@ -691,6 +691,24 @@ class TestKeepClusterRepresentatives:
         kept = keep_cluster_representatives(docs, "doc_id", clusters)
         assert [r["doc_id"] for r in kept.collect()] == [5]
 
+    def test_id_listed_twice_emitted_once(self, spark):
+        """A malformed clusters map (id 2 under two components, id 1's
+        row repeated) must not duplicate output rows: each id counts in
+        its smallest component."""
+        from jaccard_join_duckdb_spark.operators.dedup import (
+            keep_cluster_representatives,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c"), (4, "d")], ["doc_id", "text"]
+        )
+        clusters = spark.createDataFrame(
+            [(1, 1), (1, 1), (2, 1), (2, 2), (3, 2)], ["id", "comp"]
+        )
+        kept = keep_cluster_representatives(docs, "doc_id", clusters)
+        # comp 1 = {1, 2} keeps 1; comp 2 = {3} keeps 3; 4 unclustered
+        assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3, 4]
+
 
 class TestDuplicatedSpans:
     """ExactSubstr-style spans: crafted corpora with known repeats

@@ -2,6 +2,8 @@
 (filtered == brute force), the reference's own test discipline
 (SURVEY.md §5, notebook.ipynb cell 5)."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,47 +176,6 @@ def test_inner_column_name_quirk(purchases, interests):
         purchases, interests, "id", "id", "purchases", "interests", ws, 0.9
     )
     assert set(out.columns) == {"l_id", "r_id"}
-
-
-@pytest.mark.parametrize("t", [0.5, 0.8])
-def test_fast_verification_path_equals_generic(documents, t):
-    """distinct_rows=True switches self/inner verification to the
-    compiled slice+array_intersect path; on duplicate-free data it
-    must be row-identical to the generic pairs×tokens join."""
-    ws_generic = WhitespaceTokzr()
-    ws_fast = WhitespaceTokzr(distinct_rows=True)
-    assert not ws_generic.rows_distinct and ws_fast.rows_distinct
-    g = jaccard_self_join(documents, "doc_id", "text", ws_generic, t)
-    f = jaccard_self_join(documents, "doc_id", "text", ws_fast, t)
-    assert pairs(g) == pairs(f)
-    l = documents.filter(F.col("doc_id") % 2 == 0)
-    r = documents.filter(F.col("doc_id") % 2 == 1)
-    gi = jaccard_inner_join(l, r, "doc_id", "doc_id", "text", "text", ws_generic, t)
-    fi = jaccard_inner_join(l, r, "doc_id", "doc_id", "text", "text", ws_fast, t)
-    assert pairs(gi) == pairs(fi)
-
-
-@pytest.mark.parametrize("t", [0.5, 0.8])
-def test_bitset_verification_equals_array_path(documents, monkeypatch, t):
-    """Small vocabularies verify via masked-AND+popcount bitsets; with
-    the gate forced off the array-intersect fallback must produce the
-    identical pair set."""
-    import jaccard_join_duckdb_spark.operators.jaccard as J
-
-    qg = QGramsTokzr(3)
-    l = documents.filter(F.col("doc_id") % 2 == 0)
-    r = documents.filter(F.col("doc_id") % 2 == 1)
-    bit = pairs(jaccard_self_join(documents, "doc_id", "text", qg, t))
-    bit_i = pairs(
-        jaccard_inner_join(l, r, "doc_id", "doc_id", "text", "text", qg, t)
-    )
-    monkeypatch.setattr(J, "_MAX_BITSET_VOCAB", 0)
-    arr = pairs(jaccard_self_join(documents, "doc_id", "text", qg, t))
-    arr_i = pairs(
-        jaccard_inner_join(l, r, "doc_id", "doc_id", "text", "text", qg, t)
-    )
-    assert bit == arr
-    assert bit_i == arr_i
 
 
 def test_fast_path_gating_on_case_duplicates(spark):
@@ -415,125 +376,95 @@ def test_self_gate_stats_formula(spark):
     assert J._self_gate_stats(dup_tkdf, 0.5)[3] == 1
 
 
-def _lowercase_corpus(n_docs=60, max_words=12, seed=11):
-    """Deterministic lowercase corpus: repeated word PICKS across a
-    small vocab create overlap, but set-mode tokenize dedups within a
-    value and no case variants exist — so (id, token) rows are
-    runtime-distinct even though WhitespaceTokzr cannot promise it."""
-    import random
+_WORDS = ["ha", "be", "ce", "dx", "ee", "fo", "gg", "hi"]
 
+
+def _distinct_corpus(n_docs, seed):
+    """Seeded documents of six shared lowercase words plus two words
+    private to the document: no duplicate (id, token) rows, although
+    WhitespaceTokzr cannot promise it."""
     rng = random.Random(seed)
-    vocab = ["ha", "be", "ce", "dx", "ee", "fo", "gg", "hi", "jo", "ku"]
     return [
-        " ".join(
-            rng.choice(vocab) for _ in range(rng.randint(2, max_words))
-        )
-        for _ in range(n_docs)
+        " ".join(rng.sample(_WORDS, 6)) + f" p{seed}x{i} q{seed}x{i}"
+        for i in range(n_docs)
     ]
 
 
-def _dup_corpus(n_docs=60, max_words=12, seed=11):
-    """Mixed-case twin of _lowercase_corpus: case-variant picks make
-    the Delimiter dedup-before-lowercase quirk emit duplicate rows."""
-    base = _lowercase_corpus(n_docs, max_words, seed)
-    return [s.replace("ha", "Ha", 1).replace("be", "BE", 1) + " ku KU"
-            for s in base]
+def _dup_corpus(n_docs, seed):
+    """Twin of _distinct_corpus whose private word is written twice, in
+    two cases: the Delimiter dedup-before-lowercase quirk (set mode)
+    and bag mode both emit a duplicate (id, token) row for it."""
+    rng = random.Random(seed)
+    return [
+        " ".join(rng.sample(_WORDS, 6)) + f" p{seed}x{i} P{seed}X{i}"
+        for i in range(n_docs)
+    ]
 
 
-@pytest.mark.parametrize("t", [0.2, 0.5, 0.8])
-def test_runtime_distinct_array_verify_self(spark, monkeypatch, t):
-    """Runtime-distinct detection (round 11): on a corpus the
-    gate-stats job measures as duplicate-free, a tokenizer that cannot
-    PROMISE distinct rows must still get the compiled array verify —
-    and its rows must equal the generic three-way join's (forced via
-    the _RUNTIME_DISTINCT_ARRAY flag). Plans pinned different: the
-    engaged path builds pos-ordered arrays (array_sort)."""
-    import jaccard_join_duckdb_spark.operators.jaccard as J
-
-    texts = _lowercase_corpus()
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(texts)], "id long, val string"
-    )
-    tok = WhitespaceTokzr()
-    assert not tok.rows_distinct
-    fast = jaccard_self_join(df, "id", "val", tok, t)
-    fast_plan = fast._jdf.queryExecution().optimizedPlan().toString()
-    assert "array_sort" in fast_plan
-    with monkeypatch.context() as m:
-        m.setattr(J, "_RUNTIME_DISTINCT_ARRAY", False)
-        slow = jaccard_self_join(df, "id", "val", tok, t)
-        slow_plan = slow._jdf.queryExecution().optimizedPlan().toString()
-        assert "array_sort" not in slow_plan
-        assert pairs(fast) == pairs(slow)
+# Verify-strategy cases: (join, tokenizer, left corpus, right corpus,
+# plan marker of the strategy); None as marker means the three-way
+# join, whose plan carries neither the bitset nor the array marker.
+_VERIFY_CASES = {
+    "self-bitset": ("self", lambda: WhitespaceTokzr(distinct_rows=True),
+                    "distinct", None, "bit_count"),
+    # cannot promise distinct rows: the gate stats measure zero
+    "self-array": ("self", WhitespaceTokzr, "distinct", None, "array_sort"),
+    "self-three-way-quirk": ("self", WhitespaceTokzr, "dup", None, None),
+    "self-three-way-bag": ("self", lambda: WhitespaceTokzr(return_set=False),
+                           "dup", None, None),
+    "inner-bitset": ("inner", lambda: WhitespaceTokzr(distinct_rows=True),
+                     "distinct", "distinct", "bit_count"),
+    "inner-array": ("inner", WhitespaceTokzr, "distinct", "distinct",
+                    "array_sort"),
+    # one duplicate-carrying side vetoes the array verify for the join
+    "inner-three-way-one-side": ("inner", WhitespaceTokzr, "dup",
+                                 "distinct", None),
+    "inner-three-way-bag": ("inner",
+                            lambda: WhitespaceTokzr(return_set=False),
+                            "dup", "dup", None),
+}
+_VERIFY_MARKERS = ("bit_count", "array_sort")
 
 
-@pytest.mark.parametrize("return_set", [True, False], ids=["quirk", "bag"])
-def test_duplicate_rows_keep_three_way_self(spark, return_set):
-    """Corpora that DO carry duplicate (id, token) rows — the
-    case-collapse quirk in set mode, true repeats in bag mode — must
-    keep the reference's three-way verification (the set-intersect
-    array path would undercount a×b row pairs as min(a,b)); the
-    duplicate-row counter must see them. Result correctness on such
-    corpora is pinned by the reference-oracle fuzz suite
-    (test_property_fuzz: ws-bag, delim arms)."""
-    texts = _dup_corpus()
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(texts)], "id long, val string"
-    )
-    tok = WhitespaceTokzr(return_set=return_set)
-    out = jaccard_self_join(df, "id", "val", tok, 0.5)
-    assert "array_sort" not in (
-        out._jdf.queryExecution().optimizedPlan().toString()
-    )
-    out.count()  # and it still executes
+@pytest.mark.parametrize("t", [0.2, 0.4, 0.6])
+@pytest.mark.parametrize("case", list(_VERIFY_CASES))
+def test_verify_strategy_equals_brute_force(spark, case, t):
+    """Each verify strategy (bitset popcount, array intersect, three-way
+    join) in each join equals brute force, and the data picks the
+    strategy: the vocabulary size picks the bitset, the measured
+    duplicate-row count picks array or three-way.
 
+    The reference's prefix filter is complete only for set overlaps
+    between a shorter-or-equal indexing-side document and a probing
+    one, so every document has eight token rows (no lexicographic l_id
+    quirk, SURVEY.md §4.3.2; no longer indexing side) and duplicate
+    rows sit on a word no other document has. Parity with the
+    reference where duplicates match across documents is pinned by
+    test_property_fuzz.py's ws-bag and delim arms."""
+    mode, mk_tok, left, right, marker = _VERIFY_CASES[case]
+    corpus = {"distinct": _distinct_corpus, "dup": _dup_corpus}
 
-@pytest.mark.parametrize("t", [0.2, 0.5])
-def test_runtime_distinct_array_verify_inner(spark, monkeypatch, t):
-    """Inner-join twin of the runtime-distinct equality pin, on the
-    side-swapped two-table path (per-side duplicate counters)."""
-    import jaccard_join_duckdb_spark.operators.jaccard as J
-
-    texts = _lowercase_corpus(n_docs=80, seed=17)
-    l_df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(texts[:40])], "id long, val string"
-    )
-    r_df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(texts[40:])], "id long, val string"
-    )
-    tok = WhitespaceTokzr()
-    fast = jaccard_inner_join(l_df, r_df, "id", "id", "val", "val", tok, t)
-    assert "array_sort" in fast._jdf.queryExecution().optimizedPlan().toString()
-    with monkeypatch.context() as m:
-        m.setattr(J, "_RUNTIME_DISTINCT_ARRAY", False)
-        slow = jaccard_inner_join(
-            l_df, r_df, "id", "id", "val", "val", tok, t
+    def frame(kind, seed):
+        return spark.createDataFrame(
+            list(enumerate(corpus[kind](40, seed))), "id long, val string"
         )
-        assert "array_sort" not in (
-            slow._jdf.queryExecution().optimizedPlan().toString()
-        )
-        assert sorted(
-            tuple(r) for r in fast.collect()
-        ) == sorted(tuple(r) for r in slow.collect())
 
-
-def test_inner_one_side_duplicates_keep_three_way(spark):
-    """A single duplicate-carrying side must veto the array verify for
-    the whole inner join (dup counts are summed across sides)."""
-    l_df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(_dup_corpus(n_docs=20))],
-        "id long, val string",
+    tok = mk_tok()
+    if mode == "self":
+        df = frame(left, 11)
+        filt = jaccard_self_join(df, "id", "val", tok, t)
+        brute = jaccard_self_join_brute_force(df, "id", "val", tok, t)
+    else:
+        args = (frame(left, 11), frame(right, 17), "id", "id", "val", "val",
+                tok, t)
+        filt = jaccard_inner_join(*args)
+        brute = jaccard_inner_join_brute_force(*args)
+    plan = filt._jdf.queryExecution().optimizedPlan().toString()
+    assert [m for m in _VERIFY_MARKERS if m in plan] == (
+        [marker] if marker else []
     )
-    r_df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(_lowercase_corpus(n_docs=20))],
-        "id long, val string",
-    )
-    out = jaccard_inner_join(
-        l_df, r_df, "id", "id", "val", "val", WhitespaceTokzr(), 0.5
-    )
-    assert "array_sort" not in (
-        out._jdf.queryExecution().optimizedPlan().toString()
-    )
+    assert pairs(filt) == pairs(brute)
+    assert pairs(filt)  # non-degenerate: some pair passes
 
 
 def test_auto_hot_threshold_unit():

@@ -512,3 +512,38 @@ def test_get_spark_xms_opt_out(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_XMS", "0")
     S.get_spark()
     assert "spark.driver.extraJavaOptions" not in captured
+
+
+def test_default_driver_memory_fits_host(monkeypatch):
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is sized from the
+    host, never above its physical memory: a fixed 48g default, pinned
+    with -Xms, stopped the JVM from starting on a 15 GB host. The
+    variable still overrides the default."""
+    import jaccard_join_duckdb_spark.session as S
+
+    captured = {}
+
+    class FakeBuilder:
+        def appName(self, *_): return self
+        def master(self, *_): return self
+        def config(self, k, v):
+            captured[k] = v
+            return self
+        def getOrCreate(self): return None
+
+    monkeypatch.setattr(
+        S.SparkSession, "builder", FakeBuilder(), raising=False
+    )
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_XMS", raising=False)
+    S.get_spark()
+    heap = captured["spark.driver.memory"]
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert heap == S.default_driver_memory()
+    assert heap.endswith("m")
+    assert 0 < int(heap[:-1]) << 20 <= S.host_memory_bytes() <= physical
+    assert f"-Xms{heap}" in captured["spark.driver.extraJavaOptions"]
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    S.get_spark()
+    assert captured["spark.driver.memory"] == "2g"

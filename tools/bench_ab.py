@@ -75,8 +75,17 @@ def main() -> None:
             raise SystemExit(f"unknown arg {a!r}")
     if not targets:
         raise SystemExit("--queries is required")
+    if iters < 1:
+        raise SystemExit(f"--iters must be >= 1 (got {iters})")
 
     import bench
+
+    # Only bench.BENCH_QUERIES are timed, so a target must be one of them.
+    names = list(bench.BENCH_QUERIES)
+    for t in targets:
+        if t not in names:
+            raise SystemExit(f"{t!r} is not a timed query in bench.BENCH_QUERIES")
+
     import __spark_entry__ as entry
     from jaccard_join_duckdb_spark import get_spark
 
@@ -90,10 +99,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = {**entry.queries(), **getattr(entry, "extra_queries", dict)()}
-    names = list(bench.BENCH_QUERIES)
-    for t in targets:
-        if t not in qs:
-            raise SystemExit(f"unknown query {t!r}")
 
     def apply(patches):
         saved = []
