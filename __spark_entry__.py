@@ -112,9 +112,9 @@ def q_jaccard_self_ws_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 200 documents get their doc-freq row broadcast (map-side join,
     no shuffle) while the cold tail takes the shuffle join — the
     mitigation for the skewed tokens ⋈ dfreq exchange that AQE
-    structurally cannot split (operators/jaccard.py
-    tokens_with_doc_freq). Output rows are identical to the baseline,
-    so the unmodified self_filtered_sql oracle grades it."""
+    structurally cannot split (operators/jaccard.py _tkdf). Output
+    rows are identical to the baseline, so the unmodified
+    self_filtered_sql oracle grades it."""
     return jaccard_self_join(
         _docs(spark, sf_dir), "doc_id", "text", _WS, T_SELF,
         hot_df_threshold=200,

@@ -253,13 +253,14 @@ def pagerank(
     outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
     ew = e.join(outdeg, "u").persist(StorageLevel.MEMORY_AND_DISK)
     n = nodes.count()  # driver scalar: sizes base and the init rank
+    # that count materialized e's cache, so e0's is dead weight
+    e0.unpersist()
     if n == 0:
         # empty edge list => no nodes; return an empty frame with the
         # contract schema instead of a ZeroDivisionError from base//n
         nodes.unpersist()
         ew.unpersist()
         e.unpersist()
-        e0.unpersist()
         return nodes.select(
             "node",
             F.lit(0).cast("long").alias("rank_scaled"),
@@ -305,7 +306,6 @@ def pagerank(
     nodes.unpersist()
     ew.unpersist()
     e.unpersist()
-    e0.unpersist()
     return out.select(
         "node",
         "rank_scaled",

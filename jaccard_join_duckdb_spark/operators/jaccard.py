@@ -31,15 +31,23 @@ Parity hazards preserved (SURVEY.md §4.3):
 Scale design (100 TB target):
 - All stages are shuffles on high-cardinality keys (token, id) —
   no driver-side materialization of row data; only the inner join's
-  side-selection reads four scalar counts (as the reference does).
-- Token frames, the doc-frequency table and ``tkdf`` are persisted
+  side-selection reads scalar counts (as the reference does).
+- The self and inner joins share one candidate generator, written once
+  per stage: :func:`_doc_freq` (df per token; the inner join's
+  cross-table ``l_df * r_df`` with a widow placeholder), :func:`_tkdf`
+  (tokens ⋈ df with ``pos``, plus the ``tid`` rank on the bitset path
+  or the hot-token split otherwise), :func:`_gate_stats`,
+  :func:`_candidates` (prefix filters and the token equi-join) and
+  :func:`_verify`. The self join runs them with its one token frame on
+  both sides; each join keeps only its pair predicate, and the inner
+  join its side swap.
+- Token frames, the doc-frequency dim and ``tkdf`` are persisted
   (MEMORY_AND_DISK): candidates and verification each scan ``tkdf``
   twice, and every plan decision (bitset vocabulary, hot-token split,
-  broadcast attach, verify strategy) reads its scalars from one small
-  aggregate over a persisted frame instead of re-running the tokenize
-  chain.
-- Verification is one stage, :func:`_verify`, shared by the self and
-  inner joins. It picks one of three strategies from those scalars:
+  broadcast attach, verify strategy, side swap) reads its scalars from
+  two small aggregates over persisted frames — the dim's statistics
+  and the gate-stats job — instead of re-running the tokenize chain.
+- Verification picks one of three strategies from those scalars:
   bitset popcount when the vocabulary fits ``_MAX_BITSET_VOCAB``
   words, compiled array intersect when the ``(id, token)`` rows are
   distinct, and the reference's pairs × tokens three-way join
@@ -55,9 +63,11 @@ Scale design (100 TB target):
 
 from __future__ import annotations
 
+import functools
 import re
 from decimal import Decimal
 from fractions import Fraction
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -231,7 +241,7 @@ def _positional_cond(
 # token's row count. One shuffle partition of the tokens ⋈ dfreq join
 # averages N/P rows (P = spark.sql.shuffle.partitions); a token whose
 # df is many multiples of that average turns its partition into a
-# straggler AQE structurally cannot split (see tokens_with_doc_freq).
+# straggler AQE structurally cannot split (see _tkdf).
 # Engage when the hottest token is >= FACTOR × the average partition
 # AND >= an absolute row floor (below it even a fully-skewed partition
 # is fast and the extra anti-join plan is pure overhead). Note the
@@ -266,96 +276,190 @@ def _shuffle_partitions(df: DataFrame) -> int:
         return 200  # "auto" (AQE-managed) or unset: Spark's default
 
 
-def _validate_hot_threshold(value: int | str | None) -> None:
+def _validate_hot_threshold(
+    value: int | str | None, auto: bool = True
+) -> None:
     """Reject malformed ``hot_df_threshold`` values up front (ADVICE
     r10: a typo like ``"Auto"`` used to fall past the ``"auto"`` check,
     stay truthy, and crash at ``int(...)`` deep in plan construction
-    with an unhelpful ValueError)."""
-    if isinstance(value, str) and value != "auto":
+    with an unhelpful ValueError). ``auto`` says whether the caller
+    accepts ``"auto"``."""
+    if isinstance(value, str) and not (auto and value == "auto"):
         raise ValueError(
-            "hot_df_threshold must be an int, None, or 'auto' "
-            f"(got {value!r})"
+            "hot_df_threshold must be an int, None"
+            + (", or 'auto'" if auto else "")
+            + f" (got {value!r})"
         )
 
 
-def tokens_with_doc_freq(
+# Bitset verification is used when the token vocabulary fits in this
+# many distinct tokens (64 longs per document). Q-gram and small-alphabet
+# corpora qualify; unbounded word vocabularies fall back to the
+# array-intersect path. 64 words = 512 B/doc of fixed columns — still
+# far below the per-pair cost of array_intersect on multi-hundred-token
+# arrays (measured: 5-gram sf0.1 verify 8.7s → 6.3s when the 2333-token
+# vocab moved from the array path to 37-word bitsets).
+_MAX_BITSET_VOCAB = 4096
+
+# Widow placeholder (jaccard_join.py:266-268): the inner join's df of a
+# token only one side has. The reference uses count(l)*count(r)+1 — two
+# full-table scans whose only role is a df value that sorts AFTER every
+# real product in the (df, token) pos ordering. Any constant strictly
+# above all real products yields the bit-identical ordering (widows tie
+# with each other either way and fall to the token tiebreak; real
+# products are <= count(l)*count(r) < 2^63-1 anywhere long arithmetic
+# holds), so the two driver-side count jobs are dropped. The widow
+# counts for the side swap are decision-bearing and stay (_gate_stats).
+_WIDOW_DF = (1 << 63) - 1
+
+
+class _DocFreq(NamedTuple):
+    """The doc-frequency stage's output (see :func:`_doc_freq`)."""
+
+    dim: DataFrame  # persisted (token, df) or (token, l_df, r_df, df)
+    side_dfs: tuple[str, str]  # each side's own df column in ``dim``
+    vocab: int
+    n_tok: int  # token rows, both sides
+    max_df: int  # largest per-side df
+    sumsq: float  # Σ over tokens of left df × right df
+    n_words: int  # bitset words; 0 when the vocabulary is off the bitset
+    hot_thr: int | None  # heavy-hitter split threshold; None disables
+
+
+def _doc_freq(
+    tokenizer: Tokenizer,
+    hot_df_threshold: int | str | None,
     tokens: DataFrame,
-    with_pair_key: bool = False,
-    hot_df_threshold: int | str | None = None,
-    stats_out: dict | None = None,
-    dfreq: DataFrame | None = None,
-) -> DataFrame:
-    """tokens → ``tkdf(id, len, token, df, pos[, l_id])``.
+    other: DataFrame | None = None,
+) -> _DocFreq:
+    """Document frequency of every token (jaccard_join.py:127-130) for
+    a self join (``tokens`` only) or an inner join (``tokens`` and
+    ``other``), persisted, plus the plan decisions its statistics make.
 
-    Document frequency per token (jaccard_join.py:127-130), position
-    = ``row_number() OVER (PARTITION BY id ORDER BY df, token)``
-    (jaccard_join.py:132-137), and — for the self-join — the pair
-    ordering key ``l_id = concat(len, '_', id)`` (jaccard_join.py:135).
+    The inner join's df is the cross-table product ``l_df * r_df`` over
+    a full outer join of the per-side counts, with :data:`_WIDOW_DF`
+    for a token one side lacks (jaccard_join.py:270-295); the per-side
+    counts stay in the dim because hotness is a per-side property.
 
-    ``hot_df_threshold`` (skew mitigation for Zipf token
-    distributions): tokens with ``df >= threshold`` are heavy hitters
-    — on a crawl corpus the hottest word lands in a constant fraction
-    of ALL documents, putting that fraction of the corpus into ONE
-    shuffle partition of the tokens ⋈ dfreq join. AQE's skew-join
-    split cannot help here structurally: the dfreq aggregate reuses
-    the join's token-hash partitioning (no exchange in between), and
-    OptimizeSkewedJoin only splits joins reading bare shuffle stages.
-    Mitigation: heavy hitters are FEW by definition, so their dfreq
-    rows broadcast — hot token rows join map-side (no shuffle at
-    all), and only the cold tail goes through the shuffle join
-    (pre-filtered with a broadcast anti-join so hot rows never enter
-    the skewed exchange). Identical output rows; see
-    tools/skew_demo.py for the measured straggler relief.
-
-    ``hot_df_threshold="auto"`` (round 10) picks the threshold from
-    the data: the dfreq table is persisted and ONE small aggregate
-    over it (N token rows, max df) feeds :func:`_auto_hot_threshold`
-    — a Zipf corpus gets the mitigation without the magic kwarg, a
-    balanced corpus keeps the plain two-table plan. The aggregate is
-    an eager job over the vocab-sized dfreq (which the join needs
-    anyway — persisting it means the doc-frequency shuffle runs once
-    either way); callers whose token frame is NOT persisted should
-    pass an explicit threshold or None instead, or the stats job
-    re-runs the tokenize chain. The ``"auto"`` branch's persisted
-    dfreq is exported via ``stats_out["dfreq"]`` so callers can
-    ``unpersist()`` it once their tkdf has materialized — direct
-    callers that ignore ``stats_out`` carry a vocab-sized cache entry
-    until ``spark.catalog.clearCache()`` (ADVICE r10).
-    """
-    _validate_hot_threshold(hot_df_threshold)
-    if dfreq is None:
-        dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    if hot_df_threshold == "auto":
-        dfreq = dfreq.persist(StorageLevel.MEMORY_AND_DISK)
-        if stats_out is not None:
-            stats_out["dfreq"] = dfreq
-        # One aggregate, triple duty: N and max(df) drive the hot
-        # split; sum(df²) is a sound UPPER bound on the broadcast
-        # gate's candidate bound (per token, indexing-prefix rows ×
-        # probing-prefix rows <= df², summed), exported via
-        # ``stats_out`` so sparse corpora can skip the exact
-        # gate-stats job entirely (double: immune to long overflow
-        # at corpus scale; it only feeds a threshold comparison).
-        row = dfreq.agg(
-            F.sum("df").alias("n"),
-            F.max("df").alias("m"),
-            F.sum((F.col("df") * F.col("df")).cast("double")).alias("sq"),
-        ).first()
-        n_tok, max_df = int(row["n"] or 0), int(row["m"] or 0)
-        if stats_out is not None:
-            stats_out.update(
-                n_tok=n_tok, max_df=max_df, sumsq=float(row["sq"] or 0.0)
-            )
-        hot_df_threshold = _auto_hot_threshold(
+    ONE eager aggregate over the persisted dim drives every decision
+    (round 10 — previously three separate probe jobs): the vocabulary
+    picks bitset verification (when a document's token set fits in a
+    few 64-bit words — measured ~8x faster than per-pair
+    array_intersect on the dense q-gram corpus), ``N`` and the largest
+    per-side df engage the heavy-hitter split, and ``Σ l_df × r_df``
+    (``Σ df²`` for a self join) feeds the sparse fast decline of
+    :func:`_cheap_decline`. The dim is the algorithm's own required
+    shuffle; persisting it means the tkdf builds reuse it, so the only
+    added cost is reading back the vocab-sized table once."""
+    if other is None:
+        frames, side_dfs = [tokens], ("df", "df")
+    else:
+        frames, side_dfs = [tokens, other], ("l_df", "r_df")
+    names = list(dict.fromkeys(side_dfs))
+    counts = [
+        fr.groupBy("token").agg(F.count(F.lit(1)).alias(c))
+        for fr, c in zip(frames, names)
+    ]
+    dim = counts[0]
+    if other is not None:
+        dim = dim.join(counts[1], "token", "full_outer").select(
+            "token",
+            "l_df",
+            "r_df",
+            F.coalesce(
+                F.col("l_df") * F.col("r_df"), F.lit(_WIDOW_DF)
+            ).alias("df"),
+        )
+    dim = dim.persist(StorageLevel.MEMORY_AND_DISK)
+    row = dim.agg(
+        F.count(F.lit(1)).alias("vocab"),
+        *[F.sum(c).alias(f"n_{c}") for c in names],
+        *[F.max(c).alias(f"m_{c}") for c in names],
+        # double: immune to long overflow at corpus scale; it only
+        # feeds a threshold comparison
+        F.sum(
+            (F.col(side_dfs[0]) * F.col(side_dfs[1])).cast("double")
+        ).alias("sumsq"),
+    ).first()
+    vocab = int(row["vocab"] or 0)
+    n_tok = sum(int(row[f"n_{c}"] or 0) for c in names)
+    max_df = max(int(row[f"m_{c}"] or 0) for c in names)
+    n_words = 0
+    if tokenizer.rows_distinct and 0 < vocab <= _MAX_BITSET_VOCAB:
+        n_words = (vocab + 63) // 64
+    if n_words:
+        # the tid dim broadcasts wholesale: the build join is already
+        # map-side and skew-free, so the heavy-hitter split is moot
+        hot_thr = None
+    elif hot_df_threshold == "auto":
+        hot_thr = _auto_hot_threshold(
             n_tok, max_df, _shuffle_partitions(tokens)
         )
-    if hot_df_threshold:
-        thr = int(hot_df_threshold)
-        hot = dfreq.filter(F.col("df") >= thr)
-        hot_tokens = F.broadcast(hot.select("token"))
+    else:
+        hot_thr = hot_df_threshold
+    return _DocFreq(
+        dim, side_dfs, vocab, n_tok, max_df, float(row["sumsq"] or 0.0),
+        n_words, hot_thr,
+    )
+
+
+def _tkdf(
+    tokens: DataFrame,
+    dim: DataFrame,
+    n_words: int,
+    hot_thr: int | None,
+    side_df: str,
+    with_pair_key: bool = False,
+) -> DataFrame:
+    """tokens ⋈ the doc-frequency dim → ``tkdf(id, len, token, df[,
+    tid], pos[, l_id])`` for one side.
+
+    ``pos`` = ``row_number() OVER (PARTITION BY id ORDER BY df,
+    token)`` (jaccard_join.py:132-137); ``l_id = concat(len, '_', id)``
+    is the self join's pair-ordering key (jaccard_join.py:135).
+
+    Bitset path (``n_words > 0``): ``tid`` is the token's 1-based rank
+    in the global ``(df, token)`` order — the SAME total order the
+    ``pos`` window uses, so within a document ``pos`` is increasing in
+    ``tid`` and the suffix condition ``pos >= maxPos`` is equivalent to
+    ``tid >= tid_at_maxPos``. The rank window runs unpartitioned over
+    the dim, which then broadcasts — sound only because the bitset gate
+    bounds the vocabulary at ``_MAX_BITSET_VOCAB``. An inner join's two
+    sides rank by the one combined df, so pos↔tid monotonicity holds on
+    each side.
+
+    ``hot_thr`` (skew mitigation for Zipf token distributions): tokens
+    whose ``side_df`` (this side's own df — that is what decides how
+    many of ITS rows pile into one partition) is ``>= hot_thr`` are
+    heavy hitters. On a crawl corpus the hottest word lands in a
+    constant fraction of ALL documents, putting that fraction of the
+    corpus into ONE shuffle partition of the tokens ⋈ dim join. AQE's
+    skew-join split cannot help here structurally: the dim aggregate
+    reuses the join's token-hash partitioning (no exchange in between),
+    and OptimizeSkewedJoin only splits joins reading bare shuffle
+    stages. Heavy hitters are FEW by definition, so their dim rows
+    broadcast — hot token rows join map-side, and only the cold tail
+    goes through the shuffle join (pre-filtered with a broadcast
+    anti-join so hot rows never enter the skewed exchange). Identical
+    output rows; see tools/skew_demo.py for the measured straggler
+    relief.
+    """
+    dfreq = dim.select("token", "df")
+    if n_words:
+        joined = tokens.join(
+            F.broadcast(
+                dfreq.withColumn(
+                    "tid", F.row_number().over(Window.orderBy("df", "token"))
+                )
+            ),
+            "token",
+        )
+    elif hot_thr:
+        side_hot = F.coalesce(F.col(side_df), F.lit(0)) >= F.lit(int(hot_thr))
+        hot = dim.filter(side_hot).select("token", "df")
         joined = (
-            tokens.join(hot_tokens, "token", "left_anti")
-            .join(dfreq.filter(F.col("df") < thr), "token")
+            tokens.join(F.broadcast(hot.select("token")), "token", "left_anti")
+            .join(dim.filter(~side_hot).select("token", "df"), "token")
             .unionByName(tokens.join(F.broadcast(hot), "token"))
         )
     else:
@@ -365,7 +469,8 @@ def tokens_with_doc_freq(
         "id",
         "len",
         "token",
-        F.col("df"),
+        "df",
+        *(["tid"] if n_words else []),
         F.row_number().over(w).alias("pos"),
     )
     if with_pair_key:
@@ -380,14 +485,18 @@ def tokens_with_doc_freq(
     return out
 
 
-# Bitset verification is used when the token vocabulary fits in this
-# many distinct tokens (64 longs per document). Q-gram and small-alphabet
-# corpora qualify; unbounded word vocabularies fall back to the
-# array-intersect path. 64 words = 512 B/doc of fixed columns — still
-# far below the per-pair cost of array_intersect on multi-hundred-token
-# arrays (measured: 5-gram sf0.1 verify 8.7s → 6.3s when the 2333-token
-# vocab moved from the array path to 37-word bitsets).
-_MAX_BITSET_VOCAB = 4096
+def tokens_with_doc_freq(
+    tokens: DataFrame,
+    with_pair_key: bool = False,
+    hot_df_threshold: int | None = None,
+) -> DataFrame:
+    """tokens → ``tkdf(id, len, token, df, pos[, l_id])``: the self
+    join's tkdf build (see :func:`_tkdf`) as a lazy frame, with the
+    heavy-hitter split at an explicit ``hot_df_threshold`` (None
+    disables it)."""
+    _validate_hot_threshold(hot_df_threshold, auto=False)
+    dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+    return _tkdf(tokens, dfreq, 0, hot_df_threshold, "df", with_pair_key)
 
 # Verification-side broadcast gate (round 8). The verification attach
 # tables are ONE ROW PER DOCUMENT (pos-ordered token arrays, bitsets,
@@ -488,57 +597,95 @@ _BROADCAST_VERIFY_MIN_RATIO = 4
 # density test, so it decides alone whenever docs <= the size cap.
 
 
-def _self_gate_stats(
-    tkdf: DataFrame, t: float, skip_dup: bool = False
-) -> tuple[int, int, int, int]:
-    """``(n_docs, n_tok, cand_bound, dup_rows)`` for the self-join
-    broadcast gate, in ONE aggregate job over the persisted token
-    table (no separate doc count / token count jobs): per token, ``a``
-    rows in the indexing prefix × ``b`` rows in the probing prefix
-    bounds the candidate equi-join's output; ``pos == 1`` rows count
-    documents exactly (every tokenized doc has one); ``dup_rows``
-    (rows minus distinct ids, summed over tokens) is the exact count
-    of duplicate ``(id, token)`` rows, which picks the verify strategy
-    (see :func:`_verify`) from the same job.
-    ``skip_dup`` (round 12): a ``rows_distinct`` tokenizer takes the
-    array verification unconditionally, so its caller skips the
-    per-token ``count_distinct`` — the only hash-set aggregate in the
-    job; everything else is plain compiled sums — and gets the known
+def _cheap_decline(sumsq: float, n_tok: int) -> bool:
+    """Sparse-corpus fast decline (round 10): ``sumsq`` (the doc-frequency
+    stage's Σ over tokens of left df × right df) is a sound upper bound
+    on the candidate bound — per token, indexing-prefix rows ×
+    probing-prefix rows <= the product of the two sides' dfs. When even
+    it cannot clear the ratio for ``n_tok``, the smallest token-row
+    denominator any attach decides against, no broadcast can pay and
+    the exact bound is not needed. Dense corpora (the broadcast
+    winners) blow past this test and pay the exact job."""
+    return sumsq < _BROADCAST_VERIFY_MIN_RATIO * max(n_tok, 1)
+
+
+class _GateStats(NamedTuple):
+    """The gate-stats job's output (see :func:`_gate_stats`)."""
+
+    widows: tuple[int, ...]  # per side: indexing-prefix rows of widows
+    docs: tuple[int, ...]  # per side
+    tokens: tuple[int, ...]  # per side: token rows
+    bound: tuple[int, int]  # candidate bound, first side indexing / last
+    dup_rows: int  # duplicate (id, token) rows, all sides
+
+
+def _gate_stats(
+    tkdfs: list[DataFrame], t: float, skip_dup: bool = False
+) -> _GateStats:
+    """Every scalar the verify and side-swap gates read, in ONE
+    aggregate job (a ``groupBy("token")`` over the side-tagged,
+    persisted tkdfs — one for a self join, two for an inner join):
+
+    - per side, the widow count that mirrors the reference's
+      ``fetchall()[0][0]`` side-swap decision (indexing-prefix rows
+      whose df is :data:`_WIDOW_DF`; jaccard_join.py:324-353), the doc
+      count (``pos == 1`` rows: every tokenized doc has one) and the
+      token-row count;
+    - the candidate bound for both orientations: per token, ``a`` rows
+      in the indexing prefix of one side × ``b`` rows in the probing
+      prefix of the other bound the candidate equi-join's output
+      (``bound[0]``: the first side indexes, ``bound[1]``: the last
+      side does; a self join's two are equal);
+    - ``dup_rows`` (rows minus distinct ``(side, id)`` pairs, summed
+      over tokens), the exact count of duplicate ``(id, token)`` rows,
+      which picks the verify strategy (see :func:`_verify`).
+
+    One job because each scalar job costs a driver scheduling
+    round-trip, the fixed floor that dominates small joins.
+
+    ``skip_dup`` (round 12): a ``rows_distinct`` tokenizer has no
+    duplicate rows, so its caller skips the per-token
+    ``count_distinct`` — the only hash-set aggregate in the job;
+    everything else is plain compiled sums — and gets the known
     ``dup_rows = 0``."""
     idx = _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-    prb = _probing_prefix_cond(F.col("len"), F.col("pos"), t)
-    dup_cols = [] if skip_dup else [F.count_distinct("id").alias("u")]
-    dup_agg = (
-        [] if skip_dup else [F.sum(F.col("c") - F.col("u")).alias("dup_rows")]
+    flags = {
+        "c": F.lit(True),
+        "a": idx,
+        "b": _probing_prefix_cond(F.col("len"), F.col("pos"), t),
+        "d": F.col("pos") == 1,
+        "w": idx & (F.col("df") == _WIDOW_DF),
+    }
+    sides = range(len(tkdfs))
+    tagged = functools.reduce(DataFrame.unionByName, [
+        tk.select(F.lit(i).alias("side"), "id", "token", "len", "pos", "df")
+        for i, tk in enumerate(tkdfs)
+    ])
+    per_token = tagged.groupBy("token").agg(
+        *[
+            F.sum(((F.col("side") == i) & flag).cast("long")).alias(f"{k}{i}")
+            for k, flag in flags.items()
+            for i in sides
+        ],
+        *([] if skip_dup else [
+            (F.count(F.lit(1)) - F.count_distinct("side", "id")).alias("dup")
+        ]),
     )
-    row = (
-        tkdf.groupBy("token")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum(idx.cast("long")).alias("a"),
-            F.sum(prb.cast("long")).alias("b"),
-            F.sum((F.col("pos") == 1).cast("long")).alias("d"),
-            *dup_cols,
-        )
-        .agg(
-            F.sum("d").alias("n_docs"),
-            F.sum("c").alias("n_tok"),
-            F.sum(F.col("a") * F.col("b")).alias("bound"),
-            *dup_agg,
-        )
-        .first()
-    )
-    if skip_dup:
-        dup_rows = 0
-    else:
-        dup_rows = int(
-            row["dup_rows"] if row["dup_rows"] is not None else -1
-        )
-    return (
-        int(row["n_docs"] or 0),
-        int(row["n_tok"] or 0),
-        int(row["bound"] or 0),
-        dup_rows,
+    last = sides[-1]
+    row = per_token.agg(
+        *[F.sum(f"{k}{i}").alias(f"{k}{i}") for k in "wdc" for i in sides],
+        F.sum(F.col("a0") * F.col(f"b{last}")).alias("bound0"),
+        F.sum(F.col(f"a{last}") * F.col("b0")).alias("bound1"),
+        *([] if skip_dup else [F.sum("dup").alias("dup")]),
+    ).first()
+
+    def get(name: str) -> int:
+        return int(row[name] or 0)
+
+    return _GateStats(
+        *(tuple(get(f"{k}{i}") for i in sides) for k in "wdc"),
+        (get("bound0"), get("bound1")),
+        0 if skip_dup else get("dup"),
     )
 
 
@@ -591,39 +738,6 @@ def _verify_attach(
     if bound is not None and bound < _BROADCAST_VERIFY_MIN_RATIO * decide_rows:
         return per_doc
     return F.broadcast(per_doc)
-
-
-def _tokens_with_tid(
-    tokens: DataFrame, dfreq: DataFrame | None = None
-) -> DataFrame:
-    """tokens → ``(id, len, token, df, tid, pos, l_id)`` where ``tid``
-    is the token's 1-based rank in the global ``(df, token)`` order —
-    the SAME total order the ``pos`` window uses, so within a document
-    ``pos`` is increasing in ``tid`` and the suffix condition
-    ``pos >= maxPos`` is equivalent to ``tid >= tid_at_maxPos``.
-
-    The rank window runs unpartitioned over the aggregated token dim —
-    sound only because callers gate on ``vocab <= _MAX_BITSET_VOCAB``.
-    """
-    if dfreq is None:
-        dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    tdim = dfreq.withColumn(
-        "tid", F.row_number().over(Window.orderBy("df", "token"))
-    )
-    w = Window.partitionBy("id").orderBy("df", "token")
-    return tokens.join(F.broadcast(tdim), "token").select(
-        "id",
-        "len",
-        "token",
-        "df",
-        "tid",
-        F.row_number().over(w).alias("pos"),
-        F.concat(
-            F.col("len").cast("string"),
-            F.lit("_"),
-            F.col("id").cast("string"),
-        ).alias("l_id"),
-    )
 
 
 def _doc_bitsets(tk: DataFrame, n_words: int) -> DataFrame:
@@ -742,18 +856,40 @@ def _suffix_overlap(
     )
 
 
-def _candidates(pairs: DataFrame, left: str, right: str, by: str) -> DataFrame:
-    """Candidate pairs from the prefix-token equi-join ``pairs``, whose
-    sides are aliased ``left`` and ``right`` (jaccard_join.py:166-169):
-    ``(lid, rid, lmax, rmax, pfxoverlap)``. ``lmax``/``rmax`` are each
-    side's largest matched ``by`` value (``tid`` on the bitset path,
-    ``pos`` otherwise) and ``pfxoverlap`` counts the matched prefix
-    tokens."""
-    return pairs.groupBy(
-        F.col(f"{left}.id").alias("lid"), F.col(f"{right}.id").alias("rid")
+def _candidates(
+    idx_tk: DataFrame, prb_tk: DataFrame, t: float, pair_cond: Column, by: str
+) -> DataFrame:
+    """Candidate generation (jaccard_join.py:148-169, 364-384) for both
+    the self and the inner join: the indexing prefix of ``idx_tk``
+    (aliased ``L``) equi-joins the probing prefix of ``prb_tk``
+    (aliased ``R``) on ``token`` under ``pair_cond`` (the join's own
+    predicate on ``L``/``R`` columns) and the positional filter. The
+    single-side prefix conditions are pre-join filters — the same
+    predicate set as the reference's fused WHERE, but explicit so the
+    shuffle inputs shrink before the token equi-join.
+
+    Returns ``(lid, rid, lmax, rmax, pfxoverlap)``: ``lmax``/``rmax``
+    are each side's largest matched ``by`` value (``tid`` on the bitset
+    path, ``pos`` otherwise) and ``pfxoverlap`` counts the matched
+    prefix tokens."""
+    L = idx_tk.filter(
+        _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
+    ).alias("L")
+    R = prb_tk.filter(
+        _probing_prefix_cond(F.col("len"), F.col("pos"), t)
+    ).alias("R")
+    cond = (
+        (F.col("L.token") == F.col("R.token"))
+        & pair_cond
+        & _positional_cond(
+            F.col("L.len"), F.col("L.pos"), F.col("R.len"), F.col("R.pos"), t
+        )
+    )
+    return L.join(R, cond).groupBy(
+        F.col("L.id").alias("lid"), F.col("R.id").alias("rid")
     ).agg(
-        F.max(f"{left}.{by}").alias("lmax"),
-        F.max(f"{right}.{by}").alias("rmax"),
+        F.max(f"L.{by}").alias("lmax"),
+        F.max(f"R.{by}").alias("rmax"),
         F.count(F.lit(1)).alias("pfxoverlap"),
     )
 
@@ -912,16 +1048,19 @@ def jaccard_self_join(
     exact ``jaccard`` double column when ``with_score`` (extension —
     see _jaccard_score). ``hot_df_threshold`` controls the
     heavy-hitter broadcast split for Zipf-skewed corpora (see
-    :func:`tokens_with_doc_freq`): the default ``"auto"`` engages it
-    from measured dfreq skew (round 10 — a 100 TB Zipf corpus hits
-    the hot-token straggler on every join, so the mitigation must not
-    hide behind a kwarg); an int overrides the threshold, ``None``
-    disables. It affects only the tkdf build plan, never the
-    result.
+    :func:`_tkdf`): the default ``"auto"`` engages it from measured
+    df skew (round 10 — a 100 TB Zipf corpus hits the hot-token
+    straggler on every join, so the mitigation must not hide behind a
+    kwarg); an int overrides the threshold, ``None`` disables. It
+    affects only the tkdf build plan, never the result.
 
-    The token frame, its doc-frequency table and ``tkdf`` are
-    persisted; verification is the shared :func:`_verify` stage, with
-    ``tkdf`` on both sides."""
+    The shared stages run with the one token frame on both sides:
+    :func:`_doc_freq`, :func:`_tkdf`, :func:`_gate_stats`,
+    :func:`_candidates` and :func:`_verify`. Specific to the self join
+    are the pair predicate (``L.l_id < R.l_id``, each unordered pair
+    once, plus the one-sided length filter) and the doc-count probe
+    that skips the gate-stats job for a corpus over the broadcast
+    cap."""
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
@@ -930,110 +1069,45 @@ def jaccard_self_join(
     tokens = tokenizer.tokenize(df, key_attr, join_attr).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-
-    # ONE eager aggregate over the persisted doc-frequency table
-    # drives EVERY plan decision (round 10 — previously three separate
-    # probe jobs): vocabulary size (bitset verify when a document's
-    # token set fits in a few 64-bit words — measured ~8x faster than
-    # per-pair array_intersect on the dense q-gram corpus), hot-split
-    # engagement (N, max df), and the sparse fast-decline (sum df²).
-    # dfreq is the algorithm's own required shuffle — persisting it
-    # means the tkdf build reuses it instead of recomputing, so the
-    # only added cost is reading back the vocab-sized table once.
-    dfreq = tokens.groupBy("token").agg(
-        F.count(F.lit(1)).alias("df")
+    freq = _doc_freq(tokenizer, hot_df_threshold, tokens)
+    tkdf = _tkdf(
+        tokens, freq.dim, freq.n_words, freq.hot_thr, "df", with_pair_key=True
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    row = dfreq.agg(
-        F.count(F.lit(1)).alias("v"),
-        F.sum("df").alias("n"),
-        F.max("df").alias("m"),
-        F.sum((F.col("df") * F.col("df")).cast("double")).alias("sq"),
-    ).first()
-    vocab_n, n_tok_all = int(row["v"] or 0), int(row["n"] or 0)
-    n_words = 0
-    if tokenizer.rows_distinct and 0 < vocab_n <= _MAX_BITSET_VOCAB:
-        n_words = (vocab_n + 63) // 64
-    if hot_df_threshold == "auto":
-        hot_df_threshold = _auto_hot_threshold(
-            n_tok_all, int(row["m"] or 0), _shuffle_partitions(tokens)
-        )
 
-    if n_words:
-        # bitset path: the token dim is broadcast wholesale for the
-        # tid ranking — the build join is already map-side, skew-free
-        tkdf = _tokens_with_tid(tokens, dfreq=dfreq)
-    else:
-        tkdf = tokens_with_doc_freq(
-            tokens,
-            with_pair_key=True,
-            hot_df_threshold=hot_df_threshold,
-            dfreq=dfreq,
-        )
-    tkdf = tkdf.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Candidate generation (jaccard_join.py:148-166). Single-side
-    # prefix conditions are applied pre-join: L carries the indexing
-    # prefix, R the probing prefix — identical predicate set to the
-    # reference's fused WHERE, but explicit so the shuffle inputs
-    # shrink before the token equi-join.
-    Lp = tkdf.filter(
-        _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-    ).alias("L")
-    Rp = tkdf.filter(
-        _probing_prefix_cond(F.col("len"), F.col("pos"), t)
-    ).alias("R")
-    cond = (
-        (F.col("L.token") == F.col("R.token"))
-        & (F.col("L.l_id") < F.col("R.l_id"))  # each unordered pair once
-        & _length_cond(F.col("L.len"), F.col("R.len"), t)  # length filter
-        & _positional_cond(
-            F.col("L.len"), F.col("L.pos"), F.col("R.len"), F.col("R.pos"), t
-        )
-    )
     # Broadcast-gate scalars: a bounded probe first — corpus-scale
     # inputs stop scanning at cap+1 rows (their attach tables cannot
-    # broadcast anyway) — then ONE fused aggregate on the persisted
-    # tkdf for (n_docs, n_tok, candidate bound, dup_rows); the
-    # bound-ratio gate in _verify_attach decides from there (no
-    # doc-count floor: density, not document count, is what the gate
-    # must test, and the bound IS the density measurement).
-    n_docs = n_tok = bound = 0
+    # broadcast anyway) — then the gate-stats job; the bound-ratio gate
+    # in _verify_attach decides from there (no doc-count floor:
+    # density, not document count, is what the gate must test, and the
+    # bound IS the density measurement).
+    stats, bound = (0, 0), 0
     # duplicate (id, token) rows: none when the tokenizer promises
     # distinct rows, unknown (-1) until the gate-stats job measures it
     dup_rows = 0 if tokenizer.rows_distinct else -1
-    # Sparse-corpus fast decline (round 10): the dfreq aggregate
-    # already computed sum(df²), a sound upper bound on the candidate
-    # bound — when even IT cannot clear the ratio for the token-row
-    # denominator every attach decides against, no broadcast can pay
-    # and the exact gate-stats job (a full tkdf materialization
-    # barrier) is skipped outright. Dense corpora (the broadcast
-    # winners) blow past this test and pay the exact job as before.
-    cheap_decline = float(row["sq"] or 0.0) < (
-        _BROADCAST_VERIFY_MIN_RATIO * max(n_tok_all, 1)
-    )
     if (
-        not cheap_decline
+        not _cheap_decline(freq.sumsq, freq.n_tok)
         and _doc_count_probe(df) <= _MAX_BROADCAST_VERIFY_DOCS
     ):
-        n_docs, n_tok, bound, dup_rows = _self_gate_stats(
-            tkdf, t, skip_dup=tokenizer.rows_distinct
-        )
+        g = _gate_stats([tkdf], t, skip_dup=tokenizer.rows_distinct)
+        stats, bound = (g.docs[0], g.tokens[0]), g.bound[0]
+        dup_rows = g.dup_rows
         # The gate-stats aggregate materialized tkdf into its cache,
-        # so the vocab-sized dfreq cache entry is now dead weight —
-        # free it (ADVICE r10: repeated join calls in one session
+        # so the vocab-sized dim cache entry is now dead weight — free
+        # it (ADVICE r10: repeated join calls in one session
         # accumulated one vocab-sized entry each). On the skip paths
-        # (cheap_decline / corpus over the doc cap) tkdf is still
-        # lazy — unpersisting there would force one extra dfreq
-        # shuffle when tkdf first materializes, so those keep the
-        # cache entry until session clearCache.
-        dfreq.unpersist()
+        # tkdf is still lazy — unpersisting there would force one
+        # extra dim shuffle when tkdf first materializes, so those
+        # keep the cache entry until session clearCache.
+        freq.dim.unpersist()
 
     cand = _candidates(
-        Lp.join(Rp, cond), "L", "R", "tid" if n_words else "pos"
+        tkdf, tkdf, t,
+        (F.col("L.l_id") < F.col("R.l_id"))
+        & _length_cond(F.col("L.len"), F.col("R.len"), t),
+        "tid" if freq.n_words else "pos",
     )
     return _verify(
-        cand, tkdf, tkdf, t, n_words, dup_rows,
-        (n_docs, n_tok), (n_docs, n_tok), bound,
+        cand, tkdf, tkdf, t, freq.n_words, dup_rows, stats, stats, bound,
         (f"{l_out_prefix}{key_attr}", f"{r_out_prefix}{key_attr}"),
         with_score,
     )
@@ -1113,29 +1187,22 @@ def jaccard_inner_join(
     handling and adaptive side selection (jaccard_join.py:265-362).
 
     ``hot_df_threshold`` (round 10): the heavy-hitter broadcast split
-    of :func:`tokens_with_doc_freq`, applied PER SIDE to the shared
-    cross-table dfreq — a token is hot for a side iff that side's own
-    df clears the threshold (that side's rows are what pile into one
-    shuffle partition of its tokens ⋈ dfreq build join). ``"auto"``
-    (default) engages from measured skew via one small aggregate over
-    the persisted dfreq; an int overrides; ``None`` disables. Build
-    plan only — output rows are identical either way.
+    of :func:`_tkdf`, applied PER SIDE to the shared cross-table df —
+    a token is hot for a side iff that side's own df clears the
+    threshold. ``"auto"`` (default) engages from measured skew; an int
+    overrides; ``None`` disables. Build plan only — output rows are
+    identical either way.
 
-    Driver-side actions: one fused aggregate per side carrying the
-    widow count that mirrors the reference's ``fetchall()[0][0]``
-    side-swap decision — the side with more indexing-prefix widows
-    becomes the indexing side R (ties go to (r, l):
-    jaccard_join.py:353, SURVEY.md §4.3.4) — plus the broadcast-gate
-    doc/token counts in the same job, and one small candidate-bound
-    join when an attach table could actually broadcast (see
-    _BROADCAST_VERIFY_MIN_RATIO). The reference's two additional
-    full-table counts (widow placeholder) are replaced by an
-    order-equivalent constant — see below.
-
-    Both token frames, the cross-table dfreq and both tkdfs are
-    persisted; verification is the shared :func:`_verify` stage, with
-    the indexing side R on the left and the probing side S on the
-    right.
+    The shared stages run with one token frame per side:
+    :func:`_doc_freq` (cross-table df, widow placeholder
+    :data:`_WIDOW_DF`), :func:`_tkdf`, :func:`_gate_stats`,
+    :func:`_candidates` and :func:`_verify`. Specific to the inner join
+    are the side swap — the side with more indexing-prefix widows
+    becomes the indexing side (ties go to (r, l): jaccard_join.py:353,
+    SURVEY.md §4.3.4), read from the gate-stats job, which also yields
+    the candidate bound for either orientation — and the two-sided
+    length filter. The reference's two full-table counts (widow
+    placeholder) are replaced by an order-equivalent constant.
     """
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
@@ -1146,259 +1213,43 @@ def jaccard_inner_join(
     r_tokens = tokenizer.tokenize(r_df, r_key_attr, r_join_attr).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-
-    # Widow placeholder (jaccard_join.py:266-268). The reference uses
-    # count(l)*count(r)+1 — two full-table scans whose only role is a
-    # df value that sorts AFTER every real product in the (df, token)
-    # pos ordering. Any constant strictly above all real products
-    # yields the bit-identical ordering (widows tie with each other
-    # either way and fall to the token tiebreak; real products are
-    # <= count(l)*count(r) < 2^63-1 anywhere long arithmetic holds),
-    # so the two driver-side count jobs are dropped from the critical
-    # path. The remaining two scalar counts (widow counts for the
-    # side swap) are decision-bearing and stay.
-    widow_placeholder = (1 << 63) - 1
-
-    # Cross-table document frequency: full outer join of per-side
-    # dfs; df = l_df * r_df, widows get the placeholder
-    # (jaccard_join.py:270-295).
-    l_dfreq = l_tokens.groupBy("token").agg(F.count(F.lit(1)).alias("l_df"))
-    r_dfreq = r_tokens.groupBy("token").agg(F.count(F.lit(1)).alias("r_df"))
-    # dfreq_raw keeps the per-side counts alive for the heavy-hitter
-    # split (hotness is a per-side property); dfreq is the combined
-    # view every downstream stage reads.
-    dfreq_raw = (
-        l_dfreq.join(r_dfreq, "token", "full_outer")
-        .select(
-            "token",
-            "l_df",
-            "r_df",
-            F.coalesce(
-                F.col("l_df") * F.col("r_df"), F.lit(widow_placeholder)
-            ).alias("df"),
+    freq = _doc_freq(tokenizer, hot_df_threshold, l_tokens, r_tokens)
+    tk = [
+        _tkdf(tokens, freq.dim, freq.n_words, freq.hot_thr, side_df).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        for tokens, side_df in zip((l_tokens, r_tokens), freq.side_dfs)
+    ]
+    g = _gate_stats(tk, t, skip_dup=tokenizer.rows_distinct)
+    # That job materialized both persisted tkdfs, so the cross-table
+    # dim cache is now dead weight — free it (ADVICE r10).
+    freq.dim.unpersist()
 
-    # Bitset verification gate (see self join): both sides rank tokens
-    # by the SAME combined (df, token) order, so one tid ranking over
-    # the shared dfreq preserves pos<->tid monotonicity on each side.
-    # ONE eager aggregate over the persisted cross-table dfreq drives
-    # every plan decision (round 10, mirroring the self join):
-    # vocabulary size (bitset gate — previously its own limit-count
-    # job), hot-split engagement (N, max per-side df), and the sparse
-    # fast-decline (sum l_df × r_df, a sound upper bound on the
-    # cross-side candidate bound: per token, indexing-prefix(R) ×
-    # probing-prefix(S) <= l_df × r_df). dfreq_raw is the algorithm's
-    # own required full-outer join — persisting it means both tkdf
-    # builds reuse it.
-    n_words = 0
-    hot_thr: int | None = None
-    row = dfreq_raw.agg(
-        F.count(F.lit(1)).alias("v"),
-        F.sum(
-            F.coalesce("l_df", F.lit(0))
-            + F.coalesce("r_df", F.lit(0))
-        ).alias("n"),
-        F.max(
-            F.greatest(
-                F.coalesce("l_df", F.lit(0)),
-                F.coalesce("r_df", F.lit(0)),
-            )
-        ).alias("m"),
-        F.sum(
-            F.coalesce(
-                (F.col("l_df") * F.col("r_df")).cast("double"),
-                F.lit(0.0),
-            )
-        ).alias("sq"),
-    ).first()
-    vocab_n = int(row["v"] or 0)
-    cross_sumsq = float(row["sq"] or 0.0)
-    if hot_df_threshold == "auto":
-        hot_df_threshold = _auto_hot_threshold(
-            int(row["n"] or 0),
-            int(row["m"] or 0),
-            _shuffle_partitions(l_tokens),
-        )
-    dfreq = dfreq_raw.select("token", "df")
-    if tokenizer.rows_distinct and 0 < vocab_n <= _MAX_BITSET_VOCAB:
-        n_words = (vocab_n + 63) // 64
-        dfreq = dfreq.withColumn(
-            "tid", F.row_number().over(Window.orderBy("df", "token"))
-        )
-        dfreq = F.broadcast(dfreq)
-    if n_words:
-        # bitset path: dfreq (with tid) broadcasts wholesale — the
-        # build join is already map-side, skew-free; the heavy-hitter
-        # split is meaningless there and is ignored
-        hot_df_threshold = None
-    if hot_df_threshold and hot_df_threshold != "auto":
-        hot_thr = int(hot_df_threshold)
-
-    def _tkdf(tokens: DataFrame, side_df: str) -> DataFrame:
-        w = Window.partitionBy("id").orderBy("df", "token")
-        cols = ["id", "len", "token", "df"] + (["tid"] if n_words else [])
-        if hot_thr:
-            # per-side split: this side's own df is what decides how
-            # many of ITS rows pile into one partition of this join
-            side_hot = F.coalesce(F.col(side_df), F.lit(0)) >= F.lit(hot_thr)
-            hot = dfreq_raw.filter(side_hot).select("token", "df")
-            cold = dfreq_raw.filter(~side_hot).select("token", "df")
-            joined = (
-                tokens.join(
-                    F.broadcast(hot.select("token")), "token", "left_anti"
-                )
-                .join(cold, "token")
-                .unionByName(tokens.join(F.broadcast(hot), "token"))
-            )
-        else:
-            joined = tokens.join(dfreq, "token")
-        return joined.select(
-            *cols,
-            F.row_number().over(w).alias("pos"),
-        )
-
-    l_tkdf = _tkdf(l_tokens, "l_df").persist(StorageLevel.MEMORY_AND_DISK)
-    r_tkdf = _tkdf(r_tokens, "r_df").persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Indexing prefixes per side + widow counts (jaccard_join.py:324-351).
-    def _indexing_prefix(tkdf: DataFrame) -> DataFrame:
-        return tkdf.filter(
-            _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-        )
-
-    l_pfx = _indexing_prefix(l_tkdf)
-    r_pfx = _indexing_prefix(r_tkdf)
-
-    # Fused per-side scalars (round 9): the decision-bearing widow
-    # count (reference fetchall side swap), the doc count, and the
-    # token count come out of ONE side-tagged aggregate over BOTH
-    # sides — round 8 paid six scalar jobs here (2 widow counts + 2
-    # full doc counts + 2 token counts); this pays one, plus one
-    # small candidate-bound join below only when something could
-    # actually broadcast. The union reads both (persisted) token
-    # frames in a single job, saving a driver scheduling round-trip
-    # per call — the fixed floor that dominates small inner joins.
-    idx_cond = _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-
-    def _tagged(tkdf: DataFrame, side: int) -> DataFrame:
-        return tkdf.select(
-            F.lit(side).alias("side"), "id", "token", "len", "pos", "df"
-        )
-
-    side_rows = {
-        row["side"]: row
-        for row in _tagged(l_tkdf, 0)
-        .unionByName(_tagged(r_tkdf, 1))
-        .groupBy("side")
-        .agg(
-            F.sum(
-                (idx_cond & (F.col("df") == widow_placeholder)).cast("long")
-            ).alias("w"),
-            F.sum((F.col("pos") == 1).cast("long")).alias("d"),
-            F.count(F.lit(1)).alias("c"),
-            # exact duplicate (id, token) row count per side, which
-            # picks the verify strategy (see _verify). A rows_distinct
-            # tokenizer promises zero, so its callers skip the
-            # count_distinct — the only hash-set aggregate in the job
-            # (round 12).
-            *(
-                []
-                if tokenizer.rows_distinct
-                else [
-                    (
-                        F.count(F.lit(1))
-                        - F.count_distinct("id", "token")
-                    ).alias("dup")
-                ]
-            ),
-        )
-        .collect()
-    }
-    # That aggregate materialized both persisted tkdfs, so the
-    # cross-table dfreq cache is now dead weight — free it (ADVICE
-    # r10; mirrors the self-join's post-gate-stats unpersist).
-    dfreq_raw.unpersist()
-
-    def _side_stats(side: int) -> tuple[int, int, int, int]:
-        row = side_rows.get(side)
-        if row is None:  # empty side: no tokens at all
-            return 0, 0, 0, 0
-        dup = 0 if tokenizer.rows_distinct else int(row["dup"] or 0)
-        return (
-            int(row["w"] or 0), int(row["d"] or 0),
-            int(row["c"] or 0), dup,
-        )
-
-    l_widows, n_l_docs, n_l_tok, l_dup = _side_stats(0)
-    r_widows, n_r_docs, n_r_tok, r_dup = _side_stats(1)
-    dup_rows = l_dup + r_dup
-
-    # Side swap: R = indexing side (keeps short 2t/(1+t) prefix),
-    # S = probing side (rebuilt with the longer t prefix).
-    if l_widows > r_widows:
-        R_tkdf, S_tkdf = l_tkdf, r_tkdf
-        R_pfx = l_pfx
-        r_prefix_out = (l_out_prefix, r_out_prefix)
-        n_R_docs, n_S_docs = n_l_docs, n_r_docs
-        n_R_tok, n_S_tok = n_l_tok, n_r_tok
-    else:
-        R_tkdf, S_tkdf = r_tkdf, l_tkdf
-        R_pfx = r_pfx
-        r_prefix_out = (r_out_prefix, l_out_prefix)
-        n_R_docs, n_S_docs = n_r_docs, n_l_docs
-        n_R_tok, n_S_tok = n_r_tok, n_l_tok
-    S_pfx = S_tkdf.filter(_probing_prefix_cond(F.col("len"), F.col("pos"), t))
-
-    # Cross-side candidate bound (see _BROADCAST_VERIFY_MIN_RATIO):
-    # sum over tokens of indexing-prefix df(R) × probing-prefix df(S)
-    # bounds the candidate equi-join output. One small job on the
-    # persisted token frames — skipped when no attach table could
-    # clear its size cap anyway (corpus scale).
-    bound = 0
-    # Sparse-corpus fast decline (round 10, see the self join): when
-    # even the sum(l_df × r_df) upper bound cannot clear the ratio at
-    # the SMALLER side's token-row denominator, every attach's
-    # decision is already decline and the exact bound join is skipped.
-    cheap_decline = cross_sumsq < (
-        _BROADCAST_VERIFY_MIN_RATIO * max(min(n_R_tok, n_S_tok), 1)
-    )
-    if not cheap_decline and (
-        min(n_R_docs, n_S_docs) <= _MAX_BROADCAST_VERIFY_DOCS
-        or min(n_R_tok, n_S_tok) <= _MAX_BROADCAST_VERIFY_TOKENS
+    # Side swap: indexing side i keeps the short 2t/(1+t) prefix, the
+    # probing side j takes the longer t prefix.
+    i, j = (0, 1) if g.widows[0] > g.widows[1] else (1, 0)
+    bound = g.bound[i]
+    # The exact bound only matters when some attach table could clear
+    # its size cap (see _BROADCAST_VERIFY_MIN_RATIO).
+    if _cheap_decline(freq.sumsq, min(g.tokens)) or not (
+        min(g.docs) <= _MAX_BROADCAST_VERIFY_DOCS
+        or min(g.tokens) <= _MAX_BROADCAST_VERIFY_TOKENS
     ):
-        ra = R_pfx.groupBy("token").agg(F.count(F.lit(1)).alias("a"))
-        sb = S_pfx.groupBy("token").agg(F.count(F.lit(1)).alias("b"))
-        bound = int(
-            ra.join(sb, "token")
-            .agg(F.sum(F.col("a") * F.col("b")).alias("s"))
-            .first()["s"]
-            or 0
-        )
-
-    # Candidates (jaccard_join.py:364-384): two-sided length filter +
-    # positional filter on the prefix-token equi-join.
-    Rp = R_pfx.alias("R")
-    Sp = S_pfx.alias("S")
-    cond = (
-        (F.col("R.token") == F.col("S.token"))
-        & _length_cond(F.col("R.len"), F.col("S.len"), t)
-        & _length_cond(F.col("S.len"), F.col("R.len"), t)
-        & _positional_cond(
-            F.col("R.len"), F.col("R.pos"), F.col("S.len"), F.col("S.pos"), t
-        )
-    )
-    # Verification (jaccard_join.py:386-405). Output column names
-    # reproduce the reference quirk: R's out_prefix pairs with the
-    # *left* key attr name and S's with the right, regardless of swap.
+        bound = 0
     cand = _candidates(
-        Rp.join(Sp, cond), "R", "S", "tid" if n_words else "pos"
+        tk[i], tk[j], t,
+        _length_cond(F.col("L.len"), F.col("R.len"), t)
+        & _length_cond(F.col("R.len"), F.col("L.len"), t),
+        "tid" if freq.n_words else "pos",
     )
+    # Output column names reproduce the reference quirk: the indexing
+    # side's out_prefix pairs with the *left* key attr name and the
+    # probing side's with the right, regardless of swap.
+    prefixes = (l_out_prefix, r_out_prefix)
     return _verify(
-        cand, R_tkdf, S_tkdf, t, n_words, dup_rows,
-        (n_R_docs, n_R_tok), (n_S_docs, n_S_tok), bound,
-        (f"{r_prefix_out[0]}{l_key_attr}", f"{r_prefix_out[1]}{r_key_attr}"),
+        cand, tk[i], tk[j], t, freq.n_words, g.dup_rows,
+        (g.docs[i], g.tokens[i]), (g.docs[j], g.tokens[j]), bound,
+        (f"{prefixes[i]}{l_key_attr}", f"{prefixes[j]}{r_key_attr}"),
         with_score,
     )
 

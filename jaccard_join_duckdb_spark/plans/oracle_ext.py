@@ -1401,7 +1401,7 @@ where losers.id is null
         n_bands=emb_bands, n_planes=emb_planes, dim=emb_dim, seed=emb_seed,
     )
     return f"""{head},
-surv as (
+surv as materialized (
   select kd.{key} as id from kd
   left join losers on kd.{key} = losers.id
   where losers.id is null),

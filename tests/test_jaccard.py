@@ -339,41 +339,69 @@ def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_self_gate_stats_formula(spark):
-    """Pin _self_gate_stats against hand-computed values on a 3-doc
-    corpus at t=0.5 (the gate's only inputs): n_docs from pos==1 rows,
-    n_tok from all rows, the candidate bound = sum over tokens of
-    (indexing-prefix rows × probing-prefix rows), and dup_rows (the
-    exact duplicate (id, token) row count, gating the
-    runtime-distinct array verification).
+# Gate-stats cases at t=0.5: the token frames (one for a self join,
+# two for an inner join) and the hand-computed job output. pos ranks
+# by (df, token); the indexing prefix is len-pos+1 >= 2·len/3 (pos <= 2
+# at len 3, pos <= 1 at len 2), the probing prefix len-pos+1 >= len/2
+# (pos <= 2 at len 2 and 3).
+_GATE_CASES = {
+    # d1 "a b c", d2 "b c", d3 "c a" → df a:2 b:2 c:3. a and b are in
+    # the indexing prefix of their docs, c never; all but d1's c are
+    # in the probing prefix. bound = a:2·2 + b:2·2 + c:0·2 = 8.
+    "self": ([["a b c", "b c", "c a"]],
+             dict(widows=(0,), docs=(3,), tokens=(7,), bound=(8, 8),
+                  dup_rows=0)),
+    # d1 "A a b" tokenizes to rows a, a, b (the case-collapsed
+    # duplicate), d2 "a b" → df b:2 a:3, so b ranks first. Indexing:
+    # d1 b, a(pos 2); d2 b. Probing: all but d1's pos-3 a.
+    # bound = b:2·2 + a:1·2 = 6; one duplicate row.
+    "self-dup": ([["A a b", "a b"]],
+                 dict(widows=(0,), docs=(2,), tokens=(5,), bound=(6, 6),
+                      dup_rows=1)),
+    # left d1 "a b c", d2 "b d"; right d3 "a b", d4 "c e f" → cross df
+    # a:1 c:1 b:2, widows d e f. pos: d1 a c b, d2 b d, d3 a b,
+    # d4 c e f. Indexing: d1 a c, d2 b | d3 a, d4 c e — e is a widow,
+    # so widows (0, 1). Probing: d1 a c, d2 b d | d3 a b, d4 c e.
+    # bound[0] (left indexes) = a:1·1 + c:1·1 + b:1·1 = 3;
+    # bound[1] (right indexes) = a:1·1 + c:1·1 + e:1·0 = 2.
+    "inner": ([["a b c", "b d"], ["a b", "c e f"]],
+              dict(widows=(0, 1), docs=(2, 2), tokens=(5, 5), bound=(3, 2),
+                   dup_rows=0)),
+}
 
-    Corpus: d1 "a b c", d2 "b c", d3 "c a" → df a:2 b:2 c:3; pos by
-    (df, token) order. Indexing prefix (len-pos+1 >= 2·len/3): a and b
-    qualify in their docs, c never. Probing prefix (len-pos+1 >=
-    len/2): all but d1's c qualify. bound = a:2·2 + b:2·2 + c:0·2 = 8;
-    dup_rows = 0 (set mode, no case variants).
-    """
+
+@pytest.mark.parametrize("skip_dup", [False, True])
+@pytest.mark.parametrize("case", list(_GATE_CASES))
+def test_gate_stats_formula(spark, case, skip_dup):
+    """Pin the shared gate-stats job against hand-computed values: per
+    side the widow count (side swap), n_docs from pos==1 rows and n_tok
+    from all rows; the candidate bound in both orientations = sum over
+    tokens of (indexing-prefix rows of one side × probing-prefix rows
+    of the other); and dup_rows, the exact duplicate (id, token) row
+    count that gates the runtime-distinct array verification.
+    ``skip_dup`` (round 12, rows_distinct tokenizers) drops the
+    count_distinct column and reports the known dup_rows = 0."""
     import jaccard_join_duckdb_spark.operators.jaccard as J
-    from jaccard_join_duckdb_spark import WhitespaceTokzr
 
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "b c"), (3, "c a")], "id long, val string"
-    )
-    tokens = WhitespaceTokzr().tokenize(df, "id", "val")
-    tkdf = J.tokens_with_doc_freq(tokens, with_pair_key=True)
-    assert J._self_gate_stats(tkdf, 0.5) == (3, 7, 8, 0)
-    # skip_dup (round 12, rows_distinct tokenizers): same gate scalars
-    # without the count_distinct column; dup_rows pinned to the known 0
-    assert J._self_gate_stats(tkdf, 0.5, skip_dup=True) == (3, 7, 8, 0)
-
-    dup = spark.createDataFrame(
-        [(1, "A a b"), (2, "a b")], "id long, val string"
-    )
-    dup_tkdf = J.tokens_with_doc_freq(
-        WhitespaceTokzr().tokenize(dup, "id", "val"), with_pair_key=True
-    )
-    # d1 tokenizes to rows a,a,b (case-collapsed duplicate) → 1 dup row
-    assert J._self_gate_stats(dup_tkdf, 0.5)[3] == 1
+    sides, want = _GATE_CASES[case]
+    tok = WhitespaceTokzr()
+    frames, start = [], 1
+    for docs in sides:
+        df = spark.createDataFrame(
+            list(enumerate(docs, start)), "id long, val string"
+        )
+        frames.append(tok.tokenize(df, "id", "val"))
+        start += len(docs)
+    freq = J._doc_freq(tok, None, *frames)
+    tkdfs = [
+        J._tkdf(fr, freq.dim, 0, None, side_df)
+        for fr, side_df in zip(frames, freq.side_dfs)
+    ]
+    got = J._gate_stats(tkdfs, 0.5, skip_dup=skip_dup)._asdict()
+    freq.dim.unpersist()
+    if skip_dup:
+        want = {**want, "dup_rows": 0}
+    assert got == want
 
 
 _WORDS = ["ha", "be", "ce", "dx", "ee", "fo", "gg", "hi"]

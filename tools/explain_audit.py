@@ -59,10 +59,10 @@ SINGLE_OK: set = set()
 # for every query: a partial HashAggregate's final merge is
 # scalar-sized by construction.)
 SINGLE_CACHE_OK = {
-    # Self-join bitset path: the tid ranking (_tokens_with_tid)
-    # windows the PERSISTED dfreq — verified in the plan text: the
-    # exchange input is the [token, df] vocabulary dim out of the
-    # dfreq HashAggregate's cache, taken only after the runtime gate
+    # Self-join bitset path: the tid ranking (jaccard._tkdf)
+    # windows the PERSISTED doc-frequency dim — verified in the plan
+    # text: the exchange input is the [token, df] vocabulary dim out of
+    # the dim HashAggregate's cache, taken only after the runtime gate
     # proved vocab_n <= _MAX_BITSET_VOCAB (jaccard.py) — 4096 rows
     # max. Every name below routes through jaccard_self_join on a
     # bitset-eligible corpus at audit scale.
