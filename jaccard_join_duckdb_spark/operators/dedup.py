@@ -18,7 +18,9 @@ Scale design:
 - exact dedup: single hash-groupBy (map-side partial agg).
 - minhash: one shuffle to build signatures (groupBy id×band with
   partial min), one equi-join on (band, signature) — candidates never
-  materialize on the driver; verification is a token equi-join.
+  materialize on the driver; verification is the set-overlap kernel
+  of :mod:`.jaccard` (bitsets for small vocabularies, token arrays
+  otherwise).
 - simhash: fingerprints via bit-vote aggregation; candidate blocking
   on 8-bit chunks (pigeonhole: hamming <= 3 over 31 bits guarantees a
   shared chunk), verification via bit_count(xor).
@@ -45,13 +47,15 @@ from ..tokenizers import Tokenizer, WhitespaceTokzr
 from .jaccard import (
     _MAX_BITSET_VOCAB,
     _MAX_BROADCAST_VERIFY_TOKENS,
-    _bitset_suffix_overlap,
+    _attach,
     _doc_bitsets,
     _length_cond,
     _positional_cond,
     _probing_prefix_cond,
+    _set_overlap,
     _shuffle_partitions,
     _t_fraction,
+    _tid_dim,
 )
 
 __all__ = [
@@ -108,21 +112,13 @@ _CC_DRIVER_MAX_EDGES = 4_000_000
 # Bitset verification pays per-pair 2×n_words long columns in the
 # attach joins; past ~8 words (512-token vocab) the wide rows fall out
 # of whole-stage codegen and the driver spends ~1 s per call just
-# building the masked-popcount expression tree — there the compiled
-# array_intersect over the same distinct token/tid table wins
+# building the (then masked) popcount expression tree — there the
+# compiled array_intersect over the same distinct token/tid table wins
 # (round-11 measurement at dedup_ngram's 37-word regime: 2.7 s vs
 # 0.9 s per iteration). Below the cap the bitset stays ~8× faster
 # than per-pair array_intersect (the round-8 measurement that
 # introduced it).
 _MAX_BITSET_WORDS = 8
-
-# A/B toggle (tools/bench_ab.py): False forces the generic banded
-# minhash path even for small vocabularies. The shipped default is
-# the bench-context A/B winner (round 12, VERDICT r11 #1:
-# dedup_minhash 4.19 s fused vs 4.39 s generic, dedup_canonical
-# 5.21 s vs 5.98 s — interleaved inside the full warmed bench list,
-# min-of-3, rows identical in both arms).
-_MINHASH_FUSED = True
 
 # SHUFFLE_HASH hint on the ngram pipeline's prefix candidate
 # self-join (guide §3.1): the join key is a <= 4096-value tid, so the
@@ -284,15 +280,9 @@ def _minhash_fused_bitset(
     doc-bitset aggregation, and verify-side vocab job are gone."""
     rows_per_band = num_hashes // bands
     n_words = (len(vocab_rows) + 63) // 64
-    spark = toks.sparkSession
-    dim = spark.createDataFrame(
-        [(tk, i + 1) for i, tk in enumerate(sorted(r[0] for r in vocab_rows))],
-        T.StructType(
-            [
-                T.StructField("token", toks.schema["token"].dataType, False),
-                T.StructField("tid", T.IntegerType(), False),
-            ]
-        ),
+    dim = _tid_dim(
+        toks.sparkSession, toks.schema["token"].dataType,
+        sorted(r[0] for r in vocab_rows),
     ).select("token", "tid", poly_hash(F.col("token")).alias("h"))
     base = toks.join(F.broadcast(dim), "token").select("id", "h", "tid")
     min_cols = [
@@ -301,20 +291,9 @@ def _minhash_fused_bitset(
         ).alias(f"m{i}")
         for i, a, b in minhash_params(num_hashes, seed)
     ]
-    bit_cols = [
-        F.bit_or(
-            F.when(
-                (F.col("tid") > 64 * i) & (F.col("tid") <= 64 * (i + 1)),
-                F.expr(f"shiftleft(cast(1 as bigint), tid - 1 - {64 * i})"),
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias(f"b{i}")
-        for i in range(n_words)
-    ]
-    per_doc = (
-        base.groupBy("id")
-        .agg(*min_cols, F.count(F.lit(1)).alias("sz"), *bit_cols)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    per_doc = _doc_bitsets(
+        base, n_words, *min_cols, F.count(F.lit(1)).alias("sz")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     band_structs = F.array(
         *[
             F.struct(
@@ -349,32 +328,11 @@ def _minhash_fused_bitset(
         .select(F.col("L.id").alias("lid"), F.col("R.id").alias("rid"))
         .distinct()
     )
-    ov_expr = F.bit_count(F.col("lb0").bitwiseAND(F.col("rb0")))
-    for i in range(1, n_words):
-        ov_expr = ov_expr + F.bit_count(
-            F.col(f"lb{i}").bitwiseAND(F.col(f"rb{i}"))
-        )
-    ov = (
-        cands.join(
-            per_doc.select(
-                F.col("id").alias("lid"),
-                F.col("sz").alias("lsz"),
-                *[F.col(f"b{i}").alias(f"lb{i}") for i in range(n_words)],
-            ),
-            "lid",
-        )
-        .join(
-            per_doc.select(
-                F.col("id").alias("rid"),
-                F.col("sz").alias("rsz"),
-                *[F.col(f"b{i}").alias(f"rb{i}") for i in range(n_words)],
-            ),
-            "rid",
-        )
-        .select("lid", "rid", ov_expr.alias("ov"), "lsz", "rsz")
-        .filter(F.col("ov") >= 1)
+    # the verify reads only the set size and the bitset words
+    bits = per_doc.drop(*[f"m{i}" for i in range(num_hashes)])
+    return _jaccard_threshold_filter(
+        _overlap_rows(_attach(cands, bits, bits), n_words), threshold
     )
-    return _jaccard_threshold_filter(ov, threshold)
 
 
 def minhash_near_duplicates(
@@ -409,12 +367,14 @@ def minhash_near_duplicates(
     # the minhash minima, the set size, AND the verification bitset —
     # versus the generic path's separate tok_h distinct+join, docbits
     # aggregation, and verify-side vocab job (round 11: dedup_minhash
-    # 3.3 → 2.6 s at sf0.1). Large vocabularies keep the generic
-    # shape, passing vocab_n so the verify skips its own gate job.
+    # 3.3 → 2.6 s at sf0.1; round 12's A/B inside the full warmed
+    # bench kept it: dedup_minhash 4.19 s fused vs 4.39 s generic).
+    # Large vocabularies keep the generic shape, passing the collected
+    # rows so the verify skips its own gate job.
     bit_cap = min(_MAX_BITSET_VOCAB, 64 * _MAX_BITSET_WORDS)
     vocab_rows = toks.select("token").distinct().limit(bit_cap + 1).collect()
     vocab_n = len(vocab_rows)
-    if _MINHASH_FUSED and 0 < vocab_n <= bit_cap:
+    if 0 < vocab_n <= bit_cap:
         out = _minhash_fused_bitset(
             toks, vocab_rows, num_hashes, bands, seed, threshold
         )
@@ -438,15 +398,8 @@ def minhash_near_duplicates(
         .select(F.col("L.id").alias("lid"), F.col("R.id").alias("rid"))
         .distinct()
     )
-    return _verify_jaccard(
-        cands, toks, threshold, vocab_n=vocab_n,
-        # Bounded vocab (only reachable with the fused path toggled
-        # off): hand the already-collected vocabulary to the verify so
-        # it builds the literal tid dim with no extra job.
-        vocab_tokens=(
-            [r[0] for r in vocab_rows] if vocab_n <= bit_cap else None
-        ),
-    ).select(
+    ov = _verify_overlap(cands, toks, [r[0] for r in vocab_rows])
+    return _jaccard_threshold_filter(ov, threshold).select(
         F.col("lid").alias("l_id"), F.col("rid").alias("r_id"), "jaccard"
     )
 
@@ -504,11 +457,7 @@ def minhash_index(
     # calls verify candidates by joining these rows — without this, a
     # streaming dedup would re-aggregate the full corpus token table
     # every micro-batch.
-    tok_arrs = (
-        toks.groupBy("id")
-        .agg(F.collect_list("token").alias("arr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tok_arrs = _token_arrays(toks).persist(StorageLevel.MEMORY_AND_DISK)
     return MinHashIndex(
         band_sigs=band_sigs,
         toks=toks,
@@ -600,11 +549,7 @@ def read_minhash_index(
             f"index's build-time tokenizer {meta.tokenizer}"
         )
     toks = spark.table(f"{name}_toks")
-    tok_arrs = (
-        toks.groupBy("id")
-        .agg(F.collect_list("token").alias("arr"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    tok_arrs = _token_arrays(toks).persist(StorageLevel.MEMORY_AND_DISK)
     return MinHashIndex(
         band_sigs=spark.table(f"{name}_sigs"),
         toks=toks,
@@ -637,9 +582,9 @@ def minhash_match(
 
     Scale: every per-call aggregation touches only the QUERY batch —
     corpus signatures and token arrays come precomputed from the
-    index, and verification is ``size(array_intersect(qa, ca))`` on
-    the candidate pairs (compiled array intrinsics, exact on distinct
-    token sets). A bitset plan would be query-dependent (token-id
+    index, and verification is the array overlap of
+    :func:`.jaccard._set_overlap` on the candidate pairs (compiled
+    array intrinsics, exact on distinct token sets). A bitset plan would be query-dependent (token-id
     assignment spans the union vocabulary), forcing a full-corpus
     re-aggregation per micro-batch — exactly what an index must not
     do.
@@ -659,58 +604,40 @@ def minhash_match(
         .select(F.col("Q.id").alias("lid"), F.col("C.id").alias("rid"))
         .distinct()
     )
-    q_arrs = q_toks.groupBy("id").agg(F.collect_list("token").alias("arr"))
-    ov = (
-        cands.join(
-            q_arrs.select(F.col("id").alias("lid"), F.col("arr").alias("la")),
-            "lid",
-        )
-        .join(
-            index.tok_arrs.select(
-                F.col("id").alias("rid"), F.col("arr").alias("ra")
-            ),
-            "rid",
-        )
-        .select(
-            "lid",
-            "rid",
-            F.size(F.array_intersect("la", "ra")).alias("ov"),
-            F.size("la").alias("lsz"),
-            F.size("ra").alias("rsz"),
-        )
-        .filter(F.col("ov") >= 1)
+    ov = _overlap_rows(
+        _attach(cands, _token_arrays(q_toks), index.tok_arrs), 0
     )
     return _jaccard_threshold_filter(ov, threshold).select(
         F.col("lid").alias("q_id"), F.col("rid").alias("c_id"), "jaccard"
     )
 
 
-def _verify_jaccard(
-    cands: DataFrame,
-    toks: DataFrame,
-    threshold: float,
-    r_toks: DataFrame | None = None,
-    vocab_n: int | None = None,
-    vocab_tokens: list | None = None,
-) -> DataFrame:
-    """Exact Jaccard over candidate pairs (overlap machinery in
-    :func:`_verify_overlap`): ``jaccard = ov / (lsz + rsz - ov)``
-    rounded to 6, threshold-filtered."""
-    return _jaccard_threshold_filter(
-        _verify_overlap(
-            cands, toks, r_toks=r_toks, vocab_n=vocab_n,
-            vocab_tokens=vocab_tokens,
-        ),
-        threshold,
+def _token_arrays(toks: DataFrame, col: str = "token") -> DataFrame:
+    """One row per document: ``(id, arr)``, its ``col`` values as an
+    array."""
+    return toks.groupBy("id").agg(F.collect_list(col).alias("arr"))
+
+
+def _overlap_rows(attached: DataFrame, n_words: int) -> DataFrame:
+    """``(lid, rid, ov, lsz, rsz)`` with ``ov >= 1`` from candidate
+    pairs :func:`.jaccard._attach` joined with per-document bitsets
+    that carry the set size ``sz`` (``n_words > 0``) or token arrays
+    ``arr``. The ``ov >= 1`` filter keeps the historical contract: a
+    pair with zero overlap is not reported even at threshold 0."""
+    sizes = (
+        ["lsz", "rsz"] if n_words
+        else [F.size("larr").alias("lsz"), F.size("rarr").alias("rsz")]
     )
+    return attached.select(
+        "lid", "rid", _set_overlap(n_words).alias("ov"), *sizes
+    ).filter(F.col("ov") >= 1)
 
 
 def _verify_overlap(
     cands: DataFrame,
     toks: DataFrame,
+    vocab_tokens: list,
     r_toks: DataFrame | None = None,
-    vocab_n: int | None = None,
-    vocab_tokens: list | None = None,
 ) -> DataFrame:
     """Exact set-overlap counts over candidate pairs:
     ``(lid, rid, ov, lsz, rsz)`` with ``ov >= 1``. ``lid`` draws from
@@ -719,136 +646,38 @@ def _verify_overlap(
     verifiers and :func:`containment_join` (different final metric,
     same overlap plan).
 
-    Small vocabularies (<= _MAX_BITSET_VOCAB distinct tokens): each
-    document's token set is packed into a few 64-bit words and
-    ``ov = Σ popcount(lb_i & rb_i)`` — pure codegen-able long
-    arithmetic. Large vocabularies: per-document token arrays and a
-    compiled ``size(array_intersect(la, ra))``. Both beat exploding
-    pairs × tokens into a pairs·|x| intermediate and re-aggregating
-    (measured ~5× slower at sf0.1 where 8M candidates × ~23 tokens =
-    190M exploded rows). Exact because ``toks`` rows are distinct per
-    id (set semantics). The ``ov >= 1`` filter keeps the historical
-    contract (a pair with zero overlap is not reported even at
-    threshold 0). At cluster scale the doc side is Catalyst-planned
-    (broadcast when small, shuffle join otherwise)."""
-    two_sided = r_toks is not None
-    r_toks = toks if r_toks is None else r_toks
-    vocab = toks.select("token")
-    if two_sided:
-        vocab = vocab.union(r_toks.select("token"))
-    vocab = vocab.distinct()
-    # One driver-side gate job; callers that already aggregated the
-    # vocabulary pass its size to skip it. limit(MAX+1) early-stops on
-    # huge vocabularies where only "too big" matters; COLLECTING the
-    # (<= 4097, bounded) gate rows instead of counting them means the
-    # same job also yields the token dim — previously the
-    # union+distinct subtree re-executed INSIDE the verify job to
-    # rank tids (a window over an unpersisted aggregate), ~1.5 s of
-    # the sf0.1 decontaminate wall for a 31-token vocabulary
-    # (round 11). tid = rank in the driver-sorted token order; the
-    # bitset overlap is a popcount of the intersection, invariant to
-    # the tid permutation, so the output cannot depend on the sort.
-    # ``vocab_tokens``: callers that already hold the COMPLETE bounded
-    # vocabulary (e.g. from their own gate probe) pass its values so
-    # the literal tid dim is built with zero extra jobs here.
-    vocab_rows = None
-    if vocab_tokens is not None:
-        vocab_rows = list(vocab_tokens)
-        vocab_n = len(vocab_rows)
-    elif vocab_n is None:
-        rows = vocab.limit(_MAX_BITSET_VOCAB + 1).collect()
-        vocab_n = len(rows)
-        vocab_rows = [r[0] for r in rows]
+    ``vocab_tokens`` is the union vocabulary the caller already
+    collected, cut at ``_MAX_BITSET_VOCAB + 1`` rows (all a caller over
+    the cap needs to know), so this stage runs no gate job of its own.
+    When it fits the bitset (at most ``_MAX_BITSET_WORDS`` words), the
+    sorted list becomes the literal tid dim and each document's token
+    set a few 64-bit words; otherwise each document gets a token array.
+    The overlap is the kernel's :func:`.jaccard._set_overlap` either
+    way. Both beat exploding pairs × tokens into a pairs·|x|
+    intermediate and re-aggregating (measured ~5× slower at sf0.1
+    where 8M candidates × ~23 tokens = 190M exploded rows). Exact
+    because ``toks`` rows are distinct per id (set semantics). At
+    cluster scale the doc side is Catalyst-planned (broadcast when
+    small, shuffle join otherwise)."""
+    vocab_n = len(vocab_tokens)
+    n_words = 0
     if 0 < vocab_n <= min(_MAX_BITSET_VOCAB, 64 * _MAX_BITSET_WORDS):
         n_words = (vocab_n + 63) // 64
-        if vocab_rows is not None:
-            tdim = toks.sparkSession.createDataFrame(
-                [(tk, i + 1) for i, tk in enumerate(sorted(vocab_rows))],
-                T.StructType(
-                    [
-                        T.StructField(
-                            "token", toks.schema["token"].dataType, False
-                        ),
-                        T.StructField("tid", T.IntegerType(), False),
-                    ]
-                ),
-            )
-        else:
-            tdim = vocab.withColumn(
-                "tid", F.row_number().over(Window.orderBy("token"))
-            )
-        bit_cols = [
-            F.bit_or(
-                F.when(
-                    (F.col("tid") > 64 * i) & (F.col("tid") <= 64 * (i + 1)),
-                    F.expr(f"shiftleft(cast(1 as bigint), tid - 1 - {64 * i})"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias(f"b{i}")
-            for i in range(n_words)
-        ]
+        tdim = F.broadcast(_tid_dim(
+            toks.sparkSession, toks.schema["token"].dataType,
+            sorted(vocab_tokens),
+        ))
 
-        def docbits(side_toks: DataFrame) -> DataFrame:
-            return (
-                side_toks.join(F.broadcast(tdim), "token")
-                .groupBy("id")
-                .agg(F.count(F.lit(1)).alias("sz"), *bit_cols)
+        def per_doc(side_toks: DataFrame) -> DataFrame:
+            return _doc_bitsets(
+                side_toks.join(tdim, "token"), n_words,
+                F.count(F.lit(1)).alias("sz"),
             )
-
-        l_bits = docbits(toks)
-        r_bits = l_bits if not two_sided else docbits(r_toks)
-        ov_expr = F.bit_count(F.col("lb0").bitwiseAND(F.col("rb0")))
-        for i in range(1, n_words):
-            ov_expr = ov_expr + F.bit_count(
-                F.col(f"lb{i}").bitwiseAND(F.col(f"rb{i}"))
-            )
-        ov = (
-            cands.join(
-                l_bits.select(
-                    F.col("id").alias("lid"),
-                    F.col("sz").alias("lsz"),
-                    *[F.col(f"b{i}").alias(f"lb{i}") for i in range(n_words)],
-                ),
-                "lid",
-            )
-            .join(
-                r_bits.select(
-                    F.col("id").alias("rid"),
-                    F.col("sz").alias("rsz"),
-                    *[F.col(f"b{i}").alias(f"rb{i}") for i in range(n_words)],
-                ),
-                "rid",
-            )
-            .select("lid", "rid", ov_expr.alias("ov"), "lsz", "rsz")
-            .filter(F.col("ov") >= 1)
-        )
-        return ov
-
-    def tok_arrays(side_toks: DataFrame) -> DataFrame:
-        return side_toks.groupBy("id").agg(
-            F.collect_list("token").alias("arr")
-        )
-
-    l_arrs = tok_arrays(toks)
-    r_arrs = l_arrs if not two_sided else tok_arrays(r_toks)
-    ov = (
-        cands.join(
-            l_arrs.select(F.col("id").alias("lid"), F.col("arr").alias("la")),
-            "lid",
-        )
-        .join(
-            r_arrs.select(F.col("id").alias("rid"), F.col("arr").alias("ra")),
-            "rid",
-        )
-        .select(
-            "lid",
-            "rid",
-            F.size(F.array_intersect("la", "ra")).alias("ov"),
-            F.size("la").alias("lsz"),
-            F.size("ra").alias("rsz"),
-        )
-        .filter(F.col("ov") >= 1)
-    )
-    return ov
+    else:
+        per_doc = _token_arrays
+    l_doc = per_doc(toks)
+    r_doc = l_doc if r_toks is None else per_doc(r_toks)
+    return _overlap_rows(_attach(cands, l_doc, r_doc), n_words)
 
 
 def _jaccard_threshold_filter(ov: DataFrame, threshold: float) -> DataFrame:
@@ -995,46 +824,39 @@ def _round_up_slack(t: float) -> float:
 
 
 def _ngram_bitset_pipeline(
-    toks: DataFrame, dfreq_rows: list, vocab_n: int, threshold: float
+    toks: DataFrame, dfreq_rows: list, threshold: float
 ) -> DataFrame:
     """Small-vocab fast path for :func:`ngram_jaccard_near_duplicates`:
     one persisted id-partitioned token table feeds both candidate
-    generation and bitset verification, and the exact overlap is
-    recovered as ``sfx + pfxOverlap - 1`` (see jaccard._jaccard_score:
-    under a shared global token order every common token before the
-    last prefix match is inside both prefixes, every one after it
-    inside both suffixes) instead of re-intersecting full token sets.
+    generation and verification, which counts the exact overlap with
+    the set-overlap kernel of :mod:`.jaccard`.
 
-    Plan shape (vs the generic path): the tiny (≤4096-row) doc-freq
-    dim broadcasts a dense rank ``tid``; the per-doc ``pos`` window
-    shuffles the token table by id ONCE, and ``_doc_bitsets``'s
-    groupBy(id) reuses that partitioning with no further Exchange. The
+    Plan shape (vs the generic path): the caller's bounded gate job
+    COLLECTS the doc-freq rows, so the tid dim is a literal
+    (:func:`.jaccard._tid_dim`) ranked by a driver-side ``(df, token)``
+    sort and broadcast — no in-plan doc-frequency aggregation or
+    global window. The per-doc ``pos`` window orders by ``tid``, so it
+    is the global rare-token-first order the prefix filter needs; it
+    shuffles the token table by id ONCE, and the per-document verify
+    aggregation reuses that partitioning with no further Exchange. The
     PPJoin positional filter prunes prefix-match rows at candidate
-    generation, before the (wide) bitset join rows are built.
+    generation, before the (wide) verify join rows are built.
 
-    Round 12: the caller's bounded gate job now COLLECTS the doc-freq
-    rows instead of counting them, so the tid dim is a literal built
-    by the same driver-side ``(df, token)`` sort the old in-plan
-    ``row_number`` window used (token is unique in dfreq ⇒ total
-    order ⇒ identical tids) — the broadcast subtree no longer
-    re-executes the doc-frequency aggregation + a global window
-    inside the main plan."""
+    Verify (:func:`.jaccard._set_overlap`): the popcount of the ANDed
+    bitset words up to ``_MAX_BITSET_WORDS`` words; past that, a
+    compiled ``array_intersect`` of per-document tid arrays. Wide
+    bitset rows fall out of whole-stage codegen and the driver pays
+    ~1 s just building the expression tree per call (round 11, sf0.1
+    dedup_ngram, vocab 2,333 → 37 words: construction 1.10 s +
+    execution 1.6 s vs 0.19 s + 0.7 s for the arrays). Both are exact:
+    ``tk`` rows are distinct per (id, tid)."""
     t = float(threshold)
     tc = _round_up_slack(t)
+    vocab_n = len(dfreq_rows)
     n_words = (vocab_n + 63) // 64
-    tdim = toks.sparkSession.createDataFrame(
-        [
-            (tok, i + 1)
-            for i, (_, tok) in enumerate(
-                sorted((r["df"], r["token"]) for r in dfreq_rows)
-            )
-        ],
-        T.StructType(
-            [
-                T.StructField("token", toks.schema["token"].dataType, False),
-                T.StructField("tid", T.IntegerType(), False),
-            ]
-        ),
+    tdim = _tid_dim(
+        toks.sparkSession, toks.schema["token"].dataType,
+        [tok for _, tok in sorted((r["df"], r["token"]) for r in dfreq_rows)],
     )
     tk = (
         toks.join(F.broadcast(tdim), "token")
@@ -1073,81 +895,25 @@ def _ngram_bitset_pipeline(
                 F.col("R.len"), F.col("R.pos"), tc,
             )
         )
-        .groupBy(
+        .select(
             F.col("L.id").alias("lid"),
             F.col("R.id").alias("rid"),
             F.col("L.len").alias("llen"),
             F.col("R.len").alias("rlen"),
         )
-        .agg(
-            *(
-                [
-                    F.max("L.tid").alias("tidstart"),
-                    F.max("L.pos").alias("lmaxpos"),
-                    F.max("R.pos").alias("rmaxpos"),
-                ]
-                if n_words <= _MAX_BITSET_WORDS
-                else []
-            ),
-            F.count(F.lit(1)).alias("pfxoverlap"),
-        )
-        # No remaining-suffix pre-filter: it is provably vacuous after
-        # _positional_cond at the same tc bound (see that docstring).
+        .distinct()
     )
     if n_words > _MAX_BITSET_WORDS:
-        # Wide-bitset regime (round 11): past ~8 words the bitset
-        # verify loses on BOTH sides of the boundary — the 2×n_words
-        # long columns blow the join rows/projections out of
-        # whole-stage codegen territory AND the driver pays ~1 s just
-        # BUILDING the expression tree per call (measured at sf0.1
-        # dedup_ngram, vocab 2,333 → 37 words: construction 1.10 s +
-        # execution 1.6 s vs 0.19 s + 0.7 s for the compiled
-        # array_intersect over the same persisted tid table). Exact
-        # for the same reason as the bitset: tk rows are distinct per
-        # (id, tid), so |array_intersect| IS the set overlap.
-        arrs = tk.groupBy("id").agg(F.collect_list("tid").alias("arr"))
-        ov = (
-            cand.join(
-                arrs.select(F.col("id").alias("lid"), F.col("arr").alias("la")),
-                "lid",
-            )
-            .join(
-                arrs.select(F.col("id").alias("rid"), F.col("arr").alias("ra")),
-                "rid",
-            )
-            .select(
-                "lid",
-                "rid",
-                F.size(F.array_intersect("la", "ra")).alias("ov"),
-                F.col("llen").alias("lsz"),
-                F.col("rlen").alias("rsz"),
-            )
-        )
-        return _jaccard_threshold_filter(ov, t)
-    docbits = _doc_bitsets(tk, n_words)
-    ov = (
-        cand.join(
-            docbits.select(
-                F.col("id").alias("lid"),
-                *[F.col(f"b{i}").alias(f"lb{i}") for i in range(n_words)],
-            ),
-            "lid",
-        )
-        .join(
-            docbits.select(
-                F.col("id").alias("rid"),
-                *[F.col(f"b{i}").alias(f"rb{i}") for i in range(n_words)],
-            ),
-            "rid",
-        )
-        .withColumn("sfx", _bitset_suffix_overlap(n_words))
-        .select(
-            "lid",
-            "rid",
-            (F.col("sfx") + F.col("pfxoverlap") - 1).alias("ov"),
-            F.col("llen").alias("lsz"),
-            F.col("rlen").alias("rsz"),
-        )
+        n_words = 0
+        doc = _token_arrays(tk, "tid")
+    else:
+        doc = _doc_bitsets(tk, n_words)
+    ov = _attach(cand, doc, doc).select(
+        "lid",
+        "rid",
+        _set_overlap(n_words).alias("ov"),
+        F.col("llen").alias("lsz"),
+        F.col("rlen").alias("rsz"),
     )
     return _jaccard_threshold_filter(ov, t)
 
@@ -1266,13 +1032,14 @@ def ngram_jaccard_near_duplicates(
     dfreq_rows = dfreq.limit(_MAX_BITSET_VOCAB + 1).collect()
     vocab_n = len(dfreq_rows)
     if 0 < vocab_n <= _MAX_BITSET_VOCAB:
-        out = _ngram_bitset_pipeline(toks3, dfreq_rows, vocab_n, threshold)
+        out = _ngram_bitset_pipeline(toks3, dfreq_rows, threshold)
     else:
         cands = _prefix_candidates(toks3, threshold, dfreq=dfreq)
-        out = _verify_jaccard(
-            cands, toks3.select("id", "token"), threshold,
-            vocab_n=vocab_n,
+        ov = _verify_overlap(
+            cands, toks3.select("id", "token"),
+            [r["token"] for r in dfreq_rows],
         )
+        out = _jaccard_threshold_filter(ov, threshold)
     return out.select(
         F.col("lid").alias("l_id"), F.col("rid").alias("r_id"), "jaccard"
     )
@@ -1370,10 +1137,10 @@ def _containment_core(
     in-plan corpus-token aggregation at all), the query side's size
     rides the prefix's existing id-partitioned window as a second
     window function (no aggregation, no join), and the collected
-    vocabulary feeds the verify's tid dim directly
-    (``vocab_tokens``), so the plan has exactly ONE aggregation per
-    side: the docbits. Above the vocab cap the in-plan dfreq and the
-    array verify remain the (corpus-scale) plan."""
+    vocabulary feeds the verify's tid dim directly, so the plan has
+    exactly ONE aggregation per side: the docbits. Above the vocab cap
+    the in-plan dfreq and the array verify remain the (corpus-scale)
+    plan."""
     spark = q_toks.sparkSession
     # Bounded union-vocab probe: ONE job collects the union
     # vocabulary WITH its corpus doc-frequencies — group the union of
@@ -1392,9 +1159,7 @@ def _containment_core(
         .limit(_MAX_BITSET_VOCAB + 1)
         .collect()
     )
-    vocab_n = len(vocab_rows)
-    small = 0 < vocab_n <= _MAX_BITSET_VOCAB
-    if small:
+    if 0 < len(vocab_rows) <= _MAX_BITSET_VOCAB:
         tok_type = c_toks.schema["token"].dataType
         dfreq = F.broadcast(
             spark.createDataFrame(
@@ -1407,12 +1172,10 @@ def _containment_core(
                 ),
             )
         )
-        vocab_tokens = [r["token"] for r in vocab_rows]
     else:
         # over the cap: in-plan corpus dfreq, array verify — the
-        # corpus-scale plan (vocab_n only says "too big")
+        # corpus-scale plan (the probe only says "too big")
         dfreq = c_toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        vocab_tokens = None
     pos_w = Window.partitionBy("id").orderBy("df", "token")
     sz_w = Window.partitionBy("id")
     prefix = (
@@ -1437,9 +1200,8 @@ def _containment_core(
     ov = _verify_overlap(
         cands,
         q_toks.select("id", "token"),
+        [r["token"] for r in vocab_rows],
         r_toks=None if self_mode else c_toks.select("id", "token"),
-        vocab_n=vocab_n,
-        vocab_tokens=vocab_tokens,
     )
     return (
         ov.withColumn(

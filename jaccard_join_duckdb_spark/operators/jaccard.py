@@ -21,9 +21,11 @@ Parity hazards preserved (SURVEY.md §4.3):
   ``l_id = concat(len, '_', id)`` compared lexicographically
   (``jaccard_join.py:135,155``) — including its string-compare quirk.
 - ``pos`` ranks tokens by ``(df, token)`` ascending per record
-  (``jaccard_join.py:134``); verification counts suffix matches from
-  ``pos >= maxPos`` and adds ``pfxOverlap - 1``
-  (``jaccard_join.py:172-183``).
+  (``jaccard_join.py:134``); the array and three-way verifies count
+  suffix matches from ``pos >= maxPos`` and add ``pfxOverlap - 1``
+  (``jaccard_join.py:172-183``); the bitset verify counts ``|x∩y|``
+  outright, which equals that sum under set semantics (see
+  :func:`_jaccard_score`).
 - Output is a pair table only — no similarity column
   (``jaccard_join.py:174-175``). See :mod:`..operators.dedup` for
   scored variants beyond the reference surface.
@@ -48,10 +50,15 @@ Scale design (100 TB target):
   two small aggregates over persisted frames — the dim's statistics
   and the gate-stats job — instead of re-running the tokenize chain.
 - Verification picks one of three strategies from those scalars:
-  bitset popcount when the vocabulary fits ``_MAX_BITSET_VOCAB``
-  words, compiled array intersect when the ``(id, token)`` rows are
+  the popcount of the full bitset intersection when the vocabulary
+  fits ``_MAX_BITSET_VOCAB`` tokens, a compiled intersect of the
+  suffix-sliced token arrays when the ``(id, token)`` rows are
   distinct, and the reference's pairs × tokens three-way join
-  otherwise.
+  otherwise. The bitset build, the literal tid dim, the overlap
+  column and the side-prefixed attach form the set-overlap kernel
+  (:func:`_tid_dim`, :func:`_doc_bitsets`, :func:`_set_overlap`,
+  :func:`_attach`) that the verifiers of :mod:`.dedup` and
+  :mod:`..streaming` share.
 - Single-side conjuncts of the candidate join (prefix filters) are
   applied as pre-join filters, shrinking shuffle input; the hot-token
   skew inherent to token equi-joins is handled by AQE skew-join
@@ -64,6 +71,7 @@ Scale design (100 TB target):
 from __future__ import annotations
 
 import functools
+import operator
 import re
 from decimal import Decimal
 from fractions import Fraction
@@ -71,6 +79,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
@@ -297,8 +306,9 @@ def _validate_hot_threshold(
 # corpora qualify; unbounded word vocabularies fall back to the
 # array-intersect path. 64 words = 512 B/doc of fixed columns — still
 # far below the per-pair cost of array_intersect on multi-hundred-token
-# arrays (measured: 5-gram sf0.1 verify 8.7s → 6.3s when the 2333-token
-# vocab moved from the array path to 37-word bitsets).
+# arrays (measured with the full-popcount verify on a 4-core host: the
+# 5-gram self join at sf0.1, t=0.8, took 12.5–14.1 s on bitsets vs
+# 61–69 s with the cap forced to 0, three warm runs each).
 _MAX_BITSET_VOCAB = 4096
 
 # Widow placeholder (jaccard_join.py:266-268): the inner join's df of a
@@ -419,14 +429,13 @@ def _tkdf(
     is the self join's pair-ordering key (jaccard_join.py:135).
 
     Bitset path (``n_words > 0``): ``tid`` is the token's 1-based rank
-    in the global ``(df, token)`` order — the SAME total order the
-    ``pos`` window uses, so within a document ``pos`` is increasing in
-    ``tid`` and the suffix condition ``pos >= maxPos`` is equivalent to
-    ``tid >= tid_at_maxPos``. The rank window runs unpartitioned over
-    the dim, which then broadcasts — sound only because the bitset gate
-    bounds the vocabulary at ``_MAX_BITSET_VOCAB``. An inner join's two
-    sides rank by the one combined df, so pos↔tid monotonicity holds on
-    each side.
+    in the dim's ``(df, token)`` order, the bit :func:`_doc_bitsets`
+    sets. The verify pops the full intersection, so any one-to-one
+    token → tid map would do; an inner join's two sides rank over the
+    one shared dim, so a token gets the same tid on both. The rank
+    window runs unpartitioned over the dim, which then broadcasts —
+    sound only because the bitset gate bounds the vocabulary at
+    ``_MAX_BITSET_VOCAB``.
 
     ``hot_thr`` (skew mitigation for Zipf token distributions): tokens
     whose ``side_df`` (this side's own df — that is what decides how
@@ -740,10 +749,30 @@ def _verify_attach(
     return F.broadcast(per_doc)
 
 
-def _doc_bitsets(tk: DataFrame, n_words: int) -> DataFrame:
-    """One row per document: ``(id, len, b0..b{n_words-1})`` — the
+# --------------------------------------------------------------------------
+# set-overlap kernel: |x ∩ y| for every verifier (the bitset verify
+# below, the dedup verifies in .dedup and the streaming near-dup)
+# --------------------------------------------------------------------------
+
+def _tid_dim(spark, token_type, tokens: list) -> DataFrame:
+    """The literal ``(token, tid)`` dim of a collected, bounded
+    vocabulary: ``tid`` is the token's 1-based position in ``tokens``.
+    A literal frame has no lineage, so the broadcast it feeds never
+    re-runs the aggregation the vocabulary was collected from."""
+    return spark.createDataFrame(
+        [(tk, i + 1) for i, tk in enumerate(tokens)],
+        T.StructType([
+            T.StructField("token", token_type, False),
+            T.StructField("tid", T.IntegerType(), False),
+        ]),
+    )
+
+
+def _doc_bitsets(tk: DataFrame, n_words: int, *aggs: Column) -> DataFrame:
+    """One row per document: ``(id, *aggs, b0..b{n_words-1})`` — the
     document's token set as a bitset over ``tid`` (bit ``tid-1``,
-    LSB-first within each 64-bit word). All-compiled bit_or aggregate."""
+    LSB-first within each 64-bit word), plus any per-document ``aggs``
+    in the same all-compiled aggregation."""
     bit_cols = [
         F.bit_or(
             F.when(
@@ -753,35 +782,37 @@ def _doc_bitsets(tk: DataFrame, n_words: int) -> DataFrame:
         ).alias(f"b{i}")
         for i in range(n_words)
     ]
-    return tk.groupBy("id").agg(F.max("len").alias("len"), *bit_cols)
+    return tk.groupBy("id").agg(*aggs, *bit_cols)
 
 
-def _bitset_suffix_overlap(n_words: int) -> Column:
-    """``|{t shared : tid_t >= tidstart}|`` over bitset columns
-    ``lb_i``/``rb_i`` and the per-pair column ``tidstart`` — popcount
-    of the masked intersection, plain codegen-able long arithmetic."""
-    def mask(i: int) -> Column:
-        return (
-            F.when(F.col("tidstart") <= F.lit(64 * i + 1), F.lit(-1).cast("long"))
-            .when(F.col("tidstart") > F.lit(64 * (i + 1)), F.lit(0).cast("long"))
-            .otherwise(
-                F.expr(
-                    f"shiftleft(cast(-1 as bigint),"
-                    f" cast(tidstart - 1 - {64 * i} as int))"
-                )
-            )
-        )
-
-    parts = [
-        F.bit_count(
-            F.col(f"lb{i}").bitwiseAND(F.col(f"rb{i}")).bitwiseAND(mask(i))
-        )
+def _set_overlap(n_words: int) -> Column:
+    """``|x ∩ y|`` of a pair attached by :func:`_attach`: the popcount
+    sum of the ANDed bitset words ``lb_i & rb_i`` when ``n_words > 0``,
+    else ``size(array_intersect(larr, rarr))``. Exact when no token
+    repeats within a document; no tid order is assumed."""
+    if not n_words:
+        return F.size(F.array_intersect("larr", "rarr"))
+    return functools.reduce(operator.add, [
+        F.bit_count(F.col(f"lb{i}").bitwiseAND(F.col(f"rb{i}")))
         for i in range(n_words)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
-    return out
+    ])
+
+
+def _attach(
+    cand: DataFrame,
+    l_doc: DataFrame,
+    r_doc: DataFrame,
+    hint=lambda doc, side: doc,
+) -> DataFrame:
+    """``cand(lid, rid, ...)`` joined with each side's one-row-per-
+    document table on its ``id``, every column of that table prefixed
+    with the side (``lid, llen, lb0, ...``; ``rid, rarr, ...``).
+    ``hint(table, side)`` may wrap each prefixed table in a join hint
+    (the broadcast gates of :func:`_verify`)."""
+    for side, doc in (("l", l_doc), ("r", r_doc)):
+        doc = doc.select(*[F.col(c).alias(side + c) for c in doc.columns])
+        cand = cand.join(hint(doc, side), f"{side}id")
+    return cand
 
 
 def _jaccard_score(
@@ -857,7 +888,7 @@ def _suffix_overlap(
 
 
 def _candidates(
-    idx_tk: DataFrame, prb_tk: DataFrame, t: float, pair_cond: Column, by: str
+    idx_tk: DataFrame, prb_tk: DataFrame, t: float, pair_cond: Column
 ) -> DataFrame:
     """Candidate generation (jaccard_join.py:148-169, 364-384) for both
     the self and the inner join: the indexing prefix of ``idx_tk``
@@ -869,9 +900,8 @@ def _candidates(
     shuffle inputs shrink before the token equi-join.
 
     Returns ``(lid, rid, lmax, rmax, pfxoverlap)``: ``lmax``/``rmax``
-    are each side's largest matched ``by`` value (``tid`` on the bitset
-    path, ``pos`` otherwise) and ``pfxoverlap`` counts the matched
-    prefix tokens."""
+    are each side's largest matched ``pos`` and ``pfxoverlap`` counts
+    the matched prefix tokens."""
     L = idx_tk.filter(
         _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
     ).alias("L")
@@ -888,24 +918,19 @@ def _candidates(
     return L.join(R, cond).groupBy(
         F.col("L.id").alias("lid"), F.col("R.id").alias("rid")
     ).agg(
-        F.max(f"L.{by}").alias("lmax"),
-        F.max(f"R.{by}").alias("rmax"),
+        F.max("L.pos").alias("lmax"),
+        F.max("R.pos").alias("rmax"),
         F.count(F.lit(1)).alias("pfxoverlap"),
     )
 
 
-def _verify_table(tk: DataFrame, side: str, n_words: int) -> DataFrame:
-    """One side's doc-level verify attach table, every column prefixed
-    with ``side``: ``id``, ``len`` and either the bitset words
-    ``b0..`` (``n_words > 0``) or the pos-ordered token array ``arr``."""
+def _verify_doc(tk: DataFrame, n_words: int) -> DataFrame:
+    """One side's doc-level verify attach table: ``id``, ``len`` and
+    either the bitset words ``b0..`` (``n_words > 0``) or the
+    pos-ordered token array ``arr``."""
     if n_words:
-        per_doc = _doc_bitsets(tk, n_words)
-        payload = [f"b{i}" for i in range(n_words)]
-    else:
-        per_doc, payload = _pos_token_arrays(tk), ["arr"]
-    return per_doc.select(
-        *[F.col(c).alias(side + c) for c in ("id", "len", *payload)]
-    )
+        return _doc_bitsets(tk, n_words, F.max("len").alias("len"))
+    return _pos_token_arrays(tk)
 
 
 def _verify(
@@ -922,13 +947,15 @@ def _verify(
     with_score: bool,
 ) -> DataFrame:
     """Verification (jaccard_join.py:169-188) for both the self and the
-    inner join: count the tokens a candidate pair shares with
-    ``pos >= maxPos`` on BOTH sides (``>=``, not ``>``, to catch pairs
-    whose prefixes match entirely but suffixes share nothing), then
-    accept iff ``sfx + pfxOverlap - 1 >= (llen + rlen)·t/(1+t)``. A
-    pair with zero suffix matches is dropped, exactly as the
-    reference's three-way join behaves. There is no remaining-suffix
-    pre-filter: it is provably vacuous (see _positional_cond).
+    inner join: accept a candidate pair iff its overlap is
+    ``>= (llen + rlen)·t/(1+t)``. The reference counts the overlap as
+    ``sfx + pfxOverlap - 1``, where ``sfx`` is the number of tokens
+    the pair shares with ``pos >= maxPos`` on BOTH sides (``>=``, not
+    ``>``, to catch pairs whose prefixes match entirely but suffixes
+    share nothing); a pair with zero suffix matches is dropped, exactly
+    as the reference's three-way join behaves. There is no
+    remaining-suffix pre-filter: it is provably vacuous (see
+    _positional_cond).
 
     ``cand`` comes from :func:`_candidates`; ``l_tk``/``r_tk`` are the
     two sides' token tables (one frame for a self join). Each side's
@@ -937,46 +964,50 @@ def _verify(
     from the data:
 
     - bitset (``n_words > 0``: the vocabulary fits
-      ``_MAX_BITSET_VOCAB`` and ``lmax``/``rmax`` are tids): masked
-      AND + popcount. Within a doc ``pos`` is increasing in ``tid``, so
-      ``pos >= maxPos`` on both sides is ``tid >= max(lmax, rmax)``.
+      ``_MAX_BITSET_VOCAB`` and the tokenizer promises distinct rows):
+      the overlap is the full popcount ``Σ bit_count(lb_i & rb_i)``
+      (:func:`_set_overlap`), i.e. ``|x ∩ y|``, which equals
+      ``sfx + pfxOverlap - 1`` exactly under set semantics (see
+      _jaccard_score) and is ``>= 1`` for every candidate.
     - array (``dup_rows == 0``: no duplicate ``(id, token)`` rows,
       promised by the tokenizer or measured by the gate statistics):
-      compiled slice + array_intersect. Exact because the suffix
-      row-pair count equals the set overlap when no row repeats.
-      Measured 1.8-7.3× faster than the three-way join at refscale
-      profile cells whose rows were distinct at runtime.
+      ``sfx`` by compiled slice + array_intersect. Exact because the
+      suffix row-pair count equals the set overlap when no row
+      repeats. Measured 1.8-7.3× faster than the three-way join at
+      refscale profile cells whose rows were distinct at runtime; an
+      unsliced intersect of the full arrays was slower still on the
+      5-gram t=0.3 benchmark join.
     - three-way (duplicates present, or never measured: ``-1``): the
       reference's pairs × tokens join, which counts every duplicate
       row pair. An interpreted higher-order pair count that is exact
       under duplicates was measured 2× slower than it (higher-order
       expressions do not whole-stage-codegen).
     """
-    accept = _overlap_cond(F.col("sfx") + F.col("pfxoverlap") - 1,
-                           F.col("llen"), F.col("rlen"), t)
+    overlap = F.col("sfx") + F.col("pfxoverlap") - 1
+    found = None
     if n_words or dup_rows == 0:
         cap = _bitset_verify_cap(n_words) if n_words else None
-        out = cand
-        for side, tk, (n_docs, n_tok) in (
-            ("l", l_tk, l_stats), ("r", r_tk, r_stats)
-        ):
-            out = out.join(
-                _verify_attach(
-                    _verify_table(tk, side, n_words), n_docs, cap,
-                    bound=bound, decide_rows=n_tok,
-                ),
-                f"{side}id",
+        stats = {"l": l_stats, "r": r_stats}
+
+        def gate(doc: DataFrame, side: str) -> DataFrame:
+            n_docs, n_tok = stats[side]
+            return _verify_attach(
+                doc, n_docs, cap, bound=bound, decide_rows=n_tok
             )
+
+        out = _attach(
+            cand, _verify_doc(l_tk, n_words), _verify_doc(r_tk, n_words),
+            gate,
+        )
         if n_words:
-            out = out.withColumn("tidstart", F.greatest("lmax", "rmax"))
-            sfx = _bitset_suffix_overlap(n_words)
+            out = out.withColumn("overlap", _set_overlap(n_words))
+            overlap = F.col("overlap")
         else:
-            sfx = _suffix_overlap(
+            out = out.withColumn("sfx", _suffix_overlap(
                 F.col("larr"), F.col("llen"), F.col("lmax"),
                 F.col("rarr"), F.col("rlen"), F.col("rmax"),
-            )
-        out = out.withColumn("sfx", sfx)
-        accept = (F.col("sfx") >= 1) & accept
+            ))
+            found = F.col("sfx") >= 1
     else:
         out = (
             cand.join(
@@ -1002,10 +1033,11 @@ def _verify(
             )
             .agg(F.count(F.lit(1)).alias("sfx"))
         )
+    accept = _overlap_cond(overlap, F.col("llen"), F.col("rlen"), t)
+    if found is not None:
+        accept = found & accept
     score = [
-        _jaccard_score(
-            F.col("sfx") + F.col("pfxoverlap") - 1, F.col("llen"), F.col("rlen")
-        )
+        _jaccard_score(overlap, F.col("llen"), F.col("rlen"))
     ] if with_score else []
     return out.filter(accept).select(
         F.col("lid").alias(out_cols[0]), F.col("rid").alias(out_cols[1]),
@@ -1104,7 +1136,6 @@ def jaccard_self_join(
         tkdf, tkdf, t,
         (F.col("L.l_id") < F.col("R.l_id"))
         & _length_cond(F.col("L.len"), F.col("R.len"), t),
-        "tid" if freq.n_words else "pos",
     )
     return _verify(
         cand, tkdf, tkdf, t, freq.n_words, dup_rows, stats, stats, bound,
@@ -1240,7 +1271,6 @@ def jaccard_inner_join(
         tk[i], tk[j], t,
         _length_cond(F.col("L.len"), F.col("R.len"), t)
         & _length_cond(F.col("R.len"), F.col("L.len"), t),
-        "tid" if freq.n_words else "pos",
     )
     # Output column names reproduce the reference quirk: the indexing
     # side's out_prefix pairs with the *left* key attr name and the

@@ -68,6 +68,50 @@ def default_driver_memory() -> str:
     return f"{int(host_memory_bytes() * _HEAP_FRACTION) >> 20}m"
 
 
+def _mem_bytes(size: str) -> int:
+    """A JVM memory size (``"512m"``, ``"4g"``, ``"4gb"``; a bare number
+    is MiB, as for ``spark.driver.memory``) in bytes."""
+    s = size.strip().lower().removesuffix("b")
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    if s[-1:] in units:
+        return int(float(s[:-1]) * units[s[-1]])
+    return int(s) << 20
+
+
+def _java_opts(driver_mem: str) -> list[str]:
+    """The driver JVM options for a ``driver_mem`` heap.
+
+    Pin the initial heap to the max (round 11). Spark passes only
+    -Xmx, so G1 starts at a tiny initial heap and repeatedly
+    commits/uncommits tens of GB as query memory ebbs — and on
+    lazily-backed VM memory every re-commit goes through the slow
+    host fault path. Measured on the refscale db50 ws t=0.3 cell
+    (identical plan, rows, and shuffle volumes every iteration):
+    default heap stormed to 142-265 s walls with 1,100-2,800 s of
+    KERNEL time per iteration (minor faults only ~2M — the cost is
+    per-page host-side backing, not guest zeroing), while
+    -Xms=driver-mem never stormed across three A-B-A sessions and
+    converged to 7.3-11 s. Executors on a real cluster run fixed
+    heaps for the same reason; this makes local mode match.
+    SPARK_GRAFT_DRIVER_XMS overrides ("0" disables the pin).
+
+    SPARK_GRAFT_PRETOUCH=1 adds -XX:+AlwaysPreTouch, trading ~80 s
+    of one-time startup for zero first-touch jitter — the bench
+    harnesses set it so timed iterations never fault fresh pages. It
+    applies only while the heap fits :func:`host_memory_bytes`:
+    touching every page of a larger heap up front would drive the host
+    out of memory at startup instead of leaving the pages untouched
+    until a query needs them."""
+    xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS", driver_mem)
+    opts = [] if xms in ("0", "") else [f"-Xms{xms}"]
+    if (
+        os.environ.get("SPARK_GRAFT_PRETOUCH") == "1"
+        and _mem_bytes(driver_mem) <= host_memory_bytes()
+    ):
+        opts.append("-XX:+AlwaysPreTouch")
+    return opts
+
+
 def get_spark(
     app_name: str = "jaccard-join-duckdb-spark",
     master: str | None = None,
@@ -94,26 +138,7 @@ def get_spark(
     driver_mem = (
         os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     )
-    # Pin the initial heap to the max (round 11). Spark passes only
-    # -Xmx, so G1 starts at a tiny initial heap and repeatedly
-    # commits/uncommits tens of GB as query memory ebbs — and on
-    # lazily-backed VM memory every re-commit goes through the slow
-    # host fault path. Measured on the refscale db50 ws t=0.3 cell
-    # (identical plan, rows, and shuffle volumes every iteration):
-    # default heap stormed to 142-265 s walls with 1,100-2,800 s of
-    # KERNEL time per iteration (minor faults only ~2M — the cost is
-    # per-page host-side backing, not guest zeroing), while
-    # -Xms=driver-mem never stormed across three A-B-A sessions and
-    # converged to 7.3-11 s. Executors on a real cluster run fixed
-    # heaps for the same reason; this makes local mode match.
-    # SPARK_GRAFT_DRIVER_XMS overrides ("0" disables the pin);
-    # SPARK_GRAFT_PRETOUCH=1 adds -XX:+AlwaysPreTouch, trading ~80 s
-    # of one-time startup for zero first-touch jitter — the bench
-    # harnesses set it so timed iterations never fault fresh pages.
-    xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS", driver_mem)
-    java_opts = [] if xms in ("0", "") else [f"-Xms{xms}"]
-    if os.environ.get("SPARK_GRAFT_PRETOUCH") == "1":
-        java_opts.append("-XX:+AlwaysPreTouch")
+    java_opts = _java_opts(driver_mem)
     extra_conf = dict(extra_conf or {})
     caller_opts = extra_conf.pop("spark.driver.extraJavaOptions", None)
     if caller_opts:

@@ -493,8 +493,11 @@ def self_near_dedup_stream(
     from ..operators.dedup import (
         _jaccard_threshold_filter,
         _minhash_band_sigs,
+        _overlap_rows,
+        _token_arrays,
         _token_sets,
     )
+    from ..operators.jaccard import _attach
 
     tok = tokenizer or WhitespaceTokzr()
     if state_table is not None and checkpoint_dir is None:
@@ -538,7 +541,7 @@ def self_near_dedup_stream(
         toks = _token_sets(df, id_col, text_col, tok)
         return (
             _minhash_band_sigs(toks, num_hashes, bands, seed),
-            toks.groupBy("id").agg(F.collect_list("token").alias("arr")),
+            _token_arrays(toks),
         )
 
     def _write_epoch(
@@ -589,11 +592,6 @@ def self_near_dedup_stream(
             bsigs, barrs = _sig_arr(bootstrap_df)
             state["sigs"] = bsigs.localCheckpoint()
             state["arrs"] = barrs.localCheckpoint()
-
-    def _arr_side(arrs: DataFrame, side: str) -> DataFrame:
-        return arrs.select(
-            F.col("id").alias(f"{side}id"), F.col("arr").alias(f"{side}a")
-        )
 
     sig_t = f"{state_table}_sigs" if state_table else None
     arr_t = f"{state_table}_arrs" if state_table else None
@@ -749,33 +747,22 @@ def self_near_dedup_stream(
                     .hint("shuffle_hash")
                     .join(prior_side, key, "left")
                     .withColumn(
-                        f"{side}a",
+                        f"{side}arr",
                         F.coalesce(F.col(f"{side}b"), F.col(f"{side}p")),
                     )
                     .drop(f"{side}b", f"{side}p")
-                    .filter(F.col(f"{side}a").isNotNull())
+                    .filter(F.col(f"{side}arr").isNotNull())
                 )
-            ov_in = attached
         else:
             all_arrs = (
                 arrs
                 if prior_arrs is None
                 else prior_arrs.unionByName(arrs)
             )
-            ov_in = cands.join(_arr_side(all_arrs, "l"), "lid").join(
-                _arr_side(all_arrs, "r"), "rid"
-            )
-        ov = (
-            ov_in.select(
-                "lid",
-                "rid",
-                F.size(F.array_intersect("la", "ra")).alias("ov"),
-                F.size("la").alias("lsz"),
-                F.size("ra").alias("rsz"),
-            )
-            .filter(F.col("ov") >= 1)
-        )
-        out = _jaccard_threshold_filter(ov, threshold).select(
+            attached = _attach(cands, all_arrs, all_arrs)
+        out = _jaccard_threshold_filter(
+            _overlap_rows(attached, 0), threshold
+        ).select(
             F.col("lid").alias("l_id"), F.col("rid").alias("r_id"), "jaccard"
         )
         sink(out, epoch_id)

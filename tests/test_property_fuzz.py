@@ -663,3 +663,100 @@ def test_lm_score_matches_oracle_on_random_corpora(_spark, texts, n, smoothing):
             assert got[i][1] == want[i][1], (i, got[i], want[i])
         else:
             assert abs(got[i][1] - want[i][1]) <= 1e-6, (i, got[i], want[i])
+
+
+def _near_dup_texts(seed, n, length, alphabet, sep=""):
+    """``n`` random documents of ``length`` symbols from ``alphabet``,
+    each followed by a copy with up to ``length // 10`` symbols
+    replaced: a seeded corpus with pairs across the whole Jaccard
+    range."""
+    import random
+
+    rng = random.Random(seed)
+    texts = []
+    for _ in range(n):
+        doc = [rng.choice(alphabet) for _ in range(length)]
+        dup = list(doc)
+        for _ in range(rng.randint(0, length // 10)):
+            dup[rng.randrange(length)] = rng.choice(alphabet)
+        texts += [sep.join(doc), sep.join(dup)]
+    return texts
+
+
+def _dedup_vs_oracle(spark, texts, run, oracle_sql):
+    """``run(df)``'s ``(l_id, r_id, jaccard)`` rows against the DuckDB
+    twin ``oracle_sql(table, key, val)`` over the same texts."""
+    import duckdb
+    import pyarrow as pa
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    got = {tuple(r) for r in run(df).collect()}
+    con = duckdb.connect()
+    con.register("t", pa.table({"id": list(range(len(texts))), "text": texts}))
+    want = set(con.execute(oracle_sql("t", "id", "text")).fetchall())
+    assert got == want
+    return got
+
+
+@pytest.mark.parametrize("q, alphabet, n, length, vocab_range", [
+    (2, "abcdefghijkl", 20, 40, (1, 512)),        # bitset verify
+    (3, "abcdefghij", 30, 120, (513, 4096)),      # wide: tid arrays
+    (4, "abcdefghijkl", 40, 160, (4097, None)),   # generic prefix path
+], ids=["bitset", "wide", "generic"])
+def test_ngram_near_duplicates_match_oracle(
+    _spark, q, alphabet, n, length, vocab_range
+):
+    """ngram_jaccard_near_duplicates equals its DuckDB twin (all
+    token-sharing pairs, exact Jaccard) on seeded near-duplicate
+    corpora whose q-gram vocabulary puts each run in one verify
+    branch: bitset (<= 512 grams), tid arrays (<= 4096) and the
+    generic prefix candidates with token-array verify (> 4096)."""
+    from jaccard_join_duckdb_spark.operators.dedup import (
+        ngram_jaccard_near_duplicates,
+    )
+    from jaccard_join_duckdb_spark.plans.oracle_ext import (
+        ngram_jaccard_neardup_sql,
+    )
+
+    texts = _near_dup_texts(q * 100 + n, n, length, alphabet)
+    pad = "#" * (q - 1)
+    vocab = {
+        (pad + x + pad)[i:i + q]
+        for x in texts
+        for i in range(len(x) + q - 1)
+    }
+    lo, hi = vocab_range
+    assert lo <= len(vocab) and (hi is None or len(vocab) <= hi)
+    got = _dedup_vs_oracle(
+        _spark, texts,
+        lambda df: ngram_jaccard_near_duplicates(df, "id", "text", 0.5, q=q),
+        lambda *tab: ngram_jaccard_neardup_sql(*tab, 0.5, q=q),
+    )
+    assert got
+
+
+@pytest.mark.parametrize("n_words, vocab_range", [
+    (60, (1, 512)),        # fused: one bitset + minima aggregation
+    (3000, (513, None)),   # generic band signatures, token-array verify
+], ids=["fused", "generic"])
+def test_minhash_near_duplicates_match_oracle(_spark, n_words, vocab_range):
+    """minhash_near_duplicates equals its DuckDB twin (same hash
+    permutations, band signatures and exact Jaccard) on seeded
+    near-duplicate corpora on both sides of the fused-path vocabulary
+    cap."""
+    from jaccard_join_duckdb_spark.operators.dedup import (
+        minhash_near_duplicates,
+    )
+    from jaccard_join_duckdb_spark.plans.oracle_ext import minhash_neardup_sql
+
+    words = [f"w{i}" for i in range(n_words)]
+    texts = _near_dup_texts(n_words, 40, 30, words, sep=" ")
+    lo, hi = vocab_range
+    vocab = {w for x in texts for w in x.split()}
+    assert lo <= len(vocab) and (hi is None or len(vocab) <= hi)
+    got = _dedup_vs_oracle(
+        _spark, texts,
+        lambda df: minhash_near_duplicates(df, "id", "text", 0.5),
+        lambda *tab: minhash_neardup_sql(*tab, 0.5),
+    )
+    assert got

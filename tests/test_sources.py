@@ -547,3 +547,22 @@ def test_default_driver_memory_fits_host(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     S.get_spark()
     assert captured["spark.driver.memory"] == "2g"
+
+
+def test_pretouch_only_when_heap_fits(monkeypatch):
+    """SPARK_GRAFT_PRETOUCH=1 pre-touches the heap only when it fits
+    the host: touching every page of an oversized heap at startup
+    would run the host out of memory. The -Xms pin is unaffected."""
+    import jaccard_join_duckdb_spark.session as S
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_XMS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_PRETOUCH", "1")
+    fits = S.default_driver_memory()
+    assert S._java_opts(fits) == [f"-Xms{fits}", "-XX:+AlwaysPreTouch"]
+    oversized = f"{(4 * S.host_memory_bytes()) >> 30}g"
+    assert S._mem_bytes(oversized) > S.host_memory_bytes()
+    assert S._java_opts(oversized) == [f"-Xms{oversized}"]
+    monkeypatch.delenv("SPARK_GRAFT_PRETOUCH")
+    assert S._java_opts(fits) == [f"-Xms{fits}"]
+    assert S._mem_bytes("512m") == S._mem_bytes("512") == 512 << 20
+    assert S._mem_bytes("4gb") == 4 << 30
