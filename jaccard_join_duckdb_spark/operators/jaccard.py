@@ -23,9 +23,9 @@ Parity hazards preserved (SURVEY.md §4.3):
 - ``pos`` ranks tokens by ``(df, token)`` ascending per record
   (``jaccard_join.py:134``); the array and three-way verifies count
   suffix matches from ``pos >= maxPos`` and add ``pfxOverlap - 1``
-  (``jaccard_join.py:172-183``); the bitset verify counts ``|x∩y|``
-  outright, which equals that sum under set semantics (see
-  :func:`_jaccard_score`).
+  (``jaccard_join.py:172-183``); the bitset path counts ``|x∩y|``
+  outright in the candidate join, which equals that sum under set
+  semantics (see :func:`_jaccard_score`).
 - Output is a pair table only — no similarity column
   (``jaccard_join.py:174-175``). See :mod:`..operators.dedup` for
   scored variants beyond the reference surface.
@@ -49,16 +49,16 @@ Scale design (100 TB target):
   broadcast attach, verify strategy, side swap) reads its scalars from
   two small aggregates over persisted frames — the dim's statistics
   and the gate-stats job — instead of re-running the tokenize chain.
-- Verification picks one of three strategies from those scalars:
-  the popcount of the full bitset intersection when the vocabulary
-  fits ``_MAX_BITSET_VOCAB`` tokens, a compiled intersect of the
-  suffix-sliced token arrays when the ``(id, token)`` rows are
-  distinct, and the reference's pairs × tokens three-way join
-  otherwise. The bitset build, the literal tid dim, the overlap
-  column and the side-prefixed attach form the set-overlap kernel
-  (:func:`_tid_dim`, :func:`_doc_bitsets`, :func:`_set_overlap`,
-  :func:`_attach`) that the verifiers of :mod:`.dedup` and
-  :mod:`..streaming` share.
+- When the vocabulary fits ``_MAX_BITSET_VOCAB`` tokens, the candidate
+  join verifies each pair on the popcount of its documents' bitsets
+  and emits it once, with no verify stage. Otherwise verification is
+  a compiled intersect of the suffix-sliced token arrays when the
+  ``(id, token)`` rows are distinct, and the reference's pairs ×
+  tokens three-way join when not. The bitset words, the literal tid
+  dim, the overlap column and the side-prefixed attach form the
+  set-overlap kernel (:func:`_tid_dim`, :func:`_bit_words`,
+  :func:`_set_overlap`, :func:`_attach`) that the verifiers of
+  :mod:`.dedup` and :mod:`..streaming` share.
 - Single-side conjuncts of the candidate join (prefix filters) are
   applied as pre-join filters, shrinking shuffle input; the hot-token
   skew inherent to token equi-joins is handled by AQE skew-join
@@ -302,9 +302,9 @@ def _validate_hot_threshold(
 
 
 # Bitset verification is used when the token vocabulary fits in this
-# many distinct tokens (64 longs per document). Q-gram and small-alphabet
-# corpora qualify; unbounded word vocabularies fall back to the
-# array-intersect path. 64 words = 512 B/doc of fixed columns — still
+# many distinct tokens (64 longs on every tkdf row). Q-gram and
+# small-alphabet corpora qualify; unbounded word vocabularies fall back
+# to the array-intersect path. 64 words = 512 B/row of fixed columns — still
 # far below the per-pair cost of array_intersect on multi-hundred-token
 # arrays (measured with the full-popcount verify on a 4-core host: the
 # 5-gram self join at sf0.1, t=0.8, took 12.5–14.1 s on bitsets vs
@@ -422,20 +422,23 @@ def _tkdf(
     with_pair_key: bool = False,
 ) -> DataFrame:
     """tokens ⋈ the doc-frequency dim → ``tkdf(id, len, token, df[,
-    tid], pos[, l_id])`` for one side.
+    tid], pos[, b0..][, l_id])`` for one side.
 
     ``pos`` = ``row_number() OVER (PARTITION BY id ORDER BY df,
     token)`` (jaccard_join.py:132-137); ``l_id = concat(len, '_', id)``
     is the self join's pair-ordering key (jaccard_join.py:135).
 
     Bitset path (``n_words > 0``): ``tid`` is the token's 1-based rank
-    in the dim's ``(df, token)`` order, the bit :func:`_doc_bitsets`
-    sets. The verify pops the full intersection, so any one-to-one
-    token → tid map would do; an inner join's two sides rank over the
-    one shared dim, so a token gets the same tid on both. The rank
-    window runs unpartitioned over the dim, which then broadcasts —
-    sound only because the bitset gate bounds the vocabulary at
-    ``_MAX_BITSET_VOCAB``.
+    in the dim's ``(df, token)`` order, so ``tid`` order is ``pos``
+    order in every document (the lowest-shared-token rule of
+    :func:`_candidates` relies on it); an inner join's two sides rank
+    over the one shared dim, so a token gets the same tid on both.
+    The rank window runs unpartitioned over the dim, which then
+    broadcasts — sound only because the bitset gate bounds the
+    vocabulary at ``_MAX_BITSET_VOCAB``. Every row also carries its
+    document's bitset words ``b0..`` (:func:`_bit_words` over the
+    ``id`` window, which shares the ``pos`` window's partitioning and
+    sort: no extra exchange).
 
     ``hot_thr`` (skew mitigation for Zipf token distributions): tokens
     whose ``side_df`` (this side's own df — that is what decides how
@@ -481,6 +484,8 @@ def _tkdf(
         "df",
         *(["tid"] if n_words else []),
         F.row_number().over(w).alias("pos"),
+        *[b.over(Window.partitionBy("id")).alias(f"b{i}")
+          for i, b in enumerate(_bit_words(n_words))],
     )
     if with_pair_key:
         out = out.withColumn(
@@ -508,9 +513,8 @@ def tokens_with_doc_freq(
     return _tkdf(tokens, dfreq, 0, hot_df_threshold, "df", with_pair_key)
 
 # Verification-side broadcast gate (round 8). The verification attach
-# tables are ONE ROW PER DOCUMENT (pos-ordered token arrays, bitsets,
-# or (id, len) pairs), while the candidate set they attach to is
-# quadratic-ish in corpus density — at low thresholds it dwarfs the
+# tables are ONE ROW PER DOCUMENT (pos-ordered token arrays), while
+# the candidate set they attach to is quadratic-ish in corpus density — at low thresholds it dwarfs the
 # doc tables by orders of magnitude (refscale inner db100 t=0.3: 82M
 # candidate pairs vs 50K docs/side). A sort-merge attach shuffles and
 # SORTS every candidate row twice, spilling once a partition's sort
@@ -533,13 +537,6 @@ _MAX_BROADCAST_VERIFY_DOCS = 250_000
 # token tables): 508 s → 119 s, identical rows. Token counts come out
 # of the fused gate-stats aggregate over the persisted tkdf.
 _MAX_BROADCAST_VERIFY_TOKENS = 2_000_000
-# Serialized-size budget for ONE broadcast attach table. The row-count
-# caps above assume token-level widths (~30 B/row → ~60 MB at 2M rows);
-# the bitset attach rows are 8*(n_words+2) bytes each, so at the full
-# 4096-bit vocabulary (64 longs) a 250K-doc side would serialize to
-# ~130 MB — twice per join. The bitset path therefore derives its doc
-# cap from this byte budget (round 9, ADVICE r8 #1).
-_BROADCAST_VERIFY_BYTES = 64 << 20
 
 
 def _doc_count_probe(df: DataFrame) -> int:
@@ -698,30 +695,18 @@ def _gate_stats(
     )
 
 
-def _bitset_verify_cap(n_words: int) -> int:
-    """Width-aware doc cap for the bitset attach tables: each row is
-    ``id + len + n_words`` longs, so the cap is the byte budget divided
-    by the row width, never above the token-width default."""
-    return min(
-        _MAX_BROADCAST_VERIFY_DOCS,
-        _BROADCAST_VERIFY_BYTES // (8 * (n_words + 2)),
-    )
-
-
 def _verify_attach(
     per_doc: DataFrame,
     n_rows: int,
-    cap: int | None = None,
     *,
     token_level: bool = False,
     bound: int | None = None,
     decide_rows: int | None = None,
 ) -> DataFrame:
     """A verification attach table, broadcast when BOTH gates clear:
-    the row count fits the size cap (doc-level tables use the module
-    default; bitset callers pass the width-aware ``_bitset_verify_cap``;
-    token-level tables resolve ``_MAX_BROADCAST_VERIFY_TOKENS``) AND
-    the candidate-stream bound says the broadcast pays
+    the row count fits the size cap (``_MAX_BROADCAST_VERIFY_DOCS`` for
+    doc-level tables, ``_MAX_BROADCAST_VERIFY_TOKENS`` for token-level
+    ones) AND the candidate-stream bound says the broadcast pays
     (``bound >= _BROADCAST_VERIFY_MIN_RATIO * decide_rows`` — see the
     calibration note at _BROADCAST_VERIFY_MIN_RATIO). ``decide_rows``
     (round 10) is the TOKEN-row count of the attach's side even for
@@ -734,12 +719,8 @@ def _verify_attach(
     token-level attaches, where the two coincide). Caps and ratio are
     read at CALL time so tests can pin both fallbacks by patching the
     module attributes."""
-    if cap is None:
-        cap = (
-            _MAX_BROADCAST_VERIFY_TOKENS
-            if token_level
-            else _MAX_BROADCAST_VERIFY_DOCS
-        )
+    cap = (_MAX_BROADCAST_VERIFY_TOKENS if token_level
+           else _MAX_BROADCAST_VERIFY_DOCS)
     if not 0 < n_rows <= cap:
         return per_doc
     if decide_rows is None:
@@ -750,8 +731,8 @@ def _verify_attach(
 
 
 # --------------------------------------------------------------------------
-# set-overlap kernel: |x ∩ y| for every verifier (the bitset verify
-# below, the dedup verifies in .dedup and the streaming near-dup)
+# set-overlap kernel: |x ∩ y| for every verifier (the bitset candidate
+# join below, the dedup verifies in .dedup and the streaming near-dup)
 # --------------------------------------------------------------------------
 
 def _tid_dim(spark, token_type, tokens: list) -> DataFrame:
@@ -768,32 +749,40 @@ def _tid_dim(spark, token_type, tokens: list) -> DataFrame:
     )
 
 
-def _doc_bitsets(tk: DataFrame, n_words: int, *aggs: Column) -> DataFrame:
-    """One row per document: ``(id, *aggs, b0..b{n_words-1})`` — the
-    document's token set as a bitset over ``tid`` (bit ``tid-1``,
-    LSB-first within each 64-bit word), plus any per-document ``aggs``
-    in the same all-compiled aggregation."""
-    bit_cols = [
+def _bit_words(n_words: int) -> list[Column]:
+    """The aggregates ``bit_or`` of bit ``tid-1`` (LSB-first within each
+    64-bit word) for words ``0..n_words-1``: a document's token set as
+    a bitset over ``tid``, once aggregated over its rows."""
+    return [
         F.bit_or(
             F.when(
                 (F.col("tid") > 64 * i) & (F.col("tid") <= 64 * (i + 1)),
                 F.expr(f"shiftleft(cast(1 as bigint), tid - 1 - {64 * i})"),
             ).otherwise(F.lit(0).cast("long"))
-        ).alias(f"b{i}")
+        )
         for i in range(n_words)
     ]
-    return tk.groupBy("id").agg(*aggs, *bit_cols)
 
 
-def _set_overlap(n_words: int) -> Column:
-    """``|x ∩ y|`` of a pair attached by :func:`_attach`: the popcount
-    sum of the ANDed bitset words ``lb_i & rb_i`` when ``n_words > 0``,
-    else ``size(array_intersect(larr, rarr))``. Exact when no token
-    repeats within a document; no tid order is assumed."""
+def _doc_bitsets(tk: DataFrame, n_words: int, *aggs: Column) -> DataFrame:
+    """One row per document: ``(id, *aggs, b0..b{n_words-1})`` — the
+    :func:`_bit_words` bitset, plus any per-document ``aggs`` in the
+    same all-compiled aggregation."""
+    return tk.groupBy("id").agg(
+        *aggs, *[b.alias(f"b{i}") for i, b in enumerate(_bit_words(n_words))]
+    )
+
+
+def _set_overlap(n_words: int, l: str = "l", r: str = "r") -> Column:
+    """``|x ∩ y|`` of a pair whose columns carry the side prefixes ``l``
+    and ``r`` (``lb0`` from :func:`_attach`, ``L.b0`` in a join of
+    aliased frames): the popcount sum of the ANDed bitset words when
+    ``n_words > 0``, else the size of the token arrays' intersection.
+    Exact when no token repeats within a document."""
     if not n_words:
-        return F.size(F.array_intersect("larr", "rarr"))
+        return F.size(F.array_intersect(f"{l}arr", f"{r}arr"))
     return functools.reduce(operator.add, [
-        F.bit_count(F.col(f"lb{i}").bitwiseAND(F.col(f"rb{i}")))
+        F.bit_count(F.col(f"{l}b{i}").bitwiseAND(F.col(f"{r}b{i}")))
         for i in range(n_words)
     ])
 
@@ -888,7 +877,8 @@ def _suffix_overlap(
 
 
 def _candidates(
-    idx_tk: DataFrame, prb_tk: DataFrame, t: float, pair_cond: Column
+    idx_tk: DataFrame, prb_tk: DataFrame, t: float, pair_cond: Column,
+    n_words: int,
 ) -> DataFrame:
     """Candidate generation (jaccard_join.py:148-169, 364-384) for both
     the self and the inner join: the indexing prefix of ``idx_tk``
@@ -899,9 +889,24 @@ def _candidates(
     predicate set as the reference's fused WHERE, but explicit so the
     shuffle inputs shrink before the token equi-join.
 
-    Returns ``(lid, rid, lmax, rmax, pfxoverlap)``: ``lmax``/``rmax``
-    are each side's largest matched ``pos`` and ``pfxoverlap`` counts
-    the matched prefix tokens."""
+    Returns ``(lid, rid, lmax, rmax, pfxoverlap)`` for :func:`_verify`
+    (``n_words == 0``): ``lmax``/``rmax`` are each side's largest
+    matched ``pos`` and ``pfxoverlap`` counts the matched prefix tokens.
+
+    Bitset path (``n_words > 0``): the rows carry their documents'
+    bitset words (:func:`_tkdf`), so the condition also verifies — the
+    full popcount :func:`_set_overlap` equals the reference's ``sfx +
+    pfxOverlap - 1`` under set semantics (see _jaccard_score) — and
+    keeps one row per pair by the lowest-shared-token rule: no bit of
+    ``L.b & R.b`` lies below ``L.tid``. The result is the verified
+    pairs ``(lid, rid, llen, rlen, overlap)``, with no pair aggregate.
+    The rule is exact: ``tid`` order is ``pos`` order on both sides
+    (one global ``(df, token)`` ranking), the prefix and positional
+    filters only tighten as ``pos`` grows, and the pair predicate and
+    length filter are constant per pair; so if any shared prefix token
+    produces a join row, the smallest shared token does too, and the
+    rule keeps exactly that row. The masks are ``~shiftleft(-1L, k)``:
+    ``x & -x`` and ``x - 1`` overflow under ANSI at bit 63."""
     L = idx_tk.filter(
         _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
     ).alias("L")
@@ -915,6 +920,21 @@ def _candidates(
             F.col("L.len"), F.col("L.pos"), F.col("R.len"), F.col("R.pos"), t
         )
     )
+    if n_words:
+        overlap = _set_overlap(n_words, "L.", "R.")
+        cond = cond & _overlap_cond(overlap, F.col("L.len"), F.col("R.len"), t)
+        for i in range(n_words):
+            # no shared bit of word i lies below bit L.tid - 1
+            cond = cond & F.expr(
+                f"L.b{i} & R.b{i} & CASE WHEN L.tid > {64 * i + 64} THEN -1L"
+                f" WHEN L.tid > {64 * i} THEN ~shiftleft(-1L, L.tid - "
+                f"{64 * i + 1}) ELSE 0L END = 0"
+            )
+        return L.join(R, cond).select(
+            F.col("L.id").alias("lid"), F.col("R.id").alias("rid"),
+            F.col("L.len").alias("llen"), F.col("R.len").alias("rlen"),
+            overlap.alias("overlap"),
+        )
     return L.join(R, cond).groupBy(
         F.col("L.id").alias("lid"), F.col("R.id").alias("rid")
     ).agg(
@@ -922,15 +942,6 @@ def _candidates(
         F.max("R.pos").alias("rmax"),
         F.count(F.lit(1)).alias("pfxoverlap"),
     )
-
-
-def _verify_doc(tk: DataFrame, n_words: int) -> DataFrame:
-    """One side's doc-level verify attach table: ``id``, ``len`` and
-    either the bitset words ``b0..`` (``n_words > 0``) or the
-    pos-ordered token array ``arr``."""
-    if n_words:
-        return _doc_bitsets(tk, n_words, F.max("len").alias("len"))
-    return _pos_token_arrays(tk)
 
 
 def _verify(
@@ -965,10 +976,8 @@ def _verify(
 
     - bitset (``n_words > 0``: the vocabulary fits
       ``_MAX_BITSET_VOCAB`` and the tokenizer promises distinct rows):
-      the overlap is the full popcount ``Σ bit_count(lb_i & rb_i)``
-      (:func:`_set_overlap`), i.e. ``|x ∩ y|``, which equals
-      ``sfx + pfxOverlap - 1`` exactly under set semantics (see
-      _jaccard_score) and is ``>= 1`` for every candidate.
+      the candidate join already verified each pair on its full
+      popcount, so this is a plain select.
     - array (``dup_rows == 0``: no duplicate ``(id, token)`` rows,
       promised by the tokenizer or measured by the gate statistics):
       ``sfx`` by compiled slice + array_intersect. Exact because the
@@ -984,30 +993,22 @@ def _verify(
       expressions do not whole-stage-codegen).
     """
     overlap = F.col("sfx") + F.col("pfxoverlap") - 1
-    found = None
-    if n_words or dup_rows == 0:
-        cap = _bitset_verify_cap(n_words) if n_words else None
+    accept = _overlap_cond(overlap, F.col("llen"), F.col("rlen"), t)
+    if n_words:  # the candidate join verified every pair
+        out, overlap = cand, F.col("overlap")
+    elif dup_rows == 0:
         stats = {"l": l_stats, "r": r_stats}
 
         def gate(doc: DataFrame, side: str) -> DataFrame:
             n_docs, n_tok = stats[side]
-            return _verify_attach(
-                doc, n_docs, cap, bound=bound, decide_rows=n_tok
-            )
+            return _verify_attach(doc, n_docs, bound=bound, decide_rows=n_tok)
 
         out = _attach(
-            cand, _verify_doc(l_tk, n_words), _verify_doc(r_tk, n_words),
-            gate,
-        )
-        if n_words:
-            out = out.withColumn("overlap", _set_overlap(n_words))
-            overlap = F.col("overlap")
-        else:
-            out = out.withColumn("sfx", _suffix_overlap(
-                F.col("larr"), F.col("llen"), F.col("lmax"),
-                F.col("rarr"), F.col("rlen"), F.col("rmax"),
-            ))
-            found = F.col("sfx") >= 1
+            cand, _pos_token_arrays(l_tk), _pos_token_arrays(r_tk), gate
+        ).withColumn("sfx", _suffix_overlap(
+            F.col("larr"), F.col("llen"), F.col("lmax"),
+            F.col("rarr"), F.col("rlen"), F.col("rmax"),
+        )).filter((F.col("sfx") >= 1) & accept)
     else:
         out = (
             cand.join(
@@ -1032,14 +1033,12 @@ def _verify(
                 F.col("VR.len").alias("rlen"), "pfxoverlap",
             )
             .agg(F.count(F.lit(1)).alias("sfx"))
+            .filter(accept)
         )
-    accept = _overlap_cond(overlap, F.col("llen"), F.col("rlen"), t)
-    if found is not None:
-        accept = found & accept
     score = [
         _jaccard_score(overlap, F.col("llen"), F.col("rlen"))
     ] if with_score else []
-    return out.filter(accept).select(
+    return out.select(
         F.col("lid").alias(out_cols[0]), F.col("rid").alias(out_cols[1]),
         *score,
     )
@@ -1092,7 +1091,8 @@ def jaccard_self_join(
     are the pair predicate (``L.l_id < R.l_id``, each unordered pair
     once, plus the one-sided length filter) and the doc-count probe
     that skips the gate-stats job for a corpus over the broadcast
-    cap."""
+    cap. The bitset path has no verify attach to gate, so it runs
+    neither."""
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
@@ -1117,7 +1117,8 @@ def jaccard_self_join(
     # distinct rows, unknown (-1) until the gate-stats job measures it
     dup_rows = 0 if tokenizer.rows_distinct else -1
     if (
-        not _cheap_decline(freq.sumsq, freq.n_tok)
+        not freq.n_words
+        and not _cheap_decline(freq.sumsq, freq.n_tok)
         and _doc_count_probe(df) <= _MAX_BROADCAST_VERIFY_DOCS
     ):
         g = _gate_stats([tkdf], t, skip_dup=tokenizer.rows_distinct)
@@ -1136,6 +1137,7 @@ def jaccard_self_join(
         tkdf, tkdf, t,
         (F.col("L.l_id") < F.col("R.l_id"))
         & _length_cond(F.col("L.len"), F.col("R.len"), t),
+        freq.n_words,
     )
     return _verify(
         cand, tkdf, tkdf, t, freq.n_words, dup_rows, stats, stats, bound,
@@ -1259,18 +1261,11 @@ def jaccard_inner_join(
     # Side swap: indexing side i keeps the short 2t/(1+t) prefix, the
     # probing side j takes the longer t prefix.
     i, j = (0, 1) if g.widows[0] > g.widows[1] else (1, 0)
-    bound = g.bound[i]
-    # The exact bound only matters when some attach table could clear
-    # its size cap (see _BROADCAST_VERIFY_MIN_RATIO).
-    if _cheap_decline(freq.sumsq, min(g.tokens)) or not (
-        min(g.docs) <= _MAX_BROADCAST_VERIFY_DOCS
-        or min(g.tokens) <= _MAX_BROADCAST_VERIFY_TOKENS
-    ):
-        bound = 0
     cand = _candidates(
         tk[i], tk[j], t,
         _length_cond(F.col("L.len"), F.col("R.len"), t)
         & _length_cond(F.col("R.len"), F.col("L.len"), t),
+        freq.n_words,
     )
     # Output column names reproduce the reference quirk: the indexing
     # side's out_prefix pairs with the *left* key attr name and the
@@ -1278,7 +1273,7 @@ def jaccard_inner_join(
     prefixes = (l_out_prefix, r_out_prefix)
     return _verify(
         cand, tk[i], tk[j], t, freq.n_words, g.dup_rows,
-        (g.docs[i], g.tokens[i]), (g.docs[j], g.tokens[j]), bound,
+        (g.docs[i], g.tokens[i]), (g.docs[j], g.tokens[j]), g.bound[i],
         (f"{prefixes[i]}{l_key_attr}", f"{prefixes[j]}{r_key_attr}"),
         with_score,
     )

@@ -34,18 +34,11 @@ _DEFAULTS = {
 _HEAP_FRACTION = 0.6
 
 
-def host_memory_bytes() -> int:
-    """Memory this process can use: the smallest of physical memory,
-    ``MemAvailable`` and the cgroup limit (v2 ``memory.max`` or v1
-    ``memory.limit_in_bytes``), whichever of them can be read."""
+def _memory_ceiling_bytes() -> int:
+    """The host's memory ceiling: physical memory, or the cgroup limit
+    (v2 ``memory.max`` or v1 ``memory.limit_in_bytes``) when it can be
+    read and is smaller."""
     limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    limits.append(int(line.split()[1]) * 1024)
-    except OSError:
-        pass
     for path in (
         "/sys/fs/cgroup/memory.max",
         "/sys/fs/cgroup/memory/memory.limit_in_bytes",
@@ -60,12 +53,56 @@ def host_memory_bytes() -> int:
     return min(limits)
 
 
+def host_memory_bytes() -> int:
+    """Memory this process can use: the smaller of
+    :func:`_memory_ceiling_bytes` and ``MemAvailable``, when that can
+    be read."""
+    limits = [_memory_ceiling_bytes()]
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    return min(limits)
+
+
 def default_driver_memory() -> str:
     """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
     ``_HEAP_FRACTION`` of :func:`host_memory_bytes`, in MiB. A fixed
     default either starves a large host or, pinned with ``-Xms`` below,
     stops the JVM from starting on a small one."""
     return f"{int(host_memory_bytes() * _HEAP_FRACTION) >> 20}m"
+
+
+def duckdb_connect():
+    """An in-memory DuckDB connection inside the memory the driver heap
+    leaves: ``memory_limit`` is :func:`_memory_ceiling_bytes` minus the
+    driver heap (the active session's ``spark.driver.memory``, else the
+    heap :func:`get_spark` would size), but at least an eighth of the
+    ceiling, and ``threads`` is ``SPARK_GRAFT_CPUS`` (every usable core
+    when unset or ``*``). DuckDB's own default, 80% of physical memory,
+    overcommits the host next to the heap. The ceiling, not
+    :func:`host_memory_bytes`: once the JVM runs, ``MemAvailable``
+    already excludes what its heap holds, and subtracting the heap
+    again left the oracles a few hundred MB (DuckDB out of memory in
+    tests/test_ref_datasets.py)."""
+    import duckdb
+
+    session = SparkSession.getActiveSession()
+    heap = _mem_bytes(
+        (session and session.conf.get("spark.driver.memory", None))
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory()
+    )
+    ceiling = _memory_ceiling_bytes()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return duckdb.connect(config={
+        "memory_limit": f"{max(ceiling - heap, ceiling // 8) >> 20}MB",
+        "threads": int(cpus) if cpus.isdigit()
+        else len(os.sched_getaffinity(0)),
+    })
 
 
 def _mem_bytes(size: str) -> int:

@@ -16,6 +16,8 @@ assertion, falling back to the universal `filtered <= brute` contract.
 
 import sys
 
+from jaccard_join_duckdb_spark.session import duckdb_connect
+
 _REF = "/root/reference"
 
 
@@ -36,9 +38,7 @@ def _ensure_path():
 
 def _connect_with(tables):
     """tables: dict name -> list[(id, val)]."""
-    import duckdb
-
-    con = duckdb.connect(":memory:")
+    con = duckdb_connect()
     for name, rows in tables.items():
         con.execute(f"CREATE TABLE {name}(id BIGINT, val VARCHAR)")
         con.executemany(f"INSERT INTO {name} VALUES (?, ?)", list(rows))

@@ -16,6 +16,7 @@ from jaccard_join_duckdb_spark.functions.bpe import (
     train_bpe,
     with_bpe_token_counts,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 CORPUS = [
     "the cat sat on the mat",
@@ -203,8 +204,6 @@ def test_oracle_fixture_matches_encoder():
     fails here before it fails the driver gate."""
     import hashlib
 
-    import duckdb
-
     from jaccard_join_duckdb_spark.functions.bpe import (
         DEFAULT_MERGES_PATH,
         bpe_token_count,
@@ -215,15 +214,16 @@ def test_oracle_fixture_matches_encoder():
     fixture = (
         DEFAULT_MERGES_PATH.rsplit("/", 1)[0] + "/bpe_counts_md5.parquet"
     )
+    con = duckdb_connect()
     counts = dict(
-        duckdb.sql(
+        con.sql(
             f"select text_md5, n_bpe_tokens from read_parquet('{fixture}')"
         ).fetchall()
     )
     merges = default_merges()
     texts = [
         t
-        for (t,) in duckdb.sql(
+        for (t,) in con.sql(
             "select distinct text from "
             f"read_parquet('{SF_SMALL}/documents.parquet') "
             "where text is not null"

@@ -4,7 +4,6 @@ window-coverage invariants of the chunker. The sf0.01 hash gate runs
 the same operators corpus-wide (text_normalize, dedup_lines_in_doc,
 chunk_documents in __spark_entry__)."""
 
-import duckdb
 import pandas as pd
 import pytest
 
@@ -16,6 +15,7 @@ from jaccard_join_duckdb_spark.functions.canon import (
     normalize_text,
 )
 from jaccard_join_duckdb_spark.plans import oracle_ext as oe
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 MESSY = [
     (1, "Héllo…  Wörld — “quoted” l ine\nrepeat\nrepeat\n\nrepeat\nunique"),
@@ -28,7 +28,7 @@ MESSY = [
 
 
 def _duck(rows):
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.register("docs", pd.DataFrame(rows, columns=["doc_id", "text"]))
     return con
 

@@ -1,11 +1,11 @@
 """End-to-end corpus curation: Spark pipeline ≡ composed DuckDB SQL
 on a corpus with junk docs, exact dups, and near-dup families."""
 
-import duckdb
 import pytest
 
 from jaccard_join_duckdb_spark.operators.curate import curate_corpus
 from jaccard_join_duckdb_spark.plans.oracle_ext import curate_corpus_sql
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 ROWS = [
     (1, "the quick brown fox jumps over the lazy dog and then naps"),
@@ -50,7 +50,7 @@ def test_curate_matches_duckdb(docs):
             min_quality=0.3, min_tokens=5, neardup_threshold=0.8,
         ).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     vals = ", ".join(f"({i}, '{t}')" for i, t in ROWS)
     con.execute(
         f"create view documents as select * from (values {vals}) v(doc_id, text)"
@@ -89,7 +89,7 @@ def test_curate_full_matches_duckdb(spark, docs):
             embeddings=emb, emb_threshold=0.95, emb_dim=8,
         ).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     vals = ", ".join(f"({i}, '{t}')" for i, t in ROWS)
     con.execute(
         f"create view documents as select * from (values {vals}) v(doc_id, text)"
@@ -194,7 +194,6 @@ class TestCorpusDiff:
         }
 
     def test_duckdb_parity(self, spark):
-        import duckdb
         import pandas as pd
 
         from jaccard_join_duckdb_spark.operators.curate import corpus_diff
@@ -209,7 +208,7 @@ class TestCorpusDiff:
              (5, "added doc")],
             columns=["doc_id", "text"],
         )
-        con = duckdb.connect()
+        con = duckdb_connect()
         con.register("old_t", old)
         con.register("new_t", new)
         a = (

@@ -12,6 +12,7 @@ from jaccard_join_duckdb_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_near_duplicates,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 
 @pytest.fixture(scope="module")
@@ -112,8 +113,6 @@ def test_connected_components(spark):
 
 
 def test_connected_components_matches_duckdb_oracle(spark):
-    import duckdb
-
     from jaccard_join_duckdb_spark.plans.oracle_ext import (
         connected_components_sql,
     )
@@ -128,7 +127,7 @@ def test_connected_components_matches_duckdb_oracle(spark):
     sql = connected_components_sql(
         f"select * from (values {vals}) t(l_id, r_id)"
     )
-    want = {tuple(r) for r in duckdb.connect().execute(sql).fetchall()}
+    want = {tuple(r) for r in duckdb_connect().execute(sql).fetchall()}
     assert got == want
 
 
@@ -314,8 +313,6 @@ def test_containment_join_known_geometry(spark):
 def test_containment_join_matches_duckdb_brute(spark, documents):
     """The prefix filter is lossless: output equals the brute
     all-token-sharing-pairs DuckDB oracle on real documents."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.operators.dedup import containment_join
     from jaccard_join_duckdb_spark.plans.oracle_ext import containment_sql
     from tests.conftest import SF_SMALL
@@ -326,7 +323,7 @@ def test_containment_join_matches_duckdb_brute(spark, documents):
             documents, "doc_id", "text", 0.95
         ).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view documents as select * from "
         f"'{SF_SMALL}/documents.parquet'"
@@ -417,8 +414,6 @@ def test_ngram_decontaminate_short_items_produce_no_shingles(spark):
 
 
 def test_ngram_decontaminate_matches_duckdb_oracle(spark, documents):
-    import duckdb
-
     from jaccard_join_duckdb_spark.operators.dedup import ngram_decontaminate
     from jaccard_join_duckdb_spark.plans.oracle_ext import (
         ngram_decontaminate_sql,
@@ -433,7 +428,7 @@ def test_ngram_decontaminate_matches_duckdb_oracle(spark, documents):
             bench, corpus, "doc_id", "text", n=8
         ).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view documents as select * from "
         f"'{SF_SMALL}/documents.parquet'"
@@ -862,7 +857,6 @@ class TestWeightedJaccard:
                                              max_df_frac=0.0)
 
     def test_duckdb_parity_crafted(self, spark):
-        import duckdb
         import pandas as pd
 
         from jaccard_join_duckdb_spark.operators.dedup import (
@@ -880,7 +874,7 @@ class TestWeightedJaccard:
         ]
         pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
         sdf = spark.createDataFrame(pdf)
-        con = duckdb.connect()
+        con = duckdb_connect()
         con.register("docs", pdf)
         for t, cap in ((0.5, 1.0), (0.3, 0.6), (0.01, 1.0)):
             a = (

@@ -2,13 +2,12 @@
 (similarity_join/__init__.py:6-62), including its tp quirk (tp counts
 all sj-present rows of the full-outer join)."""
 
-import duckdb
-
 from jaccard_join_duckdb_spark import evaluate
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 
 def _reference_evaluate(gt_rows, sj_rows):
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute("create table gt (l_id integer, r_id integer)")
     con.execute("create table sj (l_id integer, r_id integer)")
     if gt_rows:

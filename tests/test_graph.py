@@ -4,7 +4,6 @@ recursive-CTE parity, edge-derivation semantics, and the
 checkpoint-interval invariance. The sf0.01 hash gate runs the
 composed pipeline corpus-wide (domain_pagerank in __spark_entry__)."""
 
-import duckdb
 import pandas as pd
 import pytest
 
@@ -14,6 +13,7 @@ from jaccard_join_duckdb_spark.operators.graph import (
     pagerank,
 )
 from jaccard_join_duckdb_spark.plans import oracle_ext as oe
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 EDGES = [
     ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
@@ -125,7 +125,7 @@ def test_pagerank_checkpoint_interval_invariant(spark):
 
 def test_pagerank_duckdb_parity(spark):
     sdf = spark.createDataFrame(EDGES, ["src", "dst"])
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.register("edges_tbl", pd.DataFrame(EDGES, columns=["src", "dst"]))
     a = (
         pagerank(sdf, iterations=10)
@@ -189,7 +189,7 @@ def test_domain_edges_semantics(spark):
 
 def test_domain_edges_duckdb_parity(spark):
     sdf = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.register("docs", pd.DataFrame(DOCS, columns=["doc_id", "text"]))
     a = (
         domain_cooccurrence_edges(sdf, "doc_id", "text")

@@ -16,6 +16,7 @@ from jaccard_join_duckdb_spark import (
     jaccard_self_join,
     jaccard_self_join_brute_force,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 from tests.conftest import pairs
 
 
@@ -101,8 +102,6 @@ def test_self_interests_reference_parity(interests, t):
     force. Parity means matching the reference's filtered output
     exactly — not "fixing" it — so compare against the reference
     pipeline SQL run in DuckDB, and only assert filtered ⊆ brute."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.plans.ref_sql import self_filtered_sql
     from tests.conftest import TESTS_DIR
     import os
@@ -113,7 +112,7 @@ def test_self_interests_reference_parity(interests, t):
     assert pairs(filt) <= pairs(brute)
 
     csv = os.path.join(TESTS_DIR, "data", "interests.csv")
-    ref = duckdb.connect().execute(
+    ref = duckdb_connect().execute(
         self_filtered_sql(f"'{csv}'", "id", "interests", tok, t)
     ).fetchall()
     assert pairs(filt) == {tuple(sorted((a, b), key=str)) for a, b in ref}
@@ -237,20 +236,20 @@ def test_verify_attach_gate_unit(documents, monkeypatch):
     next #3): above the size cap OR below the benefit ratio the attach
     frame is returned UNHINTED (same object — the shuffle join stays,
     the right plan at corpus scale / on small candidate streams); caps
-    and ratio resolve at call time so this very patching works; the
-    doc-count probe is limit-bounded, not a full scan; and the bitset
-    cap is width-aware (ADVICE r8 #1)."""
+    and ratio resolve at call time so this very patching works; and the
+    doc-count probe is limit-bounded, not a full scan."""
     import jaccard_join_duckdb_spark.operators.jaccard as J
 
     # identity above the cap, hint below it (bound omitted)
-    assert J._verify_attach(documents, 6, 5) is documents
-    assert J._verify_attach(documents, 0, 5) is documents  # unknown count
-    assert J._verify_attach(documents, 5, 5) is not documents
+    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 5)
+    assert J._verify_attach(documents, 6) is documents
+    assert J._verify_attach(documents, 0) is documents  # unknown count
+    assert J._verify_attach(documents, 5) is not documents
     # benefit gate: a known-small candidate bound declines; a large
     # one (>= ratio * rows) accepts
     ratio = J._BROADCAST_VERIFY_MIN_RATIO
-    assert J._verify_attach(documents, 5, 5, bound=5 * ratio - 1) is documents
-    assert J._verify_attach(documents, 5, 5, bound=5 * ratio) is not documents
+    assert J._verify_attach(documents, 5, bound=5 * ratio - 1) is documents
+    assert J._verify_attach(documents, 5, bound=5 * ratio) is not documents
     # call-time cap resolution (default + token-level)
     monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 0)
     monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_TOKENS", 0)
@@ -259,28 +258,25 @@ def test_verify_attach_gate_unit(documents, monkeypatch):
     # call-time ratio resolution
     monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 250_000)
     monkeypatch.setattr(J, "_BROADCAST_VERIFY_MIN_RATIO", 0)
-    assert J._verify_attach(documents, 5, 5, bound=1) is not documents
+    assert J._verify_attach(documents, 5, bound=1) is not documents
     # the probe stops at cap+1 rows instead of counting the frame
     monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 3)
     assert documents.count() > 4
     assert J._doc_count_probe(documents) == 4
-    # width-aware bitset cap: 1-word tables keep the row cap, 64-word
-    # (4096-bit) tables shrink to the byte budget / 528 B rows
-    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 250_000)
-    assert J._bitset_verify_cap(1) == 250_000
-    assert J._bitset_verify_cap(64) == (64 << 20) // (8 * 66)
-    assert J._bitset_verify_cap(64) < J._bitset_verify_cap(4)
 
 
-@pytest.mark.parametrize("tok", ["ws", "ws_fast", "qgram"])
+@pytest.mark.parametrize("tok", ["ws", "ws_bag", "ws_fast", "qgram"])
 def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
     """Force the doc/token counts past the broadcast caps and pin the
     fallback: the verification attach joins revert to shuffle joins
     (strictly fewer BroadcastHashJoin nodes, strictly more
     SortMergeJoin nodes in the static plan) and the pair set is
-    unchanged — the gate is a pure physical-plan decision. Covers all
-    three verification paths: generic pairs×tokens (ws), compiled
-    array-intersect (ws_fast), bitset (qgram).
+    unchanged — the gate is a pure physical-plan decision. The paths
+    at sf0.001: compiled array-intersect (ws: the gate stats measure
+    no duplicate rows) and the reference's pairs×tokens three-way join
+    (ws_bag). ws_fast and qgram take the bitset path, which verifies
+    inside the candidate join: no join is keyed on lid/rid at all,
+    whatever the gate.
 
     autoBroadcastJoinThreshold is disabled for the comparison: that is
     the 100 TB regime (no side clears the stats threshold), where the
@@ -292,6 +288,7 @@ def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
     spark = documents.sparkSession
     tokenizer = {
         "ws": WhitespaceTokzr(),
+        "ws_bag": WhitespaceTokzr(return_set=False),
         "ws_fast": WhitespaceTokzr(distinct_rows=True),
         "qgram": QGramsTokzr(3),
     }[tok]
@@ -329,6 +326,10 @@ def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
         off_plan = plan_of(off)
 
         assert pairs(off) == gated_pairs
+        if tok in ("ws_fast", "qgram"):
+            assert not attach_joins(gated_plan, "Join")
+            assert not attach_joins(off_plan, "Join")
+            return
         # gate on: every attach join is broadcast, none shuffles
         assert attach_joins(gated_plan, "BroadcastHashJoin")
         assert not attach_joins(gated_plan, "SortMergeJoin")
@@ -493,6 +494,12 @@ def test_verify_strategy_equals_brute_force(spark, case, t):
     )
     assert pairs(filt) == pairs(brute)
     assert pairs(filt)  # non-degenerate: some pair passes
+    # each pair once: the bitset path emits pairs straight from the
+    # candidate join, with no pair aggregate to collapse duplicates (an
+    # inner join's two frames share ids, so its pairs are ordered)
+    rows = filt.collect()
+    once = {tuple(r[:2]) for r in rows} if mode == "inner" else pairs(filt)
+    assert len(rows) == len(once)
 
 
 def test_auto_hot_threshold_unit():

@@ -12,6 +12,7 @@ from jaccard_join_duckdb_spark.sources.multimodal import (
     make_asset_table,
     sample_frames,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 
 @pytest.fixture(scope="module")
@@ -248,8 +249,6 @@ def test_decode_audio_meta_fake_matches_oracle(spark):
     """Fake kernel vs the DuckDB twin on a handful of docs — the
     same discipline as the image decode (full-table parity runs in
     check_entry's multimodal_audio row)."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.plans.oracle_ext import multimodal_audio_sql
     from jaccard_join_duckdb_spark.sources.multimodal import (
         decode_audio_meta,
@@ -261,7 +260,7 @@ def test_decode_audio_meta_fake_matches_oracle(spark):
     got = sorted(map(tuple, decode_audio_meta(
         make_asset_table(df, "id", "text", modality="audio")
     ).collect()))
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view t as select * from (values "
         + ", ".join(f"({i}, '{x}')" for i, x in rows)

@@ -29,6 +29,7 @@ from jaccard_join_duckdb_spark import (
     jaccard_self_join,
     jaccard_self_join_brute_force,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 from tests import ref_oracle
 from tests.conftest import pairs
 
@@ -234,10 +235,10 @@ def test_division_tie_parity(_spark):
     exact-rational nor chained-double arithmetic reproduces both;
     operators/jaccard._div_bound emulates the decimal-product ->
     double -> divide pipeline operand-for-operand."""
-    duckdb = pytest.importorskip("duckdb")
+    pytest.importorskip("duckdb")
     from jaccard_join_duckdb_spark.operators.jaccard import _div_bound
 
-    con = duckdb.connect()
+    con = duckdb_connect()
     for t in (0.2, 0.3, 0.4, 0.5, 0.8, 0.9, 0.95):
         dd = [
             r[0]
@@ -371,8 +372,6 @@ def test_containment_prefix_filter_lossless(_spark, texts, t):
     arbitrary corpora: output == the brute all-token-sharing-pairs
     DuckDB computation for every threshold (including t=1.0, where the
     prefix is a single token)."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.operators.dedup import containment_join
     from jaccard_join_duckdb_spark.plans.oracle_ext import containment_sql
 
@@ -383,7 +382,7 @@ def test_containment_prefix_filter_lossless(_spark, texts, t):
         (r.l_id, r.r_id, r.containment)
         for r in containment_join(df, "id", "text", t).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view documents as select * from (values "
         + ", ".join(f"({i}, '{x}')" for i, x in enumerate(texts))
@@ -416,8 +415,6 @@ def test_weighted_prefix_filter_lossless(_spark, texts, t, cap):
     t=1.0, minimal prefixes) and with/without the df cap (the cap is
     shared deliberate semantics, the prefix is Spark-side-only
     pruning the oracle never does)."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.operators.dedup import (
         weighted_jaccard_near_duplicates,
     )
@@ -434,7 +431,7 @@ def test_weighted_prefix_filter_lossless(_spark, texts, t, cap):
             df, "id", "text", t, max_df_frac=cap
         ).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view documents as select * from (values "
         + ", ".join(f"({i}, '{x}')" for i, x in enumerate(texts))
@@ -470,8 +467,6 @@ def test_containment_match_prefix_filter_lossless(_spark, q_texts, c_texts, t):
     the corpus-df-ordered query-side prefix must stay lossless — in
     particular for query tokens the corpus never contains (df 0,
     sorted first in the prefix)."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.operators.dedup import containment_match
     from jaccard_join_duckdb_spark.plans.oracle_ext import containment_match_sql
 
@@ -485,7 +480,7 @@ def test_containment_match_prefix_filter_lossless(_spark, q_texts, c_texts, t):
         (r.q_id, r.c_id, r.containment)
         for r in containment_match(qdf, cdf, "id", "text", t).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view qt as select * from (values "
         + ", ".join(f"({i}, '{x}')" for i, x in enumerate(q_texts))
@@ -526,8 +521,6 @@ def test_ngram_decontaminate_matches_oracle_on_random_corpora(
     raw-string DuckDB twin on arbitrary weird corpora — blank runs,
     case variants, and docs shorter than the window (which must emit
     nothing on either side)."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.operators.dedup import ngram_decontaminate
     from jaccard_join_duckdb_spark.plans.oracle_ext import (
         ngram_decontaminate_sql,
@@ -543,7 +536,7 @@ def test_ngram_decontaminate_matches_oracle_on_random_corpora(
         tuple(r)
         for r in ngram_decontaminate(qdf, cdf, "id", "text", n=n).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view qt as select * from (values "
         + ", ".join(f"({i}, '{x}')" for i, x in enumerate(q_texts))
@@ -587,8 +580,6 @@ def test_remove_boilerplate_matches_oracle_on_random_corpora(
     doc threshold must agree with the DuckDB twin on arbitrary
     newline-bearing corpora (empty lines, whitespace-only lines,
     tab/case normalization collisions, trailing newlines)."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.functions.text import (
         remove_boilerplate_lines,
     )
@@ -602,7 +593,7 @@ def test_remove_boilerplate_matches_oracle_on_random_corpora(
     got = sorted(map(tuple, remove_boilerplate_lines(
         df, "id", "text", max_doc_frac=frac, min_docs=2
     ).collect()))
-    con = duckdb.connect()
+    con = duckdb_connect()
     vals = ", ".join(
         "({}, '{}')".format(i, x.replace("\n", "' || chr(10) || '"))
         for i, x in enumerate(texts)
@@ -630,8 +621,6 @@ def test_lm_score_matches_oracle_on_random_corpora(_spark, texts, n, smoothing):
     order (NULL score on both sides), case and multi-space variants.
     lm_logp is compared to the rounding grid (<= 1e-6): engines may
     differ by one ulp of libm ln before the 6-dp round."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.functions.text import lm_score
     from jaccard_join_duckdb_spark.plans.oracle_ext import lm_score_sql
 
@@ -644,7 +633,7 @@ def test_lm_score_matches_oracle_on_random_corpora(_spark, texts, n, smoothing):
         r[0]: (r[1], r[2])
         for r in lm_score(df, "id", "text", n=n, smoothing=smoothing).collect()
     }
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create view t as select * from (values "
         + ", ".join(f"({i}, '{x}')" for i, x in enumerate(texts))
@@ -686,12 +675,11 @@ def _near_dup_texts(seed, n, length, alphabet, sep=""):
 def _dedup_vs_oracle(spark, texts, run, oracle_sql):
     """``run(df)``'s ``(l_id, r_id, jaccard)`` rows against the DuckDB
     twin ``oracle_sql(table, key, val)`` over the same texts."""
-    import duckdb
     import pyarrow as pa
 
     df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
     got = {tuple(r) for r in run(df).collect()}
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.register("t", pa.table({"id": list(range(len(texts))), "text": texts}))
     want = set(con.execute(oracle_sql("t", "id", "text")).fetchall())
     assert got == want

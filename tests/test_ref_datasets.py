@@ -15,7 +15,6 @@ rather than bigints.
 
 import os
 
-import duckdb
 import pytest
 
 from jaccard_join_duckdb_spark import (
@@ -33,6 +32,7 @@ from jaccard_join_duckdb_spark.plans.ref_sql import (
     self_brute_sql,
     self_filtered_sql,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 from jaccard_join_duckdb_spark.sources import concat_val, read_csv
 from tests.conftest import TESTS_DIR, pairs
 
@@ -100,7 +100,7 @@ def _all_df(spark, files, fields):
 
 
 def duck_pairs(sql):
-    rows = duckdb.connect().execute(sql).fetchall()
+    rows = duckdb_connect().execute(sql).fetchall()
     return {tuple(sorted((a, b))) for a, b in rows}
 
 

@@ -5,7 +5,6 @@ differential testing (SURVEY.md §5)."""
 
 import os
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +22,7 @@ from jaccard_join_duckdb_spark.plans.ref_sql import (
     self_brute_sql,
     self_filtered_sql,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 from tests.conftest import SF_SMALL, TESTS_DIR, pairs
 
 PURCHASES = os.path.join(TESTS_DIR, "data", "purchases.csv")
@@ -30,7 +30,7 @@ DOCS = os.path.join(SF_SMALL, "documents.parquet")
 
 
 def duck_pairs(sql):
-    rows = duckdb.connect().execute(sql).fetchall()
+    rows = duckdb_connect().execute(sql).fetchall()
     return {tuple(sorted((a, b), key=str)) for a, b in rows}
 
 

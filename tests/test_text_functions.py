@@ -1,8 +1,6 @@
 """Text-analysis function tests: determinism + DuckDB parity for the
 expression shapes used by the oracle queries."""
 
-import duckdb
-
 from jaccard_join_duckdb_spark.functions.text import (
     doc_fingerprint,
     lang_id,
@@ -10,6 +8,7 @@ from jaccard_join_duckdb_spark.functions.text import (
     text_stats,
     token_counts,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 ROWS = [
     (1, "The quick brown fox, it jumps over the lazy dog!"),
@@ -28,7 +27,7 @@ def test_poly_hash_matches_duckdb(spark):
     words = ["table", "scan", "a", "Zebra", "ärbol"]
     df = spark.createDataFrame([(w,) for w in words], ["w"])
     got = {r.w: r.h for r in df.select("w", poly_hash(df.w).alias("h")).collect()}
-    con = duckdb.connect()
+    con = duckdb_connect()
     for w in words:
         want = con.execute(
             "select list_reduce(list_prepend(CAST(0 AS BIGINT),"
@@ -173,8 +172,6 @@ def test_redact_pii_phone_format_required(spark):
 def test_redact_pii_matches_duckdb_oracle(spark):
     """Pattern strings are shared with the oracle generator — any
     hardening must keep both engines in lockstep on crafted cases."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.functions.text import redact_pii
     from jaccard_join_duckdb_spark.plans.oracle_ext import redact_pii_sql
 
@@ -186,7 +183,7 @@ def test_redact_pii_matches_duckdb_oracle(spark):
     ]
     df = spark.createDataFrame(rows, "id long, text string")
     got = sorted(map(tuple, redact_pii(df, "id", "text").collect()))
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute(
         "create table t as select * from (values "
         + ", ".join(
@@ -389,8 +386,6 @@ def test_remove_boilerplate_paragraph_granularity(spark):
     multi-line footer paragraph drops whole, while its individual
     lines inside unique paragraphs survive — and the DuckDB twin
     agrees with the matching sep_sql."""
-    import duckdb
-
     from jaccard_join_duckdb_spark.functions.text import (
         remove_boilerplate_lines,
     )
@@ -416,7 +411,7 @@ def test_remove_boilerplate_paragraph_granularity(spark):
     assert got[3].clean_text == rows[2][1]  # lines inside ≠ paragraph match
     assert got[1].n_dropped == 1 and got[3].n_dropped == 0
 
-    con = duckdb.connect()
+    con = duckdb_connect()
     vals = ", ".join(
         "({}, '{}')".format(i, x.replace("\n", "' || chr(10) || '"))
         for i, x in rows
@@ -535,8 +530,6 @@ class TestLmScore:
         assert rows[0] > rows[99]
 
     def test_oracle_parity(self, spark):
-        import duckdb
-
         from jaccard_join_duckdb_spark.functions.text import lm_score
         from jaccard_join_duckdb_spark.plans.oracle_ext import lm_score_sql
 
@@ -552,7 +545,7 @@ class TestLmScore:
             (r["doc_id"], r["n_ngrams"], r["lm_logp"])
             for r in lm_score(df, "doc_id", "text", n=3, k=0.5).collect()
         )
-        con = duckdb.connect()
+        con = duckdb_connect()
         con.execute(
             "create table t (doc_id integer, text varchar)"
         )
@@ -620,8 +613,6 @@ class TestLmScore:
         assert r["lm_logp"] == want
 
     def test_stupid_backoff_oracle_parity(self, spark):
-        import duckdb
-
         from jaccard_join_duckdb_spark.functions.text import lm_score
         from jaccard_join_duckdb_spark.plans.oracle_ext import lm_score_sql
 
@@ -639,7 +630,7 @@ class TestLmScore:
                 df, "doc_id", "text", smoothing="stupid_backoff", alpha=0.3
             ).collect()
         )
-        con = duckdb.connect()
+        con = duckdb_connect()
         con.execute("create table t (doc_id integer, text varchar)")
         con.executemany("insert into t values (?, ?)", data)
         want = sorted(
@@ -815,7 +806,6 @@ class TestC4Rules:
             assert not r["passes"]
 
     def test_duckdb_parity_crafted(self, spark):
-        import duckdb
         import pandas as pd
 
         from jaccard_join_duckdb_spark.functions.text import c4_rules
@@ -830,7 +820,7 @@ class TestC4Rules:
         ]
         pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
         sdf = spark.createDataFrame(pdf)
-        con = duckdb.connect()
+        con = duckdb_connect()
         con.register("docs", pdf)
         a = (
             c4_rules(sdf, "doc_id", "text")
@@ -922,7 +912,6 @@ class TestBuildVocab:
             build_vocab(None, "doc_id", "text", top_k=0)
 
     def test_duckdb_parity_crafted(self, spark):
-        import duckdb
         import pandas as pd
 
         from jaccard_join_duckdb_spark.functions.text import build_vocab
@@ -930,7 +919,7 @@ class TestBuildVocab:
 
         pdf = pd.DataFrame(self.ROWS, columns=["doc_id", "text"])
         sdf = spark.createDataFrame(pdf.astype({"doc_id": "int64"}))
-        con = duckdb.connect()
+        con = duckdb_connect()
         con.register("docs", pdf)
         a = (
             build_vocab(sdf, "doc_id", "text", top_k=5)

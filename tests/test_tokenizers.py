@@ -1,10 +1,10 @@
 """Tokenizer parity tests vs hand-computed sets and the DuckDB
 reference SQL semantics (tokenizers/__init__.py:1-49)."""
 
-import duckdb
 import pytest
 
 from jaccard_join_duckdb_spark import DelimiterTokzr, QGramsTokzr, WhitespaceTokzr
+from jaccard_join_duckdb_spark.session import duckdb_connect
 
 
 def _spark_tokens(tok, spark, rows):
@@ -15,7 +15,7 @@ def _spark_tokens(tok, spark, rows):
 
 def _duckdb_tokens(sql_tok, rows):
     """Run the reference's tokenizer SQL shape in DuckDB."""
-    con = duckdb.connect()
+    con = duckdb_connect()
     con.execute("create table t (id integer, val varchar)")
     con.executemany("insert into t values (?, ?)", rows)
     return sorted(tuple(r) for r in con.execute(sql_tok).fetchall())
@@ -155,7 +155,7 @@ def test_words_tokzr_join_parity(spark):
     got = pairs(jaccard_self_join(df, "id", "purchases", tok, 0.4))
     want = {
         tuple(sorted((a, b), key=str))
-        for a, b in duckdb.connect().execute(
+        for a, b in duckdb_connect().execute(
             self_filtered_sql(f"'{purchases}'", "id", "purchases", tok, 0.4)
         ).fetchall()
     }

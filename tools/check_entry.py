@@ -18,8 +18,6 @@ import sys
 import time
 from datetime import datetime
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
@@ -53,6 +51,7 @@ def main() -> int:
 
     import __spark_entry__ as e
     from jaccard_join_duckdb_spark import get_spark
+    from jaccard_join_duckdb_spark.session import duckdb_connect
 
     spark = get_spark(
         app_name="check-entry",
@@ -63,7 +62,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
+    con = duckdb_connect()
     for t in TABLES:
         con.execute(
             f"create view {t} as select * from '{sf_dir}/{t}.parquet'"

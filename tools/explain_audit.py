@@ -13,8 +13,9 @@ Checks per plan:
   (ReadSchema wider than 8 fields is reported for eyeballing).
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
-Writes the full plans to PLANS.md and prints one verdict line per
-query; exits 1 if a hard anti-pattern is found.
+Writes the full plans to PLANS.md (generated output, not committed)
+and prints one verdict line per query; exits 1 if a hard anti-pattern
+is found, or if PLANS.md lacks a declared query's plan.
 """
 
 from __future__ import annotations
@@ -59,9 +60,10 @@ SINGLE_OK: set = set()
 # for every query: a partial HashAggregate's final merge is
 # scalar-sized by construction.)
 SINGLE_CACHE_OK = {
-    # Self-join bitset path: the tid ranking (jaccard._tkdf)
-    # windows the PERSISTED doc-frequency dim — verified in the plan
-    # text: the exchange input is the [token, df] vocabulary dim out of
+    # Self-join bitset path: the tid ranking (jaccard._tkdf; its pos
+    # and bitset-word windows are partitioned by id) windows the
+    # PERSISTED doc-frequency dim — verified in the plan text: the
+    # exchange input is the [token, df] vocabulary dim out of
     # the dim HashAggregate's cache, taken only after the runtime gate
     # proved vocab_n <= _MAX_BITSET_VOCAB (jaccard.py) — 4096 rows
     # max. Every name below routes through jaccard_self_join on a
@@ -161,13 +163,19 @@ def main() -> int:
                 r"\((\d+)\) Exchange[^\n]*\nInput[^\n]*\n"
                 r"Arguments: SinglePartition", txt
             ):
-                idx = int(m.group(1))
-                if re.search(rf"\({idx - 1}\) \w*Aggregate\b", txt):
-                    continue
-                if name in SINGLE_CACHE_OK and re.search(
-                    rf"\({idx - 1}\) (InMemoryTableScan"
-                    rf"|TableCacheQueryStage|ResultQueryStage)\b",
+                # the producer is the node drawn under the exchange in
+                # the tree; its number is not always idx - 1 (a cache
+                # not yet materialized numbers its own plan in between)
+                below = re.search(
+                    rf"Exchange \({m.group(1)}\)[^\n]*\n[\s:|]*\+- (?:\* )?(\w+)",
                     txt,
+                )
+                producer = below.group(1) if below else ""
+                if producer.endswith("Aggregate"):
+                    continue
+                if name in SINGLE_CACHE_OK and producer in (
+                    "InMemoryTableScan", "TableCacheQueryStage",
+                    "ResultQueryStage",
                 ):
                     continue
                 flags.append("ROW-SINGLE-PARTITION")
@@ -210,9 +218,9 @@ def main() -> int:
             "affecting changes.\n\n" + "\n".join(ordered)
         )
     print(f"\nplans written to {out}")
-    # Completeness gate: the committed PLANS.md must hold ONE section
-    # per declared query — a truncated file now fails the audit (and
-    # round_checks.sh) instead of shipping silently.
+    # Completeness gate: PLANS.md must hold ONE section per declared
+    # query — a targeted run on a tree without a full PLANS.md fails
+    # the audit (and round_checks.sh) instead of passing silently.
     missing = sorted(set(all_queries) - set(sections))
     if missing:
         print(

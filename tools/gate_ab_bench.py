@@ -86,9 +86,9 @@ def main() -> int:
             # rows (doc rows for the doc-level attach tables)
             J._BROADCAST_VERIFY_MIN_RATIO = 50
 
-            def attach_r9(per_doc, n_rows, cap=None, *, token_level=False,
+            def attach_r9(per_doc, n_rows, *, token_level=False,
                           bound=None, decide_rows=None):
-                return real_attach(per_doc, n_rows, cap,
+                return real_attach(per_doc, n_rows,
                                    token_level=token_level, bound=bound,
                                    decide_rows=None)
 
