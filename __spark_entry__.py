@@ -144,12 +144,13 @@ def q_jaccard_inner_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_jaccard_inner_ws_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME two-table filtered join as jaccard_inner_ws, with the
     heavy-hitter broadcast split engaged on the inner path (round 10,
-    VERDICT r9 #3): tokens whose PER-SIDE doc-freq >= 200 get their
-    combined dfreq row broadcast (map-side join) while the cold tail
-    takes the shuffle join — same anti-join + unionByName shape as the
-    self-join split, applied per side on the shared cross-table dfreq
-    (operators/jaccard.py jaccard_inner_join). Output rows are
-    identical, so the unmodified inner_filtered_sql oracle grades it."""
+    VERDICT r9 #3): a token row whose own side's doc-freq is >= 200
+    joins its dfreq row by broadcast (map-side join, the hot set keyed
+    by (side, token)) while the cold tail takes the shuffle join — the
+    self-join split's anti-join + unionByName shape, run once over the
+    inner join's one side-tagged token frame (operators/jaccard.py
+    _tkdf). Output rows are identical, so the unmodified
+    inner_filtered_sql oracle grades it."""
     docs = _docs(spark, sf_dir)
     return jaccard_inner_join(
         docs.filter(_EVEN), docs.filter(_ODD),

@@ -43,12 +43,21 @@ Scale design (100 TB target):
   :func:`_verify`. The self join runs them with its one token frame on
   both sides; each join keeps only its pair predicate, and the inner
   join its side swap.
+- The inner join runs every stage once, over ONE side-tagged token
+  frame ``(side, key, len, token)`` (the R-S join of Vernica, Carey
+  and Li, SIGMOD 2010, tags records by relation the same way): one
+  df aggregate with per-side counts, one ``tkdf`` windowed over
+  ``(side, key)``, one gate job; the candidate join and the verify
+  read its ``side == i`` views. Each side's key keeps its own column
+  when the two key types differ, so no cast joins them.
 - Token frames, the doc-frequency dim and ``tkdf`` are persisted
   (MEMORY_AND_DISK): candidates and verification each scan ``tkdf``
   twice, and every plan decision (bitset vocabulary, hot-token split,
   broadcast attach, verify strategy, side swap) reads its scalars from
   two small aggregates over persisted frames — the dim's statistics
-  and the gate-stats job — instead of re-running the tokenize chain.
+  and the gate job (on the inner join's bitset path only the widow
+  counts of the side swap: :func:`_widow_counts`) — instead of
+  re-running the tokenize chain.
 - When the vocabulary fits ``_MAX_BITSET_VOCAB`` tokens, the candidate
   join verifies each pair on the popcount of its documents' bitsets
   and emits it once, with no verify stage. Otherwise verification is
@@ -327,7 +336,7 @@ class _DocFreq(NamedTuple):
     """The doc-frequency stage's output (see :func:`_doc_freq`)."""
 
     dim: DataFrame  # persisted (token, df) or (token, l_df, r_df, df)
-    side_dfs: tuple[str, str]  # each side's own df column in ``dim``
+    side_dfs: tuple[str, ...]  # each side's own df column in ``dim``
     vocab: int
     n_tok: int  # token rows, both sides
     max_df: int  # largest per-side df
@@ -340,16 +349,19 @@ def _doc_freq(
     tokenizer: Tokenizer,
     hot_df_threshold: int | str | None,
     tokens: DataFrame,
-    other: DataFrame | None = None,
+    tagged: bool = False,
 ) -> _DocFreq:
     """Document frequency of every token (jaccard_join.py:127-130) for
-    a self join (``tokens`` only) or an inner join (``tokens`` and
-    ``other``), persisted, plus the plan decisions its statistics make.
+    a self join's token frame or, ``tagged``, the inner join's
+    side-tagged one, persisted, plus the plan decisions its statistics
+    make.
 
-    The inner join's df is the cross-table product ``l_df * r_df`` over
-    a full outer join of the per-side counts, with :data:`_WIDOW_DF`
-    for a token one side lacks (jaccard_join.py:270-295); the per-side
-    counts stay in the dim because hotness is a per-side property.
+    The inner join's df is the cross-table product ``l_df * r_df``,
+    with :data:`_WIDOW_DF` for a token one side lacks
+    (jaccard_join.py:270-295). Both per-side counts come out of the
+    same ``groupBy("token")`` (a ``count_if`` per side — no per-side
+    aggregates, no outer join) and stay in the dim, because hotness is
+    a per-side property.
 
     ONE eager aggregate over the persisted dim drives every decision
     (round 10 — previously three separate probe jobs): the vocabulary
@@ -359,41 +371,34 @@ def _doc_freq(
     per-side df engage the heavy-hitter split, and ``Σ l_df × r_df``
     (``Σ df²`` for a self join) feeds the sparse fast decline of
     :func:`_cheap_decline`. The dim is the algorithm's own required
-    shuffle; persisting it means the tkdf builds reuse it, so the only
+    shuffle; persisting it means the tkdf build reuses it, so the only
     added cost is reading back the vocab-sized table once."""
-    if other is None:
-        frames, side_dfs = [tokens], ("df", "df")
+    if tagged:
+        side_dfs = ("l_df", "r_df")
+        dim = tokens.groupBy("token").agg(*[
+            F.count_if(F.col("side") == i).alias(c)
+            for i, c in enumerate(side_dfs)
+        ]).withColumn("df", F.when(
+            (F.col("l_df") > 0) & (F.col("r_df") > 0),
+            F.col("l_df") * F.col("r_df"),
+        ).otherwise(F.lit(_WIDOW_DF)))
     else:
-        frames, side_dfs = [tokens, other], ("l_df", "r_df")
-    names = list(dict.fromkeys(side_dfs))
-    counts = [
-        fr.groupBy("token").agg(F.count(F.lit(1)).alias(c))
-        for fr, c in zip(frames, names)
-    ]
-    dim = counts[0]
-    if other is not None:
-        dim = dim.join(counts[1], "token", "full_outer").select(
-            "token",
-            "l_df",
-            "r_df",
-            F.coalesce(
-                F.col("l_df") * F.col("r_df"), F.lit(_WIDOW_DF)
-            ).alias("df"),
-        )
+        side_dfs = ("df",)
+        dim = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     dim = dim.persist(StorageLevel.MEMORY_AND_DISK)
     row = dim.agg(
         F.count(F.lit(1)).alias("vocab"),
-        *[F.sum(c).alias(f"n_{c}") for c in names],
-        *[F.max(c).alias(f"m_{c}") for c in names],
+        *[F.sum(c).alias(f"n_{c}") for c in side_dfs],
+        *[F.max(c).alias(f"m_{c}") for c in side_dfs],
         # double: immune to long overflow at corpus scale; it only
         # feeds a threshold comparison
         F.sum(
-            (F.col(side_dfs[0]) * F.col(side_dfs[1])).cast("double")
+            (F.col(side_dfs[0]) * F.col(side_dfs[-1])).cast("double")
         ).alias("sumsq"),
     ).first()
     vocab = int(row["vocab"] or 0)
-    n_tok = sum(int(row[f"n_{c}"] or 0) for c in names)
-    max_df = max(int(row[f"m_{c}"] or 0) for c in names)
+    n_tok = sum(int(row[f"n_{c}"] or 0) for c in side_dfs)
+    max_df = max(int(row[f"m_{c}"] or 0) for c in side_dfs)
     n_words = 0
     if tokenizer.rows_distinct and 0 < vocab <= _MAX_BITSET_VOCAB:
         n_words = (vocab + 63) // 64
@@ -418,13 +423,17 @@ def _tkdf(
     dim: DataFrame,
     n_words: int,
     hot_thr: int | None,
-    side_df: str,
+    side_dfs: tuple[str, ...] = ("df",),
+    doc: tuple[str, ...] = ("id",),
     with_pair_key: bool = False,
 ) -> DataFrame:
-    """tokens ⋈ the doc-frequency dim → ``tkdf(id, len, token, df[,
-    tid], pos[, b0..][, l_id])`` for one side.
+    """tokens ⋈ the doc-frequency dim → ``tkdf(*doc, len, token, df[,
+    tid], pos[, b0..][, l_id])``, where ``doc`` names the columns that
+    identify a document: ``("id",)`` for a self join's token frame,
+    ``("side", <key columns>)`` for the inner join's side-tagged one,
+    which is built once for both sides.
 
-    ``pos`` = ``row_number() OVER (PARTITION BY id ORDER BY df,
+    ``pos`` = ``row_number() OVER (PARTITION BY doc ORDER BY df,
     token)`` (jaccard_join.py:132-137); ``l_id = concat(len, '_', id)``
     is the self join's pair-ordering key (jaccard_join.py:135).
 
@@ -437,24 +446,26 @@ def _tkdf(
     broadcasts — sound only because the bitset gate bounds the
     vocabulary at ``_MAX_BITSET_VOCAB``. Every row also carries its
     document's bitset words ``b0..`` (:func:`_bit_words` over the
-    ``id`` window, which shares the ``pos`` window's partitioning and
+    ``doc`` window, which shares the ``pos`` window's partitioning and
     sort: no extra exchange).
 
-    ``hot_thr`` (skew mitigation for Zipf token distributions): tokens
-    whose ``side_df`` (this side's own df — that is what decides how
-    many of ITS rows pile into one partition) is ``>= hot_thr`` are
-    heavy hitters. On a crawl corpus the hottest word lands in a
-    constant fraction of ALL documents, putting that fraction of the
-    corpus into ONE shuffle partition of the tokens ⋈ dim join. AQE's
-    skew-join split cannot help here structurally: the dim aggregate
-    reuses the join's token-hash partitioning (no exchange in between),
-    and OptimizeSkewedJoin only splits joins reading bare shuffle
-    stages. Heavy hitters are FEW by definition, so their dim rows
-    broadcast — hot token rows join map-side, and only the cold tail
-    goes through the shuffle join (pre-filtered with a broadcast
-    anti-join so hot rows never enter the skewed exchange). Identical
-    output rows; see tools/skew_demo.py for the measured straggler
-    relief.
+    ``hot_thr`` (skew mitigation for Zipf token distributions): a
+    token row is a heavy hitter when its own side's df (``side_dfs``:
+    ``df`` for a self join, ``l_df``/``r_df`` by the row's ``side``
+    for an inner join — that is what decides how many of ITS side's
+    rows pile into one partition) is ``>= hot_thr``. On a crawl corpus
+    the hottest word lands in a constant fraction of ALL documents,
+    putting that fraction of the corpus into ONE shuffle partition of
+    the tokens ⋈ dim join. AQE's skew-join split cannot help here
+    structurally: the dim aggregate reuses the join's token-hash
+    partitioning (no exchange in between), and OptimizeSkewedJoin only
+    splits joins reading bare shuffle stages. Heavy hitters are FEW by
+    definition, so their dim rows (keyed by ``(side, token)`` for an
+    inner join) broadcast — hot token rows join map-side, and only the
+    cold tail goes through the shuffle join (pre-filtered with a
+    broadcast anti-join so hot rows never enter the skewed exchange).
+    Identical output rows; see tools/skew_demo.py for the measured
+    straggler relief.
     """
     dfreq = dim.select("token", "df")
     if n_words:
@@ -467,25 +478,32 @@ def _tkdf(
             "token",
         )
     elif hot_thr:
-        side_hot = F.coalesce(F.col(side_df), F.lit(0)) >= F.lit(int(hot_thr))
-        hot = dim.filter(side_hot).select("token", "df")
+        hots = [F.col(c) >= F.lit(int(hot_thr)) for c in side_dfs]
+        if len(hots) == 1:
+            on, hot = "token", dim.filter(hots[0]).select("token", "df")
+        else:
+            on = ["side", "token"]
+            hot = functools.reduce(DataFrame.unionByName, [
+                dim.filter(h).select(F.lit(i).alias("side"), "token", "df")
+                for i, h in enumerate(hots)
+            ])
+        cold = ~functools.reduce(operator.and_, hots)
         joined = (
-            tokens.join(F.broadcast(hot.select("token")), "token", "left_anti")
-            .join(dim.filter(~side_hot).select("token", "df"), "token")
-            .unionByName(tokens.join(F.broadcast(hot), "token"))
+            tokens.join(F.broadcast(hot.select(on)), on, "left_anti")
+            .join(dim.filter(cold).select("token", "df"), "token")
+            .unionByName(tokens.join(F.broadcast(hot), on))
         )
     else:
         joined = tokens.join(dfreq, "token")
-    w = Window.partitionBy("id").orderBy("df", "token")
+    w = Window.partitionBy(*doc).orderBy("df", "token")
     out = joined.select(
-        "id",
+        *doc,
         "len",
         "token",
         "df",
         *(["tid"] if n_words else []),
         F.row_number().over(w).alias("pos"),
-        *[b.over(Window.partitionBy("id")).alias(f"b{i}")
-          for i, b in enumerate(_bit_words(n_words))],
+        *_bit_words(n_words, f" OVER (PARTITION BY {', '.join(doc)})"),
     )
     if with_pair_key:
         out = out.withColumn(
@@ -510,7 +528,8 @@ def tokens_with_doc_freq(
     disables it)."""
     _validate_hot_threshold(hot_df_threshold, auto=False)
     dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    return _tkdf(tokens, dfreq, 0, hot_df_threshold, "df", with_pair_key)
+    return _tkdf(tokens, dfreq, 0, hot_df_threshold,
+                 with_pair_key=with_pair_key)
 
 # Verification-side broadcast gate (round 8). The verification attach
 # tables are ONE ROW PER DOCUMENT (pos-ordered token arrays), while
@@ -626,11 +645,16 @@ class _GateStats(NamedTuple):
 
 
 def _gate_stats(
-    tkdfs: list[DataFrame], t: float, skip_dup: bool = False
+    tagged: DataFrame,
+    n_sides: int,
+    t: float,
+    doc: tuple[str, ...] = ("side", "id"),
+    skip_dup: bool = False,
 ) -> _GateStats:
     """Every scalar the verify and side-swap gates read, in ONE
-    aggregate job (a ``groupBy("token")`` over the side-tagged,
-    persisted tkdfs — one for a self join, two for an inner join):
+    aggregate job (a ``groupBy("token")`` over the persisted tkdf,
+    side-tagged: a ``side`` column numbers its ``n_sides`` sides, and
+    ``doc`` names the columns that identify a document):
 
     - per side, the widow count that mirrors the reference's
       ``fetchall()[0][0]`` side-swap decision (indexing-prefix rows
@@ -642,9 +666,9 @@ def _gate_stats(
       prefix of the other bound the candidate equi-join's output
       (``bound[0]``: the first side indexes, ``bound[1]``: the last
       side does; a self join's two are equal);
-    - ``dup_rows`` (rows minus distinct ``(side, id)`` pairs, summed
-      over tokens), the exact count of duplicate ``(id, token)`` rows,
-      which picks the verify strategy (see :func:`_verify`).
+    - ``dup_rows`` (rows minus distinct ``doc`` values, summed over
+      tokens), the exact count of duplicate ``(id, token)`` rows, which
+      picks the verify strategy (see :func:`_verify`).
 
     One job because each scalar job costs a driver scheduling
     round-trip, the fixed floor that dominates small joins.
@@ -662,11 +686,10 @@ def _gate_stats(
         "d": F.col("pos") == 1,
         "w": idx & (F.col("df") == _WIDOW_DF),
     }
-    sides = range(len(tkdfs))
-    tagged = functools.reduce(DataFrame.unionByName, [
-        tk.select(F.lit(i).alias("side"), "id", "token", "len", "pos", "df")
-        for i, tk in enumerate(tkdfs)
-    ])
+    sides = range(n_sides)
+    # count(DISTINCT a, b, ..) skips rows with a NULL column, and an
+    # inner join with differently typed keys has one NULL key per row
+    distinct = [*doc] if len(doc) == 2 else [F.struct(*doc)]
     per_token = tagged.groupBy("token").agg(
         *[
             F.sum(((F.col("side") == i) & flag).cast("long")).alias(f"{k}{i}")
@@ -674,7 +697,7 @@ def _gate_stats(
             for i in sides
         ],
         *([] if skip_dup else [
-            (F.count(F.lit(1)) - F.count_distinct("side", "id")).alias("dup")
+            (F.count(F.lit(1)) - F.count_distinct(*distinct)).alias("dup")
         ]),
     )
     last = sides[-1]
@@ -693,6 +716,24 @@ def _gate_stats(
         (get("bound0"), get("bound1")),
         0 if skip_dup else get("dup"),
     )
+
+
+def _widow_counts(tagged: DataFrame, t: float) -> tuple[int, int]:
+    """The inner join's side-swap scalars alone — per side, the
+    indexing-prefix rows whose df is :data:`_WIDOW_DF` (see
+    :func:`_gate_stats`) — as one global aggregate over the side-tagged
+    tkdf, with no ``groupBy("token")``. The bitset path reads nothing
+    else: its candidate join verifies, so there is no attach to gate
+    and no duplicate row to count."""
+    widow = (
+        _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
+        & (F.col("df") == _WIDOW_DF)
+    )
+    row = tagged.agg(*[
+        F.count_if(widow & (F.col("side") == i)).alias(f"w{i}")
+        for i in (0, 1)
+    ]).first()
+    return int(row["w0"]), int(row["w1"])
 
 
 def _verify_attach(
@@ -749,16 +790,18 @@ def _tid_dim(spark, token_type, tokens: list) -> DataFrame:
     )
 
 
-def _bit_words(n_words: int) -> list[Column]:
-    """The aggregates ``bit_or`` of bit ``tid-1`` (LSB-first within each
-    64-bit word) for words ``0..n_words-1``: a document's token set as
-    a bitset over ``tid``, once aggregated over its rows."""
+def _bit_words(n_words: int, over: str = "") -> list[Column]:
+    """The aggregates ``b0..b{n_words-1}``: ``bit_or`` of bit ``tid-1``
+    (LSB-first within each 64-bit word), a document's token set as a
+    bitset over ``tid`` once aggregated over its rows; ``over`` (a SQL
+    ``OVER (...)`` clause) makes them window functions. One SQL-text
+    expression per word: building each from Column calls costs dozens
+    of py4j round trips per word."""
     return [
-        F.bit_or(
-            F.when(
-                (F.col("tid") > 64 * i) & (F.col("tid") <= 64 * (i + 1)),
-                F.expr(f"shiftleft(cast(1 as bigint), tid - 1 - {64 * i})"),
-            ).otherwise(F.lit(0).cast("long"))
+        F.expr(
+            f"bit_or(CASE WHEN tid > {64 * i} AND tid <= {64 * (i + 1)} "
+            f"THEN shiftleft(CAST(1 AS BIGINT), tid - 1 - {64 * i}) "
+            f"ELSE CAST(0 AS BIGINT) END){over} AS b{i}"
         )
         for i in range(n_words)
     ]
@@ -768,23 +811,21 @@ def _doc_bitsets(tk: DataFrame, n_words: int, *aggs: Column) -> DataFrame:
     """One row per document: ``(id, *aggs, b0..b{n_words-1})`` — the
     :func:`_bit_words` bitset, plus any per-document ``aggs`` in the
     same all-compiled aggregation."""
-    return tk.groupBy("id").agg(
-        *aggs, *[b.alias(f"b{i}") for i, b in enumerate(_bit_words(n_words))]
-    )
+    return tk.groupBy("id").agg(*aggs, *_bit_words(n_words))
 
 
 def _set_overlap(n_words: int, l: str = "l", r: str = "r") -> Column:
     """``|x ∩ y|`` of a pair whose columns carry the side prefixes ``l``
     and ``r`` (``lb0`` from :func:`_attach`, ``L.b0`` in a join of
-    aliased frames): the popcount sum of the ANDed bitset words when
-    ``n_words > 0``, else the size of the token arrays' intersection.
-    Exact when no token repeats within a document."""
+    aliased frames): the popcount sum of the ANDed bitset words (one
+    SQL-text expression) when ``n_words > 0``, else the size of the
+    token arrays' intersection. Exact when no token repeats within a
+    document."""
     if not n_words:
         return F.size(F.array_intersect(f"{l}arr", f"{r}arr"))
-    return functools.reduce(operator.add, [
-        F.bit_count(F.col(f"{l}b{i}").bitwiseAND(F.col(f"{r}b{i}")))
-        for i in range(n_words)
-    ])
+    return F.expr(" + ".join(
+        f"bit_count({l}b{i} & {r}b{i})" for i in range(n_words)
+    ))
 
 
 def _attach(
@@ -922,14 +963,19 @@ def _candidates(
     )
     if n_words:
         overlap = _set_overlap(n_words, "L.", "R.")
-        cond = cond & _overlap_cond(overlap, F.col("L.len"), F.col("R.len"), t)
-        for i in range(n_words):
-            # no shared bit of word i lies below bit L.tid - 1
-            cond = cond & F.expr(
-                f"L.b{i} & R.b{i} & CASE WHEN L.tid > {64 * i + 64} THEN -1L"
-                f" WHEN L.tid > {64 * i} THEN ~shiftleft(-1L, L.tid - "
-                f"{64 * i + 1}) ELSE 0L END = 0"
-            )
+        # no shared bit of word i lies below bit L.tid - 1: one SQL-text
+        # conjunction over every word
+        lowest = F.expr(" AND ".join(
+            f"L.b{i} & R.b{i} & CASE WHEN L.tid > {64 * i + 64} THEN -1L"
+            f" WHEN L.tid > {64 * i} THEN ~shiftleft(-1L, L.tid - "
+            f"{64 * i + 1}) ELSE 0L END = 0"
+            for i in range(n_words)
+        ))
+        cond = (
+            cond
+            & _overlap_cond(overlap, F.col("L.len"), F.col("R.len"), t)
+            & lowest
+        )
         return L.join(R, cond).select(
             F.col("L.id").alias("lid"), F.col("R.id").alias("rid"),
             F.col("L.len").alias("llen"), F.col("R.len").alias("rlen"),
@@ -969,7 +1015,8 @@ def _verify(
     _positional_cond).
 
     ``cand`` comes from :func:`_candidates`; ``l_tk``/``r_tk`` are the
-    two sides' token tables (one frame for a self join). Each side's
+    two sides' tkdfs (one frame for a self join, the side views of the
+    one side-tagged tkdf for an inner join). Each side's
     ``(n_docs, n_tok)`` stats and the candidate ``bound`` feed the
     broadcast gates of :func:`_verify_attach`. The strategy follows
     from the data:
@@ -1103,7 +1150,7 @@ def jaccard_self_join(
     )
     freq = _doc_freq(tokenizer, hot_df_threshold, tokens)
     tkdf = _tkdf(
-        tokens, freq.dim, freq.n_words, freq.hot_thr, "df", with_pair_key=True
+        tokens, freq.dim, freq.n_words, freq.hot_thr, with_pair_key=True
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     # Broadcast-gate scalars: a bounded probe first — corpus-scale
@@ -1121,7 +1168,11 @@ def jaccard_self_join(
         and not _cheap_decline(freq.sumsq, freq.n_tok)
         and _doc_count_probe(df) <= _MAX_BROADCAST_VERIFY_DOCS
     ):
-        g = _gate_stats([tkdf], t, skip_dup=tokenizer.rows_distinct)
+        g = _gate_stats(
+            tkdf.select(F.lit(0).alias("side"), "id", "token", "len", "pos",
+                        "df"),
+            1, t, skip_dup=tokenizer.rows_distinct,
+        )
         stats, bound = (g.docs[0], g.tokens[0]), g.bound[0]
         dup_rows = g.dup_rows
         # The gate-stats aggregate materialized tkdf into its cache,
@@ -1202,6 +1253,25 @@ def jaccard_self_join_brute_force(
 # inner (two-table) join (reference _JaccardInnerJoin, jaccard_join.py:235-469)
 # --------------------------------------------------------------------------
 
+def _tag_sides(
+    l_tokens: DataFrame, r_tokens: DataFrame
+) -> tuple[DataFrame, tuple[str, str]]:
+    """The two token frames as one side-tagged frame ``(side, <keys>,
+    len, token)``, ``side`` 0 for ``l_tokens`` and 1 for ``r_tokens``,
+    and each side's key column: one shared ``id`` when the key types
+    agree, else ``id0`` and ``id1``, each NULL on the other side's rows
+    — a shared column of one type would need a cast of the other
+    side's keys."""
+    same = l_tokens.schema["id"].dataType == r_tokens.schema["id"].dataType
+    keys = ("id", "id") if same else ("id0", "id1")
+    tagged = [
+        tk.select(F.lit(i).alias("side"), F.col("id").alias(key), "len",
+                  "token")
+        for i, (tk, key) in enumerate(zip((l_tokens, r_tokens), keys))
+    ]
+    return tagged[0].unionByName(tagged[1], allowMissingColumns=True), keys
+
+
 def jaccard_inner_join(
     l_df: DataFrame,
     r_df: DataFrame,
@@ -1221,48 +1291,65 @@ def jaccard_inner_join(
 
     ``hot_df_threshold`` (round 10): the heavy-hitter broadcast split
     of :func:`_tkdf`, applied PER SIDE to the shared cross-table df —
-    a token is hot for a side iff that side's own df clears the
-    threshold. ``"auto"`` (default) engages from measured skew; an int
-    overrides; ``None`` disables. Build plan only — output rows are
-    identical either way.
+    a token row is hot iff its own side's df clears the threshold.
+    ``"auto"`` (default) engages from measured skew; an int overrides;
+    ``None`` disables. Build plan only — output rows are identical
+    either way.
 
-    The shared stages run with one token frame per side:
-    :func:`_doc_freq` (cross-table df, widow placeholder
-    :data:`_WIDOW_DF`), :func:`_tkdf`, :func:`_gate_stats`,
-    :func:`_candidates` and :func:`_verify`. Specific to the inner join
-    are the side swap — the side with more indexing-prefix widows
-    becomes the indexing side (ties go to (r, l): jaccard_join.py:353,
-    SURVEY.md §4.3.4), read from the gate-stats job, which also yields
-    the candidate bound for either orientation — and the two-sided
-    length filter. The reference's two full-table counts (widow
+    The shared stages run ONCE, over one side-tagged token frame
+    ``(side, key, len, token)`` — ``side`` 0 for ``l_df``, 1 for
+    ``r_df``; the R-S join of Vernica, Carey and Li (SIGMOD 2010) tags
+    its records the same way: :func:`_doc_freq` (one aggregate with
+    per-side counts, cross-table df, widow placeholder
+    :data:`_WIDOW_DF`), :func:`_tkdf` (one window build over ``(side,
+    key)``, persisted once), the gate job, then :func:`_candidates` and
+    :func:`_verify` over the tkdf's ``side == i`` and ``side == j``
+    views. Keys of different types keep their own columns
+    (:func:`_tag_sides`), so no cast converts one side's keys.
+
+    Specific to the inner join are the side swap — the side with more
+    indexing-prefix widows becomes the indexing side (ties go to
+    (r, l): jaccard_join.py:353, SURVEY.md §4.3.4) — and the two-sided
+    length filter. The bitset path reads only the widow counts
+    (:func:`_widow_counts`); the array and three-way paths run the full
+    :func:`_gate_stats`, which also yields the candidate bound for
+    either orientation. The reference's two full-table counts (widow
     placeholder) are replaced by an order-equivalent constant.
     """
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
-    l_tokens = tokenizer.tokenize(l_df, l_key_attr, l_join_attr).persist(
-        StorageLevel.MEMORY_AND_DISK
+    tokens, keys = _tag_sides(
+        tokenizer.tokenize(l_df, l_key_attr, l_join_attr),
+        tokenizer.tokenize(r_df, r_key_attr, r_join_attr),
     )
-    r_tokens = tokenizer.tokenize(r_df, r_key_attr, r_join_attr).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    freq = _doc_freq(tokenizer, hot_df_threshold, l_tokens, r_tokens)
-    tk = [
-        _tkdf(tokens, freq.dim, freq.n_words, freq.hot_thr, side_df).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        for tokens, side_df in zip((l_tokens, r_tokens), freq.side_dfs)
-    ]
-    g = _gate_stats(tk, t, skip_dup=tokenizer.rows_distinct)
-    # That job materialized both persisted tkdfs, so the cross-table
-    # dim cache is now dead weight — free it (ADVICE r10).
+    tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    doc = ("side", *dict.fromkeys(keys))
+    freq = _doc_freq(tokenizer, hot_df_threshold, tokens, tagged=True)
+    tk = _tkdf(
+        tokens, freq.dim, freq.n_words, freq.hot_thr, freq.side_dfs, doc
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    if freq.n_words:
+        # the bitset verify has no attach to gate: the side swap alone
+        g = _GateStats(_widow_counts(tk, t), (0, 0), (0, 0), (0, 0), 0)
+    else:
+        g = _gate_stats(tk, 2, t, doc, skip_dup=tokenizer.rows_distinct)
+    # That job materialized the persisted tkdf, so the cross-table dim
+    # cache is now dead weight — free it (ADVICE r10).
     freq.dim.unpersist()
+
+    def view(side: int) -> DataFrame:
+        v = tk.filter(F.col("side") == side)
+        if keys[0] == keys[1]:
+            return v
+        return v.drop(keys[1 - side]).withColumnRenamed(keys[side], "id")
 
     # Side swap: indexing side i keeps the short 2t/(1+t) prefix, the
     # probing side j takes the longer t prefix.
     i, j = (0, 1) if g.widows[0] > g.widows[1] else (1, 0)
+    idx_tk, prb_tk = view(i), view(j)
     cand = _candidates(
-        tk[i], tk[j], t,
+        idx_tk, prb_tk, t,
         _length_cond(F.col("L.len"), F.col("R.len"), t)
         & _length_cond(F.col("R.len"), F.col("L.len"), t),
         freq.n_words,
@@ -1272,7 +1359,7 @@ def jaccard_inner_join(
     # probing side's with the right, regardless of swap.
     prefixes = (l_out_prefix, r_out_prefix)
     return _verify(
-        cand, tk[i], tk[j], t, freq.n_words, g.dup_rows,
+        cand, idx_tk, prb_tk, t, freq.n_words, g.dup_rows,
         (g.docs[i], g.tokens[i]), (g.docs[j], g.tokens[j]), g.bound[i],
         (f"{prefixes[i]}{l_key_attr}", f"{prefixes[j]}{r_key_attr}"),
         with_score,

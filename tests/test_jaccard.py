@@ -340,23 +340,23 @@ def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-# Gate-stats cases at t=0.5: the token frames (one for a self join,
-# two for an inner join) and the hand-computed job output. pos ranks
-# by (df, token); the indexing prefix is len-pos+1 >= 2·len/3 (pos <= 2
-# at len 3, pos <= 1 at len 2), the probing prefix len-pos+1 >= len/2
-# (pos <= 2 at len 2 and 3).
+# Gate-stats cases at t=0.5: the tokenizer, the token frames (one for
+# a self join, two for an inner join) and the hand-computed job output.
+# pos ranks by (df, token); the indexing prefix is len-pos+1 >= 2·len/3
+# (pos <= 2 at len 3, pos <= 1 at len 2), the probing prefix
+# len-pos+1 >= len/2 (pos <= 2 at len 2 and 3).
 _GATE_CASES = {
     # d1 "a b c", d2 "b c", d3 "c a" → df a:2 b:2 c:3. a and b are in
     # the indexing prefix of their docs, c never; all but d1's c are
     # in the probing prefix. bound = a:2·2 + b:2·2 + c:0·2 = 8.
-    "self": ([["a b c", "b c", "c a"]],
+    "self": (WhitespaceTokzr, [["a b c", "b c", "c a"]],
              dict(widows=(0,), docs=(3,), tokens=(7,), bound=(8, 8),
                   dup_rows=0)),
     # d1 "A a b" tokenizes to rows a, a, b (the case-collapsed
     # duplicate), d2 "a b" → df b:2 a:3, so b ranks first. Indexing:
     # d1 b, a(pos 2); d2 b. Probing: all but d1's pos-3 a.
     # bound = b:2·2 + a:1·2 = 6; one duplicate row.
-    "self-dup": ([["A a b", "a b"]],
+    "self-dup": (WhitespaceTokzr, [["A a b", "a b"]],
                  dict(widows=(0,), docs=(2,), tokens=(5,), bound=(6, 6),
                       dup_rows=1)),
     # left d1 "a b c", d2 "b d"; right d3 "a b", d4 "c e f" → cross df
@@ -365,9 +365,18 @@ _GATE_CASES = {
     # so widows (0, 1). Probing: d1 a c, d2 b d | d3 a b, d4 c e.
     # bound[0] (left indexes) = a:1·1 + c:1·1 + b:1·1 = 3;
     # bound[1] (right indexes) = a:1·1 + c:1·1 + e:1·0 = 2.
-    "inner": ([["a b c", "b d"], ["a b", "c e f"]],
+    "inner": (WhitespaceTokzr, [["a b c", "b d"], ["a b", "c e f"]],
               dict(widows=(0, 1), docs=(2, 2), tokens=(5, 5), bound=(3, 2),
                    dup_rows=0)),
+    # The bitset path's case (padded bigrams, distinct rows). left
+    # d1 "ab" → #a ab b#, d2 "ac" → #a ac c#; right d3 "ab" → #a ab b#,
+    # d4 "bd" → #b bd d# → cross df ab:1 b#:1 #a:2, widows ac c# #b bd
+    # d#. pos (len 3): d1 ab b# #a, d2 #a ac c#, d3 ab b# #a, d4 #b bd
+    # d#. Both prefixes are pos <= 2: d1 ab b#, d2 #a ac | d3 ab b#,
+    # d4 #b bd — widows (1, 2). bound = ab:1·1 + b#:1·1 = 2 either way.
+    "inner-qgram": (lambda: QGramsTokzr(2), [["ab", "ac"], ["ab", "bd"]],
+                    dict(widows=(1, 2), docs=(2, 2), tokens=(6, 6),
+                         bound=(2, 2), dup_rows=0)),
 }
 
 
@@ -381,11 +390,13 @@ def test_gate_stats_formula(spark, case, skip_dup):
     of the other); and dup_rows, the exact duplicate (id, token) row
     count that gates the runtime-distinct array verification.
     ``skip_dup`` (round 12, rows_distinct tokenizers) drops the
-    count_distinct column and reports the known dup_rows = 0."""
+    count_distinct column and reports the known dup_rows = 0. An inner
+    join's stages run over one side-tagged frame, and the widow-only
+    job of its bitset path must count the same widows."""
     import jaccard_join_duckdb_spark.operators.jaccard as J
 
-    sides, want = _GATE_CASES[case]
-    tok = WhitespaceTokzr()
+    mk_tok, sides, want = _GATE_CASES[case]
+    tok = mk_tok()
     frames, start = [], 1
     for docs in sides:
         df = spark.createDataFrame(
@@ -393,12 +404,18 @@ def test_gate_stats_formula(spark, case, skip_dup):
         )
         frames.append(tok.tokenize(df, "id", "val"))
         start += len(docs)
-    freq = J._doc_freq(tok, None, *frames)
-    tkdfs = [
-        J._tkdf(fr, freq.dim, 0, None, side_df)
-        for fr, side_df in zip(frames, freq.side_dfs)
-    ]
-    got = J._gate_stats(tkdfs, 0.5, skip_dup=skip_dup)._asdict()
+    if len(frames) == 1:
+        freq = J._doc_freq(tok, None, frames[0])
+        tkdf = J._tkdf(frames[0], freq.dim, freq.n_words, None)
+        tkdf = tkdf.withColumn("side", F.lit(0))
+    else:
+        tagged, _ = J._tag_sides(*frames)
+        freq = J._doc_freq(tok, None, tagged, tagged=True)
+        tkdf = J._tkdf(tagged, freq.dim, freq.n_words, None, freq.side_dfs,
+                       ("side", "id"))
+        assert J._widow_counts(tkdf, 0.5) == want["widows"]
+    assert bool(freq.n_words) == (case == "inner-qgram")
+    got = J._gate_stats(tkdf, len(frames), 0.5, skip_dup=skip_dup)._asdict()
     freq.dim.unpersist()
     if skip_dup:
         want = {**want, "dup_rows": 0}
@@ -500,6 +517,42 @@ def test_verify_strategy_equals_brute_force(spark, case, t):
     rows = filt.collect()
     once = {tuple(r[:2]) for r in rows} if mode == "inner" else pairs(filt)
     assert len(rows) == len(once)
+
+
+@pytest.mark.parametrize("path", ["three-way", "bitset"])
+def test_inner_mixed_key_types(spark, path):
+    """A bigint-keyed left table joins a string-keyed right one: the
+    side-tagged stages keep each side's key in its own column, so no
+    cast meets a non-numeric string, the pairs equal brute force and
+    the output keeps both key types. WhitespaceTokzr with duplicate
+    rows on the left takes the three-way verify (whose duplicate count
+    once cast the right keys to bigint); QGramsTokzr(2) takes the
+    bitset path, where each right document is its left twin with the
+    last letter replaced (7 of 9 bigrams shared, J = 7/11)."""
+    if path == "three-way":
+        tok, t = WhitespaceTokzr(), 0.4
+        l_docs, r_docs = _dup_corpus(40, 11), _distinct_corpus(40, 17)
+    else:
+        tok, t = QGramsTokzr(2), 0.6
+        rng = random.Random(3)
+        l_docs = ["".join(rng.sample("abcdefghijkl", 8)) for _ in range(40)]
+        r_docs = [
+            d[:-1] + min(set("abcdefghijkl") - set(d)) for d in l_docs
+        ]
+    l = spark.createDataFrame(list(enumerate(l_docs)), "id bigint, val string")
+    r = spark.createDataFrame(
+        [(f"r{i}", d) for i, d in enumerate(r_docs)], "id string, val string"
+    )
+    args = (l, r, "id", "id", "val", "val", tok, t)
+    filt = jaccard_inner_join(*args)
+    brute = jaccard_inner_join_brute_force(*args)
+    plan = filt._jdf.queryExecution().optimizedPlan().toString()
+    assert ("bit_count" in plan) == (path == "bitset")
+    assert pairs(filt) == pairs(brute)
+    assert pairs(filt)
+    assert dict(filt.dtypes) == dict(brute.dtypes) == {
+        "l_id": "bigint", "r_id": "string"
+    }
 
 
 def test_auto_hot_threshold_unit():

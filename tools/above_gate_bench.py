@@ -94,9 +94,8 @@ def main() -> int:
     }), flush=True)
     ok &= probe_ok
 
-    import duckdb
-    con = duckdb.connect()
-    con.execute(f"SET threads = {os.cpu_count()}")
+    from jaccard_join_duckdb_spark.session import duckdb_connect
+    con = duckdb_connect()
     con.execute(
         f"create view {name} as select * from read_parquet('{path}')"
     )

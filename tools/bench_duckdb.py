@@ -37,9 +37,9 @@ RUNS = int(os.environ.get("BENCH_DUCKDB_RUNS", "2"))
 
 
 def _run_one(sql: str, sf_dir: str, out) -> None:
-    import duckdb
+    from jaccard_join_duckdb_spark.session import duckdb_connect
 
-    con = duckdb.connect()
+    con = duckdb_connect()
     for t in TABLES:
         con.execute(f"create view {t} as select * from '{sf_dir}/{t}.parquet'")
     t0 = time.time()

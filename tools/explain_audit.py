@@ -75,9 +75,10 @@ SINGLE_CACHE_OK = {
     "jaccard_knn",
     "jaccard_topk_pairs",
     # Inner-join bitset path: same vocab-dim tid ranking over the
-    # shared cross-table dfreq (formerly in SINGLE_OK, which skipped
-    # the check entirely; these now at least require the cache-node
-    # producer like the self family).
+    # cross-table dfreq, built once for the one side-tagged tkdf (its
+    # windows are partitioned by side and key). Formerly in SINGLE_OK,
+    # which skipped the check entirely; these now at least require the
+    # cache-node producer like the self family.
     "jaccard_inner_ws",
     "jaccard_inner_ws_hotsplit",
     "jaccard_inner_ws_scored",

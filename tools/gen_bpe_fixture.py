@@ -21,7 +21,6 @@ import hashlib
 import os
 import sys
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -31,6 +30,7 @@ from jaccard_join_duckdb_spark.functions.bpe import (  # noqa: E402
     bpe_token_count,
     default_merges,
 )
+from jaccard_join_duckdb_spark.session import duckdb_connect  # noqa: E402
 
 DEFAULT_SF_DIRS = [
     "/root/testdata/sf0.001",
@@ -46,9 +46,10 @@ FIXTURE_PATH = os.path.join(
 def main() -> int:
     sf_dirs = sys.argv[1:] or DEFAULT_SF_DIRS
     texts: set[str] = set()
+    con = duckdb_connect()
     for d in sf_dirs:
         path = os.path.join(d, "documents.parquet")
-        for (t,) in duckdb.sql(
+        for (t,) in con.sql(
             f"select distinct text from read_parquet('{path}') "
             "where text is not null"
         ).fetchall():

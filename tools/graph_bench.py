@@ -67,11 +67,10 @@ where src != dst
 
 
 def main() -> int:
-    import duckdb
-
     from jaccard_join_duckdb_spark import get_spark
     from jaccard_join_duckdb_spark.operators.graph import pagerank
     from jaccard_join_duckdb_spark.plans.oracle_ext import pagerank_sql
+    from jaccard_join_duckdb_spark.session import duckdb_connect
 
     small_n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     big_n = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
@@ -88,7 +87,7 @@ def main() -> int:
             synthetic_edges(spark, n0), iterations=ITERS
         ).collect()
     }
-    con = duckdb.connect()  # keep a reference: a temporary is GC'd
+    con = duckdb_connect()  # keep a reference: a temporary is GC'd
     want = {
         node: rank
         for node, rank, _ in con.sql(

@@ -238,9 +238,8 @@ def main() -> int:
     spark.stop()
 
     if run_duckdb:
-        import duckdb
-        con = duckdb.connect()
-        con.execute(f"SET threads = {os.cpu_count()}")
+        from jaccard_join_duckdb_spark.session import duckdb_connect
+        con = duckdb_connect()
         for dataset in ("db10", "db50", "db100"):
             con.execute(
                 f"create view {dataset} as select * from read_parquet("

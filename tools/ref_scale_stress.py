@@ -52,10 +52,9 @@ def main() -> int:
     spark.stop()
 
     if run_duckdb:
-        import duckdb
+        from jaccard_join_duckdb_spark.session import duckdb_connect
 
-        con = duckdb.connect()
-        con.execute(f"SET threads = {os.cpu_count()}")
+        con = duckdb_connect()
         con.execute(
             "create view db100 as select * from read_parquet("
             f"'{os.path.join(DATA, 'db100.parquet')}')"

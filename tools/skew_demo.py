@@ -133,7 +133,8 @@ def main() -> int:
     self_sec = round(time.perf_counter() - t0, 3)
 
     # Inner (two-table) path under the same skew (round 10, VERDICT r9
-    # #3): per-side heavy-hitter split on the shared cross-table dfreq
+    # #3): the heavy-hitter split by each row's own side df, over the
+    # one side-tagged token frame and the shared cross-table dfreq
     # — same end-to-end join, split off vs explicit threshold, counts
     # must be identical (output rows are plan-independent).
     half = min(n_docs, 50_000)
