@@ -114,7 +114,11 @@ def q_jaccard_self_ws_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     mitigation for the skewed tokens ⋈ dfreq exchange that AQE
     structurally cannot split (operators/jaccard.py _tkdf). Output
     rows are identical to the baseline, so the unmodified
-    self_filtered_sql oracle grades it."""
+    self_filtered_sql oracle grades it. At sf0.01 and sf0.1 the
+    31-word vocabulary takes the bitset path, whose tkdf build
+    broadcasts the whole dim, so the split does not engage there and
+    the plan is jaccard_self_ws's; tests/test_jaccard.py
+    test_auto_hot_split_engages_on_skew covers the split itself."""
     return jaccard_self_join(
         _docs(spark, sf_dir), "doc_id", "text", _WS, T_SELF,
         hot_df_threshold=200,
@@ -150,7 +154,9 @@ def q_jaccard_inner_ws_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join split's anti-join + unionByName shape, run once over the
     inner join's one side-tagged token frame (operators/jaccard.py
     _tkdf). Output rows are identical, so the unmodified
-    inner_filtered_sql oracle grades it."""
+    inner_filtered_sql oracle grades it. At sf0.01 and sf0.1 the
+    31-word vocabulary takes the bitset path, where the split does not
+    engage (see q_jaccard_self_ws_hotsplit)."""
     docs = _docs(spark, sf_dir)
     return jaccard_inner_join(
         docs.filter(_EVEN), docs.filter(_ODD),

@@ -21,7 +21,9 @@ Parity hazards preserved (SURVEY.md §4.3):
   ``l_id = concat(len, '_', id)`` compared lexicographically
   (``jaccard_join.py:135,155``) — including its string-compare quirk.
 - ``pos`` ranks tokens by ``(df, token)`` ascending per record
-  (``jaccard_join.py:134``); the array and three-way verifies count
+  (``jaccard_join.py:134``) — here by the integer ``tid`` that
+  :func:`_doc_freq` gives every token in that order, which the tkdf
+  carries in place of the string; the array and three-way verifies count
   suffix matches from ``pos >= maxPos`` and add ``pfxOverlap - 1``
   (``jaccard_join.py:172-183``); the bitset path counts ``|x∩y|``
   outright in the candidate join, which equals that sum under set
@@ -36,9 +38,10 @@ Scale design (100 TB target):
   side-selection reads scalar counts (as the reference does).
 - The self and inner joins share one candidate generator, written once
   per stage: :func:`_doc_freq` (df per token; the inner join's
-  cross-table ``l_df * r_df`` with a widow placeholder), :func:`_tkdf`
-  (tokens ⋈ df with ``pos``, plus the ``tid`` rank on the bitset path
-  or the hot-token split otherwise), :func:`_gate_stats`,
+  cross-table ``l_df * r_df`` with a widow placeholder; the ``tid``
+  rank), :func:`_tkdf` (tokens ⋈ df with ``pos``, the token replaced
+  by its tid; the hot-token split off the bitset path),
+  :func:`_gate_stats`,
   :func:`_candidates` (prefix filters and the token equi-join) and
   :func:`_verify`. The self join runs them with its one token frame on
   both sides; each join keeps only its pair predicate, and the inner
@@ -50,6 +53,16 @@ Scale design (100 TB target):
   ``(side, key)``, one gate job; the candidate join and the verify
   read its ``side == i`` views. Each side's key keeps its own column
   when the two key types differ, so no cast joins them.
+- One integer token dictionary serves every path: ``tid`` order is
+  ``(df, token)`` order, so from ``tkdf`` on — the prefixes, the
+  candidate equi-join, the gate job and both verifies — tokens are
+  integers, and the array verify intersects integer arrays (Spark's
+  primitive hash set; string arrays take a boxed one). A vocabulary of
+  at most ``_RANK_ROWS`` tokens ranks in one unpartitioned window
+  (dense int tids, which the bitset path reads as bit numbers); a
+  larger one ranks per bucket of sampled ``(df, token)`` split points
+  into bigint tids, so no window sorts the whole vocabulary on one
+  partition.
 - Token frames, the doc-frequency dim and ``tkdf`` are persisted
   (MEMORY_AND_DISK): candidates and verification each scan ``tkdf``
   twice, and every plan decision (bitset vocabulary, hot-token split,
@@ -317,8 +330,20 @@ def _validate_hot_threshold(
 # far below the per-pair cost of array_intersect on multi-hundred-token
 # arrays (measured with the full-popcount verify on a 4-core host: the
 # 5-gram self join at sf0.1, t=0.8, took 12.5–14.1 s on bitsets vs
-# 61–69 s with the cap forced to 0, three warm runs each).
+# 61–69 s with the cap forced to 0, three warm runs each). The bit of a
+# token is its tid, so the path needs the dense tids 1..V that only a
+# vocabulary of at most _RANK_ROWS tokens gets (see _tid_rank).
 _MAX_BITSET_VOCAB = 4096
+
+# Most vocabulary rows the tid rank sorts in one window partition. A
+# vocabulary this small ranks in ONE unpartitioned window: dense tids
+# 1..V, no sample, no offset job. A larger one ranks per bucket of
+# (df, token) order, the buckets cut at points sampled to hold about
+# _RANK_ROWS / 4 rows each (see _tid_rank).
+_RANK_ROWS = 1 << 20
+# Expected sampled rows per bucket: a bucket's share of the vocabulary
+# then strays about 1/8 from its target, far inside the 4x headroom.
+_RANK_SAMPLE_PER_BUCKET = 64
 
 # Widow placeholder (jaccard_join.py:266-268): the inner join's df of a
 # token only one side has. The reference uses count(l)*count(r)+1 — two
@@ -335,7 +360,8 @@ _WIDOW_DF = (1 << 63) - 1
 class _DocFreq(NamedTuple):
     """The doc-frequency stage's output (see :func:`_doc_freq`)."""
 
-    dim: DataFrame  # persisted (token, df) or (token, l_df, r_df, df)
+    dim: DataFrame  # (token, df[, l_df, r_df], tid): ``cache`` ranked
+    cache: DataFrame  # the persisted aggregate under ``dim``
     side_dfs: tuple[str, ...]  # each side's own df column in ``dim``
     vocab: int
     n_tok: int  # token rows, both sides
@@ -372,7 +398,16 @@ def _doc_freq(
     (``Σ df²`` for a self join) feeds the sparse fast decline of
     :func:`_cheap_decline`. The dim is the algorithm's own required
     shuffle; persisting it means the tkdf build reuses it, so the only
-    added cost is reading back the vocab-sized table once."""
+    added cost is reading back the vocab-sized table once.
+
+    The returned ``dim`` carries each token's integer ``tid``
+    (:func:`_tid_rank`), whose order is the reference's ``(df,
+    token)`` order: :func:`_tkdf` carries it in place of the token, so
+    ``pos``, every prefix, the candidate join and the verify run on
+    integers (the integer token dictionary of AllPairs, Bayardo, Ma
+    and Srikant, WWW 2007). The tids are dense ``1..V`` when the
+    vocabulary fits ``_RANK_ROWS``, and the bitset path, the one
+    reader that needs them dense, is gated on that."""
     if tagged:
         side_dfs = ("l_df", "r_df")
         dim = tokens.groupBy("token").agg(*[
@@ -400,7 +435,9 @@ def _doc_freq(
     n_tok = sum(int(row[f"n_{c}"] or 0) for c in side_dfs)
     max_df = max(int(row[f"m_{c}"] or 0) for c in side_dfs)
     n_words = 0
-    if tokenizer.rows_distinct and 0 < vocab <= _MAX_BITSET_VOCAB:
+    # the bit of a token is its tid: the bitset needs dense tids
+    if tokenizer.rows_distinct and 0 < vocab <= min(_MAX_BITSET_VOCAB,
+                                                    _RANK_ROWS):
         n_words = (vocab + 63) // 64
     if n_words:
         # the tid dim broadcasts wholesale: the build join is already
@@ -413,8 +450,65 @@ def _doc_freq(
     else:
         hot_thr = hot_df_threshold
     return _DocFreq(
-        dim, side_dfs, vocab, n_tok, max_df, float(row["sumsq"] or 0.0),
-        n_words, hot_thr,
+        _tid_rank(dim, vocab), dim, side_dfs, vocab, n_tok, max_df,
+        float(row["sumsq"] or 0.0), n_words, hot_thr,
+    )
+
+
+def _tid_rank(dim: DataFrame, vocab: int) -> DataFrame:
+    """``dim`` with ``tid``: an integer per token, unique, whose order
+    is the ``(df, token)`` order, computed with no nondeterministic
+    expression, so a recomputed partition gets the same tids.
+
+    Up to ``_RANK_ROWS`` tokens, ``tid`` is the token's 1-based rank in
+    one unpartitioned window (dense ``1..V``, an int). Above, it is a
+    bigint, and no window sorts the whole vocabulary on one partition:
+    a sample of the tokens, picked by a hash of the token alone, gives
+    split points of the ``(df, token)`` order, ``bucket`` is a pure
+    function of ``(df, token)`` and those literal points, and ``tid =
+    bucket·2^32 + row_number() OVER (PARTITION BY bucket ORDER BY df,
+    token)`` — no offset job. The sample is sorted on the driver by
+    Spark's own order (strings by their UTF-8 bytes) and the bucket
+    found by a binary search of nested ``CASE WHEN``s."""
+    if vocab <= _RANK_ROWS:
+        return dim.withColumn(
+            "tid", F.row_number().over(Window.orderBy("df", "token"))
+        )
+    n_buckets = -(-4 * vocab // _RANK_ROWS)
+    span = 1 << 20
+    keep = min(span, -(-span * _RANK_SAMPLE_PER_BUCKET * n_buckets // vocab))
+    rows = dim.filter(
+        F.pmod(F.xxhash64("token"), F.lit(span)) < keep
+    ).select("df", "token").collect()
+
+    def spark_order(p):
+        df, token = p
+        if isinstance(token, str):
+            return df, token.encode("utf-8", "surrogatepass")
+        return df, token
+
+    sample = sorted(((r[0], r[1]) for r in rows), key=spark_order)
+    n_buckets = max(1, min(n_buckets, len(sample)))
+    # points[b - 1] is the least (df, token) of bucket b
+    points = [sample[b * len(sample) // n_buckets]
+              for b in range(1, n_buckets)]
+
+    def bucket(lo: int, hi: int) -> Column:
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi + 1) // 2
+        df, token = points[mid - 1]
+        at_least = (F.col("df") > df) | (
+            (F.col("df") == df) & (F.col("token") >= F.lit(token))
+        )
+        return F.when(at_least, bucket(mid, hi)).otherwise(bucket(lo, mid - 1))
+
+    rank = Window.partitionBy("bucket").orderBy("df", "token")
+    return (
+        dim.withColumn("bucket", bucket(0, n_buckets - 1).cast("long"))
+        .withColumn("tid",
+                    F.shiftleft("bucket", 32) + F.row_number().over(rank))
+        .drop("bucket")
     )
 
 
@@ -426,28 +520,34 @@ def _tkdf(
     side_dfs: tuple[str, ...] = ("df",),
     doc: tuple[str, ...] = ("id",),
     with_pair_key: bool = False,
+    keep_token: bool = False,
 ) -> DataFrame:
-    """tokens ⋈ the doc-frequency dim → ``tkdf(*doc, len, token, df[,
-    tid], pos[, b0..][, l_id])``, where ``doc`` names the columns that
-    identify a document: ``("id",)`` for a self join's token frame,
-    ``("side", <key columns>)`` for the inner join's side-tagged one,
-    which is built once for both sides.
+    """tokens ⋈ the ranked doc-frequency dim ``(token, df, tid[, l_df,
+    r_df])`` → ``tkdf(*doc, len, token, df, pos[, b0..][, l_id])``,
+    where ``doc`` names the columns that identify a document:
+    ``("id",)`` for a self join's token frame, ``("side", <key
+    columns>)`` for the inner join's side-tagged one, which is built
+    once for both sides.
 
-    ``pos`` = ``row_number() OVER (PARTITION BY doc ORDER BY df,
-    token)`` (jaccard_join.py:132-137); ``l_id = concat(len, '_', id)``
-    is the self join's pair-ordering key (jaccard_join.py:135).
+    The string token is dropped at the join: the tkdf's ``token``
+    column carries the dim's ``tid`` (:func:`_tid_rank`), so every
+    later stage — the prefix filters, the candidate equi-join, the gate
+    job and both verifies — keys on an integer. ``pos`` =
+    ``row_number() OVER (PARTITION BY doc ORDER BY tid)``, which is
+    the reference's ``(df, token)`` order (jaccard_join.py:132-137);
+    ``l_id = concat(len, '_', id)`` is the self join's pair-ordering
+    key (jaccard_join.py:135). An inner join's two sides rank over the
+    one shared dim, so a token gets the same tid on both.
+    ``keep_token`` (:func:`tokens_with_doc_freq`) keeps the string
+    instead, from a dim without tids, and ``pos`` ranks ``(df,
+    token)`` itself.
 
-    Bitset path (``n_words > 0``): ``tid`` is the token's 1-based rank
-    in the dim's ``(df, token)`` order, so ``tid`` order is ``pos``
-    order in every document (the lowest-shared-token rule of
-    :func:`_candidates` relies on it); an inner join's two sides rank
-    over the one shared dim, so a token gets the same tid on both.
-    The rank window runs unpartitioned over the dim, which then
-    broadcasts — sound only because the bitset gate bounds the
-    vocabulary at ``_MAX_BITSET_VOCAB``. Every row also carries its
-    document's bitset words ``b0..`` (:func:`_bit_words` over the
-    ``doc`` window, which shares the ``pos`` window's partitioning and
-    sort: no extra exchange).
+    Bitset path (``n_words > 0``): the tids are dense ``1..V`` (the
+    bitset gate of :func:`_doc_freq` bounds the vocabulary at
+    ``_MAX_BITSET_VOCAB``), so ``tid - 1`` is the token's bit; the dim
+    broadcasts, and every row also carries its document's bitset words
+    ``b0..`` (:func:`_bit_words` over the ``doc`` window, which shares
+    the ``pos`` window's partitioning and sort: no extra exchange).
 
     ``hot_thr`` (skew mitigation for Zipf token distributions): a
     token row is a heavy hitter when its own side's df (``side_dfs``:
@@ -467,43 +567,42 @@ def _tkdf(
     Identical output rows; see tools/skew_demo.py for the measured
     straggler relief.
     """
-    dfreq = dim.select("token", "df")
+    cols = ["token", "df"] if keep_token else ["token", "df", "tid"]
+    dfreq = dim.select(*cols)
     if n_words:
-        joined = tokens.join(
-            F.broadcast(
-                dfreq.withColumn(
-                    "tid", F.row_number().over(Window.orderBy("df", "token"))
-                )
-            ),
-            "token",
-        )
+        joined = tokens.join(F.broadcast(dfreq), "token")
     elif hot_thr:
         hots = [F.col(c) >= F.lit(int(hot_thr)) for c in side_dfs]
         if len(hots) == 1:
-            on, hot = "token", dim.filter(hots[0]).select("token", "df")
+            on, hot = "token", dim.filter(hots[0]).select(*cols)
         else:
             on = ["side", "token"]
             hot = functools.reduce(DataFrame.unionByName, [
-                dim.filter(h).select(F.lit(i).alias("side"), "token", "df")
+                dim.filter(h).select(F.lit(i).alias("side"), *cols)
                 for i, h in enumerate(hots)
             ])
         cold = ~functools.reduce(operator.and_, hots)
         joined = (
             tokens.join(F.broadcast(hot.select(on)), on, "left_anti")
-            .join(dim.filter(cold).select("token", "df"), "token")
+            .join(dim.filter(cold).select(*cols), "token")
             .unionByName(tokens.join(F.broadcast(hot), on))
         )
     else:
         joined = tokens.join(dfreq, "token")
-    w = Window.partitionBy(*doc).orderBy("df", "token")
+    if keep_token:
+        order = ("df", "token")
+    else:  # the tid replaces the string from here on
+        joined = joined.drop("token").withColumnRenamed("tid", "token")
+        order = ("token",)
+    w = Window.partitionBy(*doc).orderBy(*order)
     out = joined.select(
         *doc,
         "len",
         "token",
         "df",
-        *(["tid"] if n_words else []),
         F.row_number().over(w).alias("pos"),
-        *_bit_words(n_words, f" OVER (PARTITION BY {', '.join(doc)})"),
+        *_bit_words(n_words, f" OVER (PARTITION BY {', '.join(doc)})",
+                    "token"),
     )
     if with_pair_key:
         out = out.withColumn(
@@ -525,11 +624,13 @@ def tokens_with_doc_freq(
     """tokens → ``tkdf(id, len, token, df, pos[, l_id])``: the self
     join's tkdf build (see :func:`_tkdf`) as a lazy frame, with the
     heavy-hitter split at an explicit ``hot_df_threshold`` (None
-    disables it)."""
+    disables it). It keeps the string ``token``: ``pos`` ranks ``(df,
+    token)`` itself, so no eager job builds a tid."""
     _validate_hot_threshold(hot_df_threshold, auto=False)
     dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     return _tkdf(tokens, dfreq, 0, hot_df_threshold,
-                 with_pair_key=with_pair_key)
+                 with_pair_key=with_pair_key, keep_token=True)
+
 
 # Verification-side broadcast gate (round 8). The verification attach
 # tables are ONE ROW PER DOCUMENT (pos-ordered token arrays), while
@@ -790,17 +891,19 @@ def _tid_dim(spark, token_type, tokens: list) -> DataFrame:
     )
 
 
-def _bit_words(n_words: int, over: str = "") -> list[Column]:
+def _bit_words(
+    n_words: int, over: str = "", tid: str = "tid"
+) -> list[Column]:
     """The aggregates ``b0..b{n_words-1}``: ``bit_or`` of bit ``tid-1``
-    (LSB-first within each 64-bit word), a document's token set as a
-    bitset over ``tid`` once aggregated over its rows; ``over`` (a SQL
-    ``OVER (...)`` clause) makes them window functions. One SQL-text
-    expression per word: building each from Column calls costs dozens
-    of py4j round trips per word."""
+    (LSB-first within each 64-bit word; ``tid`` names the column), a
+    document's token set as a bitset over ``tid`` once aggregated over
+    its rows; ``over`` (a SQL ``OVER (...)`` clause) makes them window
+    functions. One SQL-text expression per word: building each from
+    Column calls costs dozens of py4j round trips per word."""
     return [
         F.expr(
-            f"bit_or(CASE WHEN tid > {64 * i} AND tid <= {64 * (i + 1)} "
-            f"THEN shiftleft(CAST(1 AS BIGINT), tid - 1 - {64 * i}) "
+            f"bit_or(CASE WHEN {tid} > {64 * i} AND {tid} <= {64 * (i + 1)} "
+            f"THEN shiftleft(CAST(1 AS BIGINT), {tid} - 1 - {64 * i}) "
             f"ELSE CAST(0 AS BIGINT) END){over} AS b{i}"
         )
         for i in range(n_words)
@@ -890,15 +993,13 @@ def _check_score_semantics(tokenizer: Tokenizer, with_score: bool) -> None:
 
 def _pos_token_arrays(tkdf: DataFrame) -> DataFrame:
     """One row per document: ``(id, len, arr)`` with ``arr`` the
-    tokens ordered by ``pos``. Feeds the compiled array-intersect
-    verification (the interpreted ``transform`` runs once per
-    document, not per candidate pair)."""
+    document's tids sorted, which is ``pos`` order (:func:`_tkdf`).
+    Feeds the compiled array-intersect verification; ``collect_list``
+    of an integer and ``array_sort`` need no struct and no interpreted
+    ``transform``."""
     return tkdf.groupBy("id").agg(
         F.max("len").alias("len"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "token"))),
-            lambda x: x["token"],
-        ).alias("arr"),
+        F.array_sort(F.collect_list("token")).alias("arr"),
     )
 
 
@@ -908,7 +1009,9 @@ def _suffix_overlap(
 ) -> Column:
     """``|{t : t ∈ x∩y, pos_x(t) >= lmaxpos, pos_y(t) >= rmaxpos}|``
     via slice + array_intersect — equals the reference's suffix
-    ``count(*)`` when token rows are distinct per document."""
+    ``count(*)`` when token rows are distinct per document. The arrays
+    hold integer tids, which Spark intersects with its specialised
+    primitive hash set; string arrays take the boxed generic one."""
     return F.size(
         F.array_intersect(
             F.slice(l_arr, l_maxpos, l_len - l_maxpos + F.lit(1)),
@@ -939,8 +1042,9 @@ def _candidates(
     full popcount :func:`_set_overlap` equals the reference's ``sfx +
     pfxOverlap - 1`` under set semantics (see _jaccard_score) — and
     keeps one row per pair by the lowest-shared-token rule: no bit of
-    ``L.b & R.b`` lies below ``L.tid``. The result is the verified
-    pairs ``(lid, rid, llen, rlen, overlap)``, with no pair aggregate.
+    ``L.b & R.b`` lies below ``L.token`` (the tid). The result is the
+    verified pairs ``(lid, rid, llen, rlen, overlap)``, with no pair
+    aggregate.
     The rule is exact: ``tid`` order is ``pos`` order on both sides
     (one global ``(df, token)`` ranking), the prefix and positional
     filters only tighten as ``pos`` grows, and the pair predicate and
@@ -963,11 +1067,11 @@ def _candidates(
     )
     if n_words:
         overlap = _set_overlap(n_words, "L.", "R.")
-        # no shared bit of word i lies below bit L.tid - 1: one SQL-text
+        # no shared bit of word i lies below bit L.token - 1: one SQL-text
         # conjunction over every word
         lowest = F.expr(" AND ".join(
-            f"L.b{i} & R.b{i} & CASE WHEN L.tid > {64 * i + 64} THEN -1L"
-            f" WHEN L.tid > {64 * i} THEN ~shiftleft(-1L, L.tid - "
+            f"L.b{i} & R.b{i} & CASE WHEN L.token > {64 * i + 64} THEN -1L"
+            f" WHEN L.token > {64 * i} THEN ~shiftleft(-1L, L.token - "
             f"{64 * i + 1}) ELSE 0L END = 0"
             for i in range(n_words)
         ))
@@ -1027,7 +1131,8 @@ def _verify(
       popcount, so this is a plain select.
     - array (``dup_rows == 0``: no duplicate ``(id, token)`` rows,
       promised by the tokenizer or measured by the gate statistics):
-      ``sfx`` by compiled slice + array_intersect. Exact because the
+      ``sfx`` by compiled slice + array_intersect of each document's
+      sorted tids (:func:`_pos_token_arrays`). Exact because the
       suffix row-pair count equals the set overlap when no row
       repeats. Measured 1.8-7.3× faster than the three-way join at
       refscale profile cells whose rows were distinct at runtime; an
@@ -1182,7 +1287,7 @@ def jaccard_self_join(
         # tkdf is still lazy — unpersisting there would force one
         # extra dim shuffle when tkdf first materializes, so those
         # keep the cache entry until session clearCache.
-        freq.dim.unpersist()
+        freq.cache.unpersist()
 
     cand = _candidates(
         tkdf, tkdf, t,
@@ -1336,7 +1441,7 @@ def jaccard_inner_join(
         g = _gate_stats(tk, 2, t, doc, skip_dup=tokenizer.rows_distinct)
     # That job materialized the persisted tkdf, so the cross-table dim
     # cache is now dead weight — free it (ADVICE r10).
-    freq.dim.unpersist()
+    freq.cache.unpersist()
 
     def view(side: int) -> DataFrame:
         v = tk.filter(F.col("side") == side)

@@ -25,6 +25,11 @@ _DEFAULTS = {
     # explicit so a misconfigured cluster can't silently disable them.
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
+    # Generated classes kept compiled (static; default 100). Over 10
+    # 5-gram self joins in one local[4] session on a 4-core host, a
+    # warm join recompiled a median of 27 classes at 100 entries and 2
+    # at 1,000, at 8.9 vs 7.6 CPU-s per join (joins 3-10).
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

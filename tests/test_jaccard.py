@@ -415,8 +415,9 @@ def test_gate_stats_formula(spark, case, skip_dup):
                        ("side", "id"))
         assert J._widow_counts(tkdf, 0.5) == want["widows"]
     assert bool(freq.n_words) == (case == "inner-qgram")
+    assert dict(tkdf.dtypes)["token"] == "int"  # the dense tid
     got = J._gate_stats(tkdf, len(frames), 0.5, skip_dup=skip_dup)._asdict()
-    freq.dim.unpersist()
+    freq.cache.unpersist()
     if skip_dup:
         want = {**want, "dup_rows": 0}
     assert got == want
@@ -473,12 +474,18 @@ _VERIFY_MARKERS = ("bit_count", "array_sort")
 
 
 @pytest.mark.parametrize("t", [0.2, 0.4, 0.6])
-@pytest.mark.parametrize("case", list(_VERIFY_CASES))
-def test_verify_strategy_equals_brute_force(spark, case, t):
+@pytest.mark.parametrize(
+    "case", [*_VERIFY_CASES, *(f"{c}-buckets" for c in _VERIFY_CASES)]
+)
+def test_verify_strategy_equals_brute_force(spark, monkeypatch, case, t):
     """Each verify strategy (bitset popcount, array intersect, three-way
     join) in each join equals brute force, and the data picks the
     strategy: the vocabulary size picks the bitset, the measured
     duplicate-row count picks array or three-way.
+
+    A ``-buckets`` case caps the one-window tid rank at 8 tokens, so
+    its join runs on the multi-bucket tids of ``_tid_rank``. The bitset
+    needs dense tids, so the bitset cases take the array verify there.
 
     The reference's prefix filter is complete only for set overlaps
     between a shorter-or-equal indexing-side document and a probing
@@ -487,7 +494,14 @@ def test_verify_strategy_equals_brute_force(spark, case, t):
     rows sit on a word no other document has. Parity with the
     reference where duplicates match across documents is pinned by
     test_property_fuzz.py's ws-bag and delim arms."""
-    mode, mk_tok, left, right, marker = _VERIFY_CASES[case]
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+
+    base = case.removesuffix("-buckets")
+    mode, mk_tok, left, right, marker = _VERIFY_CASES[base]
+    if base != case:
+        monkeypatch.setattr(J, "_RANK_ROWS", 8)
+        if marker == "bit_count":
+            marker = "array_sort"
     corpus = {"distinct": _distinct_corpus, "dup": _dup_corpus}
 
     def frame(kind, seed):
@@ -517,6 +531,82 @@ def test_verify_strategy_equals_brute_force(spark, case, t):
     rows = filt.collect()
     once = {tuple(r[:2]) for r in rows} if mode == "inner" else pairs(filt)
     assert len(rows) == len(once)
+
+
+@pytest.mark.parametrize("mode", ["self", "inner"])
+def test_tid_rank_buckets(spark, monkeypatch, mode):
+    """Above ``_RANK_ROWS`` tokens the tid rank runs per bucket of
+    ``(df, token)`` order. Capped at 8 tokens here, the ~90-token
+    vocabulary splits into many buckets, and its tids must be unique,
+    in ``(df, token)`` order and identical across two builds. The tkdf
+    then carries them as a bigint ``token``, its ``pos`` following."""
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+
+    monkeypatch.setattr(J, "_RANK_ROWS", 8)
+    tok = WhitespaceTokzr()
+    frames = [
+        tok.tokenize(spark.createDataFrame(
+            list(enumerate(_distinct_corpus(40, seed))), "id long, val string"
+        ), "id", "val")
+        for seed in ((11,) if mode == "self" else (11, 17))
+    ]
+    if mode == "self":
+        tokens, doc, kw = frames[0], ("id",), {}
+    else:
+        tokens, _ = J._tag_sides(*frames)
+        doc, kw = ("side", "id"), {"tagged": True}
+
+    def build():
+        freq = J._doc_freq(tok, None, tokens, **kw)
+        rows = freq.dim.select("df", "token", "tid").collect()
+        return freq, sorted(rows, key=lambda r: (r.df, r.token))
+
+    freq, ranked = build()
+    tids = [r.tid for r in ranked]
+    assert len(tids) == freq.vocab > 8 and not freq.n_words
+    assert tids == sorted(set(tids))  # unique and in (df, token) order
+    assert len({tid >> 32 for tid in tids}) > 4  # many buckets
+    assert build()[1] == ranked
+    tkdf = J._tkdf(tokens, freq.dim, 0, None, freq.side_dfs, doc)
+    assert dict(tkdf.dtypes)["token"] == "bigint"
+    by_doc = {}
+    for r in tkdf.collect():
+        by_doc.setdefault(tuple(r[c] for c in doc), []).append(r)
+    for rows in by_doc.values():
+        rows.sort(key=lambda r: r.pos)
+        assert [r.pos for r in rows] == list(range(1, len(rows) + 1))
+        assert [r.token for r in rows] == sorted(r.token for r in rows)
+
+
+@pytest.mark.parametrize("hot", [None, 3])
+@pytest.mark.parametrize("with_pair_key", [False, True])
+def test_tokens_with_doc_freq_output(spark, with_pair_key, hot):
+    """The public tkdf build keeps its string ``token`` while the joins
+    carry integer tids: ``(id, len, token, df, pos[, l_id])`` with the
+    types and rows of the reference's tkdf (jaccard_join.py:127-137),
+    ``pos`` ranking ``(df, token)`` — with and without the hot split."""
+    from jaccard_join_duckdb_spark import tokens_with_doc_freq
+
+    df = spark.createDataFrame(
+        list(enumerate(_distinct_corpus(20, 5) + _dup_corpus(20, 6))),
+        "id long, val string",
+    )
+    tokens = WhitespaceTokzr().tokenize(df, "id", "val")
+    got = tokens_with_doc_freq(tokens, with_pair_key, hot)
+    assert got.dtypes == [
+        ("id", "bigint"), ("len", "int"), ("token", "string"),
+        ("df", "bigint"), ("pos", "int"),
+    ] + ([("l_id", "string")] if with_pair_key else [])
+    rows = [(r.id, r.len, r.token) for r in tokens.collect()]
+    df_of = {}
+    for _, _, token in rows:
+        df_of[token] = df_of.get(token, 0) + 1
+    want, seen = [], {}
+    for i, n, token in sorted(rows, key=lambda r: (r[0], df_of[r[2]], r[2])):
+        seen[i] = seen.get(i, 0) + 1
+        want.append((i, n, token, df_of[token], seen[i])
+                    + ((f"{n}_{i}",) if with_pair_key else ()))
+    assert sorted(map(tuple, got.collect())) == sorted(want)
 
 
 @pytest.mark.parametrize("path", ["three-way", "bitset"])
@@ -606,27 +696,32 @@ def test_hot_threshold_kwarg_validated_up_front(spark):
     jaccard_self_join(df, "id", "val", tok, 0.5, hot_df_threshold=10)
 
 
-@pytest.mark.parametrize("path", ["self", "inner"])
+@pytest.mark.parametrize("path", ["self", "inner", "self-bag", "inner-bag"])
 def test_auto_hot_split_engages_on_skew(spark, monkeypatch, path):
     """DEFAULT-path plan shape on a skewed corpus (VERDICT r9 #4): with
     hot_df_threshold='auto' (the default) and the engagement constants
     scaled to test size, the tkdf build join splits — the broadcast
     anti-join (LeftAnti) appears in the plan — and the pair set is
     identical to the split-disabled run. Covers both the self and the
-    inner (per-side dfreq) paths."""
+    inner (per-side dfreq) paths, each with the array verify (set
+    mode: the corpus has no duplicate rows, so the integer tids of the
+    split join reach the array intersect) and the three-way one
+    (``-bag``: bag mode, the hot token written twice)."""
     import jaccard_join_duckdb_spark.operators.jaccard as J
     from jaccard_join_duckdb_spark import WhitespaceTokzr
 
     monkeypatch.setattr(J, "_HOT_SPLIT_MIN_DF", 5)
     monkeypatch.setattr(J, "_HOT_SPLIT_SKEW_FACTOR", 0.001)
     monkeypatch.setattr(J, "_HOT_SPLIT_MIN_THR", 5)
+    path, _, bag = path.partition("-")
 
     # every doc shares one hot token; tails are near-unique
+    twice = " hot" if bag else ""
     docs = spark.createDataFrame(
-        [(i, f"hot u{i} v{i} w{i % 7}") for i in range(40)],
+        [(i, f"hot u{i} v{i} w{i % 7}{twice}") for i in range(40)],
         "doc_id long, text string",
     )
-    tok = WhitespaceTokzr()  # bag mode: non-bitset, non-array path
+    tokenizer = WhitespaceTokzr(return_set=not bag)
 
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -635,20 +730,22 @@ def test_auto_hot_split_engages_on_skew(spark, monkeypatch, path):
         return sorted(map(tuple, df.collect()))
 
     if path == "self":
-        auto = J.jaccard_self_join(docs, "doc_id", "text", tok, 0.3)
+        auto = J.jaccard_self_join(docs, "doc_id", "text", tokenizer, 0.3)
         off = J.jaccard_self_join(
-            docs, "doc_id", "text", tok, 0.3, hot_df_threshold=None
+            docs, "doc_id", "text", tokenizer, 0.3, hot_df_threshold=None
         )
     else:
         l, r = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
         auto = J.jaccard_inner_join(
-            l, r, "doc_id", "doc_id", "text", "text", tok, 0.3
+            l, r, "doc_id", "doc_id", "text", "text", tokenizer, 0.3
         )
         off = J.jaccard_inner_join(
-            l, r, "doc_id", "doc_id", "text", "text", tok, 0.3,
+            l, r, "doc_id", "doc_id", "text", "text", tokenizer, 0.3,
             hot_df_threshold=None,
         )
     assert "LeftAnti" in plan_of(auto)
     assert "LeftAnti" not in plan_of(off)
+    optimized = auto._jdf.queryExecution().optimizedPlan().toString()
+    assert ("array_sort" in optimized) == (not bag)
     assert pairs(auto) == pairs(off)
     assert pairs(auto)  # non-degenerate corpus: the hot token pairs up

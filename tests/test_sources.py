@@ -466,6 +466,19 @@ def test_session_pins_initial_heap(spark):
     assert "-Xms" in opts
 
 
+def test_session_sizes_codegen_cache(spark):
+    """The codegen cache holds 1,000 generated classes, not Spark's
+    100: at 100 a warm 5-gram self join recompiled a median of 27
+    classes per join, at 1,000 two. The setting is static, so it must
+    come from get_spark's defaults, and the shared test session
+    carries it."""
+    import jaccard_join_duckdb_spark.session as S
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert S._DEFAULTS[key] == "1000"
+    assert spark.conf.get(key) == "1000"
+
+
 def test_get_spark_merges_caller_java_options(monkeypatch):
     """Caller-supplied spark.driver.extraJavaOptions must COMPOSE with
     the -Xms pin (not replace it), and the passed extra_conf dict must

@@ -38,10 +38,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # SinglePartition exchanges adjudicated benign (bounded inputs that
 # the structural HashAggregate-feeder rule can't see through AQE
 # stage boundaries):
-# - jaccard_inner_ws(_scored): the bitset tid ranking windows the
-#   token VOCABULARY (dfreq), taken only when the runtime gate proved
-#   vocab_n <= _MAX_BITSET_VOCAB — a bounded side table that is then
-#   broadcast, never corpus rows.
+# - jaccard_inner_ws(_scored): the tid ranking windows the token
+#   VOCABULARY (dfreq) unpartitioned only when the doc-frequency stats
+#   proved vocab_n <= _RANK_ROWS (jaccard._tid_rank; a larger one
+#   ranks in buckets) — a bounded side table, never corpus rows.
 # Names whose SinglePartition exchange is benign REGARDLESS of the
 # producer node. Empty since round 11: the former members (the inner
 # bitset tid ranking) are now held to the stricter cache-producer
@@ -60,21 +60,21 @@ SINGLE_OK: set = set()
 # for every query: a partial HashAggregate's final merge is
 # scalar-sized by construction.)
 SINGLE_CACHE_OK = {
-    # Self-join bitset path: the tid ranking (jaccard._tkdf; its pos
-    # and bitset-word windows are partitioned by id) windows the
-    # PERSISTED doc-frequency dim — verified in the plan text: the
-    # exchange input is the [token, df] vocabulary dim out of
-    # the dim HashAggregate's cache, taken only after the runtime gate
-    # proved vocab_n <= _MAX_BITSET_VOCAB (jaccard.py) — 4096 rows
-    # max. Every name below routes through jaccard_self_join on a
-    # bitset-eligible corpus at audit scale.
+    # Self join: the tid ranking (jaccard._tid_rank, on every path;
+    # the pos and bitset-word windows of jaccard._tkdf are partitioned
+    # by id) windows the PERSISTED doc-frequency dim — verified in the
+    # plan text: the exchange input is the [token, df] vocabulary dim
+    # out of the dim HashAggregate's cache. It runs unpartitioned only
+    # when the doc-frequency stats proved vocab_n <= _RANK_ROWS
+    # (jaccard.py); a larger vocabulary ranks partitioned by bucket.
+    # Every name below routes through jaccard_self_join.
     "jaccard_self_qgram",
     "jaccard_self_ws",
     "jaccard_self_ws_hotsplit",
     "jaccard_self_ws_scored",
     "jaccard_knn",
     "jaccard_topk_pairs",
-    # Inner-join bitset path: same vocab-dim tid ranking over the
+    # Inner join: same vocab-dim tid ranking over the
     # cross-table dfreq, built once for the one side-tagged tkdf (its
     # windows are partitioned by side and key). Formerly in SINGLE_OK,
     # which skipped the check entirely; these now at least require the
