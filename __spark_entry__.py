@@ -106,25 +106,6 @@ def q_jaccard_self_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_jaccard_self_ws_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME filtered self-join as jaccard_self_ws, with the
-    heavy-hitter broadcast split engaged (hot_df_threshold): tokens in
-    >= 200 documents get their doc-freq row broadcast (map-side join,
-    no shuffle) while the cold tail takes the shuffle join — the
-    mitigation for the skewed tokens ⋈ dfreq exchange that AQE
-    structurally cannot split (operators/jaccard.py _tkdf). Output
-    rows are identical to the baseline, so the unmodified
-    self_filtered_sql oracle grades it. At sf0.01 and sf0.1 the
-    31-word vocabulary takes the bitset path, whose tkdf build
-    broadcasts the whole dim, so the split does not engage there and
-    the plan is jaccard_self_ws's; tests/test_jaccard.py
-    test_auto_hot_split_engages_on_skew covers the split itself."""
-    return jaccard_self_join(
-        _docs(spark, sf_dir), "doc_id", "text", _WS, T_SELF,
-        hot_df_threshold=200,
-    )
-
-
 def q_jaccard_self_ws_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_self_join_brute_force(
         _docs(spark, sf_dir), "doc_id", "text", _WS, T_SELF
@@ -142,26 +123,6 @@ def q_jaccard_inner_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_inner_join(
         docs.filter(_EVEN), docs.filter(_ODD),
         "doc_id", "doc_id", "text", "text", _WS, T_INNER,
-    )
-
-
-def q_jaccard_inner_ws_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME two-table filtered join as jaccard_inner_ws, with the
-    heavy-hitter broadcast split engaged on the inner path (round 10,
-    VERDICT r9 #3): a token row whose own side's doc-freq is >= 200
-    joins its dfreq row by broadcast (map-side join, the hot set keyed
-    by (side, token)) while the cold tail takes the shuffle join — the
-    self-join split's anti-join + unionByName shape, run once over the
-    inner join's one side-tagged token frame (operators/jaccard.py
-    _tkdf). Output rows are identical, so the unmodified
-    inner_filtered_sql oracle grades it. At sf0.01 and sf0.1 the
-    31-word vocabulary takes the bitset path, where the split does not
-    engage (see q_jaccard_self_ws_hotsplit)."""
-    docs = _docs(spark, sf_dir)
-    return jaccard_inner_join(
-        docs.filter(_EVEN), docs.filter(_ODD),
-        "doc_id", "doc_id", "text", "text", _WS, T_INNER,
-        hot_df_threshold=200,
     )
 
 
@@ -1949,11 +1910,9 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- reference surface (SURVEY.md §2) ---
         "jaccard_self_ws": q_jaccard_self_ws,
-        "jaccard_self_ws_hotsplit": q_jaccard_self_ws_hotsplit,
         "jaccard_self_ws_brute": q_jaccard_self_ws_brute,
         "jaccard_self_qgram": q_jaccard_self_qgram,
         "jaccard_inner_ws": q_jaccard_inner_ws,
-        "jaccard_inner_ws_hotsplit": q_jaccard_inner_ws_hotsplit,
         "jaccard_self_ws_scored": q_jaccard_self_ws_scored,
         "jaccard_topk_pairs": q_jaccard_topk_pairs,
         "evaluate_metrics": q_evaluate_metrics,
@@ -2123,9 +2082,6 @@ def _all_oracle_sql() -> dict[str, str]:
         "jaccard_self_ws": ref_sql.self_filtered_sql(
             "documents", "doc_id", "text", _WS, T_SELF, "l_doc_id", "r_doc_id"
         ),
-        "jaccard_self_ws_hotsplit": ref_sql.self_filtered_sql(
-            "documents", "doc_id", "text", _WS, T_SELF, "l_doc_id", "r_doc_id"
-        ),
         "jaccard_self_ws_brute": ref_sql.self_brute_sql(
             "documents", "doc_id", "text", _WS, T_SELF, "l_doc_id", "r_doc_id"
         ),
@@ -2133,10 +2089,6 @@ def _all_oracle_sql() -> dict[str, str]:
             "documents", "doc_id", "text", _QG, T_QGRAM, "l_doc_id", "r_doc_id"
         ),
         "jaccard_inner_ws": ref_sql.inner_filtered_sql(
-            _DOCS_EVEN, _DOCS_ODD, "doc_id", "doc_id", "text", "text",
-            _WS, T_INNER, "l_doc_id", "r_doc_id",
-        ),
-        "jaccard_inner_ws_hotsplit": ref_sql.inner_filtered_sql(
             _DOCS_EVEN, _DOCS_ODD, "doc_id", "doc_id", "text", "text",
             _WS, T_INNER, "l_doc_id", "r_doc_id",
         ),

@@ -20,7 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 BENCH_QUERIES = [
     "jaccard_self_ws",
-    "jaccard_self_ws_hotsplit",
     "jaccard_self_ws_brute",
     "jaccard_self_qgram",
     "jaccard_inner_ws",
@@ -140,7 +139,7 @@ def main() -> None:
     # Ordering-bias fix (round 11, VERDICT r10 #3): with query-major
     # iteration the FIRST query's timed runs all land in the coldest
     # part of the session — r10's jaccard_self_ws (position 1) benched
-    # 1.9x above its plan-identical hotsplit twin on pure position.
+    # 1.9x above a plan-identical twin query on pure position.
     # Now the WHOLE list warms untimed first (every plan shape pays
     # its codegen JIT before any clock starts), then the timed pass is
     # iteration-major with a seeded per-iteration shuffle, so each

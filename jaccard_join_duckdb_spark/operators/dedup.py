@@ -46,7 +46,6 @@ from ..functions.text import poly_hash
 from ..tokenizers import Tokenizer, WhitespaceTokzr
 from .jaccard import (
     _MAX_BITSET_VOCAB,
-    _MAX_BROADCAST_VERIFY_TOKENS,
     _attach,
     _doc_bitsets,
     _length_cond,
@@ -99,8 +98,7 @@ MERSENNE31 = 2147483647
 
 # connected_components: broadcast the per-round label table into the
 # edge join when the (constant) node count proves it bounded — ~16 B
-# a row, so 2M labels ≈ 32 MB, the same budget class as the jaccard
-# verification attach gate. Above the cap the sort-merge stays.
+# a row, so 2M labels ≈ 32 MB. Above the cap the sort-merge stays.
 _CC_BROADCAST_MAX_LABELS = 2_000_000
 
 # connected_components: run the whole hash-min fixpoint vectorized on
@@ -127,14 +125,15 @@ _MAX_BITSET_WORDS = 8
 # tools/bench_ab.py, min-of-3, rows identical): dedup_ngram 3.96 s
 # SHJ vs 4.24 s SMJ at 2,333 keys (~73 per shuffle partition).
 # Applied only when (a) the collected dfreq proves the build side
-# bounded (sum df <= _MAX_BROADCAST_VERIFY_TOKENS — the same budget
-# the verify attach broadcasts use), AND (b) key density clears
+# bounded (sum df <= _SHJ_MAX_BUILD_ROWS token rows, ~60 MB
+# serialized), AND (b) key density clears
 # _SHJ_MIN_KEYS_PER_PARTITION: the jaccard-side A/B measured a 3.5×
 # LOSS at 31 keys / 32 partitions (<=1 key per partition leaves one
 # giant hash chain per partition, where sorted-run merging streams
 # the same groups fine) and a tie at ~15 keys/partition. At corpus
 # scale the gracefully-spilling sort-merge stays.
 _NGRAM_CAND_SHUFFLE_HASH = True
+_SHJ_MAX_BUILD_ROWS = 2_000_000
 _SHJ_MIN_KEYS_PER_PARTITION = 32
 
 
@@ -875,7 +874,7 @@ def _ngram_bitset_pipeline(
         _NGRAM_CAND_SHUFFLE_HASH
         and 0
         < sum(r["df"] for r in dfreq_rows)
-        <= _MAX_BROADCAST_VERIFY_TOKENS
+        <= _SHJ_MAX_BUILD_ROWS
         and vocab_n
         >= _SHJ_MIN_KEYS_PER_PARTITION * _shuffle_partitions(toks)
     )

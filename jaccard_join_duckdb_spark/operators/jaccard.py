@@ -39,38 +39,39 @@ Scale design (100 TB target):
 - The self and inner joins share one candidate generator, written once
   per stage: :func:`_doc_freq` (df per token; the inner join's
   cross-table ``l_df * r_df`` with a widow placeholder; the ``tid``
-  rank), :func:`_tkdf` (tokens ⋈ df with ``pos``, the token replaced
-  by its tid; the hot-token split off the bitset path),
-  :func:`_gate_stats`,
-  :func:`_candidates` (prefix filters and the token equi-join) and
-  :func:`_verify`. The self join runs them with its one token frame on
-  both sides; each join keeps only its pair predicate, and the inner
-  join its side swap.
+  rank; the duplicate-row count), :func:`_tkdf` (tokens ⋈ df with
+  ``pos``, the token replaced by its tid; the hot-token split off the
+  bitset path), :func:`_candidates` (prefix filters and the token
+  equi-join) and :func:`_verify`. The self join runs them with its one
+  token frame on both sides; each join keeps only its pair predicate,
+  and the inner join its side swap.
 - The inner join runs every stage once, over ONE side-tagged token
   frame ``(side, key, len, token)`` (the R-S join of Vernica, Carey
   and Li, SIGMOD 2010, tags records by relation the same way): one
   df aggregate with per-side counts, one ``tkdf`` windowed over
-  ``(side, key)``, one gate job; the candidate join and the verify
-  read its ``side == i`` views. Each side's key keeps its own column
-  when the two key types differ, so no cast joins them.
+  ``(side, key)``, one widow-count job for the side swap; the
+  candidate join and the verify read its ``side == i`` views. Each
+  side's key keeps its own column when the two key types differ, so
+  no cast joins them.
 - One integer token dictionary serves every path: ``tid`` order is
   ``(df, token)`` order, so from ``tkdf`` on — the prefixes, the
-  candidate equi-join, the gate job and both verifies — tokens are
-  integers, and the array verify intersects integer arrays (Spark's
-  primitive hash set; string arrays take a boxed one). A vocabulary of
-  at most ``_RANK_ROWS`` tokens ranks in one unpartitioned window
-  (dense int tids, which the bitset path reads as bit numbers); a
-  larger one ranks per bucket of sampled ``(df, token)`` split points
-  into bigint tids, so no window sorts the whole vocabulary on one
-  partition.
+  candidate equi-join and both verifies — tokens are integers, and the
+  array verify intersects integer arrays (Spark's primitive hash set;
+  string arrays take a boxed one). A vocabulary of at most
+  ``_RANK_ROWS`` tokens ranks in one unpartitioned window (dense int
+  tids, which the bitset path reads as bit numbers); a larger one
+  ranks per bucket of sampled ``(df, token)`` split points into bigint
+  tids, so no window sorts the whole vocabulary on one partition.
 - Token frames, the doc-frequency dim and ``tkdf`` are persisted
   (MEMORY_AND_DISK): candidates and verification each scan ``tkdf``
-  twice, and every plan decision (bitset vocabulary, hot-token split,
-  broadcast attach, verify strategy, side swap) reads its scalars from
-  two small aggregates over persisted frames — the dim's statistics
-  and the gate job (on the inner join's bitset path only the widow
-  counts of the side swap: :func:`_widow_counts`) — instead of
-  re-running the tokenize chain.
+  twice. Every plan decision (bitset vocabulary, hot-token split,
+  verify strategy) reads its scalars from ONE eager aggregate over the
+  persisted dim, and the inner join's side swap from one more, its
+  widow counts (:func:`_widow_counts`), instead of re-running the
+  tokenize chain. A self join runs one Spark action before its final
+  query, an inner join two (plus the tid sample of a vocabulary above
+  ``_RANK_ROWS``): each action costs a fixed scheduling round-trip,
+  which at small sizes outweighs its rows.
 - When the vocabulary fits ``_MAX_BITSET_VOCAB`` tokens, the candidate
   join verifies each pair on the popcount of its documents' bitsets
   and emits it once, with no verify stage. Otherwise verification is
@@ -85,9 +86,11 @@ Scale design (100 TB target):
   applied as pre-join filters, shrinking shuffle input; the hot-token
   skew inherent to token equi-joins is handled by AQE skew-join
   splitting (enabled in :mod:`..session`).
-- The doc-frequency join (tokens ⋈ df-per-token) is left to AQE to
-  broadcast when small; at 100 TB the df table is itself large and
-  the shuffle join on ``token`` is the right plan.
+- The doc-frequency join (tokens ⋈ df-per-token) and the verify's
+  attach joins carry no hint: AQE broadcasts whichever side its run-time
+  size shows small; at 100 TB the df table and the per-document
+  attach tables are themselves large and the shuffle joins are the
+  right plan.
 """
 
 from __future__ import annotations
@@ -353,7 +356,8 @@ _RANK_SAMPLE_PER_BUCKET = 64
 # with each other either way and fall to the token tiebreak; real
 # products are <= count(l)*count(r) < 2^63-1 anywhere long arithmetic
 # holds), so the two driver-side count jobs are dropped. The widow
-# counts for the side swap are decision-bearing and stay (_gate_stats).
+# counts for the side swap are decision-bearing and stay
+# (_widow_counts).
 _WIDOW_DF = (1 << 63) - 1
 
 
@@ -366,7 +370,7 @@ class _DocFreq(NamedTuple):
     vocab: int
     n_tok: int  # token rows, both sides
     max_df: int  # largest per-side df
-    sumsq: float  # Σ over tokens of left df × right df
+    dup_rows: int  # duplicate (doc, token) rows, all sides
     n_words: int  # bitset words; 0 when the vocabulary is off the bitset
     hot_thr: int | None  # heavy-hitter split threshold; None disables
 
@@ -375,12 +379,13 @@ def _doc_freq(
     tokenizer: Tokenizer,
     hot_df_threshold: int | str | None,
     tokens: DataFrame,
-    tagged: bool = False,
+    doc: tuple[str, ...] = ("id",),
 ) -> _DocFreq:
     """Document frequency of every token (jaccard_join.py:127-130) for
-    a self join's token frame or, ``tagged``, the inner join's
-    side-tagged one, persisted, plus the plan decisions its statistics
-    make.
+    a self join's token frame or the inner join's side-tagged one
+    (``doc`` names the columns that identify a document, as in
+    :func:`_tkdf`: ``("side", <key columns>)`` when tagged), persisted,
+    plus the plan decisions its statistics make.
 
     The inner join's df is the cross-table product ``l_df * r_df``,
     with :data:`_WIDOW_DF` for a token one side lacks
@@ -389,16 +394,18 @@ def _doc_freq(
     aggregates, no outer join) and stay in the dim, because hotness is
     a per-side property.
 
-    ONE eager aggregate over the persisted dim drives every decision
-    (round 10 — previously three separate probe jobs): the vocabulary
-    picks bitset verification (when a document's token set fits in a
-    few 64-bit words — measured ~8x faster than per-pair
+    ONE eager aggregate over the persisted dim drives every decision:
+    the vocabulary picks bitset verification (when a document's token
+    set fits in a few 64-bit words — measured ~8x faster than per-pair
     array_intersect on the dense q-gram corpus), ``N`` and the largest
-    per-side df engage the heavy-hitter split, and ``Σ l_df × r_df``
-    (``Σ df²`` for a self join) feeds the sparse fast decline of
-    :func:`_cheap_decline`. The dim is the algorithm's own required
-    shuffle; persisting it means the tkdf build reuses it, so the only
-    added cost is reading back the vocab-sized table once.
+    per-side df engage the heavy-hitter split, and ``dup_rows`` picks
+    the array or the three-way verify (:func:`_verify`). ``dup_rows``
+    sums a per-token ``count - count_distinct(doc)``, the exact count
+    of duplicate ``(doc, token)`` rows; a ``rows_distinct`` tokenizer
+    promises 0, so the hash-set aggregate runs only for the others.
+    The dim is the algorithm's own required shuffle; persisting it
+    means the tkdf build reuses it, so the only added cost is reading
+    back the vocab-sized table once.
 
     The returned ``dim`` carries each token's integer ``tid``
     (:func:`_tid_rank`), whose order is the reference's ``(df,
@@ -408,28 +415,33 @@ def _doc_freq(
     and Srikant, WWW 2007). The tids are dense ``1..V`` when the
     vocabulary fits ``_RANK_ROWS``, and the bitset path, the one
     reader that needs them dense, is gated on that."""
+    tagged = "side" in doc
     if tagged:
         side_dfs = ("l_df", "r_df")
-        dim = tokens.groupBy("token").agg(*[
-            F.count_if(F.col("side") == i).alias(c)
-            for i, c in enumerate(side_dfs)
-        ]).withColumn("df", F.when(
+        counts = [F.count_if(F.col("side") == i).alias(c)
+                  for i, c in enumerate(side_dfs)]
+    else:
+        side_dfs = ("df",)
+        counts = [F.count(F.lit(1)).alias("df")]
+    if not tokenizer.rows_distinct:
+        # count(DISTINCT a, b, ..) skips rows with a NULL column, and an
+        # inner join with differently typed keys has one NULL key per row
+        distinct = [*doc] if len(doc) <= 2 else [F.struct(*doc)]
+        counts.append(
+            (F.count(F.lit(1)) - F.count_distinct(*distinct)).alias("dup")
+        )
+    dim = tokens.groupBy("token").agg(*counts)
+    if tagged:
+        dim = dim.withColumn("df", F.when(
             (F.col("l_df") > 0) & (F.col("r_df") > 0),
             F.col("l_df") * F.col("r_df"),
         ).otherwise(F.lit(_WIDOW_DF)))
-    else:
-        side_dfs = ("df",)
-        dim = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     dim = dim.persist(StorageLevel.MEMORY_AND_DISK)
     row = dim.agg(
         F.count(F.lit(1)).alias("vocab"),
         *[F.sum(c).alias(f"n_{c}") for c in side_dfs],
         *[F.max(c).alias(f"m_{c}") for c in side_dfs],
-        # double: immune to long overflow at corpus scale; it only
-        # feeds a threshold comparison
-        F.sum(
-            (F.col(side_dfs[0]) * F.col(side_dfs[-1])).cast("double")
-        ).alias("sumsq"),
+        (F.lit(0) if tokenizer.rows_distinct else F.sum("dup")).alias("dup"),
     ).first()
     vocab = int(row["vocab"] or 0)
     n_tok = sum(int(row[f"n_{c}"] or 0) for c in side_dfs)
@@ -451,7 +463,7 @@ def _doc_freq(
         hot_thr = hot_df_threshold
     return _DocFreq(
         _tid_rank(dim, vocab), dim, side_dfs, vocab, n_tok, max_df,
-        float(row["sumsq"] or 0.0), n_words, hot_thr,
+        int(row["dup"] or 0), n_words, hot_thr,
     )
 
 
@@ -531,8 +543,8 @@ def _tkdf(
 
     The string token is dropped at the join: the tkdf's ``token``
     column carries the dim's ``tid`` (:func:`_tid_rank`), so every
-    later stage — the prefix filters, the candidate equi-join, the gate
-    job and both verifies — keys on an integer. ``pos`` =
+    later stage — the prefix filters, the candidate equi-join and both
+    verifies — keys on an integer. ``pos`` =
     ``row_number() OVER (PARTITION BY doc ORDER BY tid)``, which is
     the reference's ``(df, token)`` order (jaccard_join.py:132-137);
     ``l_id = concat(len, '_', id)`` is the self join's pair-ordering
@@ -632,200 +644,12 @@ def tokens_with_doc_freq(
                  with_pair_key=with_pair_key, keep_token=True)
 
 
-# Verification-side broadcast gate (round 8). The verification attach
-# tables are ONE ROW PER DOCUMENT (pos-ordered token arrays), while
-# the candidate set they attach to is quadratic-ish in corpus density — at low thresholds it dwarfs the
-# doc tables by orders of magnitude (refscale inner db100 t=0.3: 82M
-# candidate pairs vs 50K docs/side). A sort-merge attach shuffles and
-# SORTS every candidate row twice, spilling once a partition's sort
-# exceeds memory — measured 510 s → 78 s at that cell (identical
-# 16,505 output rows) when the doc tables broadcast instead: the
-# candidate stream never leaves its map side. Broadcast only when
-# BOTH gates clear (round 9): the side's row count fits the size cap
-# below, AND the pre-join candidate bound says the broadcast pays
-# (see _BROADCAST_VERIFY_MIN_RATIO — on small/high-threshold corpora
-# the hint was measured a net LOSS). At corpus scale the gates leave
-# the shuffle join in place, which is then the right plan (a 100 TB
-# corpus' doc table cannot broadcast).
-_MAX_BROADCAST_VERIFY_DOCS = 250_000
-# The generic (bag-mode) verification is the reference's pairs x
-# tokens three-way join — its attach tables are TOKEN-level (one row
-# per (doc, token)), so they get their own, higher-row gate (~60 MB
-# serialized at the cap; the candidate stream the broadcast saves
-# from shuffling is orders of magnitude larger). Measured at the
-# refscale inner stress cell (db100 t=0.3, 82M candidates, 692K-row
-# token tables): 508 s → 119 s, identical rows. Token counts come out
-# of the fused gate-stats aggregate over the persisted tkdf.
-_MAX_BROADCAST_VERIFY_TOKENS = 2_000_000
-
-
-def _doc_count_probe(df: DataFrame) -> int:
-    """``min(count(df), _MAX_BROADCAST_VERIFY_DOCS + 1)`` via a
-    limit-bounded count — the broadcast gate only needs to know
-    whether the side is under its cap, so a corpus-scale frame stops
-    scanning after cap+1 rows instead of paying a full count job
-    (round 9, ADVICE r8 #2; VERDICT r8 nit #1). Exact whenever the
-    result is <= every cap it gates (all caps are <= the probe bound),
-    and any value above a cap declines that broadcast identically."""
-    return df.limit(_MAX_BROADCAST_VERIFY_DOCS + 1).count()
-
-
-# Benefit gate (round 9). Broadcasting an attach table costs one
-# collect+serialize+rebroadcast of the whole table per join; the win
-# that motivated the gate (r8 stress cells: inner db100 t=0.3,
-# 510 s → 108 s, rows bit-identical) comes specifically from keeping
-# the candidate stream OUT of a spilling sort-merge — when the sorted
-# candidate partitions fit in memory, a 32-core sort-merge of tens of
-# millions of rows is fast and the hint machinery is measured pure
-# overhead (interleaved A/B, BENCHMARKS.md round 9: +0.3–0.5 s on
-# 2 s cells, up to ~8 s LOST at db100 t=0.4 where the 1.4M-row token
-# broadcasts beat nothing). The candidate stream's size has an exact
-# pre-join upper bound — sum over tokens of (indexing-prefix df ×
-# probing-prefix df), one map-side-combined aggregate over the
-# persisted token table — and the spill regime is indexed by
-# bound / TOKEN-rows of the attach's side (round-10 correction: the
-# round-9 code divided by each attach's OWN rows, which for doc-level
-# attaches is ~100× smaller and let sparse-corpus attaches clear a
-# threshold fitted on token-row ratios — db10 5g t=0.5, ratio-on-docs
-# 120 → broadcast, measured a LOSS vs declining; its ratio-on-tokens
-# is 1.2). Calibration (round 11, tools/gate_ab_bench.py: three-arm
-# interleaved order-rotated same-session A/Bs — forced broadcast vs
-# this decision vs the r9 doc-row decision, min-of-3, identical rows
-# in every arm), all bound/token-rows:
-#   1.2   db10 5g t=0.5   LOSS  (decline 6.04 s vs forced 7.44 s)
-#   6.2   db50 ws t=0.5   win   (forced 6.17 s vs declined 6.64 s)
-#   9.9   db10 ws t=0.3   tie   (2.27 / 2.31 s)
-#  12.0   db100 ws t=0.5  WIN   (forced 8.42 s vs declined 12.71 s)
-#  13.9   db50 ws t=0.4   WIN   (8.46 vs 9.96 s)
-#  14.2   db10 5g t=0.2   WIN   (7.45 vs 9.92 s)
-#  27.3   db100 ws t=0.4  WIN   (14.09 vs 21.92 s — round 9 had this
-#                                point as a loss; stale on r11 code)
-#  47+    db50/db100 t=0.3, sf0.1 qgram 55.9, sf0.1 ws 510: WIN
-#                               (round-10 matched A/Bs)
-# Threshold 4 separates the measured loss (1.2) from every measured
-# win (>= 6.2) with ~3× margin below and 1.5× above. The round-10
-# value of 40 was fitted when ratio 27 still measured a loss; the
-# round-11 re-measurement moved the whole mid band (6–27) decisively
-# to the broadcast side — VERDICT r10 #1's regression was exactly
-# this gate declining the db100/db50 ws t=0.5 broadcasts.
-_BROADCAST_VERIFY_MIN_RATIO = 4
-
-# No document-count FLOOR below which the stats job is skipped
-# (round 10). Round 9 shipped `_GATE_STATS_MIN_DOCS = 25_000`, assuming
-# small corpora could never reach the spill regime — but document count
-# is the wrong proxy for candidate-stream density: a dense corpus
-# (small vocabulary, e.g. the 31-word synthetic profile) reaches
-# bound/attach-rows >= 60 at 5K docs, and the judge's matched A/B
-# measured the floor a ~25% net LOSS there (qgram sf0.1: 9.6 s floor-on
-# vs 7.6 s floor-off — the fused stats job on a persisted <=250K-doc
-# tkdf costs well under a second and the ratio gate earns it back).
-# The bound-ratio gate (_BROADCAST_VERIFY_MIN_RATIO) is itself the
-# density test, so it decides alone whenever docs <= the size cap.
-
-
-def _cheap_decline(sumsq: float, n_tok: int) -> bool:
-    """Sparse-corpus fast decline (round 10): ``sumsq`` (the doc-frequency
-    stage's Σ over tokens of left df × right df) is a sound upper bound
-    on the candidate bound — per token, indexing-prefix rows ×
-    probing-prefix rows <= the product of the two sides' dfs. When even
-    it cannot clear the ratio for ``n_tok``, the smallest token-row
-    denominator any attach decides against, no broadcast can pay and
-    the exact bound is not needed. Dense corpora (the broadcast
-    winners) blow past this test and pay the exact job."""
-    return sumsq < _BROADCAST_VERIFY_MIN_RATIO * max(n_tok, 1)
-
-
-class _GateStats(NamedTuple):
-    """The gate-stats job's output (see :func:`_gate_stats`)."""
-
-    widows: tuple[int, ...]  # per side: indexing-prefix rows of widows
-    docs: tuple[int, ...]  # per side
-    tokens: tuple[int, ...]  # per side: token rows
-    bound: tuple[int, int]  # candidate bound, first side indexing / last
-    dup_rows: int  # duplicate (id, token) rows, all sides
-
-
-def _gate_stats(
-    tagged: DataFrame,
-    n_sides: int,
-    t: float,
-    doc: tuple[str, ...] = ("side", "id"),
-    skip_dup: bool = False,
-) -> _GateStats:
-    """Every scalar the verify and side-swap gates read, in ONE
-    aggregate job (a ``groupBy("token")`` over the persisted tkdf,
-    side-tagged: a ``side`` column numbers its ``n_sides`` sides, and
-    ``doc`` names the columns that identify a document):
-
-    - per side, the widow count that mirrors the reference's
-      ``fetchall()[0][0]`` side-swap decision (indexing-prefix rows
-      whose df is :data:`_WIDOW_DF`; jaccard_join.py:324-353), the doc
-      count (``pos == 1`` rows: every tokenized doc has one) and the
-      token-row count;
-    - the candidate bound for both orientations: per token, ``a`` rows
-      in the indexing prefix of one side × ``b`` rows in the probing
-      prefix of the other bound the candidate equi-join's output
-      (``bound[0]``: the first side indexes, ``bound[1]``: the last
-      side does; a self join's two are equal);
-    - ``dup_rows`` (rows minus distinct ``doc`` values, summed over
-      tokens), the exact count of duplicate ``(id, token)`` rows, which
-      picks the verify strategy (see :func:`_verify`).
-
-    One job because each scalar job costs a driver scheduling
-    round-trip, the fixed floor that dominates small joins.
-
-    ``skip_dup`` (round 12): a ``rows_distinct`` tokenizer has no
-    duplicate rows, so its caller skips the per-token
-    ``count_distinct`` — the only hash-set aggregate in the job;
-    everything else is plain compiled sums — and gets the known
-    ``dup_rows = 0``."""
-    idx = _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-    flags = {
-        "c": F.lit(True),
-        "a": idx,
-        "b": _probing_prefix_cond(F.col("len"), F.col("pos"), t),
-        "d": F.col("pos") == 1,
-        "w": idx & (F.col("df") == _WIDOW_DF),
-    }
-    sides = range(n_sides)
-    # count(DISTINCT a, b, ..) skips rows with a NULL column, and an
-    # inner join with differently typed keys has one NULL key per row
-    distinct = [*doc] if len(doc) == 2 else [F.struct(*doc)]
-    per_token = tagged.groupBy("token").agg(
-        *[
-            F.sum(((F.col("side") == i) & flag).cast("long")).alias(f"{k}{i}")
-            for k, flag in flags.items()
-            for i in sides
-        ],
-        *([] if skip_dup else [
-            (F.count(F.lit(1)) - F.count_distinct(*distinct)).alias("dup")
-        ]),
-    )
-    last = sides[-1]
-    row = per_token.agg(
-        *[F.sum(f"{k}{i}").alias(f"{k}{i}") for k in "wdc" for i in sides],
-        F.sum(F.col("a0") * F.col(f"b{last}")).alias("bound0"),
-        F.sum(F.col(f"a{last}") * F.col("b0")).alias("bound1"),
-        *([] if skip_dup else [F.sum("dup").alias("dup")]),
-    ).first()
-
-    def get(name: str) -> int:
-        return int(row[name] or 0)
-
-    return _GateStats(
-        *(tuple(get(f"{k}{i}") for i in sides) for k in "wdc"),
-        (get("bound0"), get("bound1")),
-        0 if skip_dup else get("dup"),
-    )
-
-
 def _widow_counts(tagged: DataFrame, t: float) -> tuple[int, int]:
-    """The inner join's side-swap scalars alone — per side, the
-    indexing-prefix rows whose df is :data:`_WIDOW_DF` (see
-    :func:`_gate_stats`) — as one global aggregate over the side-tagged
-    tkdf, with no ``groupBy("token")``. The bitset path reads nothing
-    else: its candidate join verifies, so there is no attach to gate
-    and no duplicate row to count."""
+    """The inner join's side-swap scalars: per side, the indexing-prefix
+    rows whose df is :data:`_WIDOW_DF`, the reference's
+    ``fetchall()[0][0]`` counts (jaccard_join.py:324-353), in one global
+    aggregate over the persisted side-tagged tkdf, with no
+    ``groupBy("token")``."""
     widow = (
         _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
         & (F.col("df") == _WIDOW_DF)
@@ -835,41 +659,6 @@ def _widow_counts(tagged: DataFrame, t: float) -> tuple[int, int]:
         for i in (0, 1)
     ]).first()
     return int(row["w0"]), int(row["w1"])
-
-
-def _verify_attach(
-    per_doc: DataFrame,
-    n_rows: int,
-    *,
-    token_level: bool = False,
-    bound: int | None = None,
-    decide_rows: int | None = None,
-) -> DataFrame:
-    """A verification attach table, broadcast when BOTH gates clear:
-    the row count fits the size cap (``_MAX_BROADCAST_VERIFY_DOCS`` for
-    doc-level tables, ``_MAX_BROADCAST_VERIFY_TOKENS`` for token-level
-    ones) AND the candidate-stream bound says the broadcast pays
-    (``bound >= _BROADCAST_VERIFY_MIN_RATIO * decide_rows`` — see the
-    calibration note at _BROADCAST_VERIFY_MIN_RATIO). ``decide_rows``
-    (round 10) is the TOKEN-row count of the attach's side even for
-    doc-level attaches: the calibrated spill-regime indicator is
-    candidate density relative to the token table the candidates were
-    generated from — a doc-level attach has ~100× fewer rows than its
-    side's token table, so dividing the same bound by doc rows let
-    sparse-corpus attaches (measured losses) clear a threshold that
-    was fitted on token-row ratios. Defaults to ``n_rows`` (the
-    token-level attaches, where the two coincide). Caps and ratio are
-    read at CALL time so tests can pin both fallbacks by patching the
-    module attributes."""
-    cap = (_MAX_BROADCAST_VERIFY_TOKENS if token_level
-           else _MAX_BROADCAST_VERIFY_DOCS)
-    if not 0 < n_rows <= cap:
-        return per_doc
-    if decide_rows is None:
-        decide_rows = n_rows
-    if bound is not None and bound < _BROADCAST_VERIFY_MIN_RATIO * decide_rows:
-        return per_doc
-    return F.broadcast(per_doc)
 
 
 # --------------------------------------------------------------------------
@@ -931,20 +720,13 @@ def _set_overlap(n_words: int, l: str = "l", r: str = "r") -> Column:
     ))
 
 
-def _attach(
-    cand: DataFrame,
-    l_doc: DataFrame,
-    r_doc: DataFrame,
-    hint=lambda doc, side: doc,
-) -> DataFrame:
+def _attach(cand: DataFrame, l_doc: DataFrame, r_doc: DataFrame) -> DataFrame:
     """``cand(lid, rid, ...)`` joined with each side's one-row-per-
     document table on its ``id``, every column of that table prefixed
-    with the side (``lid, llen, lb0, ...``; ``rid, rarr, ...``).
-    ``hint(table, side)`` may wrap each prefixed table in a join hint
-    (the broadcast gates of :func:`_verify`)."""
+    with the side (``lid, llen, lb0, ...``; ``rid, rarr, ...``)."""
     for side, doc in (("l", l_doc), ("r", r_doc)):
         doc = doc.select(*[F.col(c).alias(side + c) for c in doc.columns])
-        cand = cand.join(hint(doc, side), f"{side}id")
+        cand = cand.join(doc, f"{side}id")
     return cand
 
 
@@ -1101,9 +883,6 @@ def _verify(
     t: float,
     n_words: int,
     dup_rows: int,
-    l_stats: tuple[int, int],
-    r_stats: tuple[int, int],
-    bound: int,
     out_cols: tuple[str, str],
     with_score: bool,
 ) -> DataFrame:
@@ -1120,17 +899,17 @@ def _verify(
 
     ``cand`` comes from :func:`_candidates`; ``l_tk``/``r_tk`` are the
     two sides' tkdfs (one frame for a self join, the side views of the
-    one side-tagged tkdf for an inner join). Each side's
-    ``(n_docs, n_tok)`` stats and the candidate ``bound`` feed the
-    broadcast gates of :func:`_verify_attach`. The strategy follows
-    from the data:
+    one side-tagged tkdf for an inner join). The attach joins carry no
+    hint: AQE broadcasts an attach table when its run-time size is
+    small and shuffles it otherwise. The strategy follows from the
+    data:
 
     - bitset (``n_words > 0``: the vocabulary fits
       ``_MAX_BITSET_VOCAB`` and the tokenizer promises distinct rows):
       the candidate join already verified each pair on its full
       popcount, so this is a plain select.
     - array (``dup_rows == 0``: no duplicate ``(id, token)`` rows,
-      promised by the tokenizer or measured by the gate statistics):
+      promised by the tokenizer or counted by :func:`_doc_freq`):
       ``sfx`` by compiled slice + array_intersect of each document's
       sorted tids (:func:`_pos_token_arrays`). Exact because the
       suffix row-pair count equals the set overlap when no row
@@ -1138,7 +917,7 @@ def _verify(
       refscale profile cells whose rows were distinct at runtime; an
       unsliced intersect of the full arrays was slower still on the
       5-gram t=0.3 benchmark join.
-    - three-way (duplicates present, or never measured: ``-1``): the
+    - three-way (duplicates present): the
       reference's pairs × tokens join, which counts every duplicate
       row pair. An interpreted higher-order pair count that is exact
       under duplicates was measured 2× slower than it (higher-order
@@ -1149,32 +928,17 @@ def _verify(
     if n_words:  # the candidate join verified every pair
         out, overlap = cand, F.col("overlap")
     elif dup_rows == 0:
-        stats = {"l": l_stats, "r": r_stats}
-
-        def gate(doc: DataFrame, side: str) -> DataFrame:
-            n_docs, n_tok = stats[side]
-            return _verify_attach(doc, n_docs, bound=bound, decide_rows=n_tok)
-
         out = _attach(
-            cand, _pos_token_arrays(l_tk), _pos_token_arrays(r_tk), gate
+            cand, _pos_token_arrays(l_tk), _pos_token_arrays(r_tk)
         ).withColumn("sfx", _suffix_overlap(
             F.col("larr"), F.col("llen"), F.col("lmax"),
             F.col("rarr"), F.col("rlen"), F.col("rmax"),
         )).filter((F.col("sfx") >= 1) & accept)
     else:
         out = (
-            cand.join(
-                _verify_attach(
-                    l_tk.alias("VL"), l_stats[1], token_level=True,
-                    bound=bound,
-                ),
-                F.col("lid") == F.col("VL.id"),
-            )
+            cand.join(l_tk.alias("VL"), F.col("lid") == F.col("VL.id"))
             .join(
-                _verify_attach(
-                    r_tk.alias("VR"), r_stats[1], token_level=True,
-                    bound=bound,
-                ),
+                r_tk.alias("VR"),
                 (F.col("rid") == F.col("VR.id"))
                 & (F.col("VL.token") == F.col("VR.token"))
                 & (F.col("VL.pos") >= F.col("lmax"))
@@ -1238,13 +1002,12 @@ def jaccard_self_join(
     affects only the tkdf build plan, never the result.
 
     The shared stages run with the one token frame on both sides:
-    :func:`_doc_freq`, :func:`_tkdf`, :func:`_gate_stats`,
-    :func:`_candidates` and :func:`_verify`. Specific to the self join
-    are the pair predicate (``L.l_id < R.l_id``, each unordered pair
-    once, plus the one-sided length filter) and the doc-count probe
-    that skips the gate-stats job for a corpus over the broadcast
-    cap. The bitset path has no verify attach to gate, so it runs
-    neither."""
+    :func:`_doc_freq`, :func:`_tkdf`, :func:`_candidates` and
+    :func:`_verify`. Specific to the self join is the pair predicate
+    (``L.l_id < R.l_id``, each unordered pair once, plus the one-sided
+    length filter). Building the frame runs one Spark action, the
+    doc-frequency statistics (and the tid sample of a vocabulary above
+    ``_RANK_ROWS``); everything after it is lazy."""
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
@@ -1253,41 +1016,12 @@ def jaccard_self_join(
     tokens = tokenizer.tokenize(df, key_attr, join_attr).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    # freq.cache stays persisted: tkdf is still lazy, so freeing the
+    # dim here would make the final query aggregate the tokens again
     freq = _doc_freq(tokenizer, hot_df_threshold, tokens)
     tkdf = _tkdf(
         tokens, freq.dim, freq.n_words, freq.hot_thr, with_pair_key=True
     ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Broadcast-gate scalars: a bounded probe first — corpus-scale
-    # inputs stop scanning at cap+1 rows (their attach tables cannot
-    # broadcast anyway) — then the gate-stats job; the bound-ratio gate
-    # in _verify_attach decides from there (no doc-count floor:
-    # density, not document count, is what the gate must test, and the
-    # bound IS the density measurement).
-    stats, bound = (0, 0), 0
-    # duplicate (id, token) rows: none when the tokenizer promises
-    # distinct rows, unknown (-1) until the gate-stats job measures it
-    dup_rows = 0 if tokenizer.rows_distinct else -1
-    if (
-        not freq.n_words
-        and not _cheap_decline(freq.sumsq, freq.n_tok)
-        and _doc_count_probe(df) <= _MAX_BROADCAST_VERIFY_DOCS
-    ):
-        g = _gate_stats(
-            tkdf.select(F.lit(0).alias("side"), "id", "token", "len", "pos",
-                        "df"),
-            1, t, skip_dup=tokenizer.rows_distinct,
-        )
-        stats, bound = (g.docs[0], g.tokens[0]), g.bound[0]
-        dup_rows = g.dup_rows
-        # The gate-stats aggregate materialized tkdf into its cache,
-        # so the vocab-sized dim cache entry is now dead weight — free
-        # it (ADVICE r10: repeated join calls in one session
-        # accumulated one vocab-sized entry each). On the skip paths
-        # tkdf is still lazy — unpersisting there would force one
-        # extra dim shuffle when tkdf first materializes, so those
-        # keep the cache entry until session clearCache.
-        freq.cache.unpersist()
 
     cand = _candidates(
         tkdf, tkdf, t,
@@ -1296,7 +1030,7 @@ def jaccard_self_join(
         freq.n_words,
     )
     return _verify(
-        cand, tkdf, tkdf, t, freq.n_words, dup_rows, stats, stats, bound,
+        cand, tkdf, tkdf, t, freq.n_words, freq.dup_rows,
         (f"{l_out_prefix}{key_attr}", f"{r_out_prefix}{key_attr}"),
         with_score,
     )
@@ -1407,19 +1141,18 @@ def jaccard_inner_join(
     its records the same way: :func:`_doc_freq` (one aggregate with
     per-side counts, cross-table df, widow placeholder
     :data:`_WIDOW_DF`), :func:`_tkdf` (one window build over ``(side,
-    key)``, persisted once), the gate job, then :func:`_candidates` and
-    :func:`_verify` over the tkdf's ``side == i`` and ``side == j``
-    views. Keys of different types keep their own columns
+    key)``, persisted once), :func:`_widow_counts`, then
+    :func:`_candidates` and :func:`_verify` over the tkdf's ``side ==
+    i`` and ``side == j`` views. Keys of different types keep their own columns
     (:func:`_tag_sides`), so no cast converts one side's keys.
 
     Specific to the inner join are the side swap — the side with more
     indexing-prefix widows becomes the indexing side (ties go to
     (r, l): jaccard_join.py:353, SURVEY.md §4.3.4) — and the two-sided
-    length filter. The bitset path reads only the widow counts
-    (:func:`_widow_counts`); the array and three-way paths run the full
-    :func:`_gate_stats`, which also yields the candidate bound for
-    either orientation. The reference's two full-table counts (widow
-    placeholder) are replaced by an order-equivalent constant.
+    length filter. Building the frame runs two Spark actions on every
+    path: the doc-frequency statistics and the widow counts. The
+    reference's two full-table counts (widow placeholder) are replaced
+    by an order-equivalent constant.
     """
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
@@ -1430,17 +1163,13 @@ def jaccard_inner_join(
     )
     tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
     doc = ("side", *dict.fromkeys(keys))
-    freq = _doc_freq(tokenizer, hot_df_threshold, tokens, tagged=True)
+    freq = _doc_freq(tokenizer, hot_df_threshold, tokens, doc)
     tk = _tkdf(
         tokens, freq.dim, freq.n_words, freq.hot_thr, freq.side_dfs, doc
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    if freq.n_words:
-        # the bitset verify has no attach to gate: the side swap alone
-        g = _GateStats(_widow_counts(tk, t), (0, 0), (0, 0), (0, 0), 0)
-    else:
-        g = _gate_stats(tk, 2, t, doc, skip_dup=tokenizer.rows_distinct)
+    widows = _widow_counts(tk, t)
     # That job materialized the persisted tkdf, so the cross-table dim
-    # cache is now dead weight — free it (ADVICE r10).
+    # cache is now dead weight — free it.
     freq.cache.unpersist()
 
     def view(side: int) -> DataFrame:
@@ -1451,7 +1180,7 @@ def jaccard_inner_join(
 
     # Side swap: indexing side i keeps the short 2t/(1+t) prefix, the
     # probing side j takes the longer t prefix.
-    i, j = (0, 1) if g.widows[0] > g.widows[1] else (1, 0)
+    i, j = (0, 1) if widows[0] > widows[1] else (1, 0)
     idx_tk, prb_tk = view(i), view(j)
     cand = _candidates(
         idx_tk, prb_tk, t,
@@ -1464,8 +1193,7 @@ def jaccard_inner_join(
     # probing side's with the right, regardless of swap.
     prefixes = (l_out_prefix, r_out_prefix)
     return _verify(
-        cand, idx_tk, prb_tk, t, freq.n_words, g.dup_rows,
-        (g.docs[i], g.tokens[i]), (g.docs[j], g.tokens[j]), g.bound[i],
+        cand, idx_tk, prb_tk, t, freq.n_words, freq.dup_rows,
         (f"{prefixes[i]}{l_key_attr}", f"{prefixes[j]}{r_key_attr}"),
         with_score,
     )

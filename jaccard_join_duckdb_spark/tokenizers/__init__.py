@@ -33,13 +33,20 @@ from pyspark.sql.window import Window
 __all__ = ["Tokenizer", "QGramsTokzr", "DelimiterTokzr", "WhitespaceTokzr", "WordsTokzr"]
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
+def _ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     """Tokenization is compute-heavy per input row; a small parquet
     table arrives as 1-2 scan partitions (one row group), serializing
-    the whole pipeline on one core. Round-robin repartition to the
-    cluster's parallelism when the scan is narrower than that — a
-    no-op (and skipped) at real scale where scans already carry
-    thousands of partitions."""
+    the whole pipeline on one core. Repartition to the cluster's
+    parallelism when the scan is narrower than that — a no-op (and
+    skipped) at real scale where scans already carry thousands of
+    partitions.
+
+    With a ``key`` (the tokenizers' record key) the repartition hashes
+    on it, so every row of a record lands in one partition: the
+    tokenizer's own per-record aggregate (the q-gram ``collect_set``)
+    and a per-document window over a map-side join (the bitset path's
+    ``pos`` window) need no shuffle of their own. Without one it is
+    round-robin."""
     if df.isStreaming:
         return df  # micro-batch engine owns partitioning
     sc = df.sparkSession.sparkContext
@@ -56,7 +63,7 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     except Exception:
         n_files = 0
     if 0 < n_files < target:
-        return df.repartition(target)
+        return df.repartition(target, key) if key else df.repartition(target)
     # Unknown width (no file scan underneath: in-memory or derived
     # input) — leave untouched; local createDataFrame already slices
     # to defaultParallelism and post-shuffle DFs carry
@@ -103,7 +110,7 @@ class Tokenizer(ABC):
         Lowercasing at explode mirrors the reference's
         ``lower(unnest(tks))`` (``tokenizers/__init__.py:15``).
         """
-        df = _ensure_parallelism(df)
+        df = _ensure_parallelism(df, key)
         tks = self._token_list(F.col(val).cast("string"))
         if self.return_set:
             tks = F.array_distinct(tks)
@@ -156,12 +163,11 @@ class QGramsTokzr(Tokenizer):
         is re-evaluated by Catalyst's pushed-down null/size filters,
         measured ~50× slower than this shape. Here positions are
         exploded first and each gram is one compiled ``substr``; set
-        semantics come from a distributed ``distinct`` and ``len``
-        (the distinct-gram count, reference ``tokenizers:15``) from a
-        count window over the same hash partitioning, so no extra
-        shuffle versus the downstream ``pos`` window.
+        semantics come from a ``collect_set`` grouped by ``id`` and
+        ``len`` (the distinct-gram count, reference ``tokenizers:15``)
+        from its size.
         """
-        df = _ensure_parallelism(df)
+        df = _ensure_parallelism(df, key)
         q = self.q
         v = F.col(val).cast("string")
         pad = F.lit("#" * (q - 1))
@@ -185,8 +191,10 @@ class QGramsTokzr(Tokenizer):
         # hash(id) directly (map-side partial dedup included), then
         # len = array size and tokens re-explode — versus the previous
         # distinct (exchange on (id, token)) + count window (second
-        # exchange on id). Gram sets are bounded by the padded text
-        # length, so per-id state stays small at any corpus scale.
+        # exchange on id). A narrow scan's key-hashed repartition is
+        # that exchange already, so the aggregate adds none. Gram sets
+        # are bounded by the padded text length, so per-id state stays
+        # small at any corpus scale.
         sets = bag.groupBy("id").agg(F.collect_set("token").alias("tks"))
         return sets.select(
             "id",

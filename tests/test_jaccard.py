@@ -231,172 +231,54 @@ def test_empty_and_degenerate_corpora(spark):
     assert jaccard_self_join(solo, "id", "val", tok, 0.5).count() == 0
 
 
-def test_verify_attach_gate_unit(documents, monkeypatch):
-    """_verify_attach broadcast-gate semantics (round 9, VERDICT r8
-    next #3): above the size cap OR below the benefit ratio the attach
-    frame is returned UNHINTED (same object — the shuffle join stays,
-    the right plan at corpus scale / on small candidate streams); caps
-    and ratio resolve at call time so this very patching works; and the
-    doc-count probe is limit-bounded, not a full scan."""
-    import jaccard_join_duckdb_spark.operators.jaccard as J
-
-    # identity above the cap, hint below it (bound omitted)
-    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 5)
-    assert J._verify_attach(documents, 6) is documents
-    assert J._verify_attach(documents, 0) is documents  # unknown count
-    assert J._verify_attach(documents, 5) is not documents
-    # benefit gate: a known-small candidate bound declines; a large
-    # one (>= ratio * rows) accepts
-    ratio = J._BROADCAST_VERIFY_MIN_RATIO
-    assert J._verify_attach(documents, 5, bound=5 * ratio - 1) is documents
-    assert J._verify_attach(documents, 5, bound=5 * ratio) is not documents
-    # call-time cap resolution (default + token-level)
-    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 0)
-    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_TOKENS", 0)
-    assert J._verify_attach(documents, 1) is documents
-    assert J._verify_attach(documents, 1, token_level=True) is documents
-    # call-time ratio resolution
-    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 250_000)
-    monkeypatch.setattr(J, "_BROADCAST_VERIFY_MIN_RATIO", 0)
-    assert J._verify_attach(documents, 5, bound=1) is not documents
-    # the probe stops at cap+1 rows instead of counting the frame
-    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 3)
-    assert documents.count() > 4
-    assert J._doc_count_probe(documents) == 4
-
-
-@pytest.mark.parametrize("tok", ["ws", "ws_bag", "ws_fast", "qgram"])
-def test_verify_attach_above_gate_fallback(documents, monkeypatch, tok):
-    """Force the doc/token counts past the broadcast caps and pin the
-    fallback: the verification attach joins revert to shuffle joins
-    (strictly fewer BroadcastHashJoin nodes, strictly more
-    SortMergeJoin nodes in the static plan) and the pair set is
-    unchanged — the gate is a pure physical-plan decision. The paths
-    at sf0.001: compiled array-intersect (ws: the gate stats measure
-    no duplicate rows) and the reference's pairs×tokens three-way join
-    (ws_bag). ws_fast and qgram take the bitset path, which verifies
-    inside the candidate join: no join is keyed on lid/rid at all,
-    whatever the gate.
-
-    autoBroadcastJoinThreshold is disabled for the comparison: that is
-    the 100 TB regime (no side clears the stats threshold), where the
-    gate's hint is the ONLY broadcast source — at test scale the
-    stats-based planner would otherwise broadcast everything and mask
-    the gate entirely."""
-    import jaccard_join_duckdb_spark.operators.jaccard as J
-
-    spark = documents.sparkSession
-    tokenizer = {
-        "ws": WhitespaceTokzr(),
-        "ws_bag": WhitespaceTokzr(return_set=False),
-        "ws_fast": WhitespaceTokzr(distinct_rows=True),
-        "qgram": QGramsTokzr(3),
-    }[tok]
-
-    def plan_of(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    def attach_joins(plan, node):
-        """Plan lines where ``node`` joins on an attach key — the
-        verification attaches are the only joins keyed on lid/rid
-        (whole-plan broadcast counts would be polluted by the bitset
-        path's tdim broadcast and by cross-test cache aliasing of the
-        persisted token frames)."""
-        return [
-            ln
-            for ln in plan.splitlines()
-            if node in ln and ("[lid#" in ln or "[rid#" in ln)
-        ]
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # ratio 0: force the benefit gate OPEN on this tiny corpus so
-        # the gated phase actually hints (the real ratio would decline
-        # sf0.001's small candidate stream — by design; no doc-count
-        # floor exists since round 10)
-        monkeypatch.setattr(J, "_BROADCAST_VERIFY_MIN_RATIO", 0)
-        gated = jaccard_self_join(documents, "doc_id", "text", tokenizer, 0.5)
-        gated_plan = plan_of(gated)
-        gated_pairs = pairs(gated)
-
-        monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_DOCS", 0)
-        monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_TOKENS", 0)
-        off = jaccard_self_join(documents, "doc_id", "text", tokenizer, 0.5)
-        off_plan = plan_of(off)
-
-        assert pairs(off) == gated_pairs
-        if tok in ("ws_fast", "qgram"):
-            assert not attach_joins(gated_plan, "Join")
-            assert not attach_joins(off_plan, "Join")
-            return
-        # gate on: every attach join is broadcast, none shuffles
-        assert attach_joins(gated_plan, "BroadcastHashJoin")
-        assert not attach_joins(gated_plan, "SortMergeJoin")
-        # gate declined: every attach join stays sort-merge
-        assert attach_joins(off_plan, "SortMergeJoin")
-        assert not attach_joins(off_plan, "BroadcastHashJoin")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-# Gate-stats cases at t=0.5: the tokenizer, the token frames (one for
-# a self join, two for an inner join) and the hand-computed job output.
-# pos ranks by (df, token); the indexing prefix is len-pos+1 >= 2·len/3
-# (pos <= 2 at len 3, pos <= 1 at len 2), the probing prefix
-# len-pos+1 >= len/2 (pos <= 2 at len 2 and 3).
+# Doc-frequency cases at t=0.5: the tokenizer class, the token frames
+# (one for a self join, two for an inner join) and the hand-computed
+# statistics. pos ranks by (df, token); the indexing prefix is
+# len-pos+1 >= 2·len/3 (pos <= 2 at len 3, pos <= 1 at len 2).
 _GATE_CASES = {
-    # d1 "a b c", d2 "b c", d3 "c a" → df a:2 b:2 c:3. a and b are in
-    # the indexing prefix of their docs, c never; all but d1's c are
-    # in the probing prefix. bound = a:2·2 + b:2·2 + c:0·2 = 8.
+    # d1 "a b c", d2 "b c", d3 "c a" → df a:2 b:2 c:3.
     "self": (WhitespaceTokzr, [["a b c", "b c", "c a"]],
-             dict(widows=(0,), docs=(3,), tokens=(7,), bound=(8, 8),
-                  dup_rows=0)),
+             dict(vocab=3, n_tok=7, max_df=3, dup_rows=0)),
     # d1 "A a b" tokenizes to rows a, a, b (the case-collapsed
-    # duplicate), d2 "a b" → df b:2 a:3, so b ranks first. Indexing:
-    # d1 b, a(pos 2); d2 b. Probing: all but d1's pos-3 a.
-    # bound = b:2·2 + a:1·2 = 6; one duplicate row.
+    # duplicate), d2 "a b" → df b:2 a:3; one duplicate row.
     "self-dup": (WhitespaceTokzr, [["A a b", "a b"]],
-                 dict(widows=(0,), docs=(2,), tokens=(5,), bound=(6, 6),
-                      dup_rows=1)),
+                 dict(vocab=2, n_tok=5, max_df=3, dup_rows=1)),
     # left d1 "a b c", d2 "b d"; right d3 "a b", d4 "c e f" → cross df
-    # a:1 c:1 b:2, widows d e f. pos: d1 a c b, d2 b d, d3 a b,
-    # d4 c e f. Indexing: d1 a c, d2 b | d3 a, d4 c e — e is a widow,
-    # so widows (0, 1). Probing: d1 a c, d2 b d | d3 a b, d4 c e.
-    # bound[0] (left indexes) = a:1·1 + c:1·1 + b:1·1 = 3;
-    # bound[1] (right indexes) = a:1·1 + c:1·1 + e:1·0 = 2.
+    # a:1 c:1 b:2, widows d e f; the largest per-side df is left b:2.
+    # pos: d1 a c b, d2 b d, d3 a b, d4 c e f. Indexing: d1 a c, d2 b |
+    # d3 a, d4 c e — e is a widow, so widows (0, 1).
     "inner": (WhitespaceTokzr, [["a b c", "b d"], ["a b", "c e f"]],
-              dict(widows=(0, 1), docs=(2, 2), tokens=(5, 5), bound=(3, 2),
-                   dup_rows=0)),
-    # The bitset path's case (padded bigrams, distinct rows). left
-    # d1 "ab" → #a ab b#, d2 "ac" → #a ac c#; right d3 "ab" → #a ab b#,
-    # d4 "bd" → #b bd d# → cross df ab:1 b#:1 #a:2, widows ac c# #b bd
-    # d#. pos (len 3): d1 ab b# #a, d2 #a ac c#, d3 ab b# #a, d4 #b bd
-    # d#. Both prefixes are pos <= 2: d1 ab b#, d2 #a ac | d3 ab b#,
-    # d4 #b bd — widows (1, 2). bound = ab:1·1 + b#:1·1 = 2 either way.
-    "inner-qgram": (lambda: QGramsTokzr(2), [["ab", "ac"], ["ab", "bd"]],
-                    dict(widows=(1, 2), docs=(2, 2), tokens=(6, 6),
-                         bound=(2, 2), dup_rows=0)),
+              dict(vocab=6, n_tok=10, max_df=2, dup_rows=0,
+                   widows=(0, 1))),
+    # Padded bigrams. left d1 "ab" → #a ab b#, d2 "ac" → #a ac c#;
+    # right d3 "ab" → #a ab b#, d4 "bd" → #b bd d# → cross df ab:1 b#:1
+    # #a:2, widows ac c# #b bd d#. pos (len 3): d1 ab b# #a, d2 #a ac
+    # c#, d3 ab b# #a, d4 #b bd d#. Indexing, pos <= 2: d1 ab b#, d2 #a
+    # ac | d3 ab b#, d4 #b bd — widows (1, 2).
+    "inner-qgram": (lambda distinct_rows: QGramsTokzr(
+                        2, distinct_rows=distinct_rows),
+                    [["ab", "ac"], ["ab", "bd"]],
+                    dict(vocab=8, n_tok=12, max_df=2, dup_rows=0,
+                         widows=(1, 2))),
 }
 
 
-@pytest.mark.parametrize("skip_dup", [False, True])
+@pytest.mark.parametrize("distinct", [False, True])
 @pytest.mark.parametrize("case", list(_GATE_CASES))
-def test_gate_stats_formula(spark, case, skip_dup):
-    """Pin the shared gate-stats job against hand-computed values: per
-    side the widow count (side swap), n_docs from pos==1 rows and n_tok
-    from all rows; the candidate bound in both orientations = sum over
-    tokens of (indexing-prefix rows of one side × probing-prefix rows
-    of the other); and dup_rows, the exact duplicate (id, token) row
-    count that gates the runtime-distinct array verification.
-    ``skip_dup`` (round 12, rows_distinct tokenizers) drops the
-    count_distinct column and reports the known dup_rows = 0. An inner
-    join's stages run over one side-tagged frame, and the widow-only
-    job of its bitset path must count the same widows."""
+def test_gate_stats_formula(spark, case, distinct):
+    """Pin the statistics that pick the plan against hand-computed
+    values: :func:`_doc_freq`'s vocabulary, token rows, largest
+    per-side df and ``dup_rows``, the exact duplicate (doc, token) row
+    count that picks the array or three-way verify, and the inner
+    join's per-side widow counts (side swap). ``distinct`` is the
+    tokenizer's ``distinct_rows`` promise: kept, ``dup_rows`` is 0
+    without being counted (even on the duplicate case) and the
+    vocabulary takes the bitset path; withheld, the array path. The
+    widow counts must be equal on both paths."""
     import jaccard_join_duckdb_spark.operators.jaccard as J
 
     mk_tok, sides, want = _GATE_CASES[case]
-    tok = mk_tok()
+    tok = mk_tok(distinct_rows=distinct)
     frames, start = [], 1
     for docs in sides:
         df = spark.createDataFrame(
@@ -404,23 +286,57 @@ def test_gate_stats_formula(spark, case, skip_dup):
         )
         frames.append(tok.tokenize(df, "id", "val"))
         start += len(docs)
+    want = dict(want)
+    widows = want.pop("widows", None)
     if len(frames) == 1:
         freq = J._doc_freq(tok, None, frames[0])
         tkdf = J._tkdf(frames[0], freq.dim, freq.n_words, None)
-        tkdf = tkdf.withColumn("side", F.lit(0))
     else:
         tagged, _ = J._tag_sides(*frames)
-        freq = J._doc_freq(tok, None, tagged, tagged=True)
+        doc = ("side", "id")
+        freq = J._doc_freq(tok, None, tagged, doc)
         tkdf = J._tkdf(tagged, freq.dim, freq.n_words, None, freq.side_dfs,
-                       ("side", "id"))
-        assert J._widow_counts(tkdf, 0.5) == want["widows"]
-    assert bool(freq.n_words) == (case == "inner-qgram")
+                       doc)
+        assert J._widow_counts(tkdf, 0.5) == widows
+    assert bool(freq.n_words) == distinct
     assert dict(tkdf.dtypes)["token"] == "int"  # the dense tid
-    got = J._gate_stats(tkdf, len(frames), 0.5, skip_dup=skip_dup)._asdict()
+    got = {k: getattr(freq, k) for k in want}
     freq.cache.unpersist()
-    if skip_dup:
+    if distinct:
         want = {**want, "dup_rows": 0}
     assert got == want
+
+
+@pytest.mark.parametrize("mode", ["self", "inner"])
+def test_join_build_spark_actions(spark, mode):
+    """Building an array-path join frame runs one Spark action per
+    statistic it reads: a self join only the doc-frequency aggregate,
+    an inner join that and its widow counts. Every other stage stays
+    lazy until the caller's own action."""
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def n_actions() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return store.executionsCount()
+
+    def frame(seed):
+        return spark.createDataFrame(
+            list(enumerate(_distinct_corpus(40, seed))), "id long, val string"
+        )
+
+    tok = WhitespaceTokzr()  # no distinct-rows promise: the array path
+    before = n_actions()
+    if mode == "self":
+        out = J.jaccard_self_join(frame(11), "id", "val", tok, 0.4)
+    else:
+        out = J.jaccard_inner_join(frame(11), frame(17), "id", "id", "val",
+                                   "val", tok, 0.4)
+    assert n_actions() - before == (1 if mode == "self" else 2)
+    assert "array_sort" in out._jdf.queryExecution().optimizedPlan().toString()
+    spark.catalog.clearCache()
 
 
 _WORDS = ["ha", "be", "ce", "dx", "ee", "fo", "gg", "hi"]
@@ -454,7 +370,7 @@ def _dup_corpus(n_docs, seed):
 _VERIFY_CASES = {
     "self-bitset": ("self", lambda: WhitespaceTokzr(distinct_rows=True),
                     "distinct", None, "bit_count"),
-    # cannot promise distinct rows: the gate stats measure zero
+    # cannot promise distinct rows: _doc_freq counts zero duplicates
     "self-array": ("self", WhitespaceTokzr, "distinct", None, "array_sort"),
     "self-three-way-quirk": ("self", WhitespaceTokzr, "dup", None, None),
     "self-three-way-bag": ("self", lambda: WhitespaceTokzr(return_set=False),
@@ -551,13 +467,13 @@ def test_tid_rank_buckets(spark, monkeypatch, mode):
         for seed in ((11,) if mode == "self" else (11, 17))
     ]
     if mode == "self":
-        tokens, doc, kw = frames[0], ("id",), {}
+        tokens, doc = frames[0], ("id",)
     else:
         tokens, _ = J._tag_sides(*frames)
-        doc, kw = ("side", "id"), {"tagged": True}
+        doc = ("side", "id")
 
     def build():
-        freq = J._doc_freq(tok, None, tokens, **kw)
+        freq = J._doc_freq(tok, None, tokens, doc)
         rows = freq.dim.select("df", "token", "tid").collect()
         return freq, sorted(rows, key=lambda r: (r.df, r.token))
 
@@ -749,3 +665,36 @@ def test_auto_hot_split_engages_on_skew(spark, monkeypatch, path):
     assert ("array_sort" in optimized) == (not bag)
     assert pairs(auto) == pairs(off)
     assert pairs(auto)  # non-degenerate corpus: the hot token pairs up
+
+
+def test_tools_resolve_jaccard_names():
+    """Every name the tools import from ``operators.jaccard`` (``from
+    .. import name``, or ``J.name`` through a module alias) still
+    exists, so deleting a private helper cannot silently break a tool
+    that only runs outside the test suite."""
+    import ast
+    import pathlib
+
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    missing = []
+    for path in sorted(repo.glob("tools/*.py")):
+        tree = ast.parse(path.read_text())
+        aliases, names = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                for a in node.names:
+                    if node.module.endswith("operators.jaccard"):
+                        names.add(a.name)
+                    elif (node.module.endswith("operators")
+                          and a.name == "jaccard"):
+                        aliases.add(a.asname or a.name)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in aliases):
+                names.add(node.attr)
+        missing += [f"{path.name}: {n}" for n in sorted(names)
+                    if not hasattr(J, n)]
+    assert not missing

@@ -160,3 +160,27 @@ def test_words_tokzr_join_parity(spark):
         ).fetchall()
     }
     assert got == want
+
+
+def test_qgrams_narrow_parquet_one_shuffle(spark, tmp_path):
+    """A one-file parquet scan is narrower than the cores, so the
+    tokenizer repartitions it by the record key: the q-gram set
+    aggregate grouped by ``id`` reuses that partitioning, and the
+    executed plan holds a single shuffle, keyed on ``id``. The rows
+    equal the reference tokenizer's."""
+    import re
+
+    rows = [(i, f"Doc {i} whisk colander {i % 7}") for i in range(1, 41)]
+    path = str(tmp_path / "one_file.parquet")
+    spark.createDataFrame(rows, ["id", "val"]).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 1
+
+    out = QGramsTokzr(3).tokenize(df, "id", "val")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    shuffles = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert len(shuffles) == 1, plan
+    kind, keys = shuffles[0]
+    assert kind == "hashpartitioning" and re.match(r"id#\d+L?,", keys), plan
+    got = sorted((r.id, r.len, r.token) for r in out.collect())
+    assert got == _duckdb_tokens(_qgram_sql(3, True), rows)

@@ -70,7 +70,6 @@ SINGLE_CACHE_OK = {
     # Every name below routes through jaccard_self_join.
     "jaccard_self_qgram",
     "jaccard_self_ws",
-    "jaccard_self_ws_hotsplit",
     "jaccard_self_ws_scored",
     "jaccard_knn",
     "jaccard_topk_pairs",
@@ -80,7 +79,6 @@ SINGLE_CACHE_OK = {
     # which skipped the check entirely; these now at least require the
     # cache-node producer like the self family.
     "jaccard_inner_ws",
-    "jaccard_inner_ws_hotsplit",
     "jaccard_inner_ws_scored",
 }
 CROSS_OK = {

@@ -28,11 +28,8 @@
 #                        stopword-heavy Zipf corpus, candidate
 #                        fan-out <= 20% of the raw inverted index
 #                        (measured ~0.04%)
-#   - above_gate_bench:  verification broadcast gate declines past
-#                        250K docs via a bounded probe; attach joins
-#                        stay sort-merge in the no-stats-broadcast
-#                        regime; rows equal DuckDB on a real 260K-doc
-#                        corpus (the slowest gate, ~10 min)
+#   - above_gate_bench:  whitespace self-join rows equal DuckDB on
+#                        a 260K-doc corpus at t=0.8 and t=0.5
 #   - bloom_bench:       Bloom-prefiltered decontamination == plain
 #                        on a 20K-item x 200K-doc synthetic leak
 #                        workload; probe plan shuffle-free while the
@@ -50,13 +47,6 @@
 #                        20 dedup_stream triggers (state -> 150K
 #                        fingerprints) and 10 static-index near-dup
 #                        triggers; stream union == batch twin both
-#   - gate_ab_bench:     broadcast-verify gate decision tripwire:
-#                        three arms (forced / current / r9) at the
-#                        mid-threshold refscale cells, rows identical
-#                        across arms, current within 35% of the best
-#                        arm's min (loose tol: catches a re-broken
-#                        decision like r10's 1.9x declined win,
-#                        tolerates session noise)
 # Usage: sh tools/round_checks.sh
 # Each tool runs at its own documented default scale (mostly sf0.1 —
 # the scale its BENCHMARKS.md evidence and recall floors were gated
@@ -70,6 +60,4 @@ for t in explain_audit bucket_bench index_bucket_bench \
   echo "== $t =="
   python3 "tools/$t.py"
 done
-echo "== gate_ab_bench =="
-python3 tools/gate_ab_bench.py --tol 1.35
 echo "ROUND CHECKS: ALL GATES PASS"
