@@ -86,9 +86,11 @@ Scale design (100 TB target):
   applied as pre-join filters, shrinking shuffle input; the hot-token
   skew inherent to token equi-joins is handled by AQE skew-join
   splitting (enabled in :mod:`..session`).
-- The doc-frequency join (tokens ⋈ df-per-token) and the verify's
-  attach joins carry no hint: AQE broadcasts whichever side its run-time
-  size shows small; at 100 TB the df table and the per-document
+- The doc-frequency join (tokens ⋈ df-per-token) carries no hint: AQE
+  broadcasts whichever side its run-time size shows small. The verify's
+  attach tables are broadcast when the join's token rows, already known
+  from the df statistics, fit ``_MAX_BROADCAST_VERIFY_TOKENS``, and
+  left to AQE above it; at 100 TB the df table and the per-document
   attach tables are themselves large and the shuffle joins are the
   right plan.
 """
@@ -347,6 +349,15 @@ _RANK_ROWS = 1 << 20
 # Expected sampled rows per bucket: a bucket's share of the vocabulary
 # then strays about 1/8 from its target, far inside the 4x headroom.
 _RANK_SAMPLE_PER_BUCKET = 64
+
+# Token rows (both sides) up to which the verify broadcasts its two
+# attach tables, each of which holds at most that many tids. Unhinted,
+# AQE shuffles and sorts the candidate stream into the attach joins
+# once a table outgrows its broadcast threshold (10 MB by default):
+# 21% slower at the refscale db100 whitespace t=0.4 self join, whose
+# per-document arrays hold about 1.5M tids, 14% at db50 t=0.3
+# (BENCHMARKS.md).
+_MAX_BROADCAST_VERIFY_TOKENS = 2_000_000
 
 # Widow placeholder (jaccard_join.py:266-268): the inner join's df of a
 # token only one side has. The reference uses count(l)*count(r)+1 — two
@@ -881,8 +892,7 @@ def _verify(
     l_tk: DataFrame,
     r_tk: DataFrame,
     t: float,
-    n_words: int,
-    dup_rows: int,
+    freq: _DocFreq,
     out_cols: tuple[str, str],
     with_score: bool,
 ) -> DataFrame:
@@ -899,16 +909,17 @@ def _verify(
 
     ``cand`` comes from :func:`_candidates`; ``l_tk``/``r_tk`` are the
     two sides' tkdfs (one frame for a self join, the side views of the
-    one side-tagged tkdf for an inner join). The attach joins carry no
-    hint: AQE broadcasts an attach table when its run-time size is
-    small and shuffles it otherwise. The strategy follows from the
-    data:
+    one side-tagged tkdf for an inner join); ``freq`` is the join's
+    :class:`_DocFreq`. Both attach tables are broadcast when
+    ``freq.n_tok`` fits ``_MAX_BROADCAST_VERIFY_TOKENS``, so the
+    candidate stream is never shuffled into them; above it AQE picks
+    the join. The strategy follows from the data:
 
-    - bitset (``n_words > 0``: the vocabulary fits
+    - bitset (``freq.n_words > 0``: the vocabulary fits
       ``_MAX_BITSET_VOCAB`` and the tokenizer promises distinct rows):
       the candidate join already verified each pair on its full
       popcount, so this is a plain select.
-    - array (``dup_rows == 0``: no duplicate ``(id, token)`` rows,
+    - array (``freq.dup_rows == 0``: no duplicate ``(id, token)`` rows,
       promised by the tokenizer or counted by :func:`_doc_freq`):
       ``sfx`` by compiled slice + array_intersect of each document's
       sorted tids (:func:`_pos_token_arrays`). Exact because the
@@ -925,20 +936,23 @@ def _verify(
     """
     overlap = F.col("sfx") + F.col("pfxoverlap") - 1
     accept = _overlap_cond(overlap, F.col("llen"), F.col("rlen"), t)
-    if n_words:  # the candidate join verified every pair
+    hint = (F.broadcast if freq.n_tok <= _MAX_BROADCAST_VERIFY_TOKENS
+            else lambda doc: doc)
+    if freq.n_words:  # the candidate join verified every pair
         out, overlap = cand, F.col("overlap")
-    elif dup_rows == 0:
+    elif freq.dup_rows == 0:
         out = _attach(
-            cand, _pos_token_arrays(l_tk), _pos_token_arrays(r_tk)
+            cand, hint(_pos_token_arrays(l_tk)),
+            hint(_pos_token_arrays(r_tk)),
         ).withColumn("sfx", _suffix_overlap(
             F.col("larr"), F.col("llen"), F.col("lmax"),
             F.col("rarr"), F.col("rlen"), F.col("rmax"),
         )).filter((F.col("sfx") >= 1) & accept)
     else:
         out = (
-            cand.join(l_tk.alias("VL"), F.col("lid") == F.col("VL.id"))
+            cand.join(hint(l_tk).alias("VL"), F.col("lid") == F.col("VL.id"))
             .join(
-                r_tk.alias("VR"),
+                hint(r_tk).alias("VR"),
                 (F.col("rid") == F.col("VR.id"))
                 & (F.col("VL.token") == F.col("VR.token"))
                 & (F.col("VL.pos") >= F.col("lmax"))
@@ -1007,7 +1021,10 @@ def jaccard_self_join(
     (``L.l_id < R.l_id``, each unordered pair once, plus the one-sided
     length filter). Building the frame runs one Spark action, the
     doc-frequency statistics (and the tid sample of a vocabulary above
-    ``_RANK_ROWS``); everything after it is lazy."""
+    ``_RANK_ROWS``); everything after it is lazy. The token frame, the
+    doc-frequency dim and ``tkdf`` stay cached after the result is
+    computed, until the caller runs ``spark.catalog.clearCache()``:
+    a session of many joins holds one set of them per join."""
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
@@ -1030,7 +1047,7 @@ def jaccard_self_join(
         freq.n_words,
     )
     return _verify(
-        cand, tkdf, tkdf, t, freq.n_words, freq.dup_rows,
+        cand, tkdf, tkdf, t, freq,
         (f"{l_out_prefix}{key_attr}", f"{r_out_prefix}{key_attr}"),
         with_score,
     )
@@ -1193,7 +1210,7 @@ def jaccard_inner_join(
     # probing side's with the right, regardless of swap.
     prefixes = (l_out_prefix, r_out_prefix)
     return _verify(
-        cand, idx_tk, prb_tk, t, freq.n_words, freq.dup_rows,
+        cand, idx_tk, prb_tk, t, freq,
         (f"{prefixes[i]}{l_key_attr}", f"{prefixes[j]}{r_key_attr}"),
         with_score,
     )

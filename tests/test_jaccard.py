@@ -449,6 +449,38 @@ def test_verify_strategy_equals_brute_force(spark, monkeypatch, case, t):
     assert len(rows) == len(once)
 
 
+@pytest.mark.parametrize("case", ["self-array", "inner-three-way-one-side"])
+def test_verify_attach_broadcast_by_token_rows(spark, monkeypatch, case):
+    """The verify hints both attach tables for broadcast while the
+    join's token rows fit ``_MAX_BROADCAST_VERIFY_TOKENS``, and leaves
+    them to AQE above it (the cap patched to 0); the pairs agree."""
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+
+    mode, mk_tok, left, right, _ = _VERIFY_CASES[case]
+    corpus = {"distinct": _distinct_corpus, "dup": _dup_corpus}
+
+    def frame(kind, seed):
+        return spark.createDataFrame(
+            list(enumerate(corpus[kind](40, seed))), "id long, val string"
+        )
+
+    def run():
+        if mode == "self":
+            out = jaccard_self_join(frame(left, 11), "id", "val", mk_tok(),
+                                    0.4)
+        else:
+            out = jaccard_inner_join(frame(left, 11), frame(right, 17), "id",
+                                     "id", "val", "val", mk_tok(), 0.4)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("strategy=broadcast"), pairs(out)
+
+    hinted, hinted_pairs = run()
+    monkeypatch.setattr(J, "_MAX_BROADCAST_VERIFY_TOKENS", 0)
+    unhinted, unhinted_pairs = run()
+    assert hinted - unhinted == 2
+    assert hinted_pairs == unhinted_pairs and hinted_pairs
+
+
 @pytest.mark.parametrize("mode", ["self", "inner"])
 def test_tid_rank_buckets(spark, monkeypatch, mode):
     """Above ``_RANK_ROWS`` tokens the tid rank runs per bucket of

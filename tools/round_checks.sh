@@ -28,8 +28,6 @@
 #                        stopword-heavy Zipf corpus, candidate
 #                        fan-out <= 20% of the raw inverted index
 #                        (measured ~0.04%)
-#   - above_gate_bench:  whitespace self-join rows equal DuckDB on
-#                        a 260K-doc corpus at t=0.8 and t=0.5
 #   - bloom_bench:       Bloom-prefiltered decontamination == plain
 #                        on a 20K-item x 200K-doc synthetic leak
 #                        workload; probe plan shuffle-free while the
@@ -55,7 +53,7 @@ set -e
 cd "$(dirname "$0")/.."
 for t in explain_audit bucket_bench index_bucket_bench \
          ann_recall_bench skew_demo search_bench graph_bench \
-         dedup_recall_bench weighted_bench above_gate_bench \
+         dedup_recall_bench weighted_bench \
          bloom_bench cms_bench stream_bench; do
   echo "== $t =="
   python3 "tools/$t.py"
