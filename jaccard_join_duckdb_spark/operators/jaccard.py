@@ -2,9 +2,9 @@
 
 Re-expresses the reference's prefix-filtered join pipeline
 (``py_duckdb/similarity_join/join/jaccard_join.py``) as a lazy
-DataFrame chain: tokenize → document frequency → position window →
-candidate join (length + prefix + positional filters) → suffix
-verification. The brute-force variant (the correctness oracle) is
+DataFrame chain: tokenize → document frequency → per-document sorted
+token arrays → candidate join (length + prefix + positional filters)
+→ suffix verification. The brute-force variant (the correctness oracle) is
 explode → equi-join → groupBy → threshold filter.
 
 Math (SURVEY.md §0): for token sets x, y and threshold t,
@@ -21,10 +21,11 @@ Parity hazards preserved (SURVEY.md §4.3):
   ``l_id = concat(len, '_', id)`` compared lexicographically
   (``jaccard_join.py:135,155``) — including its string-compare quirk.
 - ``pos`` ranks tokens by ``(df, token)`` ascending per record
-  (``jaccard_join.py:134``) — here by the integer ``tid`` that
-  :func:`_doc_freq` gives every token in that order, which the tkdf
-  carries in place of the string; the array and three-way verifies count
-  suffix matches from ``pos >= maxPos`` and add ``pfxOverlap - 1``
+  (``jaccard_join.py:134``) — here the integer tids that
+  :func:`_doc_freq` gives every token in that order are sorted into
+  one array per record, and ``pos`` is a tid's index in it plus one;
+  the array and three-way verifies count suffix matches from ``pos >=
+  maxPos`` and add ``pfxOverlap - 1``
   (``jaccard_join.py:172-183``); the bitset path counts ``|x∩y|``
   outright in the candidate join, which equals that sum under set
   semantics (see :func:`_jaccard_score`).
@@ -39,22 +40,23 @@ Scale design (100 TB target):
 - The self and inner joins share one candidate generator, written once
   per stage: :func:`_doc_freq` (df per token; the inner join's
   cross-table ``l_df * r_df`` with a widow placeholder; the ``tid``
-  rank; the duplicate-row count), :func:`_tkdf` (tokens ⋈ df with
-  ``pos``, the token replaced by its tid; the hot-token split off the
-  bitset path), :func:`_candidates` (prefix filters and the token
-  equi-join) and :func:`_verify`. The self join runs them with its one
-  token frame on both sides; each join keeps only its pair predicate,
-  and the inner join its side swap.
+  rank; the duplicate-row count), :func:`_docs` (tokens ⋈ df grouped
+  into one row per document: sorted tids, bitset words, pair key; the
+  hot-token split off the bitset path), :func:`_candidates` (prefix
+  token rows exploded from it, prefix filters, token equi-join) and
+  :func:`_verify`. The self join runs them with its one token frame on
+  both sides; each join keeps only its pair predicate, and the inner
+  join its side swap.
 - The inner join runs every stage once, over ONE side-tagged token
   frame ``(side, key, len, token)`` (the R-S join of Vernica, Carey
   and Li, SIGMOD 2010, tags records by relation the same way): one
-  df aggregate with per-side counts, one ``tkdf`` windowed over
+  df aggregate with per-side counts, one ``docs`` frame grouped by
   ``(side, key)``, one widow-count job for the side swap; the
   candidate join and the verify read its ``side == i`` views. Each
   side's key keeps its own column when the two key types differ, so
   no cast joins them.
 - One integer token dictionary serves every path: ``tid`` order is
-  ``(df, token)`` order, so from ``tkdf`` on — the prefixes, the
+  ``(df, token)`` order, so from ``docs`` on — the prefixes, the
   candidate equi-join and both verifies — tokens are integers, and the
   array verify intersects integer arrays (Spark's primitive hash set;
   string arrays take a boxed one). A vocabulary of at most
@@ -62,16 +64,19 @@ Scale design (100 TB target):
   tids, which the bitset path reads as bit numbers); a larger one
   ranks per bucket of sampled ``(df, token)`` split points into bigint
   tids, so no window sorts the whole vocabulary on one partition.
-- Token frames, the doc-frequency dim and ``tkdf`` are persisted
-  (MEMORY_AND_DISK): candidates and verification each scan ``tkdf``
-  twice. Every plan decision (bitset vocabulary, hot-token split,
-  verify strategy) reads its scalars from ONE eager aggregate over the
+- Token frames, the doc-frequency dim and ``docs`` are persisted
+  (MEMORY_AND_DISK). ``docs`` holds each document once: the candidate
+  join explodes it on both sides (``posexplode``, sliced to the prefix
+  bound), the array verify attaches it as it is and the three-way
+  verify explodes it whole, so no stage windows or re-aggregates token
+  rows. Every plan decision (bitset vocabulary, hot-token split, verify
+  strategy) reads its scalars from ONE eager aggregate over the
   persisted dim, and the inner join's side swap from one more, its
-  widow counts (:func:`_widow_counts`), instead of re-running the
-  tokenize chain. A self join runs one Spark action before its final
-  query, an inner join two (plus the tid sample of a vocabulary above
-  ``_RANK_ROWS``): each action costs a fixed scheduling round-trip,
-  which at small sizes outweighs its rows.
+  widow counts (:func:`_widow_counts`), after which the inner join
+  frees its token frame and dim. A self join runs one Spark action
+  before its final query, an inner join two (plus the tid sample of a
+  vocabulary above ``_RANK_ROWS``): each action costs a fixed
+  scheduling round-trip, which at small sizes outweighs its rows.
 - When the vocabulary fits ``_MAX_BITSET_VOCAB`` tokens, the candidate
   join verifies each pair on the popcount of its documents' bitsets
   and emits it once, with no verify stage. Otherwise verification is
@@ -258,9 +263,6 @@ def _positional_cond(
     1`` the pre-filter's LHS is ``>= B`` for EVERY candidate.
     Measured confirmation: at db100 ws t=0.5 the pre-filter kept all
     2,976,581 of 2,976,581 candidates.
-    Rounds 1-10 carried that pre-filter (and, on the generic path,
-    two per-side doc-length attach JOINS built solely to evaluate it);
-    round 11 removed both — plan-only change, zero effect on results.
     """
     return _overlap_cond(
         F.least(l_len - l_pos + 1, r_len - r_pos + 1), l_len, r_len, t
@@ -277,7 +279,7 @@ def _positional_cond(
 # token's row count. One shuffle partition of the tokens ⋈ dfreq join
 # averages N/P rows (P = spark.sql.shuffle.partitions); a token whose
 # df is many multiples of that average turns its partition into a
-# straggler AQE structurally cannot split (see _tkdf).
+# straggler AQE structurally cannot split (see _docs).
 # Engage when the hottest token is >= FACTOR × the average partition
 # AND >= an absolute row floor (below it even a fully-skewed partition
 # is fast and the extra anti-join plan is pure overhead). Note the
@@ -329,7 +331,7 @@ def _validate_hot_threshold(
 
 
 # Bitset verification is used when the token vocabulary fits in this
-# many distinct tokens (64 longs on every tkdf row). Q-gram and
+# many distinct tokens (64 longs on every document row). Q-gram and
 # small-alphabet corpora qualify; unbounded word vocabularies fall back
 # to the array-intersect path. 64 words = 512 B/row of fixed columns — still
 # far below the per-pair cost of array_intersect on multi-hundred-token
@@ -395,7 +397,7 @@ def _doc_freq(
     """Document frequency of every token (jaccard_join.py:127-130) for
     a self join's token frame or the inner join's side-tagged one
     (``doc`` names the columns that identify a document, as in
-    :func:`_tkdf`: ``("side", <key columns>)`` when tagged), persisted,
+    :func:`_docs`: ``("side", <key columns>)`` when tagged), persisted,
     plus the plan decisions its statistics make.
 
     The inner join's df is the cross-table product ``l_df * r_df``,
@@ -415,12 +417,12 @@ def _doc_freq(
     of duplicate ``(doc, token)`` rows; a ``rows_distinct`` tokenizer
     promises 0, so the hash-set aggregate runs only for the others.
     The dim is the algorithm's own required shuffle; persisting it
-    means the tkdf build reuses it, so the only added cost is reading
+    means the ``docs`` build reuses it, so the only added cost is reading
     back the vocab-sized table once.
 
     The returned ``dim`` carries each token's integer ``tid``
     (:func:`_tid_rank`), whose order is the reference's ``(df,
-    token)`` order: :func:`_tkdf` carries it in place of the token, so
+    token)`` order: :func:`_docs` carries it in place of the token, so
     ``pos``, every prefix, the candidate join and the verify run on
     integers (the integer token dictionary of AllPairs, Bayardo, Ma
     and Srikant, WWW 2007). The tids are dense ``1..V`` when the
@@ -535,7 +537,7 @@ def _tid_rank(dim: DataFrame, vocab: int) -> DataFrame:
     )
 
 
-def _tkdf(
+def _docs(
     tokens: DataFrame,
     dim: DataFrame,
     n_words: int,
@@ -546,49 +548,39 @@ def _tkdf(
     keep_token: bool = False,
 ) -> DataFrame:
     """tokens ⋈ the ranked doc-frequency dim ``(token, df, tid[, l_df,
-    r_df])`` → ``tkdf(*doc, len, token, df, pos[, b0..][, l_id])``,
-    where ``doc`` names the columns that identify a document:
-    ``("id",)`` for a self join's token frame, ``("side", <key
-    columns>)`` for the inner join's side-tagged one, which is built
-    once for both sides.
+    r_df])`` → one row per document, ``docs(*doc, len, arr[, b0..][,
+    nw][, l_id])``; ``doc`` names the columns that identify a document:
+    ``("id",)`` for a self join, ``("side", <key columns>)`` for the
+    inner join's side-tagged frame, built once for both sides.
 
-    The string token is dropped at the join: the tkdf's ``token``
-    column carries the dim's ``tid`` (:func:`_tid_rank`), so every
-    later stage — the prefix filters, the candidate equi-join and both
-    verifies — keys on an integer. ``pos`` =
-    ``row_number() OVER (PARTITION BY doc ORDER BY tid)``, which is
-    the reference's ``(df, token)`` order (jaccard_join.py:132-137);
-    ``l_id = concat(len, '_', id)`` is the self join's pair-ordering
-    key (jaccard_join.py:135). An inner join's two sides rank over the
-    one shared dim, so a token gets the same tid on both.
-    ``keep_token`` (:func:`tokens_with_doc_freq`) keeps the string
-    instead, from a dim without tids, and ``pos`` ranks ``(df,
-    token)`` itself.
+    ``arr`` is the document's tids (:func:`_tid_rank`) sorted, the
+    reference's ``(df, token)`` order (jaccard_join.py:132-137): a
+    token's ``pos`` is its index in ``arr`` plus one (:func:`_token_rows`),
+    and every later stage keys on an integer. An inner join's two sides
+    rank over one shared dim, so a token gets the same tid on both;
+    ``nw`` counts an inner join document's widows (df
+    :data:`_WIDOW_DF`), which sort last. ``l_id = concat(len, '_',
+    id)`` is the self join's pair-ordering key (jaccard_join.py:135).
+    ``keep_token`` (:func:`tokens_with_doc_freq`) keeps the string, from
+    a dim without tids: ``arr`` holds ``struct(df, token)``.
 
     Bitset path (``n_words > 0``): the tids are dense ``1..V`` (the
     bitset gate of :func:`_doc_freq` bounds the vocabulary at
     ``_MAX_BITSET_VOCAB``), so ``tid - 1`` is the token's bit; the dim
-    broadcasts, and every row also carries its document's bitset words
-    ``b0..`` (:func:`_bit_words` over the ``doc`` window, which shares
-    the ``pos`` window's partitioning and sort: no extra exchange).
+    broadcasts, and the same aggregation builds the document's bitset
+    words ``b0..`` (:func:`_bit_words`).
 
-    ``hot_thr`` (skew mitigation for Zipf token distributions): a
-    token row is a heavy hitter when its own side's df (``side_dfs``:
-    ``df`` for a self join, ``l_df``/``r_df`` by the row's ``side``
-    for an inner join — that is what decides how many of ITS side's
-    rows pile into one partition) is ``>= hot_thr``. On a crawl corpus
-    the hottest word lands in a constant fraction of ALL documents,
-    putting that fraction of the corpus into ONE shuffle partition of
-    the tokens ⋈ dim join. AQE's skew-join split cannot help here
-    structurally: the dim aggregate reuses the join's token-hash
-    partitioning (no exchange in between), and OptimizeSkewedJoin only
-    splits joins reading bare shuffle stages. Heavy hitters are FEW by
-    definition, so their dim rows (keyed by ``(side, token)`` for an
-    inner join) broadcast — hot token rows join map-side, and only the
-    cold tail goes through the shuffle join (pre-filtered with a
-    broadcast anti-join so hot rows never enter the skewed exchange).
-    Identical output rows; see tools/skew_demo.py for the measured
-    straggler relief.
+    ``hot_thr`` (skew mitigation for Zipf token distributions): a token
+    row is a heavy hitter when its own side's df (``side_dfs``: ``df``,
+    or ``l_df``/``r_df`` by the row's ``side``) is ``>= hot_thr``. The
+    hottest word of a crawl corpus puts a constant fraction of all rows
+    into ONE partition of the tokens ⋈ dim join, and AQE cannot split
+    it: the dim aggregate's token-hash partitioning feeds the join with
+    no exchange in between. The few hot dim rows (keyed by ``(side,
+    token)`` for an inner join) broadcast instead, and only the cold
+    tail, pre-filtered by a broadcast anti-join, goes through the
+    shuffle join. Identical output rows; see tools/skew_demo.py for the
+    measured straggler relief.
     """
     cols = ["token", "df"] if keep_token else ["token", "df", "tid"]
     dfreq = dim.select(*cols)
@@ -612,20 +604,13 @@ def _tkdf(
         )
     else:
         joined = tokens.join(dfreq, "token")
-    if keep_token:
-        order = ("df", "token")
-    else:  # the tid replaces the string from here on
-        joined = joined.drop("token").withColumnRenamed("tid", "token")
-        order = ("token",)
-    w = Window.partitionBy(*doc).orderBy(*order)
-    out = joined.select(
-        *doc,
-        "len",
-        "token",
-        "df",
-        F.row_number().over(w).alias("pos"),
-        *_bit_words(n_words, f" OVER (PARTITION BY {', '.join(doc)})",
-                    "token"),
+    item = F.struct("df", "token") if keep_token else F.col("tid")
+    widows = [F.count_if(F.col("df") == _WIDOW_DF).alias("nw")]
+    out = joined.groupBy(*doc).agg(
+        F.max("len").alias("len"),
+        F.array_sort(F.collect_list(item)).alias("arr"),
+        *_bit_words(n_words),
+        *(widows if "side" in doc else []),
     )
     if with_pair_key:
         out = out.withColumn(
@@ -639,33 +624,59 @@ def _tkdf(
     return out
 
 
+def _token_rows(docs: DataFrame, t: float | None = None) -> DataFrame:
+    """``docs`` (:func:`_docs`) → one row per token: every column but
+    ``arr``, then ``pos`` and ``token``, by ``posexplode(arr)`` with
+    ``pos`` counted from 1 — the token's rank in ``(df, token)`` order
+    within its document. With ``t``, only each document's first ``len
+    - floor(len·t) + 1`` positions explode: they hold the probing
+    prefix and the indexing prefix, shorter at any ``t <= 1`` (above 1
+    no pair passes), and :func:`_candidates` still applies both
+    filters exactly."""
+    arr = F.col("arr")
+    if t is not None:
+        n = F.col("len") - F.floor(F.col("len") * t) + 1
+        arr = F.slice(arr, 1, F.greatest(n, F.lit(0)).cast("int"))
+    return docs.select(
+        *[c for c in docs.columns if c != "arr"],
+        F.posexplode(arr).alias("pos", "token"),
+    ).withColumn("pos", F.col("pos") + 1)
+
+
 def tokens_with_doc_freq(
     tokens: DataFrame,
     with_pair_key: bool = False,
     hot_df_threshold: int | None = None,
 ) -> DataFrame:
     """tokens → ``tkdf(id, len, token, df, pos[, l_id])``: the self
-    join's tkdf build (see :func:`_tkdf`) as a lazy frame, with the
-    heavy-hitter split at an explicit ``hot_df_threshold`` (None
-    disables it). It keeps the string ``token``: ``pos`` ranks ``(df,
-    token)`` itself, so no eager job builds a tid."""
+    join's per-document build (see :func:`_docs`) exploded back into
+    token rows, as a lazy frame, with the heavy-hitter split at an
+    explicit ``hot_df_threshold`` (None disables it). It keeps the
+    string ``token``: each document sorts its ``struct(df, token)``
+    pairs, so ``pos`` ranks ``(df, token)`` itself and no eager job
+    builds a tid."""
     _validate_hot_threshold(hot_df_threshold, auto=False)
     dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    return _tkdf(tokens, dfreq, 0, hot_df_threshold,
+    docs = _docs(tokens, dfreq, 0, hot_df_threshold,
                  with_pair_key=with_pair_key, keep_token=True)
+    return _token_rows(docs).select(
+        "id", "len", "token.token", "token.df", "pos",
+        *(["l_id"] if with_pair_key else []),
+    )
 
 
-def _widow_counts(tagged: DataFrame, t: float) -> tuple[int, int]:
+def _widow_counts(docs: DataFrame, t: float) -> tuple[int, int]:
     """The inner join's side-swap scalars: per side, the indexing-prefix
     rows whose df is :data:`_WIDOW_DF`, the reference's
     ``fetchall()[0][0]`` counts (jaccard_join.py:324-353), in one global
-    aggregate over the persisted side-tagged tkdf, with no
-    ``groupBy("token")``."""
+    aggregate over the persisted side-tagged ``docs``, with no
+    ``groupBy("token")``. Widows have the largest tids, so they are a
+    document's last ``nw`` of its ``len`` positions."""
     widow = (
         _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
-        & (F.col("df") == _WIDOW_DF)
+        & (F.col("pos") > F.col("len") - F.col("nw"))
     )
-    row = tagged.agg(*[
+    row = _token_rows(docs).agg(*[
         F.count_if(widow & (F.col("side") == i)).alias(f"w{i}")
         for i in (0, 1)
     ]).first()
@@ -691,20 +702,17 @@ def _tid_dim(spark, token_type, tokens: list) -> DataFrame:
     )
 
 
-def _bit_words(
-    n_words: int, over: str = "", tid: str = "tid"
-) -> list[Column]:
+def _bit_words(n_words: int) -> list[Column]:
     """The aggregates ``b0..b{n_words-1}``: ``bit_or`` of bit ``tid-1``
-    (LSB-first within each 64-bit word; ``tid`` names the column), a
-    document's token set as a bitset over ``tid`` once aggregated over
-    its rows; ``over`` (a SQL ``OVER (...)`` clause) makes them window
-    functions. One SQL-text expression per word: building each from
-    Column calls costs dozens of py4j round trips per word."""
+    (LSB-first within each 64-bit word), a document's token set as a
+    bitset over ``tid`` once aggregated over its rows. One SQL-text
+    expression per word: building each from Column calls costs dozens
+    of py4j round trips per word."""
     return [
         F.expr(
-            f"bit_or(CASE WHEN {tid} > {64 * i} AND {tid} <= {64 * (i + 1)} "
-            f"THEN shiftleft(CAST(1 AS BIGINT), {tid} - 1 - {64 * i}) "
-            f"ELSE CAST(0 AS BIGINT) END){over} AS b{i}"
+            f"bit_or(CASE WHEN tid > {64 * i} AND tid <= {64 * (i + 1)} "
+            f"THEN shiftleft(CAST(1 AS BIGINT), tid - 1 - {64 * i}) "
+            f"ELSE CAST(0 AS BIGINT) END) AS b{i}"
         )
         for i in range(n_words)
     ]
@@ -784,18 +792,6 @@ def _check_score_semantics(tokenizer: Tokenizer, with_score: bool) -> None:
         )
 
 
-def _pos_token_arrays(tkdf: DataFrame) -> DataFrame:
-    """One row per document: ``(id, len, arr)`` with ``arr`` the
-    document's tids sorted, which is ``pos`` order (:func:`_tkdf`).
-    Feeds the compiled array-intersect verification; ``collect_list``
-    of an integer and ``array_sort`` need no struct and no interpreted
-    ``transform``."""
-    return tkdf.groupBy("id").agg(
-        F.max("len").alias("len"),
-        F.array_sort(F.collect_list("token")).alias("arr"),
-    )
-
-
 def _suffix_overlap(
     l_arr: Column, l_len: Column, l_maxpos: Column,
     r_arr: Column, r_len: Column, r_maxpos: Column,
@@ -814,14 +810,16 @@ def _suffix_overlap(
 
 
 def _candidates(
-    idx_tk: DataFrame, prb_tk: DataFrame, t: float, pair_cond: Column,
+    idx_docs: DataFrame, prb_docs: DataFrame, t: float, pair_cond: Column,
     n_words: int,
 ) -> DataFrame:
     """Candidate generation (jaccard_join.py:148-169, 364-384) for both
-    the self and the inner join: the indexing prefix of ``idx_tk``
-    (aliased ``L``) equi-joins the probing prefix of ``prb_tk``
+    the self and the inner join: the indexing prefix of ``idx_docs``
+    (aliased ``L``) equi-joins the probing prefix of ``prb_docs``
     (aliased ``R``) on ``token`` under ``pair_cond`` (the join's own
-    predicate on ``L``/``R`` columns) and the positional filter. The
+    predicate on ``L``/``R`` columns) and the positional filter. Each
+    side is its :func:`_docs` frame exploded into token rows, only as
+    far as the prefix bound reaches (:func:`_token_rows`); the
     single-side prefix conditions are pre-join filters — the same
     predicate set as the reference's fused WHERE, but explicit so the
     shuffle inputs shrink before the token equi-join.
@@ -831,7 +829,7 @@ def _candidates(
     matched ``pos`` and ``pfxoverlap`` counts the matched prefix tokens.
 
     Bitset path (``n_words > 0``): the rows carry their documents'
-    bitset words (:func:`_tkdf`), so the condition also verifies — the
+    bitset words (:func:`_docs`), so the condition also verifies — the
     full popcount :func:`_set_overlap` equals the reference's ``sfx +
     pfxOverlap - 1`` under set semantics (see _jaccard_score) — and
     keeps one row per pair by the lowest-shared-token rule: no bit of
@@ -845,10 +843,10 @@ def _candidates(
     produces a join row, the smallest shared token does too, and the
     rule keeps exactly that row. The masks are ``~shiftleft(-1L, k)``:
     ``x & -x`` and ``x - 1`` overflow under ANSI at bit 63."""
-    L = idx_tk.filter(
+    L = _token_rows(idx_docs, t).filter(
         _indexing_prefix_cond(F.col("len"), F.col("pos"), t)
     ).alias("L")
-    R = prb_tk.filter(
+    R = _token_rows(prb_docs, t).filter(
         _probing_prefix_cond(F.col("len"), F.col("pos"), t)
     ).alias("R")
     cond = (
@@ -889,8 +887,8 @@ def _candidates(
 
 def _verify(
     cand: DataFrame,
-    l_tk: DataFrame,
-    r_tk: DataFrame,
+    l_docs: DataFrame,
+    r_docs: DataFrame,
     t: float,
     freq: _DocFreq,
     out_cols: tuple[str, str],
@@ -907,10 +905,10 @@ def _verify(
     remaining-suffix pre-filter: it is provably vacuous (see
     _positional_cond).
 
-    ``cand`` comes from :func:`_candidates`; ``l_tk``/``r_tk`` are the
-    two sides' tkdfs (one frame for a self join, the side views of the
-    one side-tagged tkdf for an inner join); ``freq`` is the join's
-    :class:`_DocFreq`. Both attach tables are broadcast when
+    ``cand`` comes from :func:`_candidates`; ``l_docs``/``r_docs`` are
+    the two sides' :func:`_docs` frames (one frame for a self join, the
+    side views of the one side-tagged frame for an inner join); ``freq``
+    is the join's :class:`_DocFreq`. Both attach tables are broadcast when
     ``freq.n_tok`` fits ``_MAX_BROADCAST_VERIFY_TOKENS``, so the
     candidate stream is never shuffled into them; above it AQE picks
     the join. The strategy follows from the data:
@@ -922,17 +920,18 @@ def _verify(
     - array (``freq.dup_rows == 0``: no duplicate ``(id, token)`` rows,
       promised by the tokenizer or counted by :func:`_doc_freq`):
       ``sfx`` by compiled slice + array_intersect of each document's
-      sorted tids (:func:`_pos_token_arrays`). Exact because the
-      suffix row-pair count equals the set overlap when no row
-      repeats. Measured 1.8-7.3× faster than the three-way join at
-      refscale profile cells whose rows were distinct at runtime; an
-      unsliced intersect of the full arrays was slower still on the
-      5-gram t=0.3 benchmark join.
-    - three-way (duplicates present): the
-      reference's pairs × tokens join, which counts every duplicate
-      row pair. An interpreted higher-order pair count that is exact
-      under duplicates was measured 2× slower than it (higher-order
-      expressions do not whole-stage-codegen).
+      sorted tids, the ``arr`` of ``docs`` attached as it is (no
+      re-aggregation; a self join attaches its one ``docs`` to both
+      sides). Exact because the suffix row-pair count equals the set
+      overlap when no row repeats. Measured 1.8-7.3× faster than the
+      three-way join at refscale profile cells whose rows were distinct
+      at runtime; an unsliced intersect of the full arrays was slower
+      still on the 5-gram t=0.3 benchmark join.
+    - three-way (duplicates present): the reference's pairs × tokens
+      join over each side's exploded token rows (:func:`_token_rows`),
+      which counts every duplicate row pair. An interpreted higher-order
+      pair count that is exact under duplicates was measured 2× slower
+      than it (higher-order expressions do not whole-stage-codegen).
     """
     overlap = F.col("sfx") + F.col("pfxoverlap") - 1
     accept = _overlap_cond(overlap, F.col("llen"), F.col("rlen"), t)
@@ -942,13 +941,14 @@ def _verify(
         out, overlap = cand, F.col("overlap")
     elif freq.dup_rows == 0:
         out = _attach(
-            cand, hint(_pos_token_arrays(l_tk)),
-            hint(_pos_token_arrays(r_tk)),
+            cand, hint(l_docs.select("id", "len", "arr")),
+            hint(r_docs.select("id", "len", "arr")),
         ).withColumn("sfx", _suffix_overlap(
             F.col("larr"), F.col("llen"), F.col("lmax"),
             F.col("rarr"), F.col("rlen"), F.col("rmax"),
         )).filter((F.col("sfx") >= 1) & accept)
     else:
+        l_tk, r_tk = _token_rows(l_docs), _token_rows(r_docs)
         out = (
             cand.join(hint(l_tk).alias("VL"), F.col("lid") == F.col("VL.id"))
             .join(
@@ -974,19 +974,12 @@ def _verify(
     )
 
 
-# SHUFFLE_HASH on the jaccard candidate joins: tried, measured,
-# REJECTED (round 12). Bench-context interleaved A/B (tools/
-# bench_ab.py, min-of-3, rows identical in both arms) with the
-# indexing prefix as the hash-build side: jaccard_self_ws 12.32 s
-# SHJ vs 3.55 s SMJ (3.5× LOSS), hotsplit 12.12 vs 3.93,
-# jaccard_inner_ws 8.16 vs 4.79, jaccard_self_qgram 9.96 vs 10.18
-# (tie). The ws corpus has 31 distinct tokens over 32 shuffle
-# partitions — ≤1 join key per partition is pathological for a hash
-# build (one giant chain per partition), while the sorted-run merge
-# streams the same groups fine. The ngram pipeline's equivalent hint
-# (operators/dedup.py _NGRAM_CAND_SHUFFLE_HASH) measured a WIN at
-# 2,333 keys (~73/partition) and is gated on key density for exactly
-# this reason.
+# SHUFFLE_HASH on the jaccard candidate joins was measured and rejected
+# (interleaved A/B, rows identical): jaccard_self_ws 12.32 s vs 3.55 s
+# sort-merge, jaccard_inner_ws 8.16 vs 4.79, jaccard_self_qgram a tie.
+# The ws corpus has 31 tokens over 32 shuffle partitions, one giant hash
+# chain per partition; dedup's n-gram join hint (2,333 keys) won, and is
+# gated on key density for this reason.
 
 
 # --------------------------------------------------------------------------
@@ -1009,45 +1002,45 @@ def jaccard_self_join(
     exact ``jaccard`` double column when ``with_score`` (extension —
     see _jaccard_score). ``hot_df_threshold`` controls the
     heavy-hitter broadcast split for Zipf-skewed corpora (see
-    :func:`_tkdf`): the default ``"auto"`` engages it from measured
+    :func:`_docs`): the default ``"auto"`` engages it from measured
     df skew (round 10 — a 100 TB Zipf corpus hits the hot-token
     straggler on every join, so the mitigation must not hide behind a
     kwarg); an int overrides the threshold, ``None`` disables. It
-    affects only the tkdf build plan, never the result.
+    affects only the ``docs`` build plan, never the result.
 
     The shared stages run with the one token frame on both sides:
-    :func:`_doc_freq`, :func:`_tkdf`, :func:`_candidates` and
+    :func:`_doc_freq`, :func:`_docs`, :func:`_candidates` and
     :func:`_verify`. Specific to the self join is the pair predicate
     (``L.l_id < R.l_id``, each unordered pair once, plus the one-sided
     length filter). Building the frame runs one Spark action, the
     doc-frequency statistics (and the tid sample of a vocabulary above
     ``_RANK_ROWS``); everything after it is lazy. The token frame, the
-    doc-frequency dim and ``tkdf`` stay cached after the result is
+    doc-frequency dim and ``docs`` stay cached after the result is
     computed, until the caller runs ``spark.catalog.clearCache()``:
     a session of many joins holds one set of them per join."""
     _check_score_semantics(tokenizer, with_score)
     _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
-    # tokens feed both the doc-frequency aggregation and the tkdf
+    # tokens feed both the doc-frequency aggregation and the docs
     # join — uncached, the tokenize chain executes twice.
     tokens = tokenizer.tokenize(df, key_attr, join_attr).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # freq.cache stays persisted: tkdf is still lazy, so freeing the
+    # freq.cache stays persisted: docs is still lazy, so freeing the
     # dim here would make the final query aggregate the tokens again
     freq = _doc_freq(tokenizer, hot_df_threshold, tokens)
-    tkdf = _tkdf(
+    docs = _docs(
         tokens, freq.dim, freq.n_words, freq.hot_thr, with_pair_key=True
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     cand = _candidates(
-        tkdf, tkdf, t,
+        docs, docs, t,
         (F.col("L.l_id") < F.col("R.l_id"))
         & _length_cond(F.col("L.len"), F.col("R.len"), t),
         freq.n_words,
     )
     return _verify(
-        cand, tkdf, tkdf, t, freq,
+        cand, docs, docs, t, freq,
         (f"{l_out_prefix}{key_attr}", f"{r_out_prefix}{key_attr}"),
         with_score,
     )
@@ -1146,7 +1139,7 @@ def jaccard_inner_join(
     handling and adaptive side selection (jaccard_join.py:265-362).
 
     ``hot_df_threshold`` (round 10): the heavy-hitter broadcast split
-    of :func:`_tkdf`, applied PER SIDE to the shared cross-table df —
+    of :func:`_docs`, applied PER SIDE to the shared cross-table df —
     a token row is hot iff its own side's df clears the threshold.
     ``"auto"`` (default) engages from measured skew; an int overrides;
     ``None`` disables. Build plan only — output rows are identical
@@ -1157,11 +1150,12 @@ def jaccard_inner_join(
     ``r_df``; the R-S join of Vernica, Carey and Li (SIGMOD 2010) tags
     its records the same way: :func:`_doc_freq` (one aggregate with
     per-side counts, cross-table df, widow placeholder
-    :data:`_WIDOW_DF`), :func:`_tkdf` (one window build over ``(side,
-    key)``, persisted once), :func:`_widow_counts`, then
-    :func:`_candidates` and :func:`_verify` over the tkdf's ``side ==
-    i`` and ``side == j`` views. Keys of different types keep their own columns
-    (:func:`_tag_sides`), so no cast converts one side's keys.
+    :data:`_WIDOW_DF`), :func:`_docs` (one per-document build grouped
+    by ``(side, key)``, persisted once), :func:`_widow_counts`, then
+    :func:`_candidates` and :func:`_verify` over the ``docs`` frame's
+    ``side == i`` and ``side == j`` views. Keys of different types keep
+    their own columns (:func:`_tag_sides`), so no cast converts one
+    side's keys.
 
     Specific to the inner join are the side swap — the side with more
     indexing-prefix widows becomes the indexing side (ties go to
@@ -1181,16 +1175,17 @@ def jaccard_inner_join(
     tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
     doc = ("side", *dict.fromkeys(keys))
     freq = _doc_freq(tokenizer, hot_df_threshold, tokens, doc)
-    tk = _tkdf(
+    docs = _docs(
         tokens, freq.dim, freq.n_words, freq.hot_thr, freq.side_dfs, doc
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    widows = _widow_counts(tk, t)
-    # That job materialized the persisted tkdf, so the cross-table dim
-    # cache is now dead weight — free it.
+    widows = _widow_counts(docs, t)
+    # That job materialized the persisted docs, so the token frame and
+    # the cross-table dim cache are now dead weight — free them.
     freq.cache.unpersist()
+    tokens.unpersist()
 
     def view(side: int) -> DataFrame:
-        v = tk.filter(F.col("side") == side)
+        v = docs.filter(F.col("side") == side)
         if keys[0] == keys[1]:
             return v
         return v.drop(keys[1 - side]).withColumnRenamed(keys[side], "id")
@@ -1198,9 +1193,9 @@ def jaccard_inner_join(
     # Side swap: indexing side i keeps the short 2t/(1+t) prefix, the
     # probing side j takes the longer t prefix.
     i, j = (0, 1) if widows[0] > widows[1] else (1, 0)
-    idx_tk, prb_tk = view(i), view(j)
+    idx_docs, prb_docs = view(i), view(j)
     cand = _candidates(
-        idx_tk, prb_tk, t,
+        idx_docs, prb_docs, t,
         _length_cond(F.col("L.len"), F.col("R.len"), t)
         & _length_cond(F.col("R.len"), F.col("L.len"), t),
         freq.n_words,
@@ -1210,7 +1205,7 @@ def jaccard_inner_join(
     # probing side's with the right, regardless of swap.
     prefixes = (l_out_prefix, r_out_prefix)
     return _verify(
-        cand, idx_tk, prb_tk, t, freq,
+        cand, idx_docs, prb_docs, t, freq,
         (f"{prefixes[i]}{l_key_attr}", f"{prefixes[j]}{r_key_attr}"),
         with_score,
     )

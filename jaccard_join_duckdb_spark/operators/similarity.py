@@ -445,7 +445,7 @@ def semantic_dedup(
     # unpersisted frame re-runs the Arrow assignment kernel over the
     # whole corpus once per consumer (round 11: measured 3 scans at
     # sf0.1; the persist leaves one). Freed by the session's
-    # clearCache discipline, same as the jaccard tkdf persists.
+    # clearCache discipline, same as the jaccard docs persists.
     assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
     l = assigned.select(
         "lst",

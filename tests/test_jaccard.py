@@ -290,15 +290,16 @@ def test_gate_stats_formula(spark, case, distinct):
     widows = want.pop("widows", None)
     if len(frames) == 1:
         freq = J._doc_freq(tok, None, frames[0])
-        tkdf = J._tkdf(frames[0], freq.dim, freq.n_words, None)
+        docs = J._docs(frames[0], freq.dim, freq.n_words, None)
     else:
         tagged, _ = J._tag_sides(*frames)
         doc = ("side", "id")
         freq = J._doc_freq(tok, None, tagged, doc)
-        tkdf = J._tkdf(tagged, freq.dim, freq.n_words, None, freq.side_dfs,
+        docs = J._docs(tagged, freq.dim, freq.n_words, None, freq.side_dfs,
                        doc)
-        assert J._widow_counts(tkdf, 0.5) == widows
+        assert J._widow_counts(docs, 0.5) == widows
     assert bool(freq.n_words) == distinct
+    tkdf = J._token_rows(docs)
     assert dict(tkdf.dtypes)["token"] == "int"  # the dense tid
     got = {k: getattr(freq, k) for k in want}
     freq.cache.unpersist()
@@ -335,7 +336,8 @@ def test_join_build_spark_actions(spark, mode):
         out = J.jaccard_inner_join(frame(11), frame(17), "id", "id", "val",
                                    "val", tok, 0.4)
     assert n_actions() - before == (1 if mode == "self" else 2)
-    assert "array_sort" in out._jdf.queryExecution().optimizedPlan().toString()
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "array_intersect" in plan
     spark.catalog.clearCache()
 
 
@@ -371,14 +373,15 @@ _VERIFY_CASES = {
     "self-bitset": ("self", lambda: WhitespaceTokzr(distinct_rows=True),
                     "distinct", None, "bit_count"),
     # cannot promise distinct rows: _doc_freq counts zero duplicates
-    "self-array": ("self", WhitespaceTokzr, "distinct", None, "array_sort"),
+    "self-array": ("self", WhitespaceTokzr, "distinct", None,
+                   "array_intersect"),
     "self-three-way-quirk": ("self", WhitespaceTokzr, "dup", None, None),
     "self-three-way-bag": ("self", lambda: WhitespaceTokzr(return_set=False),
                            "dup", None, None),
     "inner-bitset": ("inner", lambda: WhitespaceTokzr(distinct_rows=True),
                      "distinct", "distinct", "bit_count"),
     "inner-array": ("inner", WhitespaceTokzr, "distinct", "distinct",
-                    "array_sort"),
+                    "array_intersect"),
     # one duplicate-carrying side vetoes the array verify for the join
     "inner-three-way-one-side": ("inner", WhitespaceTokzr, "dup",
                                  "distinct", None),
@@ -386,7 +389,7 @@ _VERIFY_CASES = {
                             lambda: WhitespaceTokzr(return_set=False),
                             "dup", "dup", None),
 }
-_VERIFY_MARKERS = ("bit_count", "array_sort")
+_VERIFY_MARKERS = ("bit_count", "array_intersect")
 
 
 @pytest.mark.parametrize("t", [0.2, 0.4, 0.6])
@@ -417,7 +420,7 @@ def test_verify_strategy_equals_brute_force(spark, monkeypatch, case, t):
     if base != case:
         monkeypatch.setattr(J, "_RANK_ROWS", 8)
         if marker == "bit_count":
-            marker = "array_sort"
+            marker = "array_intersect"
     corpus = {"distinct": _distinct_corpus, "dup": _dup_corpus}
 
     def frame(kind, seed):
@@ -515,7 +518,8 @@ def test_tid_rank_buckets(spark, monkeypatch, mode):
     assert tids == sorted(set(tids))  # unique and in (df, token) order
     assert len({tid >> 32 for tid in tids}) > 4  # many buckets
     assert build()[1] == ranked
-    tkdf = J._tkdf(tokens, freq.dim, 0, None, freq.side_dfs, doc)
+    tkdf = J._token_rows(J._docs(tokens, freq.dim, 0, None, freq.side_dfs,
+                                 doc))
     assert dict(tkdf.dtypes)["token"] == "bigint"
     by_doc = {}
     for r in tkdf.collect():
@@ -524,6 +528,79 @@ def test_tid_rank_buckets(spark, monkeypatch, mode):
         rows.sort(key=lambda r: r.pos)
         assert [r.pos for r in rows] == list(range(1, len(rows) + 1))
         assert [r.token for r in rows] == sorted(r.token for r in rows)
+
+
+@pytest.mark.parametrize(
+    "case", ["bag", "buckets", "hot", "mixed-keys", "bitset"]
+)
+def test_docs_pos_parity(spark, monkeypatch, case):
+    """The token rows exploded from the per-document ``docs`` frame,
+    ``(doc, len, token, pos)``, equal an independent ``row_number()
+    OVER (PARTITION BY doc ORDER BY df, token)`` over tokens ⋈ the
+    ranked dim, ``token`` being the tid: with duplicate ``(id, token)``
+    rows (bag mode, the three-way verify's input), multi-bucket bigint
+    tids, the hot-token split, the inner join's mixed-key ``id0``/``id1``
+    frame and the bitset path, whose words must also equal
+    :func:`_doc_bitsets` of the same tids."""
+    import jaccard_join_duckdb_spark.operators.jaccard as J
+    from pyspark.sql.window import Window
+
+    if case == "buckets":
+        monkeypatch.setattr(J, "_RANK_ROWS", 8)
+    tok = {
+        "bag": WhitespaceTokzr(return_set=False),
+        "bitset": WhitespaceTokzr(distinct_rows=True),
+    }.get(case, WhitespaceTokzr())
+
+    def frame(corpus, seed):
+        return spark.createDataFrame(
+            list(enumerate(corpus(30, seed))), "id long, val string"
+        )
+
+    if case == "mixed-keys":
+        right = spark.createDataFrame(
+            [(f"r{i}", d) for i, d in enumerate(_distinct_corpus(30, 17))],
+            "id string, val string",
+        )
+        tokens, keys = J._tag_sides(
+            tok.tokenize(frame(_dup_corpus, 11), "id", "val"),
+            tok.tokenize(right, "id", "val"),
+        )
+        doc = ("side", *keys)
+        assert keys == ("id0", "id1")
+    else:
+        corpus = _dup_corpus if case == "bag" else _distinct_corpus
+        tokens, doc = tok.tokenize(frame(corpus, 11), "id", "val"), ("id",)
+    freq = J._doc_freq(tok, None, tokens, doc)
+    hot = 3 if case == "hot" else None
+    docs = J._docs(tokens, freq.dim, freq.n_words, hot, freq.side_dfs, doc)
+    got = J._token_rows(docs).select(*doc, "len", "token", "pos")
+
+    ranked = tokens.join(freq.dim.select("token", "df", "tid"), "token")
+    want = ranked.select(
+        *doc, "len", F.col("tid").alias("token"),
+        F.row_number().over(
+            Window.partitionBy(*doc).orderBy("df", "token")
+        ).alias("pos"),
+    )
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(
+        map(tuple, want.collect()), key=str
+    )
+    plan = docs._jdf.queryExecution().optimizedPlan().toString()
+    assert ("LeftAnti" in plan) == (case == "hot")
+    assert dict(got.dtypes)["token"] == (
+        "bigint" if case == "buckets" else "int"
+    )
+    if case == "bag":
+        assert freq.dup_rows > 0
+    if case == "bitset":
+        words = [f"b{i}" for i in range(freq.n_words)]
+        assert words
+        bits = J._doc_bitsets(ranked, freq.n_words).select("id", *words)
+        assert sorted(map(tuple, docs.select("id", *words).collect())) == (
+            sorted(map(tuple, bits.collect()))
+        )
+    freq.cache.unpersist()
 
 
 @pytest.mark.parametrize("hot", [None, 3])
@@ -694,7 +771,7 @@ def test_auto_hot_split_engages_on_skew(spark, monkeypatch, path):
     assert "LeftAnti" in plan_of(auto)
     assert "LeftAnti" not in plan_of(off)
     optimized = auto._jdf.queryExecution().optimizedPlan().toString()
-    assert ("array_sort" in optimized) == (not bag)
+    assert ("array_intersect" in optimized) == (not bag)
     assert pairs(auto) == pairs(off)
     assert pairs(auto)  # non-degenerate corpus: the hot token pairs up
 

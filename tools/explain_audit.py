@@ -61,8 +61,8 @@ SINGLE_OK: set = set()
 # scalar-sized by construction.)
 SINGLE_CACHE_OK = {
     # Self join: the tid ranking (jaccard._tid_rank, on every path;
-    # the pos and bitset-word windows of jaccard._tkdf are partitioned
-    # by id) windows the PERSISTED doc-frequency dim — verified in the
+    # jaccard._docs builds pos and the bitset words by a groupBy on id,
+    # with no window) windows the PERSISTED doc-frequency dim — verified in the
     # plan text: the exchange input is the [token, df] vocabulary dim
     # out of the dim HashAggregate's cache. It runs unpartitioned only
     # when the doc-frequency stats proved vocab_n <= _RANK_ROWS
@@ -74,8 +74,8 @@ SINGLE_CACHE_OK = {
     "jaccard_knn",
     "jaccard_topk_pairs",
     # Inner join: same vocab-dim tid ranking over the
-    # cross-table dfreq, built once for the one side-tagged tkdf (its
-    # windows are partitioned by side and key). Formerly in SINGLE_OK,
+    # cross-table dfreq, built once for the one side-tagged docs frame
+    # (grouped by side and key). Formerly in SINGLE_OK,
     # which skipped the check entirely; these now at least require the
     # cache-node producer like the self family.
     "jaccard_inner_ws",
