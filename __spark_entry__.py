@@ -240,9 +240,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_near_duplicates(
         _docs(spark, sf_dir), "doc_id", "text", T_MINHASH
     )
-    return connected_components(
-        pairs, "l_id", "r_id", dedup_edges=False
-    ).select(
+    return connected_components(pairs, "l_id", "r_id").select(
         F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
@@ -259,9 +257,7 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     pairs = minhash_near_duplicates(docs, "doc_id", "text", T_MINHASH)
-    # minhash pairs are distinct and one-directional: skip the edge
-    # dedup shuffle (hash-min is correct under duplicates regardless)
-    comps = connected_components(pairs, "l_id", "r_id", dedup_edges=False)
+    comps = connected_components(pairs, "l_id", "r_id")
     kept = keep_cluster_representatives(
         docs, "doc_id", comps, score=F.length(F.col("text"))
     )

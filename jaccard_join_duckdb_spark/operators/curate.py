@@ -65,7 +65,6 @@ def curate_corpus(
     num_hashes: int = 32,
     bands: int = 8,
     seed: int = 42,
-    cc_algorithm: str = "hash_min",
     cc_max_iterations: int = 50,
     allowed_langs: list[str] | None = None,
     max_dup_token_ratio: float | None = None,
@@ -87,7 +86,9 @@ def curate_corpus(
     near-duplicate cluster, and — when ``embeddings`` is given — its
     embedding near-duplicate cluster. Each stage is computed on the
     previous stage's survivors, as real pipelines do — junk is cut
-    before the expensive stages.
+    before the expensive stages. Clusters are hash-min connected
+    components (:func:`.dedup.connected_components`), whose rounds
+    ``cc_max_iterations`` bounds.
 
     ``embeddings`` rows join to documents on ``emb_id_col == id_col``
     (documents without an embedding simply cannot be semantic
@@ -138,10 +139,7 @@ def curate_corpus(
         tokenizer=tokenizer, num_hashes=num_hashes, bands=bands, seed=seed,
     )
     labels = connected_components(
-        pairs, "l_id", "r_id",
-        max_iterations=cc_max_iterations, algorithm=cc_algorithm,
-        # minhash pairs are distinct and one-directional
-        dedup_edges=False,
+        pairs, "l_id", "r_id", max_iterations=cc_max_iterations
     )
     losers = labels.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias(id_col)
@@ -159,10 +157,7 @@ def curate_corpus(
             seed=emb_seed,
         )
         elabels = connected_components(
-            epairs, "l_id", "r_id",
-            max_iterations=cc_max_iterations, algorithm=cc_algorithm,
-            # banded-LSH pairs are distinct and one-directional
-            dedup_edges=False,
+            epairs, "l_id", "r_id", max_iterations=cc_max_iterations
         )
         elosers = elabels.filter(F.col("id") != F.col("comp")).select(
             F.col("id").alias(id_col)

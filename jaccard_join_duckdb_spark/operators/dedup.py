@@ -132,7 +132,6 @@ _MAX_BITSET_WORDS = 8
 # giant hash chain per partition, where sorted-run merging streams
 # the same groups fine) and a tie at ~15 keys/partition. At corpus
 # scale the gracefully-spilling sort-merge stays.
-_NGRAM_CAND_SHUFFLE_HASH = True
 _SHJ_MAX_BUILD_ROWS = 2_000_000
 _SHJ_MIN_KEYS_PER_PARTITION = 32
 
@@ -871,10 +870,7 @@ def _ngram_bitset_pipeline(
     )
     pfx = tk.filter(_probing_prefix_cond(F.col("len"), F.col("pos"), tc))
     shj = (
-        _NGRAM_CAND_SHUFFLE_HASH
-        and 0
-        < sum(r["df"] for r in dfreq_rows)
-        <= _SHJ_MAX_BUILD_ROWS
+        0 < sum(r["df"] for r in dfreq_rows) <= _SHJ_MAX_BUILD_ROWS
         and vocab_n
         >= _SHJ_MIN_KEYS_PER_PARTITION * _shuffle_partitions(toks)
     )
@@ -1513,7 +1509,6 @@ def bloom_words(
     gram_col: str,
     m_bits: int,
     num_hashes: int,
-    materialize: bool = False,
 ) -> DataFrame:
     """Distributed Bloom-filter BUILD as a SPARSE word table:
     ``(w: int, word: bigint)`` — the non-zero 64-bit words of an
@@ -1534,11 +1529,8 @@ def bloom_words(
     sparse table probes as ``num_hashes`` broadcast HASH joins with
     constant-width rows instead (:func:`bloom_prefilter`).
 
-    ``materialize=True`` eagerly ``localCheckpoint``s the table: the
-    build computes exactly once and every probe join broadcasts a
-    leaf RDD scan — otherwise each of the probe's ``num_hashes``
-    broadcast exchanges would re-execute the build subtree (they are
-    alias-renamed copies, so Spark cannot ReusedExchange them)."""
+    The table is eagerly ``localCheckpoint``-ed (one bounded job)
+    before it is returned."""
     m_bits = int(m_bits)
     if m_bits % 64 or m_bits <= 0:
         raise ValueError("m_bits must be a positive multiple of 64")
@@ -1562,7 +1554,12 @@ def bloom_words(
         .groupBy("w")
         .agg(F.bit_or("b").alias("word"))
     )
-    return out.localCheckpoint(eager=True) if materialize else out
+    # Checkpointed so the build computes exactly once and every probe
+    # join broadcasts a leaf RDD scan: otherwise each of the probe's
+    # ``num_hashes`` broadcast exchanges would re-execute the build
+    # subtree (they are alias-renamed copies, so Spark cannot
+    # ReusedExchange them).
+    return out.localCheckpoint(eager=True)
 
 
 def bloom_prefilter(
@@ -1656,7 +1653,7 @@ def bloom_ngram_decontaminate(
     ``m_bits=None`` auto-sizes the table from the benchmark shingle
     count (one scalar job on the SMALL side; pass an explicit power
     of two to skip it). The build is one bounded-width ``bit_or``
-    aggregation materialized eagerly (see :func:`bloom_words` — one
+    aggregation checkpointed eagerly (see :func:`bloom_words` — one
     extra bounded job, paid once), so the main query's probe joins
     broadcast a leaf scan; the benchmark side is scanned twice
     (build + exact tail) rather than persisted — it is small by
@@ -1669,7 +1666,7 @@ def bloom_ngram_decontaminate(
     q = _shingle_hashes(query_df, id_col, text_col, int(n), "q_id")
     if m_bits is None:
         m_bits = _bloom_size_bits(q.count(), bits_per_element)
-    words = bloom_words(q, "g", m_bits, num_hashes, materialize=True)
+    words = bloom_words(q, "g", m_bits, num_hashes)
     c = _shingle_hashes(corpus_df, id_col, text_col, int(n), "c_id")
     cand = bloom_prefilter(c, "g", words, m_bits, num_hashes)
     q_sizes = q.groupBy("q_id").agg(F.count(F.lit(1)).alias("q_ngrams"))
@@ -1679,7 +1676,7 @@ def bloom_ngram_decontaminate(
 @dataclass
 class BloomNgramIndex:
     """Static-benchmark Bloom decontamination index: the persisted
-    shingle frames of :class:`NgramIndex` plus the materialized
+    shingle frames of :class:`NgramIndex` plus the checkpointed
     sparse word table. Build with :func:`bloom_ngram_index`, match
     corpus batches with :func:`bloom_ngram_decontaminate_indexed`."""
 
@@ -1704,7 +1701,7 @@ def bloom_ngram_index(
     num_hashes: int = 7,
     bits_per_element: int = 16,
 ) -> BloomNgramIndex:
-    """Shingle + persist the benchmark side and materialize its Bloom
+    """Shingle + persist the benchmark side and build its Bloom
     word table once (localCheckpoint-ed, so per-batch probe plans
     broadcast a leaf scan, not the build)."""
     n = int(n)
@@ -1721,8 +1718,7 @@ def bloom_ngram_index(
     return BloomNgramIndex(
         grams=grams,
         sizes=sizes,
-        words=bloom_words(grams, "g", m_bits, num_hashes,
-                          materialize=True),
+        words=bloom_words(grams, "g", m_bits, num_hashes),
         n=n,
         m_bits=int(m_bits),
         num_hashes=int(num_hashes),
@@ -1793,10 +1789,9 @@ def _cc_driver_hash_min(spark, pdf, max_iterations: int, id_type) -> DataFrame:
         lab = new
     if not converged:
         raise RuntimeError(
-            f"connected_components(hash_min) did not converge within "
+            "connected_components did not converge within "
             f"{max_iterations} rounds (labels still moving); "
-            "raise max_iterations or use algorithm='two_phase' "
-            "(O(log n) rounds regardless of diameter)"
+            "raise max_iterations"
         )
     return spark.createDataFrame(
         pd.DataFrame({"id": nodes, "comp": nodes[lab]}),
@@ -1814,8 +1809,6 @@ def connected_components(
     src: str = "l_id",
     dst: str = "r_id",
     max_iterations: int = 50,
-    algorithm: str = "hash_min",
-    dedup_edges: bool = True,
 ) -> DataFrame:
     """``(id, comp)`` for every node appearing in ``edges``, where
     ``comp`` is the smallest node id in the node's connected component
@@ -1839,13 +1832,9 @@ def connected_components(
     own label), so the exact ``sum(comp)`` (decimal(38,0), no
     overflow) strictly decreases until fixpoint and sum-equality ⟺
     zero label changes; this replaces the former eager-checkpoint job
-    PLUS new⋈old changed-count join job per round. For graphs with
-    whale components at cluster scale, ``algorithm='two_phase'`` runs
-    large-star/small-star (Kiveris et al.), which converges in
-    O(log n) rounds regardless of diameter and never funnels a whale
-    component's labels through one reducer; for dedup edge sets the
-    diameter argument makes hash-min the cheaper plan, so it stays
-    the default.
+    PLUS new⋈old changed-count join job per round. Duplicate edges,
+    reversed duplicates and self-loops need no dedup: a duplicate
+    min-message changes nothing.
     """
     e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # Size-gated driver fast path (round 11, guide §1.2 "choose the
@@ -1863,10 +1852,8 @@ def connected_components(
     # BSP loop below remains the plan (at corpus scale the edge list
     # is never driver-bounded; locally a 965K-edge minhash graph
     # spent 6 round-jobs ≈ 5 s on what this path runs in ~0.2 s).
-    # Symmetrization happens on the numpy arrays; duplicate edges
-    # need no dedup (duplicate min-messages change nothing).
-    if algorithm not in ("hash_min", "two_phase"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    # Symmetrization happens on the numpy arrays.
+    #
     # Persist the one-directional edge list BEFORE anything consumes
     # it (round 12, VERDICT r11 #6): an above-cap probe's partial
     # execution of the pair-generation subtree is reused instead of
@@ -1875,7 +1862,7 @@ def connected_components(
     # direction. Unpersisted again as soon as the symmetric edge set
     # is materialized (or at the driver fast-path exit).
     e0 = e0.persist(StorageLevel.MEMORY_AND_DISK)
-    if algorithm == "hash_min" and isinstance(
+    if isinstance(
         e0.schema["u"].dataType, (T.LongType, T.IntegerType, T.ShortType)
     ):
         pdf = e0.limit(_CC_DRIVER_MAX_EDGES + 1).toPandas()
@@ -1886,22 +1873,9 @@ def connected_components(
             )
             e0.unpersist()
             return out
-    e = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if dedup_edges:
-        # Hash-min is CORRECT under duplicate edges (duplicate
-        # messages don't change a min) — the distinct is a
-        # performance choice that shrinks the persisted edge list
-        # when the input carries heavy multi-edges. Near-dup pair
-        # generators emit distinct one-directional pairs, so those
-        # callers skip this full 2×|E| shuffle with
-        # ``dedup_edges=False``.
-        e = e.distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    if algorithm == "two_phase":
-        out = _cc_two_phase(e, max_iterations)
-        e.unpersist()
-        e0.unpersist()
-        return out
+    e = e0.union(
+        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     _label_sum = F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
     labels = (
         e.select("u").distinct().select("u", F.col("u").alias("comp"))
@@ -1952,7 +1926,7 @@ def connected_components(
             # MAP-SIDE hash join on the post-aggregate (≤ n_nodes
             # rows). Above the cap it would add a second corpus-scale
             # shuffle per round — there the plain d-round sort-merge
-            # (or algorithm='two_phase' for whales) stays the plan.
+            # stays the plan.
             jump = F.broadcast(
                 labels.select(
                     F.col("u").alias("comp"), F.col("comp").alias("__j")
@@ -1977,108 +1951,12 @@ def connected_components(
         # converge in a handful of rounds.
         e.unpersist()
         raise RuntimeError(
-            f"connected_components(hash_min) did not converge within "
+            "connected_components did not converge within "
             f"{max_iterations} rounds (labels still moving); "
-            "raise max_iterations or use algorithm='two_phase' "
-            "(O(log n) rounds regardless of diameter)"
+            "raise max_iterations"
         )
     e.unpersist()
     return labels.select(F.col("u").alias("id"), "comp")
-
-
-def _cc_two_phase(e: DataFrame, max_iterations: int) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") over the symmetric distinct
-    edge set ``e(u, v)``; returns ``(id, comp)``.
-
-    Each round:
-    - large-star: every node connects its LARGER neighbors to the
-      minimum of its neighborhood (incl. itself) — long chains
-      collapse geometrically;
-    - small-star: every node rewires its smaller-or-equal neighbors
-      to that minimum — forming local stars.
-    The edge set reaches a fixpoint (every component one star rooted
-    at its minimum) in O(log n) rounds; no step aggregates a whole
-    component through a single key, which is what makes it safe for
-    whale components where hash-min's label table hot-spots.
-
-    Fixpoint detection compares (count, sum of xxhash64) of the
-    canonicalized edge set between rounds — two scalars instead of a
-    set-difference join. Labels: star edges read as child→root, plus
-    isolated/self-loop nodes as their own roots.
-    """
-    nodes = e.select("u").distinct().localCheckpoint()
-    cur = (
-        e.filter(F.col("u") < F.col("v")).select("u", "v").distinct()
-    ).localCheckpoint()
-
-    def _sig(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    sig = _sig(cur)
-    for _ in range(max_iterations):
-        sym = cur.union(
-            cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        # m(u) = min(N(u) ∪ {u})
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("u", "mn").alias("m"))
-        )
-        # large-star: (v, m(u)) for v ∈ N(u), v > u. Since v > u >= m,
-        # every emitted edge is (larger, smaller).
-        ls = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star over the (a > b) directed edges: for each a,
-        # m = min of its smaller neighborhood; rewire each smaller
-        # neighbor x and a itself to m.
-        sm = ls.groupBy("a").agg(F.min("b").alias("m"))
-        joined = ls.join(sm, "a")
-        new = (
-            joined.filter(F.col("b") != F.col("m"))
-            .select(F.col("b").alias("u"), F.col("m").alias("v"))
-            .union(sm.select(F.col("a").alias("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-            .distinct()
-        ).localCheckpoint()
-        new_sig = _sig(new)
-        old = cur
-        cur = new
-        old.unpersist()
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components(two_phase) did not reach a fixpoint "
-            f"within {max_iterations} rounds — with O(log n) convergence "
-            "this indicates a graph far beyond any expected scale; raise "
-            "max_iterations"
-        )
-    # Fixpoint stars are (root=u < child=v); a child keeps exactly one
-    # root at convergence.
-    labels = (
-        cur.groupBy(F.col("v").alias("id"))
-        .agg(F.min("u").alias("comp"))
-    )
-    singletons = (
-        nodes.join(labels, nodes["u"] == labels["id"], "left_anti")
-        .select(F.col("u").alias("id"), F.col("u").alias("comp"))
-    )
-    return labels.union(singletons)
 
 
 def winnow_fingerprints(

@@ -314,22 +314,6 @@ def _shuffle_partitions(df: DataFrame) -> int:
         return 200  # "auto" (AQE-managed) or unset: Spark's default
 
 
-def _validate_hot_threshold(
-    value: int | str | None, auto: bool = True
-) -> None:
-    """Reject malformed ``hot_df_threshold`` values up front (ADVICE
-    r10: a typo like ``"Auto"`` used to fall past the ``"auto"`` check,
-    stay truthy, and crash at ``int(...)`` deep in plan construction
-    with an unhelpful ValueError). ``auto`` says whether the caller
-    accepts ``"auto"``."""
-    if isinstance(value, str) and not (auto and value == "auto"):
-        raise ValueError(
-            "hot_df_threshold must be an int, None"
-            + (", or 'auto'" if auto else "")
-            + f" (got {value!r})"
-        )
-
-
 # Bitset verification is used when the token vocabulary fits in this
 # many distinct tokens (64 longs on every document row). Q-gram and
 # small-alphabet corpora qualify; unbounded word vocabularies fall back
@@ -390,7 +374,6 @@ class _DocFreq(NamedTuple):
 
 def _doc_freq(
     tokenizer: Tokenizer,
-    hot_df_threshold: int | str | None,
     tokens: DataFrame,
     doc: tuple[str, ...] = ("id",),
 ) -> _DocFreq:
@@ -468,12 +451,10 @@ def _doc_freq(
         # the tid dim broadcasts wholesale: the build join is already
         # map-side and skew-free, so the heavy-hitter split is moot
         hot_thr = None
-    elif hot_df_threshold == "auto":
+    else:
         hot_thr = _auto_hot_threshold(
             n_tok, max_df, _shuffle_partitions(tokens)
         )
-    else:
-        hot_thr = hot_df_threshold
     return _DocFreq(
         _tid_rank(dim, vocab), dim, side_dfs, vocab, n_tok, max_df,
         int(row["dup"] or 0), n_words, hot_thr,
@@ -574,13 +555,14 @@ def _docs(
     row is a heavy hitter when its own side's df (``side_dfs``: ``df``,
     or ``l_df``/``r_df`` by the row's ``side``) is ``>= hot_thr``. The
     hottest word of a crawl corpus puts a constant fraction of all rows
-    into ONE partition of the tokens ⋈ dim join, and AQE cannot split
-    it: the dim aggregate's token-hash partitioning feeds the join with
-    no exchange in between. The few hot dim rows (keyed by ``(side,
-    token)`` for an inner join) broadcast instead, and only the cold
-    tail, pre-filtered by a broadcast anti-join, goes through the
-    shuffle join. Identical output rows; see tools/skew_demo.py for the
-    measured straggler relief.
+    into ONE partition of the tokens ⋈ dim join, and AQE does not split
+    it: both sides are shuffled by token (the ranked dim comes out of
+    the ``tid`` window), yet the executed plan shows no skew split.
+    The few hot dim rows (keyed by ``(side, token)`` for an inner
+    join) broadcast instead, and only the cold tail, pre-filtered by a
+    broadcast anti-join, goes through the shuffle join. Identical
+    output rows; tools/skew_demo.py checks the plan and measures the
+    straggler relief.
     """
     cols = ["token", "df"] if keep_token else ["token", "df", "tid"]
     dfreq = dim.select(*cols)
@@ -646,18 +628,15 @@ def _token_rows(docs: DataFrame, t: float | None = None) -> DataFrame:
 def tokens_with_doc_freq(
     tokens: DataFrame,
     with_pair_key: bool = False,
-    hot_df_threshold: int | None = None,
 ) -> DataFrame:
     """tokens → ``tkdf(id, len, token, df, pos[, l_id])``: the self
     join's per-document build (see :func:`_docs`) exploded back into
-    token rows, as a lazy frame, with the heavy-hitter split at an
-    explicit ``hot_df_threshold`` (None disables it). It keeps the
-    string ``token``: each document sorts its ``struct(df, token)``
-    pairs, so ``pos`` ranks ``(df, token)`` itself and no eager job
-    builds a tid."""
-    _validate_hot_threshold(hot_df_threshold, auto=False)
+    token rows, as a lazy frame, without the heavy-hitter split. It
+    keeps the string ``token``: each document sorts its ``struct(df,
+    token)`` pairs, so ``pos`` ranks ``(df, token)`` itself and no
+    eager job builds a tid."""
     dfreq = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    docs = _docs(tokens, dfreq, 0, hot_df_threshold,
+    docs = _docs(tokens, dfreq, 0, None,
                  with_pair_key=with_pair_key, keep_token=True)
     return _token_rows(docs).select(
         "id", "len", "token.token", "token.df", "pos",
@@ -995,18 +974,14 @@ def jaccard_self_join(
     l_out_prefix: str = "l_",
     r_out_prefix: str = "r_",
     with_score: bool = False,
-    hot_df_threshold: int | str | None = "auto",
 ) -> DataFrame:
     """Prefix-filtered Jaccard self-join; returns the pair DataFrame
     ``({l_out_prefix}{key_attr}, {r_out_prefix}{key_attr})``, plus an
     exact ``jaccard`` double column when ``with_score`` (extension —
-    see _jaccard_score). ``hot_df_threshold`` controls the
-    heavy-hitter broadcast split for Zipf-skewed corpora (see
-    :func:`_docs`): the default ``"auto"`` engages it from measured
-    df skew (round 10 — a 100 TB Zipf corpus hits the hot-token
-    straggler on every join, so the mitigation must not hide behind a
-    kwarg); an int overrides the threshold, ``None`` disables. It
-    affects only the ``docs`` build plan, never the result.
+    see _jaccard_score). On a Zipf-skewed corpus the ``docs`` build
+    takes the heavy-hitter broadcast split (:func:`_docs`) when
+    :func:`_auto_hot_threshold` finds the df skew worth it; the split
+    changes the plan, never the result.
 
     The shared stages run with the one token frame on both sides:
     :func:`_doc_freq`, :func:`_docs`, :func:`_candidates` and
@@ -1019,7 +994,6 @@ def jaccard_self_join(
     computed, until the caller runs ``spark.catalog.clearCache()``:
     a session of many joins holds one set of them per join."""
     _check_score_semantics(tokenizer, with_score)
-    _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
     # tokens feed both the doc-frequency aggregation and the docs
     # join — uncached, the tokenize chain executes twice.
@@ -1028,7 +1002,7 @@ def jaccard_self_join(
     )
     # freq.cache stays persisted: docs is still lazy, so freeing the
     # dim here would make the final query aggregate the tokens again
-    freq = _doc_freq(tokenizer, hot_df_threshold, tokens)
+    freq = _doc_freq(tokenizer, tokens)
     docs = _docs(
         tokens, freq.dim, freq.n_words, freq.hot_thr, with_pair_key=True
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1133,16 +1107,14 @@ def jaccard_inner_join(
     l_out_prefix: str = "l_",
     r_out_prefix: str = "r_",
     with_score: bool = False,
-    hot_df_threshold: int | str | None = "auto",
 ) -> DataFrame:
     """Two-table prefix-filtered join with the reference's widow
     handling and adaptive side selection (jaccard_join.py:265-362).
 
-    ``hot_df_threshold`` (round 10): the heavy-hitter broadcast split
-    of :func:`_docs`, applied PER SIDE to the shared cross-table df —
-    a token row is hot iff its own side's df clears the threshold.
-    ``"auto"`` (default) engages from measured skew; an int overrides;
-    ``None`` disables. Build plan only — output rows are identical
+    The heavy-hitter broadcast split of :func:`_docs`, when
+    :func:`_auto_hot_threshold` engages it, applies PER SIDE to the
+    shared cross-table df: a token row is hot iff its own side's df
+    clears the threshold. Build plan only; output rows are identical
     either way.
 
     The shared stages run ONCE, over one side-tagged token frame
@@ -1166,7 +1138,6 @@ def jaccard_inner_join(
     by an order-equivalent constant.
     """
     _check_score_semantics(tokenizer, with_score)
-    _validate_hot_threshold(hot_df_threshold)
     t = float(threshold)
     tokens, keys = _tag_sides(
         tokenizer.tokenize(l_df, l_key_attr, l_join_attr),
@@ -1174,7 +1145,7 @@ def jaccard_inner_join(
     )
     tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
     doc = ("side", *dict.fromkeys(keys))
-    freq = _doc_freq(tokenizer, hot_df_threshold, tokens, doc)
+    freq = _doc_freq(tokenizer, tokens, doc)
     docs = _docs(
         tokens, freq.dim, freq.n_words, freq.hot_thr, freq.side_dfs, doc
     ).persist(StorageLevel.MEMORY_AND_DISK)

@@ -473,13 +473,8 @@ def semantic_dedup(
         )
         .filter(F.col("cosine") >= F.lit(float(threshold)))
     )
-    # Every vector lands in exactly one list (the assign kernel emits
-    # one row per input row), so each unordered pair appears at most
-    # once — the CC edge-dedup shuffle would be a full 2|E| distinct
-    # for nothing (hash-min is correct under duplicates regardless).
     comps = connected_components(
-        edges, "l_id", "r_id", max_iterations=max_iterations,
-        dedup_edges=False,
+        edges, "l_id", "r_id", max_iterations=max_iterations
     )
     return (
         assigned.select(

@@ -42,7 +42,6 @@ def cms_table(
     key_col: str,
     width: int,
     depth: int,
-    materialize: bool = False,
 ) -> DataFrame:
     """Count-Min Sketch BUILD over every occurrence row of ``df``:
     ``(row: int, idx: int, cnt: bigint)`` — at most ``depth × width``
@@ -52,13 +51,9 @@ def cms_table(
     xxhash64(key, row, salt) mod width``); the build is one explode +
     one ``count`` aggregation with map-side combine, so the shuffle
     carries at most ``depth × width`` rows per input partition no
-    matter how many occurrences or distinct keys flow in.
-
-    ``materialize=True`` eagerly ``localCheckpoint``s the table so
-    every probe join broadcasts a leaf scan (the probe's ``depth``
-    broadcast exchanges are alias-renamed copies Spark cannot
-    ReusedExchange — without materialization each would re-execute
-    the build)."""
+    matter how many occurrences or distinct keys flow in. The table is
+    eagerly ``localCheckpoint``-ed (one bounded job) before it is
+    returned."""
     w, d = int(width), int(depth)
     if w < 1 or d < 1:
         raise ValueError("width and depth must be >= 1")
@@ -83,7 +78,10 @@ def cms_table(
         .groupBy("row", "idx")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return out.localCheckpoint(eager=True) if materialize else out
+    # Checkpointed so every probe join broadcasts a leaf scan: the
+    # probe's ``depth`` broadcast exchanges are alias-renamed copies
+    # Spark cannot ReusedExchange, so each would re-execute the build.
+    return out.localCheckpoint(eager=True)
 
 
 def cms_min_filter(
@@ -152,9 +150,7 @@ def heavy_hitters(
     t = int(threshold)
     if t < 1:
         raise ValueError("threshold must be >= 1")
-    cms = cms_table(
-        df.select(key_col), key_col, width, depth, materialize=True
-    )
+    cms = cms_table(df.select(key_col), key_col, width, depth)
     return (
         cms_min_filter(df, key_col, cms, t, width, depth)
         .groupBy(key_col)

@@ -289,12 +289,12 @@ def test_gate_stats_formula(spark, case, distinct):
     want = dict(want)
     widows = want.pop("widows", None)
     if len(frames) == 1:
-        freq = J._doc_freq(tok, None, frames[0])
+        freq = J._doc_freq(tok, frames[0])
         docs = J._docs(frames[0], freq.dim, freq.n_words, None)
     else:
         tagged, _ = J._tag_sides(*frames)
         doc = ("side", "id")
-        freq = J._doc_freq(tok, None, tagged, doc)
+        freq = J._doc_freq(tok, tagged, doc)
         docs = J._docs(tagged, freq.dim, freq.n_words, None, freq.side_dfs,
                        doc)
         assert J._widow_counts(docs, 0.5) == widows
@@ -508,7 +508,7 @@ def test_tid_rank_buckets(spark, monkeypatch, mode):
         doc = ("side", "id")
 
     def build():
-        freq = J._doc_freq(tok, None, tokens, doc)
+        freq = J._doc_freq(tok, tokens, doc)
         rows = freq.dim.select("df", "token", "tid").collect()
         return freq, sorted(rows, key=lambda r: (r.df, r.token))
 
@@ -571,7 +571,7 @@ def test_docs_pos_parity(spark, monkeypatch, case):
     else:
         corpus = _dup_corpus if case == "bag" else _distinct_corpus
         tokens, doc = tok.tokenize(frame(corpus, 11), "id", "val"), ("id",)
-    freq = J._doc_freq(tok, None, tokens, doc)
+    freq = J._doc_freq(tok, tokens, doc)
     hot = 3 if case == "hot" else None
     docs = J._docs(tokens, freq.dim, freq.n_words, hot, freq.side_dfs, doc)
     got = J._token_rows(docs).select(*doc, "len", "token", "pos")
@@ -603,13 +603,12 @@ def test_docs_pos_parity(spark, monkeypatch, case):
     freq.cache.unpersist()
 
 
-@pytest.mark.parametrize("hot", [None, 3])
 @pytest.mark.parametrize("with_pair_key", [False, True])
-def test_tokens_with_doc_freq_output(spark, with_pair_key, hot):
+def test_tokens_with_doc_freq_output(spark, with_pair_key):
     """The public tkdf build keeps its string ``token`` while the joins
     carry integer tids: ``(id, len, token, df, pos[, l_id])`` with the
     types and rows of the reference's tkdf (jaccard_join.py:127-137),
-    ``pos`` ranking ``(df, token)`` — with and without the hot split."""
+    ``pos`` ranking ``(df, token)``."""
     from jaccard_join_duckdb_spark import tokens_with_doc_freq
 
     df = spark.createDataFrame(
@@ -617,7 +616,7 @@ def test_tokens_with_doc_freq_output(spark, with_pair_key, hot):
         "id long, val string",
     )
     tokens = WhitespaceTokzr().tokenize(df, "id", "val")
-    got = tokens_with_doc_freq(tokens, with_pair_key, hot)
+    got = tokens_with_doc_freq(tokens, with_pair_key)
     assert got.dtypes == [
         ("id", "bigint"), ("len", "int"), ("token", "string"),
         ("df", "bigint"), ("pos", "int"),
@@ -694,50 +693,20 @@ def test_auto_hot_threshold_unit():
         assert J._auto_hot_threshold(1_000_000, 900, 10_000) == 900
 
 
-def test_hot_threshold_kwarg_validated_up_front(spark):
-    """ADVICE r10: a string other than 'auto' (e.g. the typo 'Auto')
-    must raise a clear ValueError at the API boundary, not a cryptic
-    int() failure deep in plan construction."""
-    from jaccard_join_duckdb_spark import WhitespaceTokzr
-    from jaccard_join_duckdb_spark.operators.jaccard import (
-        jaccard_inner_join,
-        jaccard_self_join,
-        tokens_with_doc_freq,
-    )
-
-    df = spark.createDataFrame([(1, "a b")], ["id", "val"])
-    tok = WhitespaceTokzr()
-    with pytest.raises(ValueError, match="hot_df_threshold"):
-        jaccard_self_join(df, "id", "val", tok, 0.5,
-                          hot_df_threshold="Auto")
-    with pytest.raises(ValueError, match="hot_df_threshold"):
-        jaccard_inner_join(df, df, "id", "id", "val", "val", tok, 0.5,
-                           hot_df_threshold="AUTO")
-    with pytest.raises(ValueError, match="hot_df_threshold"):
-        tokens_with_doc_freq(tok.tokenize(df, "id", "val"),
-                             hot_df_threshold="50")
-    # ints and None still accepted (plan builds lazily, no raise)
-    jaccard_self_join(df, "id", "val", tok, 0.5, hot_df_threshold=None)
-    jaccard_self_join(df, "id", "val", tok, 0.5, hot_df_threshold=10)
-
-
 @pytest.mark.parametrize("path", ["self", "inner", "self-bag", "inner-bag"])
 def test_auto_hot_split_engages_on_skew(spark, monkeypatch, path):
     """DEFAULT-path plan shape on a skewed corpus (VERDICT r9 #4): with
-    hot_df_threshold='auto' (the default) and the engagement constants
-    scaled to test size, the tkdf build join splits — the broadcast
-    anti-join (LeftAnti) appears in the plan — and the pair set is
-    identical to the split-disabled run. Covers both the self and the
-    inner (per-side dfreq) paths, each with the array verify (set
-    mode: the corpus has no duplicate rows, so the integer tids of the
-    split join reach the array intersect) and the three-way one
-    (``-bag``: bag mode, the hot token written twice)."""
+    the engagement constants scaled to test size, the docs build join
+    splits — the broadcast anti-join (LeftAnti) appears in the plan —
+    and the pair set is identical to the run built before the patch,
+    where the default constants leave the split off. Covers both the
+    self and the inner (per-side dfreq) paths, each with the array
+    verify (set mode: the corpus has no duplicate rows, so the integer
+    tids of the split join reach the array intersect) and the three-way
+    one (``-bag``: bag mode, the hot token written twice)."""
     import jaccard_join_duckdb_spark.operators.jaccard as J
     from jaccard_join_duckdb_spark import WhitespaceTokzr
 
-    monkeypatch.setattr(J, "_HOT_SPLIT_MIN_DF", 5)
-    monkeypatch.setattr(J, "_HOT_SPLIT_SKEW_FACTOR", 0.001)
-    monkeypatch.setattr(J, "_HOT_SPLIT_MIN_THR", 5)
     path, _, bag = path.partition("-")
 
     # every doc shares one hot token; tails are near-unique
@@ -754,20 +723,23 @@ def test_auto_hot_split_engages_on_skew(spark, monkeypatch, path):
     def pairs(df):
         return sorted(map(tuple, df.collect()))
 
-    if path == "self":
-        auto = J.jaccard_self_join(docs, "doc_id", "text", tokenizer, 0.3)
-        off = J.jaccard_self_join(
-            docs, "doc_id", "text", tokenizer, 0.3, hot_df_threshold=None
-        )
-    else:
+    def join():
+        if path == "self":
+            return J.jaccard_self_join(
+                docs, "doc_id", "text", tokenizer, 0.3
+            )
         l, r = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
-        auto = J.jaccard_inner_join(
+        return J.jaccard_inner_join(
             l, r, "doc_id", "doc_id", "text", "text", tokenizer, 0.3
         )
-        off = J.jaccard_inner_join(
-            l, r, "doc_id", "doc_id", "text", "text", tokenizer, 0.3,
-            hot_df_threshold=None,
-        )
+
+    # the split is decided when the join is built: build the split-off
+    # run under the default constants, then force the split
+    off = join()
+    monkeypatch.setattr(J, "_HOT_SPLIT_MIN_DF", 5)
+    monkeypatch.setattr(J, "_HOT_SPLIT_SKEW_FACTOR", 0.001)
+    monkeypatch.setattr(J, "_HOT_SPLIT_MIN_THR", 5)
+    auto = join()
     assert "LeftAnti" in plan_of(auto)
     assert "LeftAnti" not in plan_of(off)
     optimized = auto._jdf.queryExecution().optimizedPlan().toString()

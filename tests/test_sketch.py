@@ -76,7 +76,7 @@ class TestHeavyHitters:
             )
         )
         w, d = 64, 3
-        cms = cms_table(data, "k", w, d, materialize=True)
+        cms = cms_table(data, "k", w, d)
         # every key occurs floor/ceil(2000/97) >= 20 times: at
         # threshold 20 the filter must keep ALL occurrence rows
         kept = cms_min_filter(data, "k", cms, 20, w, d).count()
@@ -95,7 +95,7 @@ class TestHeavyHitters:
         data = spark.range(500).select(
             (F.col("id") % 11).cast("string").alias("k")
         )
-        cms = cms_table(data, "k", 256, 4, materialize=True)
+        cms = cms_table(data, "k", 256, 4)
         probe_plan = (
             cms_min_filter(data, "k", cms, 5, 256, 4)
             ._jdf.queryExecution()

@@ -133,7 +133,7 @@ def main() -> int:
     q = _shingle_hashes(bench, "doc_id", "text", N, "q_id")
     n_distinct = q.select("g").distinct().count()
     m_bits = _bloom_size_bits(q.count(), 16)
-    ws = bloom_words(q, "g", m_bits, 7, materialize=True)
+    ws = bloom_words(q, "g", m_bits, 7)
     bitset_bytes = 12 * ws.count()  # (int, bigint) per non-zero word
     raw_bytes = 8 * n_distinct
     compression_ok = bitset_bytes < raw_bytes

@@ -135,7 +135,7 @@ def main() -> int:
     }
     sketch_wall = round(time.perf_counter() - t0, 3)
 
-    cms = cms_table(occ, "key", WIDTH, DEPTH, materialize=True)
+    cms = cms_table(occ, "key", WIDTH, DEPTH)
     cand = cms_min_filter(occ, "key", cms, threshold, WIDTH, DEPTH)
     cand_occurrences = cand.count()
     build_shuffle_rows = groups(

@@ -15,7 +15,8 @@ Checks per plan:
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
 Writes the full plans to PLANS.md (generated output, not committed)
 and prints one verdict line per query; exits 1 if a hard anti-pattern
-is found, or if PLANS.md lacks a declared query's plan.
+is found, if a full run leaves PLANS.md without a declared query's
+plan, or if a targeted run names a query that is not declared.
 """
 
 from __future__ import annotations
@@ -217,14 +218,19 @@ def main() -> int:
             "affecting changes.\n\n" + "\n".join(ordered)
         )
     print(f"\nplans written to {out}")
-    # Completeness gate: PLANS.md must hold ONE section per declared
-    # query — a targeted run on a tree without a full PLANS.md fails
-    # the audit (and round_checks.sh) instead of passing silently.
+    # Completeness gate: after a full run PLANS.md must hold ONE section
+    # per declared query. A targeted run answers only for the queries
+    # it names, so it stands alone on a tree without a full PLANS.md;
+    # a name that is not declared fails it instead of passing silently.
+    unknown = sorted(only - set(all_queries))
+    if unknown:
+        print("AUDIT FAIL: no declared query named " + ", ".join(unknown))
+        return 1
     missing = sorted(set(all_queries) - set(sections))
-    if missing:
+    if missing and not only:
         print(
             f"AUDIT FAIL: PLANS.md incomplete — {len(missing)} declared "
-            f"queries have no plan section (run FULL to backfill): "
+            f"queries have no plan section: "
             + ", ".join(missing[:10])
             + ("..." if len(missing) > 10 else "")
         )
